@@ -13,12 +13,10 @@ once, reshape-based unfilter, fancy-index resize, comparison-mask
 dHash); the inherently SEQUENTIAL stages — Huffman bit IO, zlib,
 chunk/marker walks — stay in codecs.py and are shared, not duplicated.
 
-The module is import-guarded at its use sites
-(operators/multimodal.py:_ship_codecs_fast falls back to the stdlib
-module when numpy is absent), so the engine's correctness never
-depends on numpy — only its constant factor does. WAV functions are
-re-exported unchanged: PCM16 pack/unpack is already C-speed via
-struct.
+Every mapInPandas kernel holds this module (operators/multimodal.py:
+_ship_codecs); numpy is always present where pandas is. codecs.py
+stays the byte-identity reference. WAV functions are re-exported
+unchanged: PCM16 pack/unpack is already C-speed via struct.
 
 Numerical identity notes (why byte-identical is achievable, not just
 close): the DCT matrix here holds the exact same float64 cosine values

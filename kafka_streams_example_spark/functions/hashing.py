@@ -30,3 +30,10 @@ def stable_long(c: Column) -> Column:
     """Deterministic non-negative 60-bit integer from a string — the first
     15 hex chars of md5, reproducible in any engine with md5 + hex parse."""
     return F.conv(F.substring(F.md5(c), 1, 15), 16, 10).cast("long")
+
+
+def stable_long_sql(s: str) -> str:
+    """``stable_long`` as SQL text over the string expression ``s`` — the
+    same md5 → 15 hex chars → BIGINT arithmetic, for builders that parse
+    a whole expression in one call."""
+    return f"CAST(conv(substring(md5({s}), 1, 15), 16, 10) AS BIGINT)"

@@ -2,6 +2,7 @@ from __future__ import annotations
 
 import math
 import os
+import re
 from urllib.parse import unquote, urlparse
 
 from pyspark.sql import DataFrame
@@ -26,6 +27,37 @@ def _parse_bytes(v: str) -> int:
     return int(s)
 
 
+_NAME = re.compile(r"^[A-Za-z_][A-Za-z0-9_]*$")
+
+
+def sql_name(name: str) -> str:
+    """A column name as SQL text for the expression builders: checked
+    against the plain-identifier pattern, then backtick-quoted, so no
+    caller string is ever spliced into a parsed expression as SQL."""
+    if not isinstance(name, str) or not _NAME.fullmatch(name):
+        raise ValueError(f"not a plain column name: {name!r}")
+    return f"`{name}`"
+
+
+def _local_file_sizes(df: DataFrame) -> list[int] | None:
+    """On-disk byte size of each of the frame's scan files (driver-side
+    listing, zero Spark jobs), or None when the input is not a local file
+    scan."""
+    try:
+        files = df.inputFiles()
+        if not files:
+            return None
+        sizes = []
+        for uri in files:
+            parsed = urlparse(uri)
+            if parsed.scheme not in ("file", ""):
+                return None
+            sizes.append(os.path.getsize(unquote(parsed.path)))
+        return sizes
+    except Exception:
+        return None
+
+
 def _estimated_scan_partitions(df: DataFrame) -> int | None:
     """Estimate the scan's partition count from local file sizes using
     Spark's own split-packing formula (FilePartition.maxSplitBytes):
@@ -40,16 +72,10 @@ def _estimated_scan_partitions(df: DataFrame) -> int | None:
     an approximation is safe: both failure directions cost at most a
     small shuffle or some idle cores on tiny inputs, never correctness.
     """
+    sizes = _local_file_sizes(df)
+    if sizes is None:
+        return None
     try:
-        files = df.inputFiles()
-        if not files:
-            return None
-        sizes = []
-        for uri in files:
-            parsed = urlparse(uri)
-            if parsed.scheme not in ("file", ""):
-                return None
-            sizes.append(os.path.getsize(unquote(parsed.path)))
         conf = df.sparkSession.conf
         max_partition = _parse_bytes(conf.get("spark.sql.files.maxPartitionBytes", "128MB"))
         open_cost = _parse_bytes(conf.get("spark.sql.files.openCostInBytes", "4MB"))
@@ -119,19 +145,8 @@ def estimated_input_bytes(df: DataFrame) -> int:
     the input is not a local file scan. Operator-internal caches scale
     this by a documented expansion factor to budget themselves when the
     caller cannot pass a footer estimate."""
-    try:
-        files = df.inputFiles()
-        if not files:
-            return -1
-        total = 0
-        for uri in files:
-            parsed = urlparse(uri)
-            if parsed.scheme not in ("file", ""):
-                return -1
-            total += os.path.getsize(unquote(parsed.path))
-        return total
-    except Exception:
-        return -1
+    sizes = _local_file_sizes(df)
+    return -1 if sizes is None else sum(sizes)
 
 
 def cache_bounded(df: DataFrame, est_bytes: int) -> DataFrame:

@@ -25,7 +25,12 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from kafka_streams_example_spark.functions.hashing import fingerprint_md5, stable_long
+from kafka_streams_example_spark.functions.hashing import (
+    fingerprint_md5,
+    stable_long,
+    stable_long_sql,
+)
+from kafka_streams_example_spark.operators import sql_name
 from kafka_streams_example_spark.operators.text import jaccard, round_half_up, word_ngrams
 
 # 31-bit Mersenne prime — the classic universal-hash modulus. Kept at 31
@@ -63,38 +68,25 @@ def _budgeted_corpus_cache(df: DataFrame) -> DataFrame:
     return cache_bounded(df, est * _CORPUS_CACHE_EXPANSION)
 
 
-def _minhash_perm(base: Column, a: int, b: int) -> Column:
-    # pmod: Spark % follows the dividend sign; inputs here are non-negative
-    # (stable_long is 60-bit) so a plain % is safe and portable.
-    return (F.lit(a) * base + F.lit(b)) % F.lit(_MERSENNE)
-
-
-def hashed_shingles(shingles: Column) -> Column:
-    """Shingle strings → 60-bit integers (portable md5-derived hash).
+def hashed_shingles_sql(shingles: str) -> str:
+    """Shingle strings in array column ``shingles`` → 60-bit integers
+    (portable md5-derived hash, ``functions/hashing.py:stable_long``).
     A Jaccard-changing collision needs two distinct shingles of the same
     doc pair to collide: ~|A|·|B|/2⁶⁰ ≈ 1e-14 per pair — safe even across
     billions of verified pairs. Integer set ops downstream are far cheaper
     than string set ops; materialize as a real column so md5 runs once."""
-    return F.transform(shingles, lambda s: stable_long(s))
+    return f"transform({sql_name(shingles)}, s -> {stable_long_sql('s')})"
 
 
-# SQL-text twins (r12): the Column/lambda forms cost tens of py4j
-# round-trips each to CONSTRUCT (32 array_min(transform(...)) lambdas for
-# one signature — measured 0.5-0.9 s of the minhash consumers' steady
-# build time); the parsed forms assemble the identical expression tree in
-# one F.expr call. Same md5/conv arithmetic, so signatures and the DuckDB
-# oracles are unchanged.
-_STABLE_LONG_SQL = "CAST(conv(substring(md5({s}), 1, 15), 16, 10) AS BIGINT)"
-
-
-def hashed_shingles_sql(shingles: str) -> str:
-    inner = _STABLE_LONG_SQL.format(s="s")
-    return f"transform({shingles}, s -> {inner})"
-
-
-def minhash_signature_sql(
-    hashed: str, num_hashes: int = 32, seed: int = 42
-) -> str:
+def minhash_signature_sql(hashed: str, num_hashes: int = 32, seed: int = 42) -> str:
+    """MinHash signature over the pre-hashed shingles in array column
+    ``hashed``: per permutation i, min over shingles of hash_i(shingle
+    mod P). Permutation params derive deterministically from the seed
+    (python's Random is stable across platforms). The mod-P reduction to
+    31 bits keeps a*x below 2^62 (ANSI overflow) and only perturbs the
+    *approximate* signature, never the exact verify stage. Built as one
+    SQL text: a Column/lambda form costs tens of py4j round-trips per
+    signature to construct."""
     import random
 
     rng = random.Random(seed)
@@ -102,37 +94,14 @@ def minhash_signature_sql(
         (rng.randrange(1, _MERSENNE), rng.randrange(0, _MERSENNE))
         for _ in range(num_hashes)
     ]
-    reduced = f"transform({hashed}, h -> h % {_MERSENNE})"
+    # Spark's % follows the dividend's sign; the 60-bit hashes are
+    # non-negative, so a plain % needs no pmod and stays portable.
+    reduced = f"transform({sql_name(hashed)}, h -> h % {_MERSENNE})"
     mins = ", ".join(
         f"array_min(transform({reduced}, h -> ({a} * h + {b}) % {_MERSENNE}))"
         for a, b in params
     )
     return f"array({mins})"
-
-
-def minhash_signature(
-    hashed: Column, num_hashes: int = 32, seed: int = 42
-) -> Column:
-    """MinHash signature over pre-hashed shingles: per permutation i,
-    min over shingles of hash_i(shingle mod P). Permutation params derive
-    deterministically from the seed (python's Random is stable across
-    platforms). The mod-P reduction to 31 bits keeps a*x below 2^62 (ANSI
-    overflow) and only perturbs the *approximate* signature, never the
-    exact verify stage."""
-    import random
-
-    rng = random.Random(seed)
-    params = [
-        (rng.randrange(1, _MERSENNE), rng.randrange(0, _MERSENNE))
-        for _ in range(num_hashes)
-    ]
-    reduced = F.transform(hashed, lambda h: h % F.lit(_MERSENNE))
-    return F.array(
-        *[
-            F.array_min(F.transform(reduced, lambda h: _minhash_perm(h, a, b)))
-            for a, b in params
-        ]
-    )
 
 
 def minhash_band_hashes(

@@ -35,33 +35,22 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from kafka_streams_example_spark.functions import codecs as _codecs
+from kafka_streams_example_spark.functions import codecs_np as _codecs_np
 
 
 def _ship_codecs():
-    """Make the self-contained codec module picklable BY VALUE so
-    mapInPandas kernels can call it on workers that do not have this
-    repo on sys.path (the driver contract runs from an arbitrary cwd)."""
+    """Register the codec modules BY VALUE so mapInPandas kernels can call
+    them on workers that do not have this repo on sys.path (the driver
+    contract runs from an arbitrary cwd), and return the numpy-vectorized
+    one (functions/codecs_np.py — byte-identical to the stdlib reference
+    functions/codecs.py, the per-doc decode constant cut ~6-10x). Both
+    ship: codecs_np's globals reference the codecs module."""
     from pyspark import cloudpickle
 
     cloudpickle.register_pickle_by_value(_codecs)
-    return _codecs
-
-
-def _ship_codecs_fast():
-    """Like _ship_codecs but returns the numpy-vectorized codec module
-    (functions/codecs_np.py — byte-identical outputs, the per-doc decode
-    constant cut ~6-10x) when numpy is importable, the stdlib module
-    otherwise. Both modules are registered by value: codecs_np's globals
-    reference the codecs module, so the pair ships together."""
-    from pyspark import cloudpickle
-
-    cloudpickle.register_pickle_by_value(_codecs)
-    try:
-        from kafka_streams_example_spark.functions import codecs_np as _codecs_np
-    except ImportError:  # no numpy: the stdlib reference path is the product
-        return _codecs
     cloudpickle.register_pickle_by_value(_codecs_np)
     return _codecs_np
+
 
 DECODED_SCHEMA = (
     "doc_id LONG, width INT, height INT, channels INT, ok BOOLEAN"
@@ -78,7 +67,7 @@ def with_png_payload(df: DataFrame, text_col: str = "text", id_col: str = "doc_i
     exercise an actual codec. In production the binary arrives from the
     source; this generator stands in for the object-store read while
     keeping every byte deterministic and oracle-reproducible."""
-    cx = _ship_codecs_fast()
+    cx = _ship_codecs()
 
     def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in it:
@@ -137,7 +126,7 @@ def decode_images(
 
         return df.select(id_col, bin_col).mapInPandas(batches, DECODED_SCHEMA)
 
-    cx = _ship_codecs_fast()
+    cx = _ship_codecs()
 
     def real_batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in it:
@@ -267,7 +256,7 @@ def resize_images(
     partition sizing is predictable regardless of input image sizes.
     """
     if not fake:
-        cx = _ship_codecs_fast()
+        cx = _ship_codecs()
 
         def real_batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
             for pdf in it:
@@ -401,7 +390,7 @@ def with_jpeg_payload(
     oracle over the decoded pixels exists — while the encoder/decoder
     still run the complete baseline pipeline (DCT, quantization, zigzag,
     DC-diff + AC run-length Huffman, byte stuffing, IDCT)."""
-    cx = _ship_codecs_fast()
+    cx = _ship_codecs()
 
     def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in it:
@@ -433,7 +422,7 @@ def decode_jpegs(
     blobs (corrupt bytes, progressive/multi-component streams, formats
     needing an external codec) emit ``ok=False`` with NULL fields — a bad
     blob degrades one row, never the job."""
-    cx = _ship_codecs_fast()
+    cx = _ship_codecs()
 
     def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in it:

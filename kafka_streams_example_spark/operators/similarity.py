@@ -19,29 +19,37 @@ exact top-k comparison possible.
 
 from __future__ import annotations
 
+from collections.abc import Sequence
+
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from kafka_streams_example_spark.operators import sql_name
+
 # ---------------------------------------------------------------------------
-# Expression builders. Each helper accepts either a Column (the original
-# API) or a COLUMN-NAME STRING; the string form assembles the whole fold
-# as one SQL text and parses it JVM-side with a single F.expr() call.
-# Measured (r12): a Column-built dot() costs ~45-65 py4j round-trips
-# (~15-25 ms of pure driver latency under the higher-order-lambda
-# machinery), the parsed form ~1 ms — and the parsed expression tree is
-# the SAME fold (verified bit-identical sums + the DuckDB oracle), so
-# scores and plan-equality sharing are unchanged. Plan-construction
-# latency is 60-90% of the ANN family's steady bench time (r11 VERDICT
-# "Next round" #4), which makes the construction path itself the hot
-# loop here.
+# Expression builders. Every vector expression is assembled as ONE SQL text
+# and parsed JVM-side by a single F.expr() call: a Column/lambda-built fold
+# costs ~45-65 py4j round-trips to construct, the parsed form ~1, and the
+# parsed tree is the same fold. Operands are column names — checked against
+# the plain-identifier pattern and backtick-quoted, so no caller string is
+# ever spliced into the SQL as SQL — or constant vectors, embedded as
+# array(CAST('repr' AS DOUBLE), ...). The string→double parse is correctly
+# rounded, so an embedded constant is bit-identical to its Python float.
 # ---------------------------------------------------------------------------
 
 
-def _dot_sql(a: str, b: str, dim: int) -> str:
+def _vec(v: str | Sequence[float]) -> str:
+    """A vector operand as SQL text: a column name, or a constant vector."""
+    if isinstance(v, str):
+        return sql_name(v)
+    return "array(" + ", ".join(f"CAST('{float(x)!r}' AS DOUBLE)" for x in v) + ")"
+
+
+def _dot_sql(a: str | Sequence[float], b: str | Sequence[float], dim: int) -> str:
     return (
         f"aggregate(sequence(1, {dim}), 0.0D, (acc, i) -> acc"
-        f" + CAST(element_at({a}, i) AS DOUBLE)"
-        f" * CAST(element_at({b}, i) AS DOUBLE))"
+        f" + CAST(element_at({_vec(a)}, i) AS DOUBLE)"
+        f" * CAST(element_at({_vec(b)}, i) AS DOUBLE))"
     )
 
 
@@ -56,32 +64,73 @@ def _cosine_sql(a: str, b: str, dim: int) -> str:
     )
 
 
-def dot(a: Column | str, b: Column | str, dim: int) -> Column:
-    """Σ a[i]·b[i] folded in array order, all-double arithmetic."""
-    if isinstance(a, str) and isinstance(b, str):
-        return F.expr(_dot_sql(a, b, dim))
-    return F.aggregate(
-        F.sequence(F.lit(1), F.lit(dim)),
-        F.lit(0.0),
-        lambda acc, i: acc
-        + F.element_at(a, i).cast("double") * F.element_at(b, i).cast("double"),
+def _cosine_normed_sql(a: str, a_nrm: str, b: str, b_nrm: str, dim: int) -> str:
+    """Cosine from norms precomputed into columns ``a_nrm``/``b_nrm``: the
+    same double expression as ``cosine``, one fold per pair instead of
+    three."""
+    nrm = f"{sql_name(a_nrm)} * {sql_name(b_nrm)}"
+    return f"{_dot_sql(a, b, dim)} / nullif({nrm}, 0.0D)"
+
+
+def _sqdist_sql(a: str, b: str, dim: int) -> str:
+    d = (
+        f"(CAST(element_at({_vec(a)}, i) AS DOUBLE)"
+        f" - CAST(element_at({_vec(b)}, i) AS DOUBLE))"
     )
+    return f"aggregate(sequence(1, {dim}), 0.0D, (acc, i) -> acc + {d} * {d})"
 
 
-def norm(a: Column | str, dim: int) -> Column:
-    if isinstance(a, str):
-        return F.expr(_norm_sql(a, dim))
-    return F.sqrt(dot(a, a, dim))
+def dot(a: str | Sequence[float], b: str | Sequence[float], dim: int) -> Column:
+    """Σ a[i]·b[i] folded in array order, all-double arithmetic."""
+    return F.expr(_dot_sql(a, b, dim))
 
 
-def cosine(a: Column | str, b: Column | str, dim: int) -> Column:
+def norm(a: str, dim: int) -> Column:
+    return F.expr(_norm_sql(a, dim))
+
+
+def cosine(a: str, b: str, dim: int) -> Column:
     """Cosine similarity; a zero-norm side yields NULL (not a
     divide-by-zero error under ANSI mode, not NaN) — matching DuckDB's
     x/0 → NULL so oracle comparisons agree, and sorting LAST under any
     score-descending rank."""
-    if isinstance(a, str) and isinstance(b, str):
-        return F.expr(_cosine_sql(a, b, dim))
-    return dot(a, b, dim) / F.nullif(norm(a, dim) * norm(b, dim), F.lit(0.0))
+    return F.expr(_cosine_sql(a, b, dim))
+
+
+def sqdist(a: str, b: str, dim: int) -> Column:
+    """Σ (a[i]-b[i])² folded in array order, all-double arithmetic — the
+    same sequential fold discipline as ``dot`` so DuckDB's list sum
+    reproduces it bit-exactly."""
+    return F.expr(_sqdist_sql(a, b, dim))
+
+
+def simhash_bits(vec: str, planes: list[list[float]], dim: int) -> Column:
+    """Sign pattern of column ``vec`` against fixed hyperplanes → bucket
+    id, built as one parsed expression.
+
+    ``planes`` must be deterministic constants (callers derive them from a
+    seed) so the bucketing is reproducible across runs and engines; each
+    is embedded as a constant vector, so no plane costs a py4j round-trip.
+    """
+    bucket = "0"
+    for p in planes:
+        bucket = (
+            f"(({bucket}) * 2 + (CASE WHEN {_dot_sql(vec, p, dim)} >= 0"
+            " THEN 1 ELSE 0 END))"
+        )
+    return F.expr(bucket)
+
+
+def _rank_topk(scored: DataFrame, id_col: str, k: int) -> DataFrame:
+    """Per-query top-k of a (q_id, ``id_col``, score) frame under the
+    deterministic (score desc, id asc) order; scores rounded to 6 dp."""
+    c = sql_name(id_col)
+    return scored.selectExpr(
+        "q_id",
+        c,
+        f"row_number() OVER (PARTITION BY q_id ORDER BY score DESC, {c} ASC) AS rnk",
+        "round(score, 6) AS score",
+    ).filter(F.col("rnk") <= k)
 
 
 def cosine_topk(
@@ -104,67 +153,17 @@ def cosine_topk(
     # costs one dot-fold per candidate instead of three (the per-pair
     # cosine would re-fold both norms). dot/(norm_a*norm_b) is the same
     # double expression either way, so scores stay bit-identical.
-    # (selectExpr-fused projections/window — same operators, ~10x fewer
-    # py4j round-trips per construction; see the r12 note at the top.)
+    i, v = sql_name(id_col), sql_name(vec_col)
     q = queries.selectExpr(
-        f"{id_col} AS q_id",
-        f"{vec_col} AS q_vec",
-        f"{_norm_sql(vec_col, dim)} AS q_nrm",
+        f"{i} AS q_id", f"{v} AS q_vec", f"{_norm_sql(vec_col, dim)} AS q_nrm"
     )
     c = ensure_min_partitions(corpus.select(F.col(id_col), F.col(vec_col))).selectExpr(
-        id_col, vec_col, f"{_norm_sql(vec_col, dim)} AS nrm"
+        i, v, f"{_norm_sql(vec_col, dim)} AS nrm"
     )
-    scored = (
-        c.join(F.broadcast(q), F.col(id_col) != F.col("q_id"))
-        .withColumn(
-            "score",
-            F.expr(f"{_dot_sql('q_vec', vec_col, dim)} / nullif(q_nrm * nrm, 0.0D)"),
-        )
+    scored = c.join(F.broadcast(q), F.col(id_col) != F.col("q_id")).withColumn(
+        "score", F.expr(_cosine_normed_sql("q_vec", "q_nrm", vec_col, "nrm", dim))
     )
-    return scored.selectExpr(
-        "q_id",
-        id_col,
-        "row_number() OVER (PARTITION BY q_id ORDER BY score DESC,"
-        f" {id_col} ASC) AS rnk",
-        "round(score, 6) AS score",
-    ).filter(F.col("rnk") <= k)
-
-
-def simhash_bits(vec: Column | str, planes: list[list[float]], dim: int) -> Column:
-    """Sign pattern of the vector against fixed hyperplanes → bucket id.
-
-    ``planes`` must be deterministic constants (callers derive them from a
-    seed) so the bucketing is reproducible across runs and engines.
-
-    String-form ``vec`` builds the whole bucket expression as one parsed
-    SQL text (plane constants embedded as CAST('repr' AS DOUBLE) — the
-    string→double parse is correctly rounded, so the embedded doubles are
-    bit-identical to the F.lit path): the Column form costs
-    |planes| × dim F.lit round-trips (~6×64 here) before the fold even
-    starts, pure driver latency.
-    """
-    if isinstance(vec, str):
-        bucket = "0"
-        for p in planes:
-            arr = (
-                "array("
-                + ", ".join(f"CAST('{float(x)!r}' AS DOUBLE)" for x in p)
-                + ")"
-            )
-            d = (
-                f"aggregate(sequence(1, {dim}), 0.0D, (acc, i) -> acc"
-                f" + CAST(element_at({vec}, i) AS DOUBLE)"
-                f" * CAST(element_at({arr}, i) AS DOUBLE))"
-            )
-            bucket = (
-                f"(({bucket}) * 2 + (CASE WHEN {d} >= 0 THEN 1 ELSE 0 END))"
-            )
-        return F.expr(bucket)
-    bucket = F.lit(0)
-    for p in planes:
-        arr = F.array(*[F.lit(float(x)) for x in p])
-        bucket = bucket * 2 + F.when(dot(vec, arr, dim) >= 0, 1).otherwise(0)
-    return bucket
+    return _rank_topk(scored, id_col, k)
 
 
 def lsh_bucketed_topk(
@@ -196,17 +195,10 @@ def lsh_bucketed_topk(
         c.join(F.broadcast(q), "bucket")
         .filter(F.col(id_col) != F.col("q_id"))
         .withColumn(
-            "score",
-            F.expr(f"{_dot_sql('q_vec', vec_col, dim)} / nullif(q_nrm * nrm, 0.0D)"),
+            "score", F.expr(_cosine_normed_sql("q_vec", "q_nrm", vec_col, "nrm", dim))
         )
     )
-    return scored.selectExpr(
-        "q_id",
-        id_col,
-        "row_number() OVER (PARTITION BY q_id ORDER BY score DESC,"
-        f" {id_col} ASC) AS rnk",
-        "round(score, 6) AS score",
-    ).filter(F.col("rnk") <= k)
+    return _rank_topk(scored, id_col, k)
 
 
 def ivf_assign(
@@ -237,8 +229,7 @@ def ivf_assign(
         .withColumn("nrm", norm(vec_col, dim))
         .join(F.broadcast(c), F.lit(True))
         .withColumn(
-            "c_score",
-            F.expr(f"{_dot_sql(vec_col, 'c_vec', dim)} / nullif(nrm * c_nrm, 0.0D)"),
+            "c_score", F.expr(_cosine_normed_sql(vec_col, "nrm", "c_vec", "c_nrm", dim))
         )
     )
     # argmax via max_by on (score, -centroid_id) — lexicographic struct max
@@ -248,7 +239,7 @@ def ivf_assign(
     # vector BEFORE the shuffle — a k× shuffle reduction vs the former
     # row_number window, which shuffled every (vector, centroid) row.
     best = F.expr(
-        f"max_by(struct({vec_col} AS v, centroid_id AS cid, nrm AS nrm),"
+        f"max_by(struct({sql_name(vec_col)} AS v, centroid_id AS cid, nrm AS nrm),"
         " struct(c_score, -centroid_id AS neg))"
     ).alias("b")
     out = scored.groupBy(id_col).agg(best)
@@ -307,8 +298,7 @@ def ivf_topk(
         cells.join(F.broadcast(q_probe), "centroid_id")
         .filter(F.col(id_col) != F.col("q_id"))
         .withColumn(
-            "score",
-            F.expr(f"{_dot_sql('q_vec', vec_col, dim)} / nullif(q_nrm * nrm, 0.0D)"),
+            "score", F.expr(_cosine_normed_sql("q_vec", "q_nrm", vec_col, "nrm", dim))
         )
         .select("q_id", id_col, "score")
     )
@@ -332,13 +322,7 @@ def ivf_topk(
         scored = _local_topk_per_batch(
             scored.filter(F.col("score").isNotNull()), k, c_col=id_col
         ).unionByName(scored.filter(F.col("score").isNull()))
-    return scored.selectExpr(
-        "q_id",
-        id_col,
-        "row_number() OVER (PARTITION BY q_id ORDER BY score DESC,"
-        f" {id_col} ASC) AS rnk",
-        "round(score, 6) AS score",
-    ).filter(F.col("rnk") <= k)
+    return _rank_topk(scored, id_col, k)
 
 
 def _local_topk_per_batch(
@@ -408,16 +392,16 @@ def kmeans_lloyd(
     """
     from kafka_streams_example_spark.operators import ensure_min_partitions
 
-    # selectExpr/F.expr string construction throughout (r12): the loop
-    # below used to issue several hundred py4j calls per invocation
+    # selectExpr/F.expr string construction throughout: the loop below
+    # would otherwise issue several hundred py4j calls per invocation
     # (measured 0.64 s of the trained-IVF consumers' ~1.0 s steady build
-    # cost); the parsed forms are the SAME expressions — casts, fold
-    # order, tie-breaks — so centroids are bit-identical.
+    # cost).
+    i, v = sql_name(id_col), sql_name(vec_col)
     seeds = (
         emb.selectExpr(
-            f"{id_col} AS sid",
-            f"(({id_col} % 2147483647) * 48271) % 2147483647 AS h",
-            f"transform({vec_col}, x -> CAST(x AS DOUBLE)) AS cv",
+            f"{i} AS sid",
+            f"(({i} % 2147483647) * 48271) % 2147483647 AS h",
+            f"transform({v}, x -> CAST(x AS DOUBLE)) AS cv",
         )
         .orderBy("h", "sid")
         .limit(k)
@@ -436,7 +420,7 @@ def kmeans_lloyd(
     # expression as cosine(), so assignments are bit-identical while the
     # per-candidate cost drops from three folds to one.
     vecs = ensure_min_partitions(emb).selectExpr(
-        f"{id_col} AS id", f"{vec_col} AS v", f"{_norm_sql(vec_col, dim)} AS nrm_v"
+        f"{i} AS id", f"{v} AS v", f"{_norm_sql(vec_col, dim)} AS nrm_v"
     )
     for _ in range(iterations):
         cent_n = cent.withColumn("c_nrm", norm("cv", dim))
@@ -446,8 +430,7 @@ def kmeans_lloyd(
         best = (
             vecs.join(F.broadcast(cent_n))
             .withColumn(
-                "cos",
-                F.expr(f"{_dot_sql('v', 'cv', dim)} / nullif(nrm_v * c_nrm, 0.0D)"),
+                "cos", F.expr(_cosine_normed_sql("v", "nrm_v", "cv", "c_nrm", dim))
             )
             .groupBy("id")
             .agg(
@@ -566,31 +549,6 @@ def cosine_topk_vectorized(
     )
 
 
-def _sqdist_sql(a: str, b: str, dim: int) -> str:
-    d = (
-        f"(CAST(element_at({a}, i) AS DOUBLE)"
-        f" - CAST(element_at({b}, i) AS DOUBLE))"
-    )
-    return f"aggregate(sequence(1, {dim}), 0.0D, (acc, i) -> acc + {d} * {d})"
-
-
-def sqdist(a: Column | str, b: Column | str, dim: int) -> Column:
-    """Σ (a[i]-b[i])² folded in array order, all-double arithmetic — the
-    same sequential fold discipline as ``dot`` so DuckDB's list sum
-    reproduces it bit-exactly."""
-    if isinstance(a, str) and isinstance(b, str):
-        return F.expr(_sqdist_sql(a, b, dim))
-
-    def diff(i: Column) -> Column:
-        return F.element_at(a, i).cast("double") - F.element_at(b, i).cast("double")
-
-    return F.aggregate(
-        F.sequence(F.lit(1), F.lit(dim)),
-        F.lit(0.0),
-        lambda acc, i: acc + diff(i) * diff(i),
-    )
-
-
 def pq_codebook(
     src: DataFrame,
     n_sub: int,
@@ -607,7 +565,7 @@ def pq_codebook(
     slices = F.expr(
         "array("
         + ", ".join(
-            f"struct({m} AS m, transform(slice({vec_col}, {m * d_sub + 1},"
+            f"struct({m} AS m, transform(slice({sql_name(vec_col)}, {m * d_sub + 1},"
             f" {d_sub}), x -> CAST(x AS DOUBLE)) AS cw)"
             for m in range(n_sub)
         )
@@ -641,7 +599,7 @@ def pq_encode(
     subs = F.expr(
         "array("
         + ", ".join(
-            f"struct({m} AS m, transform(slice({vec_col}, {m * d_sub + 1},"
+            f"struct({m} AS m, transform(slice({sql_name(vec_col)}, {m * d_sub + 1},"
             f" {d_sub}), x -> CAST(x AS DOUBLE)) AS sub)"
             for m in range(n_sub)
         )
@@ -721,8 +679,7 @@ def pq_adc_topk(
     ).withColumn("nrm", norm("full_vec", dim))
     # winner set is queries×k rows — broadcast it against the corpus scan
     rer = full.join(F.broadcast(cand), id_col).withColumn(
-        "score",
-        F.expr(f"{_dot_sql('q_vec', 'full_vec', dim)} / nullif(q_nrm * nrm, 0.0D)"),
+        "score", F.expr(_cosine_normed_sql("q_vec", "q_nrm", "full_vec", "nrm", dim))
     )
     return rer.select(
         "q_id",

@@ -1029,7 +1029,7 @@ def minhash_jaccard_estimate(spark: SparkSession, sf_dir: str) -> DataFrame:
     result is regrouped back to (sa, sb) — the corpus is never hashed
     twice and signatures never shuffle on two different keys (the
     two-join form re-executed the 32-permutation hashing per side). The
-    permutations are the exact ones minhash_signature(seed=42) uses,
+    permutations are the exact ones minhash_signature_sql(seed=42) uses,
     reproduced literally in the oracle."""
     docs = _load_parallel(spark, sf_dir, "documents")
     blk = F.concat(
@@ -1052,14 +1052,8 @@ def minhash_jaccard_estimate(spark: SparkSession, sf_dir: str) -> DataFrame:
     sig = (
         docs.select("doc_id", tx.word_ngrams(F.col("text"), 3).alias("ng"))
         .filter(F.size("ng") > 0)
-        .select(
-            "doc_id",
-            F.expr(
-                dd.minhash_signature_sql(
-                    dd.hashed_shingles_sql("ng"), _MH_NUM, _MH_SEED
-                )
-            ).alias("sg"),
-        )
+        .selectExpr("doc_id", f"{dd.hashed_shingles_sql('ng')} AS hsh")
+        .selectExpr("doc_id", f"{dd.minhash_signature_sql('hsh', _MH_NUM, _MH_SEED)} AS sg")
     )
     both = (
         melt.join(sig, "doc_id")
@@ -1750,7 +1744,7 @@ def semdedup_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
     vecs = (
         ensure_min_partitions(emb)
         .select("vec_id", "embedding")
-        .withColumn("nrm", sim.norm(F.col("embedding"), 64))
+        .withColumn("nrm", sim.norm("embedding", 64))
         .withColumn("bucket", (sign_int % F.lit(n_b)).cast("long"))
     )
     cents = (
@@ -1768,8 +1762,7 @@ def semdedup_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     scored = vecs.join(cents, "bucket").withColumn(
         "c_score",
-        sim.dot(F.col("embedding"), F.col("c_vec"), 64)
-        / F.nullif(F.col("nrm") * F.col("c_nrm"), F.lit(0.0)),
+        F.expr(sim._cosine_normed_sql("embedding", "nrm", "c_vec", "c_nrm", 64)),
     )
     # argmax via max_by on (score, -centroid_id): best cosine, ties to the
     # lowest centroid id — map-side-combinable, unlike a rank window
@@ -1812,9 +1805,7 @@ def semdedup_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
         a.join(b, "centroid_id")
         .filter(F.col("id_a") < F.col("id_b"))
         .withColumn(
-            "score",
-            sim.dot(F.col("v_a"), F.col("v_b"), 64)
-            / F.nullif(F.col("nrm_a") * F.col("nrm_b"), F.lit(0.0)),
+            "score", F.expr(sim._cosine_normed_sql("v_a", "nrm_a", "v_b", "nrm_b", 64))
         )
         .filter(F.col("score") >= _SD_TAU)
         .select(F.col("id_b").alias("vec_id"))

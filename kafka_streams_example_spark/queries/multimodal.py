@@ -18,7 +18,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from kafka_streams_example_spark.operators import multimodal as mm
-from kafka_streams_example_spark.operators.multimodal import _ship_codecs_fast
+from kafka_streams_example_spark.operators.multimodal import _ship_codecs
 from kafka_streams_example_spark.registry import _load_parallel, register
 
 
@@ -247,7 +247,7 @@ def multimodal_decode_real(spark: SparkSession, sf_dir: str) -> DataFrame:
     pixel sum. The oracle recomputes dims and pixel sum arithmetically
     from doc_id and md5(text) in SQL, so the hash check passes only if the
     codec reproduced every pixel bit-exactly (functions/codecs.py)."""
-    cx = _ship_codecs_fast()
+    cx = _ship_codecs()
     docs = _load_parallel(spark, sf_dir, "documents")
 
     def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -303,7 +303,7 @@ def multimodal_wav_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     checks), and emit the DECODED stream properties and sample sum. The
     oracle replays the recurrence in SQL — a byte-order, alignment, or
     length-accounting bug in either direction breaks the hash match."""
-    cx = _ship_codecs_fast()
+    cx = _ship_codecs()
     docs = _load_parallel(spark, sf_dir, "documents")
 
     def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -350,7 +350,7 @@ def _phash_fp_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
     references execute the Python stage once (the BPE lineage-cut
     precedent) — exactly the "write the fingerprint table, then
     self-join it" shape a production pipeline ships at 100 TB."""
-    cx = _ship_codecs_fast()
+    cx = _ship_codecs()
     docs = _load_parallel(spark, sf_dir, "documents")
 
     def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -714,7 +714,7 @@ def audio_features_real(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: one map-only Arrow mapInPandas stage; blobs and samples
     never leave the scan. Undecodable blobs degrade per-row (ok=False),
     same contract as the image decode stages."""
-    cx = _ship_codecs_fast()
+    cx = _ship_codecs()
     docs = _load_parallel(spark, sf_dir, "documents")
 
     def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -827,7 +827,7 @@ def image_phash_dedup_cut(spark: SparkSession, sf_dir: str) -> DataFrame:
     groupBy(dhash) (min + count) joined back on the 8-byte hash — the
     exact-dedup survivorship shape (dedup_survivorship), no windows, no
     pair explosion."""
-    cx = _ship_codecs_fast()
+    cx = _ship_codecs()
     docs = _load_parallel(spark, sf_dir, "documents")
 
     def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -927,7 +927,7 @@ def image_crossformat_phash_match(spark: SparkSession, sf_dir: str) -> DataFrame
     hash, so a crawl carrying the same picture as PNG here and JPEG
     there still collapses it to one keeper. One map-only Arrow kernel;
     nothing but the 8-byte hash leaves the scan."""
-    cx = _ship_codecs_fast()
+    cx = _ship_codecs()
     docs = _load_parallel(spark, sf_dir, "documents")
 
     def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -1076,7 +1076,7 @@ def video_scene_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     indexing, dHash bits, the lag window and the Hamming cut in DuckDB —
     the hash match fails unless the codec roundtrip preserved every
     frame's pixels bit-exactly."""
-    cx = _ship_codecs_fast()
+    cx = _ship_codecs()
     docs = _load_parallel(spark, sf_dir, "documents")
 
     def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -1164,7 +1164,7 @@ def image_metadata_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: one map-only Arrow kernel, no shuffle; in production
     the blob arrives from the source and the same kernel runs exiftool-
     class extraction per row with per-row failure degradation."""
-    cx = _ship_codecs_fast()
+    cx = _ship_codecs()
     docs = _load_parallel(spark, sf_dir, "documents")
 
     def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -1318,7 +1318,7 @@ def video_fingerprint_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     Oracle: the full replay — synthesis, variant planting, thumbnail
     indexing, dHash bits, set dedup, pair counting, Jaccard — fails
     unless every frame's codec round-trip preserved pixels bit-exactly."""
-    cx = _ship_codecs_fast()
+    cx = _ship_codecs()
     docs = _load_parallel(spark, sf_dir, "documents")
 
     def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -1497,7 +1497,7 @@ def audio_fingerprint_match(spark: SparkSession, sf_dir: str) -> DataFrame:
     PCM recurrence and word packing in SQL; the attenuated rendition's
     rows replay via the invariance theorem, so any codec or halving
     defect in the kernel breaks the hash match."""
-    cx = _ship_codecs_fast()
+    cx = _ship_codecs()
     docs = _load_parallel(spark, sf_dir, "documents")
 
     def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -1617,7 +1617,7 @@ def jpeg_metadata_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale shape: one map-only Arrow kernel, no shuffle — the EXIF/COM
     sweep a curation pipeline runs over a crawl's image column."""
-    cx = _ship_codecs_fast()
+    cx = _ship_codecs()
     docs = _load_parallel(spark, sf_dir, "documents")
 
     def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:

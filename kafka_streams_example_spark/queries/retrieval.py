@@ -382,9 +382,7 @@ SELECT q_id, vec_id, rnk, round(score, 6) AS score FROM ranked WHERE rnk <= 10
                 F.col("v"), lambda x: F.round(x / F.col("scale")) * F.col("scale")
             ).alias("v"),
         ).repartition(spark.sparkContext.defaultParallelism)
-        base = deq.select(
-            "vec_id", "v", F.sqrt(sim.dot(F.col("v"), F.col("v"), _DIM)).alias("nrm")
-        )
+        base = deq.select("vec_id", "v", sim.norm("v", _DIM).alias("nrm"))
         q = base.filter(F.col("vec_id") < 8).select(
             F.col("vec_id").alias("q_id"),
             F.col("v").alias("qv"),
@@ -392,7 +390,7 @@ SELECT q_id, vec_id, rnk, round(score, 6) AS score FROM ranked WHERE rnk <= 10
         )
         scored = base.join(F.broadcast(q), F.col("vec_id") != F.col("q_id")).withColumn(
             "score",
-            sim.dot(F.col("qv"), F.col("v"), _DIM) / (F.col("qnrm") * F.col("nrm")),
+            sim.dot("qv", "v", _DIM) / (F.col("qnrm") * F.col("nrm")),
         )
         w = Window.partitionBy("q_id").orderBy(F.col("score").desc(), F.col("vec_id").asc())
         return (
@@ -1224,7 +1222,7 @@ def embedding_dispersion_by_label(spark: SparkSession, sf_dir: str) -> DataFrame
     final quadratic forms run on label-cardinality rows."""
     emb = _load_parallel(spark, sf_dir, "embeddings")
     e = F.transform(F.col("embedding"), lambda v: v.cast("double"))
-    nrm = F.sqrt(sim.dot(F.col("e"), F.col("e"), _DIM))
+    nrm = sim.norm("e", _DIM)
     n0 = (
         emb.select("vec_id", "label", e.alias("e"))
         .withColumn("nrm", nrm)

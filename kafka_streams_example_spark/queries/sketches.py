@@ -256,12 +256,10 @@ def jl_projection_distortion(spark: SparkSession, sf_dir: str) -> DataFrame:
         a.join(b, F.col("id_b") == F.col("id_a") + 1)
         .select("id_a", "id_b", diff.alias("diff"))
     )
-    d_orig = sim.dot(F.col("diff"), F.col("diff"), _JL_DIM)
-    d_proj = None
-    for j in range(_JL_K):
-        row = F.array(*[F.lit(x) for x in _JL[j]])
-        comp = F.pow(sim.dot(F.col("diff"), row, _JL_DIM), 2)
-        d_proj = comp if d_proj is None else d_proj + comp
+    d_orig = sim.dot("diff", "diff", _JL_DIM)
+    d_proj = F.expr(
+        " + ".join(f"pow({sim._dot_sql('diff', row, _JL_DIM)}, 2)" for row in _JL)
+    )
     dist = pairs.select(
         "id_a",
         "id_b",

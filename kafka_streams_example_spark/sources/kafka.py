@@ -107,7 +107,4 @@ def kafka_batch_source(
         .option("subscribe", topic)
         .load()
     )
-    return raw.select(
-        F.col("timestamp").alias("ts"),
-        F.from_json(F.col("value").cast("string"), schema).alias("v"),
-    ).select("ts", "v.*")
+    return parse_kafka_records(raw, schema)

@@ -538,9 +538,9 @@ def streaming_ingest_neardup(
     import tempfile
 
     from kafka_streams_example_spark.operators.dedup import (
-        hashed_shingles,
+        hashed_shingles_sql,
         minhash_band_hashes,
-        minhash_signature,
+        minhash_signature_sql,
     )
     from kafka_streams_example_spark.operators.text import word_ngrams
 
@@ -556,9 +556,11 @@ def streaming_ingest_neardup(
             .withColumn("shingles", word_ngrams(F.col("txt"), ngram))
             .drop("txt")
             .filter(F.size("shingles") > 0)
-            .withColumn("hsh", F.array_distinct(hashed_shingles(F.col("shingles"))))
+            .withColumn(
+                "hsh", F.expr(f"array_distinct({hashed_shingles_sql('shingles')})")
+            )
             .drop("shingles")
-            .withColumn("sig", minhash_signature(F.col("hsh"), num_hashes, seed))
+            .withColumn("sig", F.expr(minhash_signature_sql("hsh", num_hashes, seed)))
         )
         return minhash_band_hashes(signed, num_hashes=num_hashes, bands=bands)
 

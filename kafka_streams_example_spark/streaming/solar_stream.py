@@ -76,11 +76,7 @@ def stream_anomalies(
     )
 
     def process(batch_df: DataFrame, batch_id: int) -> None:
-        out = solar.enrich_with_panel_statistics(batch_df).filter(
-            F.abs(F.col("sum_power") - F.col("panel_avg"))
-            > F.lit(z) * F.col("deviance")
-        )
-        sink(out, batch_id)
+        sink(solar.anomalies_from_modules(batch_df, z), batch_id)
 
     writer = (
         mod.writeStream.outputMode("append")

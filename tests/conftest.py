@@ -33,6 +33,23 @@ def pytest_collection_modifyitems(config, items):
             item.add_marker(_SLOW_SKIP)
 
 
+def pytest_terminal_summary(terminalreporter, exitstatus, config):
+    """A default run names how many slow-tier tests it skipped and the
+    command that runs them."""
+    if RUN_SLOW:
+        return
+    n = sum(
+        1
+        for r in terminalreporter.stats.get("skipped", [])
+        if "slow" in getattr(r, "keywords", {})
+    )
+    if n:
+        terminalreporter.write_line(
+            f"{n} slow-tier tests skipped; run them with: "
+            "SPARK_GRAFT_SLOW=1 python -m pytest tests/"
+        )
+
+
 @pytest.fixture(scope="session")
 def spark(tmp_path_factory):
     wh = str(tmp_path_factory.mktemp("warehouse"))

@@ -142,13 +142,13 @@ def test_wav_reexport_is_the_stdlib_implementation():
     assert cnp.decode_wav is cx.decode_wav
 
 
-def test_ship_codecs_fast_returns_np_module_here():
-    """numpy is present in this environment, so the fast path must be
-    selected; the stdlib module remains the documented fallback."""
-    from kafka_streams_example_spark.operators.multimodal import (
-        _ship_codecs,
-        _ship_codecs_fast,
-    )
+def test_ship_codecs_returns_np_module():
+    """The one codec shipper hands every kernel the numpy module; the
+    stdlib module it re-exports from ships beside it."""
+    from pyspark import cloudpickle
 
-    assert _ship_codecs() is cx
-    assert _ship_codecs_fast() is cnp
+    from kafka_streams_example_spark.operators.multimodal import _ship_codecs
+
+    assert _ship_codecs() is cnp
+    assert cx.__name__ in cloudpickle.list_registry_pickle_by_value()
+    assert cnp.__name__ in cloudpickle.list_registry_pickle_by_value()

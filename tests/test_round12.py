@@ -33,7 +33,7 @@ def test_cache_bounded_respects_budget(spark):
     over = ops.cache_bounded(spark.range(10), ops._CACHE_MAX_BYTES + 1)
     unknown = ops.cache_bounded(spark.range(10), -1)
     for d in (over, unknown):
-        assert not d.storageLevel.useMemory or d.rdd.is_checkpointed is not None
+        assert not d.storageLevel.useMemory
         # the decisive check: the SQL cache manager holds no entry for it
         assert not spark._jsparkSession.sharedState().cacheManager().lookupCachedData(
             d._jdf
@@ -107,29 +107,115 @@ def test_bigram_master_shared_across_lm_consumers(spark):
     spark.catalog.clearCache()
 
 
-def test_sql_text_similarity_builders_match_column_forms(spark):
-    """The r12 SQL-text expression builders (dot/norm/cosine/sqdist) must
-    produce bit-identical values to the Column/lambda forms they
-    replaced."""
+def test_similarity_builders_match_python_folds(spark):
+    """dot/norm/cosine/sqdist/simhash_bits equal left-to-right Python
+    float folds over the same values, bit for bit."""
+    import math
+    import random
+
     from kafka_streams_example_spark.operators import similarity as sim
 
-    emb = spark.read.parquet(f"{SF_SMOKE}/embeddings.parquet").limit(200)
-    two = emb.select(
-        F.col("embedding").alias("a"), F.reverse("embedding").alias("b")
+    rng = random.Random(7)
+    planes = [[rng.gauss(0.0, 1.0) for _ in range(64)] for _ in range(6)]
+    emb = (
+        spark.read.parquet(f"{SF_SMOKE}/embeddings.parquet")
+        .filter(F.col("embedding").isNotNull())
+        .orderBy("vec_id")
+        .limit(50)
     )
-    checks = two.select(
-        (sim.dot("a", "b", 64) == sim.dot(F.col("a"), F.col("b"), 64)).alias("d"),
-        (sim.norm("a", 64) == sim.norm(F.col("a"), 64)).alias("n"),
-        (
-            sim.cosine("a", "b", 64).eqNullSafe(
-                sim.cosine(F.col("a"), F.col("b"), 64)
-            )
-        ).alias("c"),
-        (sim.sqdist("a", "b", 64) == sim.sqdist(F.col("a"), F.col("b"), 64)).alias(
-            "s"
-        ),
+    rows = (
+        emb.select(F.col("embedding").alias("a"), F.reverse("embedding").alias("b"))
+        .select(
+            "a",
+            "b",
+            sim.dot("a", "b", 64).alias("d"),
+            sim.norm("a", 64).alias("n"),
+            sim.cosine("a", "b", 64).alias("c"),
+            sim.sqdist("a", "b", 64).alias("s"),
+            sim.simhash_bits("a", planes, 64).alias("h"),
+        )
+        .collect()
     )
-    agg = checks.agg(
-        *[F.sum(F.when(F.col(c), 0).otherwise(1)).alias(c) for c in "dncs"]
-    ).first()
-    assert all(agg[c] == 0 for c in "dncs"), agg
+    assert len(rows) == 50
+
+    def dot(x, y):
+        acc = 0.0
+        for u, v in zip(x, y):
+            acc = acc + float(u) * float(v)
+        return acc
+
+    for r in rows:
+        a, b = list(r.a), list(r.b)
+        nrm = math.sqrt(dot(a, a)) * math.sqrt(dot(b, b))
+        sq = 0.0
+        for u, v in zip(a, b):
+            sq = sq + (float(u) - float(v)) * (float(u) - float(v))
+        bucket = 0
+        for p in planes:
+            bucket = bucket * 2 + (1 if dot(a, p) >= 0 else 0)
+        assert r.d == dot(a, b)
+        assert r.n == math.sqrt(dot(a, a))
+        assert r.c == (None if nrm == 0.0 else dot(a, b) / nrm)
+        assert r.s == sq
+        assert r.h == bucket
+
+
+def test_minhash_signature_matches_python_md5_reference(spark):
+    """hashed_shingles_sql + minhash_signature_sql equal a pure-Python
+    MinHash: md5 hex[:15] → int per shingle, then the seeded universal
+    permutations' minima."""
+    import hashlib
+    import random
+
+    from kafka_streams_example_spark.operators import dedup as dd
+
+    mersenne = (1 << 31) - 1
+    shingles = [
+        ["the quick brown", "quick brown fox", "brown fox jumps"],
+        ["solo"],
+        ["dup", "dup", "other"],
+        ["naïve café", "日本語 テキスト", "emoji 🙂 mix"],
+    ]
+    num_hashes, seed = 8, 123
+    got = (
+        spark.createDataFrame(list(enumerate(shingles)), "i INT, sh ARRAY<STRING>")
+        .select("i", F.expr(dd.hashed_shingles_sql("sh")).alias("hsh"))
+        .select(
+            "i", F.expr(dd.minhash_signature_sql("hsh", num_hashes, seed)).alias("sig")
+        )
+        .orderBy("i")
+        .collect()
+    )
+    rng = random.Random(seed)
+    params = [
+        (rng.randrange(1, mersenne), rng.randrange(0, mersenne))
+        for _ in range(num_hashes)
+    ]
+    for r, sh in zip(got, shingles):
+        hashed = [
+            int(hashlib.md5(s.encode("utf-8")).hexdigest()[:15], 16) % mersenne
+            for s in sh
+        ]
+        want = [min((a * h + b) % mersenne for h in hashed) for a, b in params]
+        assert list(r.sig) == want
+
+
+@pytest.mark.parametrize("name", ["a) + (b", "x, y", "a`b", "1a", "", "v\n"])
+def test_builders_refuse_expression_shaped_names(name):
+    """A column name that is not a plain identifier never reaches SQL text."""
+    from kafka_streams_example_spark.operators import dedup as dd
+    from kafka_streams_example_spark.operators import similarity as sim
+
+    builders = [
+        lambda: sim.dot(name, "b", 4),
+        lambda: sim.dot("a", name, 4),
+        lambda: sim.norm(name, 4),
+        lambda: sim.cosine("a", name, 4),
+        lambda: sim.sqdist(name, "b", 4),
+        lambda: sim.simhash_bits(name, [[1.0] * 4], 4),
+        lambda: dd.hashed_shingles_sql(name),
+        lambda: dd.minhash_signature_sql(name),
+    ]
+    for build in builders:
+        with pytest.raises(ValueError):
+            build()

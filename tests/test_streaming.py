@@ -1802,9 +1802,9 @@ def _neardup_band_sets(spark, docs_df):
     import pyspark.sql.functions as F
 
     from kafka_streams_example_spark.operators.dedup import (
-        hashed_shingles,
+        hashed_shingles_sql,
         minhash_band_hashes,
-        minhash_signature,
+        minhash_signature_sql,
     )
     from kafka_streams_example_spark.operators.text import word_ngrams
 
@@ -1813,8 +1813,8 @@ def _neardup_band_sets(spark, docs_df):
             F.col("doc_id").alias("id"), word_ngrams(F.col("text"), 3).alias("sh")
         )
         .filter(F.size("sh") > 0)
-        .withColumn("hsh", F.array_distinct(hashed_shingles(F.col("sh"))))
-        .withColumn("sig", minhash_signature(F.col("hsh"), 32, 42))
+        .withColumn("hsh", F.expr(f"array_distinct({hashed_shingles_sql('sh')})"))
+        .withColumn("sig", F.expr(minhash_signature_sql("hsh", 32, 42)))
     )
     out: dict[int, set] = {}
     for r in minhash_band_hashes(signed).collect():
@@ -1825,8 +1825,8 @@ def _neardup_band_sets(spark, docs_df):
 def test_streaming_ingest_neardup_matches_batch_replay(spark, tmp_path):
     """5-micro-batch parity for the standing NEAR-dup ingest job against
     an independent Python replay of the batch machinery: band hashes come
-    from the batch operators (word_ngrams → hashed_shingles →
-    minhash_signature → minhash_band_hashes, the exact stack of
+    from the batch operators (word_ngrams → hashed_shingles_sql →
+    minhash_signature_sql → minhash_band_hashes, the exact stack of
     neardup_minhash_pairs), probe-then-extend is replayed per batch in
     Python over the real sf0.01 corpus (which contains genuine near-dups,
     not just exact copies), and the published cumulative totals must
