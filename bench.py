@@ -174,6 +174,8 @@ def main() -> None:
         "n_queries": len(timings),
         "protocol": protocol,
         "sf": sf_val,
+        "cpus": int(cpus) if cpus.isdigit() else cpus,
+        "master": spark.sparkContext.master,
         "detail": "BENCH_DETAIL.json",
     }
     if cache_neutral:

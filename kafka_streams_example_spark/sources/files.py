@@ -31,19 +31,19 @@ DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 # case we got from the resolved read schema.
 _NANOS_TS_COLS: dict[str, tuple[str, ...]] = {"events": ("ts",)}
 
-# Per-process memo of each table path's RESOLVED read schema (metadata
-# only, never data): the first load in a session pays the dynamic
+# Per-process memo of each table's RESOLVED read schema (metadata only,
+# never data): the first load of a table version pays the dynamic
 # parquet-footer schema resolution once, every later load passes the
 # recorded schema explicitly — measured 0.109 s -> 0.011 s per
 # spark.read.parquet on the driver (pure plan-construction latency,
-# ~1.5 loads per query x 259 queries per sweep). The testdata under one
-# path is immutable for the life of a process, and a FRESH process
-# (the driver's verify, a production job against a catalog) re-derives
-# it from the files — nothing about query RESULTS is memoized. Every
-# consumer gets the explicit-schema relation (the miss path discovers
-# the schema with a throwaway dynamic read, then rebuilds through the
-# same explicit path), so plan-equality caching sees one relation shape.
-_SCHEMA_MEMO: dict[str, "object"] = {}
+# ~1.5 loads per query x 259 queries per sweep). Keyed on
+# (path, st_mtime_ns, st_size) from one os.stat, so a table rewritten in
+# place is re-resolved instead of read with its old schema; nothing about
+# query RESULTS is memoized. Every consumer gets the explicit-schema
+# relation (the miss path discovers the schema with a throwaway dynamic
+# read, then rebuilds through the same explicit path), so plan-equality
+# caching sees one relation shape.
+_SCHEMA_MEMO: dict[tuple[str, int, int], "object"] = {}
 
 
 def _resolve_read_schema(spark: SparkSession, path: str):
@@ -66,10 +66,16 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     if nanos_cols:
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     path = os.path.join(sf_dir, f"{name}.parquet")
-    schema = _SCHEMA_MEMO.get(path)
+    try:
+        st = os.stat(path)
+        key = (path, st.st_mtime_ns, st.st_size)
+    except OSError:  # not a local path: resolve per load, memo nothing
+        key = None
+    schema = _SCHEMA_MEMO.get(key)
     if schema is None:
         schema = _resolve_read_schema(spark, path)
-        _SCHEMA_MEMO[path] = schema
+        if key is not None:
+            _SCHEMA_MEMO[key] = schema
     df = spark.read.schema(schema).parquet(path)
     for c in nanos_cols:
         # Only NANOS columns surface as LongType under nanosAsLong; MICROS
@@ -89,6 +95,23 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return df
 
 
+def parquet_footers(path: str) -> list:
+    """Footer metadata of a parquet file, or of every ``*.parquet`` file
+    directly under a parquet directory — driver-side, zero Spark jobs.
+    Returns [] when there are no such files; raises on an unreadable
+    footer. Callers pick their own fallback for both."""
+    import glob as _glob
+
+    import pyarrow.parquet as _pq
+
+    files = (
+        [path]
+        if os.path.isfile(path)
+        else sorted(_glob.glob(os.path.join(path, "*.parquet")))
+    )
+    return [_pq.ParquetFile(f).metadata for f in files]
+
+
 def table_row_count(spark: SparkSession, sf_dir: str, name: str) -> int:
     """Exact row count of a testdata table from parquet FOOTER metadata —
     driver-side, zero Spark jobs. Operators that size themselves from the
@@ -98,19 +121,10 @@ def table_row_count(spark: SparkSession, sf_dir: str, name: str) -> int:
     Footer ``num_rows`` is the same number ``count(*)`` returns for the
     unfiltered table (so count-based oracles stay exact). Falls back to
     ``df.count()`` for non-parquet or unreadable inputs."""
-    import glob as _glob
-
-    import pyarrow.parquet as _pq
-
-    path = os.path.join(sf_dir, f"{name}.parquet")
     try:
-        files = (
-            [path]
-            if os.path.isfile(path)
-            else sorted(_glob.glob(os.path.join(path, "*.parquet")))
-        )
-        if files:
-            return sum(_pq.ParquetFile(f).metadata.num_rows for f in files)
+        footers = parquet_footers(os.path.join(sf_dir, f"{name}.parquet"))
+        if footers:
+            return sum(md.num_rows for md in footers)
     except Exception:
         pass
     return load_table(spark, sf_dir, name).count()
@@ -126,24 +140,15 @@ def table_uncompressed_bytes(sf_dir: str, name: str) -> int:
     must treat unknown as TOO BIG and keep the shuffle join: a wrongly
     skipped broadcast costs one exchange, a wrongly taken one OOMs the
     executors."""
-    import glob as _glob
-
-    import pyarrow.parquet as _pq
-
-    path = os.path.join(sf_dir, f"{name}.parquet")
     try:
-        files = (
-            [path]
-            if os.path.isfile(path)
-            else sorted(_glob.glob(os.path.join(path, "*.parquet")))
-        )
-        if not files:
+        footers = parquet_footers(os.path.join(sf_dir, f"{name}.parquet"))
+        if not footers:
             return -1
-        total = 0
-        for f in files:
-            md = _pq.ParquetFile(f).metadata
-            total += sum(md.row_group(i).total_byte_size for i in range(md.num_row_groups))
-        return total
+        return sum(
+            md.row_group(i).total_byte_size
+            for md in footers
+            for i in range(md.num_row_groups)
+        )
     except Exception:
         return -1
 

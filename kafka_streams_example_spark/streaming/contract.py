@@ -16,30 +16,42 @@ from __future__ import annotations
 
 import json
 import os
+from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 
 # ---------------------------------------------------------------------------
-# Shared commit-state machinery for standing ingest jobs (exact-fp dedup and
-# MinHash-band near-dup below): an append-only parquet index extended per
-# micro-batch, running counters in alternating parquet generation slots, and
-# a committed.json high-watermark renamed into place AFTER a batch's writes
-# land — the exactly-once foreachBatch recipe, factored once.
+# Shared commit-state machinery. The five standing ingest gates (exact-fp
+# dedup, MinHash-band near-dup, decontam, quality, phash) publish through
+# _exactly_once_publish: running per-lang counters in alternating parquet
+# generation slots, one deterministic batch=<id> partition per micro-batch,
+# and a committed.json high-watermark renamed into place AFTER a batch's
+# writes land — the exactly-once foreachBatch recipe, factored once. The
+# PSI monitor reuses the marker.
 # ---------------------------------------------------------------------------
+
+
+def _write_json_atomic(path: str, obj: dict) -> None:
+    """tmp + rename: a reader sees the old file or the new one, never a
+    torn write."""
+    tmp = path + ".tmp"
+    with open(tmp, "w") as fh:
+        json.dump(obj, fh)
+    os.replace(tmp, path)
 
 
 def _load_commit_state(root: str) -> dict:
     """Resume a standing job's durable commit state: generation + last
     committed batch id from committed.json (``resumed`` False means a
-    fresh state_dir whose index seed still needs writing)."""
+    fresh state_dir whose seed still needs writing)."""
     state = {"gen": 0, "last": -1, "resumed": False}
     marker = os.path.join(root, "committed.json")
     if os.path.exists(marker):
         with open(marker) as fh:
             m = json.load(fh)
-        state.update(gen=m["gen"], last=m["batch_id"], resumed=True)
+        state.update(gen=m["gen"], last=m.get("batch_id", -1), resumed=True)
     return state
 
 
@@ -65,13 +77,12 @@ def _is_replay(state: dict, root: str, batch_id: int) -> bool:
 
 
 def _commit_marker(root: str, state: dict, batch_id: int) -> None:
-    """Atomic commit: the batch's totals + index writes are durable, now
-    advance the high-watermark (tmp + rename)."""
-    marker = os.path.join(root, "committed.json")
-    tmp = marker + ".tmp"
-    with open(tmp, "w") as fh:
-        json.dump({"gen": state["gen"] + 1, "batch_id": batch_id}, fh)
-    os.replace(tmp, marker)
+    """Atomic commit: the batch's writes are durable, now advance the
+    high-watermark."""
+    _write_json_atomic(
+        os.path.join(root, "committed.json"),
+        {"gen": state["gen"] + 1, "batch_id": batch_id},
+    )
     state["gen"] += 1
     state["last"] = batch_id
 
@@ -80,10 +91,10 @@ def _merge_running_totals(
     owner: SparkSession,
     prev_path: str | None,
     batch_counts: DataFrame,
-    sum_cols: list[str],
 ) -> DataFrame:
-    """Fold a batch's per-lang counters into the previous generation's
-    running totals (full-outer on lang, counters merge as sums)."""
+    """Fold a batch's per-lang counters (every column but ``lang``) into
+    the previous generation's running totals (full-outer on lang,
+    counters merge as sums)."""
     if prev_path is None:
         return batch_counts
     prev = owner.read.parquet(prev_path)
@@ -92,9 +103,71 @@ def _merge_running_totals(
         F.coalesce("d.lang", "c.lang").alias("lang"),
         *[
             (F.coalesce(f"d.{col}", F.lit(0)) + F.coalesce(f"c.{col}", F.lit(0))).alias(col)
-            for col in sum_cols
+            for col in batch_counts.columns
+            if col != "lang"
         ],
     )
+
+
+def _exactly_once_publish(
+    owner: SparkSession,
+    root: str,
+    view: str,
+    partition_dir: str,
+    write_seed: Callable[[], None],
+    probe: Callable[[DataFrame, int], tuple[DataFrame, DataFrame]],
+) -> Callable[[DataFrame, int], None]:
+    """The foreachBatch publish protocol of every standing ingest gate.
+
+    A fresh ``root`` runs ``write_seed()`` once; one holding a committed.json
+    resumes from it. Per batch, ``probe(batch_df, batch_id)`` returns the
+    batch's per-lang counters (``lang`` + counter columns) and the rows of
+    its own ``<partition_dir>/batch=<id>`` partition. The counters merge
+    as sums into the next ``totals_gen{0,1}`` slot, which is written
+    BEFORE the partition (probe-then-extend: a gate probing that
+    partition family sees the pre-batch snapshot). Then the marker
+    commits and ``view`` is pointed at the committed slot on the
+    ``owner`` session (foreachBatch runs under a cloned session whose
+    temp views the caller cannot see).
+
+    Exactly-once under crash-replay: a batch id AT the watermark is a
+    replay whose writes are durable, so it only re-publishes the view;
+    one below it raises (see _is_replay). The partition is written with
+    overwrite, so a replay of a batch that crashed before its commit
+    rewrites the same files. The engine-owned ``batch_df`` is
+    unpersisted on every exit path, failures included, and plan depth
+    stays O(1): each batch is a bounded probe plus two bounded writes."""
+    state = _load_commit_state(root)
+    if not state["resumed"]:
+        write_seed()
+
+    def publish(batch_df: DataFrame, batch_id: int) -> None:
+        # Spark 4 validates that foreachBatch consumes EVERY partition of
+        # the batch — materialize fully before partial/lazy use.
+        batch_df.persist()
+        try:
+            batch_df.count()
+            if not _is_replay(state, root, batch_id):
+                batch_counts, partition = probe(batch_df, batch_id)
+                gen = state["gen"]
+                merged = _merge_running_totals(
+                    owner,
+                    None if gen == 0 else os.path.join(root, f"totals_gen{(gen - 1) % 2}"),
+                    batch_counts,
+                )
+                merged.write.mode("overwrite").parquet(
+                    os.path.join(root, f"totals_gen{gen % 2}")
+                )
+                partition.write.mode("overwrite").parquet(
+                    os.path.join(root, partition_dir, f"batch={batch_id}")
+                )
+                _commit_marker(root, state, batch_id)
+        finally:
+            batch_df.unpersist()
+        committed = os.path.join(root, f"totals_gen{(state['gen'] - 1) % 2}")
+        owner.read.parquet(committed).createOrReplaceTempView(view)
+
+    return publish
 
 
 def streaming_contract_gate(orders_stream: DataFrame, customer: DataFrame) -> DataFrame:
@@ -169,8 +242,8 @@ def streaming_psi_monitor(
     merge as sums, so the monitor's per-batch work is the micro-batch
     aggregation + a bins×types-sized PSI evaluation.
 
-    Concurrency note (holds for every published view here and in
-    ``streaming_ingest_dedup``): the views are lazy scans of the
+    Concurrency note (holds for every published view here and in the
+    ingest gates): the views are lazy scans of the
     alternating generation slot most recently committed, and a slot is
     overwritten two generations later. A reader that captures a view's
     plan and executes it concurrently with that overwrite (i.e. holds a
@@ -212,61 +285,59 @@ def streaming_psi_monitor(
     # registered through the OWNER session (the one the monitor was built
     # on): foreachBatch hands the function a CLONED session, and temp
     # views created there are invisible to the caller.
-    import os
     import tempfile
 
     owner = reference_cells.sparkSession
     gen_root = state_dir or tempfile.mkdtemp(prefix="psi_monitor_state_")
-    state: dict[str, object] = {"cells": None, "gen": 0}
     # restart resume: the durable slots are only useful if a rebuilt
     # monitor actually RELOADS them — the commit marker names the newest
     # generation, so a restarted query continues its running cell counts
     # instead of starting from zero. (Replay of the last micro-batch is
     # already idempotent: update-mode deltas REPLACE per-cell counts, so
     # re-merging identical deltas lands on identical cells.)
-    import json as _json
-
-    _marker = os.path.join(gen_root, "committed.json")
-    if os.path.exists(_marker):
-        with open(_marker) as _fh:
-            _gen = _json.load(_fh)["gen"]
-        state["cells"] = owner.read.parquet(
-            os.path.join(gen_root, f"cells_gen{(_gen - 1) % 2}")
-        )
-        state["gen"] = _gen
+    state = _load_commit_state(gen_root)
+    state["cells"] = (
+        owner.read.parquet(os.path.join(gen_root, f"cells_gen{(state['gen'] - 1) % 2}"))
+        if state["resumed"]
+        else None
+    )
 
     def publish(batch_df: DataFrame, batch_id: int) -> None:
         # Spark 4 validates that foreachBatch consumes EVERY partition of
         # a stateful batch (state-store commit tracking) — materialize
         # fully before any lazy/partial use of the delta.
         batch_df.persist()
-        batch_df.count()
-        # update-mode batches carry only CHANGED cells; merge into the
-        # running picture (newer counts replace older for the same cell)
-        prev: DataFrame | None = state["cells"]  # type: ignore[assignment]
-        if prev is None:
-            merged = batch_df
-        else:
-            c, d = prev.alias("c"), batch_df.alias("d")
-            merged = c.join(
-                d,
-                (F.col("c.event_type") == F.col("d.event_type"))
-                & (F.col("c.bin") == F.col("d.bin")),
-                "full_outer",
-            ).select(
-                F.coalesce("d.event_type", "c.event_type").alias("event_type"),
-                F.coalesce("d.bin", "c.bin").alias("bin"),
-                F.coalesce("d.na", "c.na").alias("na"),
-            )
-        # alternate between two generation slots so the slot being written
-        # is never the slot the previous generation is read from
-        gen = int(state["gen"])  # type: ignore[arg-type]
-        path = os.path.join(gen_root, f"cells_gen{gen % 2}")
-        merged.write.mode("overwrite").parquet(path)
-        batch_df.unpersist()
+        try:
+            batch_df.count()
+            # update-mode batches carry only CHANGED cells; merge into the
+            # running picture (newer counts replace older for the same cell)
+            prev: DataFrame | None = state["cells"]
+            if prev is None:
+                merged = batch_df
+            else:
+                c, d = prev.alias("c"), batch_df.alias("d")
+                merged = c.join(
+                    d,
+                    (F.col("c.event_type") == F.col("d.event_type"))
+                    & (F.col("c.bin") == F.col("d.bin")),
+                    "full_outer",
+                ).select(
+                    F.coalesce("d.event_type", "c.event_type").alias("event_type"),
+                    F.coalesce("d.bin", "c.bin").alias("bin"),
+                    F.coalesce("d.na", "c.na").alias("na"),
+                )
+            # alternate between two generation slots so the slot being
+            # written is never the slot the previous generation is read from
+            gen = state["gen"]
+            path = os.path.join(gen_root, f"cells_gen{gen % 2}")
+            merged.write.mode("overwrite").parquet(path)
+        finally:
+            batch_df.unpersist()
+        # the cells slot is the resumable state: commit it before the
+        # derived PSI table, which every batch recomputes from it
+        _commit_marker(gen_root, state, batch_id)
         cells_now = owner.read.parquet(path)
         state["cells"] = cells_now
-        state["gen"] = gen + 1
         cells_now.createOrReplaceTempView("psi_cells")
         denom = float(_PSI_EPS * _PSI_BINS)
         types = ref.select("event_type").distinct()
@@ -292,12 +363,6 @@ def streaming_psi_monitor(
         live_path = os.path.join(gen_root, f"live_gen{gen % 2}")
         out.write.mode("overwrite").parquet(live_path)
         owner.read.parquet(live_path).createOrReplaceTempView("psi_live")
-        # commit marker last (tmp + rename): a rebuilt monitor resumes
-        # from the newest fully-written generation
-        _tmp = _marker + ".tmp"
-        with open(_tmp, "w") as _fh:
-            _json.dump({"gen": gen + 1}, _fh)
-        os.replace(_tmp, _marker)
 
     return cells, publish
 
@@ -373,25 +438,13 @@ def streaming_ingest_dedup(
     - ``committed.json``: the commit high-watermark (generation +
       batch_id), renamed into place AFTER a batch's writes land.
 
-    Counters are EXACTLY-ONCE under crash-replay (the documented
-    foreachBatch idempotence recipe): a replayed ``batch_id`` AT the
-    high-watermark re-publishes and returns without re-merging (a batch
-    id strictly below it proves a reset/rewound checkpoint reusing this
-    ``state_dir`` — batch ids would restart at 0 and every batch would
-    silently classify as a replay — so publish raises instead); the
-    index write goes to the deterministic ``batch=<id>`` partition with
-    overwrite, so a replay rewrites the same files; and the probe filters
-    ``batch < batch_id`` (partition-pruned), so a crashed attempt's own
-    half-written partition can never flip its replay's classifications.
-
-    Plan depth stays O(1) forever: every batch's work is one parquet scan
-    of the index + the batch join + two bounded writes — no join chain,
-    no pinned cache generations, nothing retains the engine-owned
-    ``batch_df`` past its batch. The published ``ingest_dedup_totals``
-    view (registered on the OWNER session — foreachBatch runs under a
-    cloned session) is a lineage-free parquet scan; see
-    ``streaming_psi_monitor`` for the shared single-reader concurrency
-    note on generation-slot views.
+    Exactly-once counters, replay/rewind handling, restart resume, O(1)
+    plan depth and the ``ingest_dedup_totals`` view publish are
+    ``_exactly_once_publish``'s; this gate supplies the index seed and
+    the probe. The probe filters ``batch < batch_id`` (partition-pruned),
+    so a crashed attempt's own half-written partition can never flip its
+    replay's classifications. See ``streaming_psi_monitor`` for the
+    shared single-reader concurrency note on generation-slot views.
     """
     import tempfile
 
@@ -400,11 +453,8 @@ def streaming_ingest_dedup(
     owner = index_seed.sparkSession
     root = state_dir or tempfile.mkdtemp(prefix="ingest_dedup_state_")
     idx_dir = os.path.join(root, "fp_index")
-    # resume from durable state: the marker is the commit high-watermark
-    # (written atomically AFTER a batch's totals + index writes land), so
-    # a restarted query continues its counters instead of wiping them
-    state = _load_commit_state(root)
-    if not state["resumed"]:
+
+    def write_seed() -> None:
         # seed partition: batch=-1, so the batch<batch_id probe filter
         # always includes it
         index_seed.select(
@@ -413,33 +463,7 @@ def streaming_ingest_dedup(
             os.path.join(idx_dir, "batch=-1")
         )
 
-    def _republish() -> None:
-        if state["gen"] > 0:
-            committed = os.path.join(
-                root, f"totals_gen{(state['gen'] - 1) % 2}"
-            )
-            owner.read.parquet(committed).createOrReplaceTempView(
-                "ingest_dedup_totals"
-            )
-
-    def publish(batch_df: DataFrame, batch_id: int) -> None:
-        # Spark 4 validates that foreachBatch consumes EVERY partition of
-        # the batch — materialize fully before partial/lazy use.
-        batch_df.persist()
-        batch_df.count()
-        # Exactly-once counters under crash-replay (the documented
-        # foreachBatch idempotence recipe): a replayed batch_id AT the
-        # commit high-watermark is a no-op re-publish; one BELOW it
-        # proves a rewound checkpoint and raises (see _is_replay).
-        try:
-            replay = _is_replay(state, root, batch_id)
-        except RuntimeError:
-            batch_df.unpersist()
-            raise
-        if replay:
-            batch_df.unpersist()
-            _republish()
-            return
+    def probe(batch_df: DataFrame, batch_id: int) -> tuple[DataFrame, DataFrame]:
         # The probe reads only index partitions from STRICTLY EARLIER
         # batches (partition-pruned) — a crashed attempt's own half-written
         # batch=<id> partition can never flip its replay's classifications.
@@ -460,34 +484,13 @@ def streaming_ingest_dedup(
             F.count(F.when(F.col("hit").isNotNull(), 1)).alias("n_dup_vs_index"),
             F.count(F.when(F.col("hit").isNull(), 1)).alias("n_new"),
         )
-        gen = state["gen"]
-        merged = _merge_running_totals(
-            owner,
-            None if gen == 0 else os.path.join(root, f"totals_gen{(gen - 1) % 2}"),
-            batch_counts,
-            ["n_incoming", "n_dup_vs_index", "n_new"],
-        )
-        # totals write runs BEFORE the index append so its index scan sees
-        # the pre-batch snapshot (probe-then-extend semantics: a batch's
-        # own fingerprints never count as index hits for that batch).
-        totals_path = os.path.join(root, f"totals_gen{gen % 2}")
-        merged.write.mode("overwrite").parquet(totals_path)
         # novel fingerprints: distinct within the batch, absent from the
-        # index snapshot — written to the DETERMINISTIC partition
-        # batch=<id> with overwrite, so a crash-replay rewrites the same
-        # files instead of appending duplicates (idempotent), and the
-        # probe's batch<id filter partition-prunes the scan.
-        new_fps = probed.filter(F.col("hit").isNull()).select("fp").distinct()
-        new_fps.write.mode("overwrite").parquet(
-            os.path.join(idx_dir, f"batch={batch_id}")
-        )
-        batch_df.unpersist()
-        _commit_marker(root, state, batch_id)
-        owner.read.parquet(totals_path).createOrReplaceTempView(
-            "ingest_dedup_totals"
-        )
+        # index snapshot
+        return batch_counts, probed.filter(F.col("hit").isNull()).select("fp").distinct()
 
-    return docs_stream, publish
+    return docs_stream, _exactly_once_publish(
+        owner, root, "ingest_dedup_totals", "fp_index", write_seed, probe
+    )
 
 
 def streaming_ingest_neardup(
@@ -520,8 +523,8 @@ def streaming_ingest_neardup(
 
     State layout, exactly-once counters, replay/rewind handling, restart
     resume, O(1) plan depth, and the published-view concurrency caveat
-    are all shared with ``streaming_ingest_dedup`` (same commit-state
-    machinery above); differences only:
+    are all shared with ``streaming_ingest_dedup`` (both publish through
+    ``_exactly_once_publish``); differences only:
 
     - ``band_index/batch=<id>/``: APPEND-ONLY parquet of DISTINCT
       (band, bhash) rows contributed by each batch's novel docs (seed =
@@ -564,33 +567,12 @@ def streaming_ingest_neardup(
         )
         return minhash_band_hashes(signed, num_hashes=num_hashes, bands=bands)
 
-    state = _load_commit_state(root)
-    if not state["resumed"]:
+    def write_seed() -> None:
         _bands_of(index_seed).select("band", "bhash").distinct().write.mode(
             "overwrite"
         ).parquet(os.path.join(idx_dir, "batch=-1"))
 
-    def _republish() -> None:
-        if state["gen"] > 0:
-            committed = os.path.join(root, f"totals_gen{(state['gen'] - 1) % 2}")
-            owner.read.parquet(committed).createOrReplaceTempView(
-                "ingest_neardup_totals"
-            )
-
-    def publish(batch_df: DataFrame, batch_id: int) -> None:
-        # Spark 4 validates that foreachBatch consumes EVERY partition —
-        # materialize fully before partial/lazy use.
-        batch_df.persist()
-        batch_df.count()
-        try:
-            replay = _is_replay(state, root, batch_id)
-        except RuntimeError:
-            batch_df.unpersist()
-            raise
-        if replay:
-            batch_df.unpersist()
-            _republish()
-            return
+    def probe(batch_df: DataFrame, batch_id: int) -> tuple[DataFrame, DataFrame]:
         # probe: any band collision against STRICTLY EARLIER batches'
         # novel docs (partition-pruned; a crashed attempt's half-written
         # batch=<id> partition can never flip its replay's classes)
@@ -618,35 +600,17 @@ def streaming_ingest_neardup(
             ),
             F.count(F.when(F.col("dup").isNull(), 1)).alias("n_new"),
         )
-        gen = state["gen"]
-        merged = _merge_running_totals(
-            owner,
-            None if gen == 0 else os.path.join(root, f"totals_gen{(gen - 1) % 2}"),
-            batch_counts,
-            ["n_incoming", "n_neardup_vs_index", "n_new"],
-        )
-        # totals before index append: probe-then-extend (a batch's own
-        # bands never count as hits for that batch)
-        totals_path = os.path.join(root, f"totals_gen{gen % 2}")
-        merged.write.mode("overwrite").parquet(totals_path)
-        # novel docs' band hashes extend the index — DETERMINISTIC
-        # batch=<id> partition with overwrite, so a crash-replay rewrites
-        # the same files (idempotent)
+        # novel docs' band hashes extend the index
         new_bands = (
             batch_bands.join(hit_ids, "id", "left_anti")
             .select("band", "bhash")
             .distinct()
         )
-        new_bands.write.mode("overwrite").parquet(
-            os.path.join(idx_dir, f"batch={batch_id}")
-        )
-        batch_df.unpersist()
-        _commit_marker(root, state, batch_id)
-        owner.read.parquet(totals_path).createOrReplaceTempView(
-            "ingest_neardup_totals"
-        )
+        return batch_counts, new_bands
 
-    return docs_stream, publish
+    return docs_stream, _exactly_once_publish(
+        owner, root, "ingest_neardup_totals", "band_index", write_seed, probe
+    )
 
 
 # Static bench-index rows above which the decontam gate's per-batch probe
@@ -660,15 +624,13 @@ def _parquet_dir_rows(path: str) -> float:
     """Row count of a parquet directory from FOOTER metadata — driver-side,
     zero jobs. Unknown/unreadable reads as +inf so callers treat it as too
     big to broadcast (the safe direction)."""
-    import glob as _glob
-
-    import pyarrow.parquet as _pq
+    from kafka_streams_example_spark.sources.files import parquet_footers
 
     try:
-        files = sorted(_glob.glob(os.path.join(path, "*.parquet")))
-        if not files:
+        footers = parquet_footers(path)
+        if not footers:
             return float("inf")
-        return float(sum(_pq.ParquetFile(f).metadata.num_rows for f in files))
+        return float(sum(md.num_rows for md in footers))
     except Exception:
         return float("inf")
 
@@ -687,9 +649,9 @@ def streaming_decontam_gate(
     so benchmark text is stopped at ingest instead of being discovered in
     a post-hoc sweep over the accumulated corpus.
 
-    Differences from the two ingest-dedup twins (same commit-state
-    machinery, exactly-once counters, replay/rewind handling, restart
-    resume, O(1) plan depth):
+    Differences from the two ingest-dedup twins (the same
+    ``_exactly_once_publish`` protocol: exactly-once counters,
+    replay/rewind handling, restart resume, O(1) plan depth):
 
     - the probe index is STATIC: ``bench_ngrams/`` is written ONCE from
       the eval corpus at state-dir creation (distinct 64-bit xxhash64
@@ -730,33 +692,12 @@ def streaming_decontam_gate(
             .distinct()
         )
 
-    state = _load_commit_state(root)
-    if not state["resumed"]:
+    def write_seed() -> None:
         _grams_of(bench_seed).select("gh").distinct().write.mode(
             "overwrite"
         ).parquet(idx_path)
 
-    def _republish() -> None:
-        if state["gen"] > 0:
-            committed = os.path.join(root, f"totals_gen{(state['gen'] - 1) % 2}")
-            owner.read.parquet(committed).createOrReplaceTempView(
-                "decontam_totals"
-            )
-
-    def publish(batch_df: DataFrame, batch_id: int) -> None:
-        # Spark 4 validates that foreachBatch consumes EVERY partition —
-        # materialize fully before partial/lazy use.
-        batch_df.persist()
-        batch_df.count()
-        try:
-            replay = _is_replay(state, root, batch_id)
-        except RuntimeError:
-            batch_df.unpersist()
-            raise
-        if replay:
-            batch_df.unpersist()
-            _republish()
-            return
+    def probe(batch_df: DataFrame, batch_id: int) -> tuple[DataFrame, DataFrame]:
         bench = owner.read.parquet(idx_path).withColumn("hit", F.lit(1))
         if _parquet_dir_rows(idx_path) <= _BENCH_IDX_BCAST_MAX_ROWS:
             # real eval suites are MBs of gram hashes — broadcast; an
@@ -780,29 +721,15 @@ def streaming_decontam_gate(
             F.count(F.when(F.col("n_overlap") == 0, 1)).alias("n_clean"),
             F.sum("n_overlap").alias("n_overlap_grams"),
         )
-        gen = state["gen"]
-        merged = _merge_running_totals(
-            owner,
-            None if gen == 0 else os.path.join(root, f"totals_gen{(gen - 1) % 2}"),
-            batch_counts,
-            ["n_incoming", "n_contaminated", "n_clean", "n_overlap_grams"],
-        )
-        totals_path = os.path.join(root, f"totals_gen{gen % 2}")
-        merged.write.mode("overwrite").parquet(totals_path)
-        # quarantine the batch's contaminated ids — DETERMINISTIC
-        # batch=<id> partition with overwrite (idempotent under replay)
-        probed.filter(F.col("n_overlap") > 0).select(
+        # the batch's contaminated ids go to quarantine
+        quarantined = probed.filter(F.col("n_overlap") > 0).select(
             F.col("id").alias("doc_id"), "n_overlap"
-        ).write.mode("overwrite").parquet(
-            os.path.join(root, f"quarantine/batch={batch_id}")
         )
-        batch_df.unpersist()
-        _commit_marker(root, state, batch_id)
-        owner.read.parquet(totals_path).createOrReplaceTempView(
-            "decontam_totals"
-        )
+        return batch_counts, quarantined
 
-    return docs_stream, publish
+    return docs_stream, _exactly_once_publish(
+        owner, root, "decontam_totals", "quarantine", write_seed, probe
+    )
 
 
 def compact_ingest_index(
@@ -876,11 +803,7 @@ def compact_ingest_index(
     if len(absorb) <= 1:
         return {"absorbed": 0, "rows": None, "new_id": None}
     new_id = ids[0] - 1
-    intent = {"new_id": new_id, "absorbed": absorb}
-    tmp = marker + ".tmp"
-    with open(tmp, "w") as fh:
-        json.dump(intent, fh)
-    os.replace(tmp, marker)
+    _write_json_atomic(marker, {"new_id": new_id, "absorbed": absorb})
     consolidated = (
         owner.read.parquet(idx_dir)
         .filter(F.col("batch").isin(absorb))
@@ -947,10 +870,7 @@ def compact_quality_state(owner: SparkSession, state_dir: str) -> dict:
         1 for f in os.listdir(lm_path) if f.endswith(".parquet")
     )
     if lm_files_before > 1:
-        tmp = marker + ".tmp"
-        with open(tmp, "w") as fh:
-            json.dump({"target": lm_new}, fh)
-        os.replace(tmp, marker)
+        _write_json_atomic(marker, {"target": lm_new})
         owner.read.parquet(lm_path).coalesce(1).write.mode("overwrite").parquet(
             lm_new
         )
@@ -977,9 +897,9 @@ def streaming_quality_gate(
     """Quality filtering as a STANDING ingest gate — the fourth ingest
     twin: the batch quality cutoff (``doc_perplexity_proxy`` scoring +
     ``quality_threshold_for_budget``'s token-budget threshold solve) as a
-    per-micro-batch keep/drop decision on the shared commit-state
-    machinery (exactly-once counters, replay/rewind handling, restart
-    resume, O(1) plan depth).
+    per-micro-batch keep/drop decision published through
+    ``_exactly_once_publish`` (exactly-once counters, replay/rewind
+    handling, restart resume, O(1) plan depth).
 
     Static artifacts, written ONCE at state-dir creation from the seed
     corpus (the gate must be deterministic across its lifetime — a score
@@ -1038,16 +958,15 @@ def streaming_quality_gate(
             .agg(F.round(-F.sum("logp") / F.count("*"), 6).alias("score"))
         )
 
-    state = _load_commit_state(root)
-    if not state["resumed"]:
+    def write_seed() -> None:
         seed_toks = _doc_tokens(seed_corpus)
         seed_toks.groupBy("token").agg(F.count("*").alias("c")).write.mode(
             "overwrite"
         ).parquet(lm_path)
         freq = owner.read.parquet(lm_path)
         n_total = freq.agg(F.sum("c")).first()[0] or 0
-        t_bin: int | None = None
-        if threshold is None:
+        cutoff, t_bin = threshold, None
+        if cutoff is None:
             # histogram-CDF token-budget solve on the SEED
             # (floor(score*100) integer bins — quality_threshold_for_
             # budget's binning — bins-bounded frame, no corpus sort)
@@ -1076,23 +995,14 @@ def streaming_quality_gate(
             )
             if row and row[0] is not None:
                 t_bin = int(row[0])
-                threshold = (t_bin + 1) / 100.0  # bin's upper edge
+                cutoff = (t_bin + 1) / 100.0  # bin's upper edge
             else:
-                threshold = float("inf")
-        tmp = thr_path + ".tmp"
-        with open(tmp, "w") as fh:
-            json.dump(
-                {"threshold": threshold, "t_bin": t_bin,
-                 "n_total": int(n_total), "keep_tokens": keep_tokens}, fh,
-            )
-        os.replace(tmp, thr_path)
-    with open(thr_path) as fh:
-        art = json.load(fh)
-    thr, n_total = art["threshold"], art["n_total"]
-    # solved cutoffs keep by bin (floor(score*100) <= t_bin) so admitted
-    # mass matches the solve; explicit cutoffs (t_bin None, including
-    # pre-existing state dirs) keep by score <= threshold as documented
-    art_bin = art.get("t_bin")
+                cutoff = float("inf")
+        _write_json_atomic(
+            thr_path,
+            {"threshold": cutoff, "t_bin": t_bin,
+             "n_total": int(n_total), "keep_tokens": keep_tokens},
+        )
 
     def _keep_pred(score_col):
         if art_bin is not None:
@@ -1101,23 +1011,7 @@ def streaming_quality_gate(
             )
         return score_col <= F.lit(thr)
 
-    def _republish() -> None:
-        if state["gen"] > 0:
-            committed = os.path.join(root, f"totals_gen{(state['gen'] - 1) % 2}")
-            owner.read.parquet(committed).createOrReplaceTempView("quality_totals")
-
-    def publish(batch_df: DataFrame, batch_id: int) -> None:
-        batch_df.persist()
-        batch_df.count()
-        try:
-            replay = _is_replay(state, root, batch_id)
-        except RuntimeError:
-            batch_df.unpersist()
-            raise
-        if replay:
-            batch_df.unpersist()
-            _republish()
-            return
+    def probe(batch_df: DataFrame, batch_id: int) -> tuple[DataFrame, DataFrame]:
         freq = owner.read.parquet(lm_path)
         if _parquet_dir_rows(lm_path) <= _BENCH_IDX_BCAST_MAX_ROWS:
             freq = F.broadcast(freq)
@@ -1136,23 +1030,23 @@ def streaming_quality_gate(
             F.count(F.when(~F.col("kept"), 1)).alias("n_rejected"),
             F.count(F.when(F.col("score").isNull(), 1)).alias("n_unscorable"),
         )
-        gen = state["gen"]
-        merged = _merge_running_totals(
-            owner,
-            None if gen == 0 else os.path.join(root, f"totals_gen{(gen - 1) % 2}"),
-            batch_counts,
-            ["n_incoming", "n_kept", "n_rejected", "n_unscorable"],
-        )
-        totals_path = os.path.join(root, f"totals_gen{gen % 2}")
-        merged.write.mode("overwrite").parquet(totals_path)
-        probed.filter(~F.col("kept")).select(
+        rejected = probed.filter(~F.col("kept")).select(
             F.col("id").alias("doc_id"), "score"
-        ).write.mode("overwrite").parquet(
-            os.path.join(root, f"rejects/batch={batch_id}")
         )
-        batch_df.unpersist()
-        _commit_marker(root, state, batch_id)
-        owner.read.parquet(totals_path).createOrReplaceTempView("quality_totals")
+        return batch_counts, rejected
+
+    publish = _exactly_once_publish(
+        owner, root, "quality_totals", "rejects", write_seed, probe
+    )
+    # the artifact is on disk now (seeded above or resumed); probe reads
+    # these cutoff values at call time
+    with open(thr_path) as fh:
+        art = json.load(fh)
+    thr, n_total = art["threshold"], art["n_total"]
+    # solved cutoffs keep by bin (floor(score*100) <= t_bin) so admitted
+    # mass matches the solve; explicit cutoffs (t_bin None, including
+    # pre-existing state dirs) keep by score <= threshold as documented
+    art_bin = art.get("t_bin")
 
     return docs_stream, publish
 
@@ -1185,7 +1079,7 @@ def streaming_ingest_phash(
     ingested image.
 
     State layout, exactly-once counters, replay/rewind handling, restart
-    resume, and O(1) plan depth are the shared commit-state machinery's;
+    resume, and O(1) plan depth are ``_exactly_once_publish``'s;
     the published view is ``ingest_phash_totals`` with per-lang
     (n_incoming, n_neardup_vs_index, n_new). The stream carries
     (doc_id, lang, text) and the image payload is the deterministic
@@ -1262,31 +1156,12 @@ def streaming_ingest_phash(
             "id", "dhash", F.explode(band_structs).alias("bk")
         ).select("id", "dhash", F.col("bk.band").alias("band"), F.col("bk.bv").alias("bv"))
 
-    state = _load_commit_state(root)
-    if not state["resumed"]:
+    def write_seed() -> None:
         _hashes_of(index_seed).select("band", "bv", "dhash").distinct().write.mode(
             "overwrite"
         ).parquet(os.path.join(idx_dir, "batch=-1"))
 
-    def _republish() -> None:
-        if state["gen"] > 0:
-            committed = os.path.join(root, f"totals_gen{(state['gen'] - 1) % 2}")
-            owner.read.parquet(committed).createOrReplaceTempView(
-                "ingest_phash_totals"
-            )
-
-    def publish(batch_df: DataFrame, batch_id: int) -> None:
-        batch_df.persist()
-        batch_df.count()
-        try:
-            replay = _is_replay(state, root, batch_id)
-        except RuntimeError:
-            batch_df.unpersist()
-            raise
-        if replay:
-            batch_df.unpersist()
-            _republish()
-            return
+    def probe(batch_df: DataFrame, batch_id: int) -> tuple[DataFrame, DataFrame]:
         # probe strictly-earlier batches: band collision proposes, exact
         # Hamming on the stored full hashes confirms
         index = (
@@ -1325,28 +1200,14 @@ def streaming_ingest_phash(
             ),
             F.count(F.when(F.col("dup").isNull(), 1)).alias("n_new"),
         )
-        gen = state["gen"]
-        merged = _merge_running_totals(
-            owner,
-            None if gen == 0 else os.path.join(root, f"totals_gen{(gen - 1) % 2}"),
-            batch_counts,
-            ["n_incoming", "n_neardup_vs_index", "n_new"],
-        )
-        totals_path = os.path.join(root, f"totals_gen{gen % 2}")
-        merged.write.mode("overwrite").parquet(totals_path)
-        # novel images extend the index (deterministic partition —
-        # crash-replay rewrites the same files)
-        (
+        # novel images extend the index
+        new_hashes = (
             batch_bands.join(hit_ids, "id", "left_anti")
             .select("band", "bv", "dhash")
             .distinct()
-            .write.mode("overwrite")
-            .parquet(os.path.join(idx_dir, f"batch={batch_id}"))
         )
-        batch_df.unpersist()
-        _commit_marker(root, state, batch_id)
-        owner.read.parquet(totals_path).createOrReplaceTempView(
-            "ingest_phash_totals"
-        )
+        return batch_counts, new_hashes
 
-    return docs_stream, publish
+    return docs_stream, _exactly_once_publish(
+        owner, root, "ingest_phash_totals", "phash_index", write_seed, probe
+    )

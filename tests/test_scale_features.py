@@ -368,6 +368,38 @@ def test_table_row_count_matches_count_star(spark):
         assert table_row_count(spark, sf, t) == load_table(spark, sf, t).count()
 
 
+def test_load_table_rereads_schema_of_rewritten_table(spark, tmp_path):
+    """The read-schema memo must not outlive the file: a table rewritten
+    in place with an extra column loads with that column."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    path = str(tmp_path / "region.parquet")
+    pq.write_table(
+        pa.table({"r_regionkey": [0, 1], "r_name": ["AFRICA", "AMERICA"]}), path
+    )
+    assert load_table(spark, str(tmp_path), "region").columns == [
+        "r_regionkey",
+        "r_name",
+    ]
+    pq.write_table(
+        pa.table(
+            {
+                "r_regionkey": [0, 1],
+                "r_name": ["AFRICA", "AMERICA"],
+                "r_comment": ["x", "y"],
+            }
+        ),
+        path,
+    )
+    df = load_table(spark, str(tmp_path), "region")
+    assert df.columns == ["r_regionkey", "r_name", "r_comment"]
+    assert sorted(tuple(r) for r in df.collect()) == [
+        (0, "AFRICA", "x"),
+        (1, "AMERICA", "y"),
+    ]
+
+
 def test_csv_json_roundtrip(spark, tmp_path):
     """CSV and JSON sources roundtrip the events table with explicit
     schemas (no inference pass)."""

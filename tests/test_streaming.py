@@ -2349,6 +2349,54 @@ def test_streaming_decontam_checkpoint_restart_end_to_end(spark, tmp_path):
     assert [tuple(r) for r in got] == [("en", 4, 2, 2, 2)]
 
 
+def test_streaming_decontam_failed_publish_releases_batch_cache(spark, tmp_path):
+    """A publish that fails mid-batch (here: a corrupted static index)
+    raises and leaves no micro-batch cached — the engine-owned batch is
+    unpersisted on the failure path too, not only on success."""
+    import glob as _glob
+    import os as _os
+
+    import pytest as _pytest
+
+    from kafka_streams_example_spark.streaming.contract import (
+        streaming_decontam_gate,
+    )
+
+    seed = spark.createDataFrame(
+        [(0, "en", " ".join(f"lk{i}" for i in range(8)))],
+        "doc_id LONG, lang STRING, text STRING",
+    )
+    state_dir = str(tmp_path / "dcl_state")
+    _os.makedirs(tmp_path / "dcl_unused")
+    stream = spark.readStream.schema(
+        "doc_id LONG, lang STRING, text STRING"
+    ).json(str(tmp_path / "dcl_unused"))
+    _, publish = streaming_decontam_gate(stream, seed, state_dir=state_dir)
+    files = _glob.glob(_os.path.join(state_dir, "bench_ngrams", "*.parquet"))
+    assert files
+    for f in files:
+        with open(f, "wb") as fh:
+            fh.write(b"this is not a parquet file")
+
+    def cached_ids():
+        return {
+            info.id()
+            for info in spark.sparkContext._jsc.sc().getRDDStorageInfo()
+            if info.numCachedPartitions() > 0
+        }
+
+    before = cached_ids()
+    b0 = spark.createDataFrame(
+        [(1, "en", "lk0 lk1 lk2 lk3 lk4 tail words")],
+        "doc_id LONG, lang STRING, text STRING",
+    )
+    with _pytest.raises(Exception):
+        publish(b0, 0)
+    assert cached_ids() - before == set()
+    # nothing was committed: the failed batch leaves no watermark
+    assert not _os.path.exists(_os.path.join(state_dir, "committed.json"))
+
+
 # ---------------------------------------------------------------------------
 # compact_ingest_index — offline small-file maintenance for the ingest twins
 # ---------------------------------------------------------------------------
