@@ -89,54 +89,13 @@ def _estimated_scan_partitions(df: DataFrame) -> int | None:
         return None
 
 
-def checkpoint_reused(df: DataFrame) -> DataFrame:
-    """Eagerly localCheckpoint a SMALL derived frame that downstream plan
-    branches reference more than once.
-
-    Spark re-executes a logical subtree once PER REFERENCE — runtime
-    exchange reuse only dedupes byte-identical Exchange subplans, and the
-    multi-consumer composites here (recall A/Bs, kappa cells, trained
-    centroid tables) reference whole aggregated results whose exchanges
-    differ across consumers (measured on the executed AQE plans:
-    ann_recall_trained_vs_fixed ran 18 parquet scans / 27 exchanges for a
-    query over ONE table, ReusedExchange count 0). Checkpointing
-    materializes the subtree ONCE per invocation and every consumer reads
-    the materialized RDD — guide §3.3's "materialise an intermediate to
-    truncate the plan", applied to reused subtrees.
-
-    Unlike ``.cache()`` there is no CacheManager plan-equality entry: a
-    fresh invocation of the query recomputes from the parquet inputs, so
-    nothing persists across bench/oracle runs. Only for frames small by
-    construction (top-k winner sets, k-row centroid tables,
-    label-cardinality cells): localCheckpoint persists to executor
-    memory/disk, the in-engine analogue of the write-out a production
-    pipeline would do for a reused intermediate at 100 TB.
-
-    LAZY (eager=False), deliberately: an eager checkpoint runs the
-    subtree as its own blocking job at DataFrame-construction time, which
-    SERIALIZES work that one combined action overlaps across idle cores
-    (measured: eager checkpoints made ann_recall_trained_vs_fixed 6.7 →
-    7.5 s while lazy kept the dedup AND the overlap). The lazy form marks
-    the RDD persisted + checkpointed; the query's single action
-    materializes it once on first touch and every other consumer reads
-    the persisted partitions."""
-    return df.localCheckpoint(eager=False)
-
-
-# Per-frame budget for session-level plan-equality caches. The r11
-# VERDICT's open risk #3: the multi-consumer .cache() frames (per-doc
-# score table, pair tables, edge lists, n-gram count tables) are narrow
-# but CORPUS-CARDINALITY — at 100 TB they are TB-scale cached frames
-# competing with execution memory. DataFrame.cache() is MEMORY_AND_DISK
-# (degrades, never OOMs), but a cache that mostly lives on disk and
-# evicts execution memory is strictly worse than a per-invocation
-# materialization, so above the budget the frame falls back to
-# ``checkpoint_reused`` (intra-query sharing only, nothing session-wide
-# pinned). Parameterised for production (engine default 1 GiB per
-# frame); the bench SFs sit orders of magnitude under it, so the local
-# protocol is unchanged. Thresholds and per-site estimate formulas are
-# documented in SCALE.md §caches.
-_CACHE_MAX_BYTES = int(os.environ.get("SPARK_GRAFT_CACHE_MAX_BYTES", str(1 << 30)))
+# Per-frame budget for session-level plan-equality caches. Narrow
+# multi-consumer frames (per-doc score tables, pair and edge lists,
+# n-gram count tables) are corpus-cardinality: at 100 TB they would be
+# TB-scale cached frames competing with execution memory. The bench
+# scale factors sit orders of magnitude under 1 GiB. Tests monkeypatch
+# this attribute to force the checkpoint path.
+_CACHE_MAX_BYTES = 1 << 30
 
 
 def estimated_input_bytes(df: DataFrame) -> int:
@@ -144,25 +103,52 @@ def estimated_input_bytes(df: DataFrame) -> int:
     parquet bytes; driver-side file listing, zero Spark jobs), or -1 when
     the input is not a local file scan. Operator-internal caches scale
     this by a documented expansion factor to budget themselves when the
-    caller cannot pass a footer estimate."""
+    caller cannot pass a footer estimate. Call it on the operator's INPUT:
+    once a derived frame's plan is session-cached, its optimized plan
+    reads the cache and lists no files."""
     sizes = _local_file_sizes(df)
     return -1 if sizes is None else sum(sizes)
 
 
-def cache_bounded(df: DataFrame, est_bytes: int) -> DataFrame:
-    """Session-cache ``df`` when its estimated materialized size fits the
-    per-frame budget; otherwise cut lineage per invocation instead.
+def share(df: DataFrame, est_bytes: int = -1) -> DataFrame:
+    """Materialize a frame that several plan branches consume, once.
 
-    ``est_bytes`` is a driver-side UPPER-BOUND estimate (parquet footer
-    bytes/rows × a per-site expansion factor — zero Spark jobs); a
-    negative value means "unknown", which falls back — the safe
-    direction, mirroring the decontam broadcast guard
-    (queries/dedup.py:_maybe_broadcast_bench). Output is identical on
-    both paths (proven by tests/test_round12.py's forced-fallback
-    parity); only the sharing scope changes."""
+    Spark re-executes a logical subtree once PER REFERENCE: runtime
+    exchange reuse only dedupes byte-identical Exchange subplans, and the
+    multi-consumer composites here (recall A/Bs, kappa cells, pair
+    tables) reference whole aggregated results whose exchanges differ
+    across consumers (measured on the executed AQE plans:
+    ann_recall_trained_vs_fixed ran 18 parquet scans / 27 exchanges for a
+    query over ONE table, ReusedExchange count 0).
+
+    The one decision is the sharing scope, picked from ``est_bytes``, a
+    driver-side UPPER-BOUND estimate of the materialized size (parquet
+    footer bytes/rows x a per-site expansion factor; zero Spark jobs):
+
+    - ``0 <= est_bytes <= _CACHE_MAX_BYTES``: ``.cache()``. The
+      CacheManager keys the entry on plan equality, so every registered
+      consumer of the same subtree shares it for the whole session.
+      MEMORY_AND_DISK degrades, never OOMs.
+    - otherwise, including a negative (unknown) estimate:
+      ``localCheckpoint(eager=False)``. The frame is shared within this
+      invocation only and nothing stays pinned for the session; a fresh
+      invocation recomputes from the inputs. Unknown takes this side
+      because it is the safe direction, as the decontam broadcast guard
+      does (queries/dedup.py:_maybe_broadcast_bench).
+
+    Output is identical on both paths (tests/test_round12.py forces the
+    budget to zero over seven queries); only the sharing scope changes.
+
+    The checkpoint is LAZY, deliberately: an eager one runs the subtree
+    as its own blocking job at DataFrame-construction time, which
+    serializes work that one combined action overlaps across idle cores
+    (measured: eager checkpoints made ann_recall_trained_vs_fixed 6.7 ->
+    7.5 s, while lazy kept the dedup AND the overlap). The query's single
+    action materializes the RDD on first touch and every other consumer
+    reads the persisted partitions."""
     if 0 <= est_bytes <= _CACHE_MAX_BYTES:
         return df.cache()
-    return checkpoint_reused(df)
+    return df.localCheckpoint(eager=False)
 
 
 def ensure_min_partitions(df: DataFrame, n: int | None = None) -> DataFrame:

@@ -30,7 +30,7 @@ from kafka_streams_example_spark.functions.hashing import (
     stable_long,
     stable_long_sql,
 )
-from kafka_streams_example_spark.operators import sql_name
+from kafka_streams_example_spark.operators import estimated_input_bytes, share, sql_name
 from kafka_streams_example_spark.operators.text import jaccard, round_half_up, word_ngrams
 
 # 31-bit Mersenne prime — the classic universal-hash modulus. Kept at 31
@@ -48,24 +48,9 @@ def exact_dedup(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -
     )
 
 
-_CORPUS_CACHE_EXPANSION = 8  # compressed scan bytes -> hashed-shingle frame
-
-
-def _budgeted_corpus_cache(df: DataFrame) -> DataFrame:
-    """Session-budgeted cache for corpus-shingle-sized prepared frames
-    (r12, guide §5): estimate from the scan's file bytes when the input
-    is a local parquet scan; keep the r11 unconditional cache otherwise
-    (derived/streaming inputs, where the estimate is unknowable and the
-    frame is per-batch-sized)."""
-    from kafka_streams_example_spark.operators import (
-        cache_bounded,
-        estimated_input_bytes,
-    )
-
-    est = estimated_input_bytes(df)
-    if est < 0:
-        return df.cache()
-    return cache_bounded(df, est * _CORPUS_CACHE_EXPANSION)
+# compressed scan bytes -> hashed-shingle frame (parquet decompression
+# plus the int-array expansion; SCALE.md §caches)
+_CORPUS_CACHE_EXPANSION = 8
 
 
 def hashed_shingles_sql(shingles: str) -> str:
@@ -102,6 +87,32 @@ def minhash_signature_sql(hashed: str, num_hashes: int = 32, seed: int = 42) -> 
         for a, b in params
     )
     return f"array({mins})"
+
+
+def minhash_signed(
+    df: DataFrame,
+    text_col: str = "text",
+    id_col: str = "doc_id",
+    ngram: int = 3,
+    num_hashes: int = 32,
+    seed: int = 42,
+) -> DataFrame:
+    """The MinHash signing stage: (id, hsh, sig) per document, hsh the
+    distinct hashed ``ngram``-word shingles (integer set ops downstream,
+    md5 once) and sig their signature. Documents too short to shingle
+    drop out here. Shared by the batch ``minhash_pairs`` and the
+    streaming near-dup ingest gate, so both sign identically."""
+    return (
+        df.select(F.col(id_col).alias("id"), F.col(text_col).alias("txt"))
+        .withColumn("shingles", word_ngrams(F.col("txt"), ngram))
+        .drop("txt")
+        .filter(F.size("shingles") > 0)
+        .withColumn(
+            "hsh", F.expr(f"array_distinct({hashed_shingles_sql('shingles')})")
+        )
+        .drop("shingles")
+        .withColumn("sig", F.expr(minhash_signature_sql("hsh", num_hashes, seed)))
+    )
 
 
 def minhash_band_hashes(
@@ -153,27 +164,11 @@ def minhash_pairs(
     (shuffle on a high-cardinality key) → distinct pairs → exact verify on
     the pair's shingle sets. The full cross product never exists.
     """
-    from kafka_streams_example_spark.operators import ensure_min_partitions
-
-    docs = (
-        ensure_min_partitions(df.select(F.col(id_col).alias("id"), F.col(text_col).alias("txt")))
-        .withColumn("shingles", word_ngrams(F.col("txt"), ngram))
-        .drop("txt")
-        .filter(F.size("shingles") > 0)
-        # distinct hashed shingles: integer set ops downstream, md5 once
-        .withColumn(
-            "hsh", F.expr(f"array_distinct({hashed_shingles_sql('shingles')})")
-        )
-        .drop("shingles")
-        .withColumn("sig", F.expr(minhash_signature_sql("hsh", num_hashes, seed)))
-    )
+    docs = minhash_signed(df, text_col, id_col, ngram, num_hashes, seed)
     # consumed twice (banding join + verify); hashes/sigs are smaller
     # than the text they replace but still corpus-shingle-sized, so the
-    # cache is budgeted from the scan's file bytes (x8 covers parquet
-    # decompression plus the int-array expansion; SCALE.md §caches) —
-    # above budget the frame materializes per invocation. Non-scan
-    # inputs (streaming micro-batches) keep the unconditional cache.
-    docs = _budgeted_corpus_cache(docs)
+    # share is budgeted from the scan's file bytes
+    docs = share(docs, estimated_input_bytes(df) * _CORPUS_CACHE_EXPANSION)
     # Banding carries ONLY (id, band key) through the self-join — the
     # shingle arrays would otherwise dominate shuffle volume.
     banded = minhash_band_hashes(docs, num_hashes=num_hashes, bands=bands)
@@ -248,15 +243,11 @@ def _allpairs_prepared(
     """The shingle-set preparation stage of ngram_jaccard_pairs (shared
     with tests): (id, blk, sz, hsh) with hsh sorted by hash value or,
     with freq_order, by global document frequency (rarest first)."""
-    from kafka_streams_example_spark.operators import ensure_min_partitions
-
     docs = (
-        ensure_min_partitions(
-            df.select(
-                F.col(id_col).alias("id"),
-                block_key.alias("blk"),
-                F.col(text_col).alias("txt"),
-            )
+        df.select(
+            F.col(id_col).alias("id"),
+            block_key.alias("blk"),
+            F.col(text_col).alias("txt"),
         )
         .select("id", "blk", word_ngrams(F.col("txt"), ngram).alias("shingles"))
         .filter(F.size("shingles") > 0)
@@ -333,7 +324,7 @@ def ngram_jaccard_pairs(
     # consumed by candidate generation AND verify; hashed-shingle rows
     # are smaller than the text they replace but corpus-shingle-sized —
     # budgeted like the minhash prepared frame (SCALE.md §caches)
-    docs = _budgeted_corpus_cache(docs)
+    docs = share(docs, estimated_input_bytes(df) * _CORPUS_CACHE_EXPANSION)
     cand = _allpairs_candidates(docs, threshold)
     sets = docs.select("id", "hsh")
     return (
@@ -372,9 +363,8 @@ def containment_pairs(
     corpora where a hash ordering would post hot shingles into prefixes.
     Exact set containment verifies candidates; the result is identical
     to the quadratic self-join (the DuckDB oracle's formulation)."""
-    docs = _budgeted_corpus_cache(
-        _allpairs_prepared(df, F.lit(""), text_col, id_col, ngram, freq_order=True)
-    )
+    docs = _allpairs_prepared(df, F.lit(""), text_col, id_col, ngram, freq_order=True)
+    docs = share(docs, estimated_input_bytes(df) * _CORPUS_CACHE_EXPANSION)
     p_len = (F.col("sz") - F.ceil(F.lit(threshold) * F.col("sz")) + 1).cast("int")
     pref = docs.select(
         "id", F.explode(F.slice(F.col("hsh"), F.lit(1), p_len)).alias("tok")

@@ -13,13 +13,15 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from kafka_streams_example_spark.operators import share
+
 
 def connected_components(
     edges: DataFrame,
     src: str = "id_a",
     dst: str = "id_b",
     max_iterations: int = 20,
-    edge_cache_bytes: int | None = None,
+    edge_cache_bytes: int = -1,
 ) -> DataFrame:
     """Min-label connected components over an undirected edge list.
 
@@ -31,12 +33,13 @@ def connected_components(
     both = edges.select(
         F.col(src).alias("u"), F.col(dst).alias("v")
     ).union(edges.select(F.col(dst).alias("u"), F.col(src).alias("v")))
-    # CACHE, not localCheckpoint: the round-1 convergence count below still
-    # materializes the edge list and the fused init labels in ONE job (the
-    # cache fills as a side effect, no extra blocking job), every later
-    # iteration's join reads the cached partitions exactly like it read the
-    # checkpointed ones — and, unlike a checkpoint (a per-DataFrame RDD),
-    # the cache is keyed on plan equality, so the FOUR registered consumers
+    # Session CACHE when the estimate fits the budget (share): the round-1
+    # convergence count below still materializes the edge list and the
+    # fused init labels in ONE job (the cache fills as a side effect, no
+    # extra blocking job), every later iteration's join reads the cached
+    # partitions exactly like it read the checkpointed ones — and, unlike
+    # a checkpoint (a per-DataFrame RDD), the cache is keyed on plan
+    # equality, so the FOUR registered consumers
     # of the dedup-cluster decision (dedup_clusters, cluster_aware_split,
     # dedup_cluster_size_histogram, corpus_curation_pipeline) share one
     # materialization of the pair-generation subtree per session instead of
@@ -46,20 +49,13 @@ def connected_components(
     # kind of sparse hash-only frame the blessed _neardup_pairs cache holds;
     # the text/blob columns never enter it. Lineage: `both` is the constant
     # BASE of every iteration join, so cutting ITS lineage was never what
-    # bounded plan growth — the per-round label localCheckpoints below do
-    # that and stay as they are. Caller-controlled budget (r11 ADVICE +
-    # VERDICT #6): ``edge_cache_bytes`` is the caller's footer-derived
-    # upper-bound estimate of the edge table — above the per-frame cache
-    # budget the table is materialized per invocation instead of pinned
-    # for the session (identical output, bounded memory). None keeps the
-    # unconditional cache for callers without an estimate.
-    both = both.distinct()
-    if edge_cache_bytes is None:
-        both = both.cache()
-    else:
-        from kafka_streams_example_spark.operators import cache_bounded
-
-        both = cache_bounded(both, edge_cache_bytes)
+    # bounded plan growth — the per-round label checkpoints below do
+    # that. ``edge_cache_bytes`` is the caller's
+    # footer-derived upper-bound estimate of the edge table; above the
+    # per-frame cache budget, or unknown, the table is materialized per
+    # invocation instead of pinned for the session (identical output,
+    # bounded memory).
+    both = share(both.distinct(), edge_cache_bytes)
 
     # Round 1 fused into label initialization: with component == id, the
     # first neighbor-min is simply min(v) per u, so the whole first round
@@ -67,7 +63,7 @@ def connected_components(
     # paid a distinct-labels checkpoint job plus a join round for the
     # same result). The checkpoint is LAZY — the convergence count below
     # materializes it, one Spark job for init + round 1 together.
-    labels = (
+    labels = share(
         both.groupBy("u")
         .agg(F.min("v").alias("nbr"))
         .select(
@@ -75,7 +71,6 @@ def connected_components(
             F.least(F.col("u"), F.col("nbr")).alias("component"),
             (F.col("nbr") < F.col("u")).alias("__changed"),
         )
-        .localCheckpoint(eager=False)
     )
     changed = labels.agg(
         F.sum(F.col("__changed").cast("long")).alias("n")
@@ -102,9 +97,8 @@ def connected_components(
             .groupBy("u")
             .agg(F.min("component").alias("nbr_component"))
         )
-        return (
-            labels.join(neighbor_min, labels.id == neighbor_min.u, "left")
-            .select(
+        return share(
+            labels.join(neighbor_min, labels.id == neighbor_min.u, "left").select(
                 "id",
                 F.least(
                     F.col("component"),
@@ -114,7 +108,6 @@ def connected_components(
                     F.col("nbr_component") < F.col("component"), F.lit(False)
                 ).alias("__changed"),
             )
-            .localCheckpoint(eager=False)
         )
 
     # TWO rounds per convergence action (r12): each round is lazily
@@ -150,7 +143,7 @@ def connected_components(
 
 
 def dedup_clusters(
-    pairs: DataFrame, edge_cache_bytes: int | None = None
+    pairs: DataFrame, edge_cache_bytes: int = -1
 ) -> DataFrame:
     """Near-dup pairs → dedup clusters: (doc id, cluster id = min reachable
     doc id, is_keeper). Downstream keeps rows where is_keeper."""

@@ -124,14 +124,14 @@ def _blocked_pairs_05(spark, sf_dir):
     dedup_clusters' near-edge side): the AllPairs candidate join + exact
     verify runs once per session (the _neardup_pairs discipline; sparse
     (ids, jaccard) rows only)."""
-    from kafka_streams_example_spark.operators import cache_bounded
+    from kafka_streams_example_spark.operators import share
 
-    docs = load_table(spark, sf_dir, "documents")
+    docs = _load_parallel(spark, sf_dir, "documents")
     # pair rows are O(dup rows) after the t>=0.5 verify — budgeted at
     # ~4 pairs/doc x 24 B (SCALE.md §caches); above the per-frame budget
     # the table materializes per invocation instead of pinning session
     # memory (identical output either way).
-    return cache_bounded(
+    return share(
         dd.ngram_jaccard_pairs(
             docs,
             block_key=F.concat_ws("|", F.col("lang"), F.col("source")),
@@ -147,7 +147,7 @@ def neardup_minhash_pairs(spark, sf_dir):
     3-gram Jaccard ≥ 0.5. Approximate candidate generation → rows-only
     driver check; tests/test_operators.py asserts recall against the exact
     blocked pairs instead."""
-    docs = load_table(spark, sf_dir, "documents")
+    docs = _load_parallel(spark, sf_dir, "documents")
     return dd.minhash_pairs(docs, threshold=0.5)
 
 
@@ -307,13 +307,13 @@ def _bench_grams(spark: SparkSession, sf_dir: str) -> DataFrame:
     tokenize + 5-gram + distinct pass runs once per session (the
     _neardup_pairs discipline); gram strings are ~1/17th of corpus bytes
     by the same footer arithmetic _maybe_broadcast_bench guards on."""
-    from kafka_streams_example_spark.operators import cache_bounded
+    from kafka_streams_example_spark.operators import share
 
     docs = _load_parallel(spark, sf_dir, "documents")
     ng = docs.select("doc_id", tx.word_ngrams(F.col("text"), 5).alias("ng"))
     # same footer arithmetic as _maybe_broadcast_bench: eval share of the
     # source bytes x the ~5x gram-string expansion
-    return cache_bounded(
+    return share(
         ng.filter(F.col("doc_id") % 17 == 0)
         .select(F.explode("ng").alias("g"))
         .distinct(),
@@ -1327,11 +1327,11 @@ def neardup_transitivity_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     # boilerplate-heavy case canonical frequency-ordered prefixes prune
     # best (measured >=10x fewer candidates, identical results —
     # test_freq_ordered_allpairs_same_result_fewer_candidates)
-    from kafka_streams_example_spark.operators import cache_bounded
+    from kafka_streams_example_spark.operators import share
 
     # unblocked t>=0.3 pairs run denser than the blocked t>=0.5 table —
     # budgeted at ~8 pairs/doc x 16 B (SCALE.md §caches)
-    e = cache_bounded(
+    e = share(
         dd.ngram_jaccard_pairs(
             docs, block_key=F.lit("all"), threshold=0.3, freq_order=True
         ).select("id_a", "id_b"),
@@ -1405,12 +1405,12 @@ def _neardup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     point, so Spark's plan-equality cache lookup materializes the
     expensive AllPairs pass ONCE per session for all of them (the same
     discipline as neardup_transitivity_audit's cached edge table)."""
-    from kafka_streams_example_spark.operators import cache_bounded
+    from kafka_streams_example_spark.operators import share
 
     docs = _load_parallel(spark, sf_dir, "documents")
     # same density budget as the transitivity edge table (~8 pairs/doc,
     # plus lang tags and the jaccard double; SCALE.md §caches)
-    return cache_bounded(
+    return share(
         dd.ngram_jaccard_pairs(
             docs, block_key=F.lit("all"), threshold=_PAIR_T, freq_order=True
         ),
@@ -1779,9 +1779,9 @@ def semdedup_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
     # bucket join + argmax assignment runs three times per invocation.
     # The cell-assignment table is what SemDeDup/faiss materialize as the
     # index; checkpoint it once.
-    from kafka_streams_example_spark.operators import checkpoint_reused
+    from kafka_streams_example_spark.operators import share
 
-    cells = checkpoint_reused(
+    cells = share(
         scored.groupBy("vec_id").agg(best).select(
             "vec_id",
             F.col("b.cid").alias("centroid_id"),
@@ -2215,7 +2215,7 @@ def phonetic_blocking_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     BEFORE the self-join, so the join is broadcast-small however many
     records share a name — the same collapse-then-pair discipline as
     the AllPairs prefix filter."""
-    part = _load_parallel(spark, sf_dir, "part")
+    part = load_table(spark, sf_dir, "part")
     typo = F.array_join(
         F.expr(
             "transform(split(p_name, ' '),"
@@ -2356,14 +2356,14 @@ def bbit_minhash_estimate(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.size("ng") > 0)
         .select("doc_id", F.expr(hashed_shingles_sql("ng")).alias("h60"))
     )
-    from kafka_streams_example_spark.operators import checkpoint_reused
+    from kafka_streams_example_spark.operators import share
 
     # sigs feeds FOUR plan branches (both sides of the banded self-join +
     # both audit sides) — without materialization the shingle hash + the
     # 32-permutation signature fold runs four times per invocation. The
     # signature table is the artifact an LSH pipeline stores; checkpoint
     # it once.
-    sigs = checkpoint_reused(
+    sigs = share(
         hashed.select(
             "doc_id",
             "h60",
@@ -2503,7 +2503,7 @@ def er_merge_survivorship(spark: SparkSession, sf_dir: str) -> DataFrame:
     table, not records — and the Levenshtein verify runs once per
     distinct (survivor, name) pair, not per record pair. The same
     collapse-then-decide discipline as the blocking census."""
-    part = _load_parallel(spark, sf_dir, "part")
+    part = load_table(spark, sf_dir, "part")
     typo = F.array_join(
         F.expr(
             "transform(split(p_name, ' '),"
@@ -2521,13 +2521,13 @@ def er_merge_survivorship(spark: SparkSession, sf_dir: str) -> DataFrame:
     t = dirty.select(
         "p_name", F.split(F.col("p_name"), " ").alias("w")
     ).filter(F.size("w") >= 2)
-    from kafka_streams_example_spark.operators import checkpoint_reused
+    from kafka_streams_example_spark.operators import share
 
     # sig (the name-vocabulary census — one row per (signature, name))
     # feeds BOTH the survivorship window and the final join-back; without
     # materialization the union + phonetic fold + groupBy over the dirty
     # registry executed once per consumer.
-    sig = checkpoint_reused(
+    sig = share(
         t.groupBy(
             "p_name",
             F.expr(
@@ -2672,9 +2672,9 @@ def substring_exact_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     # + per-window slice/join/md5 pass runs twice. The window-hash table
     # is pass 1 of the ExactSubstr pipeline (Lee et al. materialize the
     # suffix array the same way); checkpoint it once per invocation.
-    from kafka_streams_example_spark.operators import checkpoint_reused
+    from kafka_streams_example_spark.operators import share
 
-    w = checkpoint_reused(w)
+    w = share(w)
     freq = w.groupBy("h").agg(F.count("*").alias("n_occ")).filter(
         F.col("n_occ") > 1
     )
@@ -2824,9 +2824,9 @@ def substring_dedup_cut(spark: SparkSession, sf_dir: str) -> DataFrame:
     # same discipline as substring_exact_spans: w feeds the canonical-
     # occurrence aggregate AND the join-back — checkpoint the window-hash
     # table so the explode/slice/md5 pass runs once per invocation
-    from kafka_streams_example_spark.operators import checkpoint_reused
+    from kafka_streams_example_spark.operators import share
 
-    w = checkpoint_reused(w)
+    w = share(w)
     agg = (
         w.groupBy("h")
         .agg(

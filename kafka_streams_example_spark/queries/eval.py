@@ -698,14 +698,14 @@ def cohens_kappa_langid(spark: SparkSession, sf_dir: str) -> DataFrame:
     100 TB shape: the lang_id scan collapses to a (langs × langs) cell
     table; marginals, diagonal and the kappa algebra all run on those
     few dozen rows. (N² would widen to DECIMAL(38,0) past ~3B docs.)"""
-    from kafka_streams_example_spark.operators import checkpoint_reused
+    from kafka_streams_example_spark.operators import share
 
     docs = _load_parallel(spark, sf_dir, "documents")
     # cells is (langs × langs) tiny but feeds THREE consumers (tot, ra,
     # ca) — without materialization each one re-runs the corpus scan +
     # lang_id stopword fold (measured: 3 parquet scans in the executed
     # plan). One checkpoint = one scan.
-    cells = checkpoint_reused(
+    cells = share(
         docs.select(
             F.col("lang").alias("actual"),
             tx.lang_id(F.col("text")).alias("predicted"),
@@ -796,10 +796,10 @@ def _bigram_split_lang_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         ).alias("p"),
     ).select("lang", "split", "p.a", "p.b")
-    from kafka_streams_example_spark.operators import cache_bounded
+    from kafka_streams_example_spark.operators import share
     from kafka_streams_example_spark.sources.files import table_uncompressed_bytes
 
-    return cache_bounded(
+    return share(
         bg.groupBy("split", "lang", "a", "b").agg(
             F.count("*").cast("long").alias("c")
         ),

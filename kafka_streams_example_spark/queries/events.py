@@ -15,6 +15,7 @@ from pyspark.sql import functions as F
 
 from kafka_streams_example_spark.operators import text as tx
 from kafka_streams_example_spark.registry import _load_parallel, register
+from kafka_streams_example_spark.sources.files import load_table
 
 
 # (from llm_extra.py)
@@ -55,7 +56,7 @@ def range_join_value_tiers(spark: SparkSession, sf_dir: str) -> DataFrame:
     search via CASE, but the BNLJ keeps arbitrary overlapping bands
     correct.)
     """
-    events = _load_parallel(spark, sf_dir, "events")
+    events = load_table(spark, sf_dir, "events")
     tiers = spark.createDataFrame(_TIERS, "tier string, lo double, hi double")
     return (
         events.join(
@@ -100,7 +101,7 @@ def user_event_timeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     the struct lexicographic sort equals the oracle's ORDER BY ts,
     event_id.
     """
-    ev = _load_parallel(spark, sf_dir, "events")
+    ev = load_table(spark, sf_dir, "events")
     seq = F.sort_array(
         F.collect_list(F.struct(F.col("ts"), F.col("event_id"), F.col("event_type")))
     )
@@ -141,7 +142,7 @@ def sft_next_event_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from pyspark.sql.window import Window
 
-    ev = _load_parallel(spark, sf_dir, "events")
+    ev = load_table(spark, sf_dir, "events")
     w = (
         Window.partitionBy("user_id")
         .orderBy("ts", "event_id")
@@ -187,7 +188,7 @@ def map_functions_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-user map assembly; maps are bounded by the per-user distinct
     event-type count, not event volume.
     """
-    ev = _load_parallel(spark, sf_dir, "events")
+    ev = load_table(spark, sf_dir, "events")
     # NULL event types are excluded by contract: a map key can never be
     # NULL (Spark raises NULL_MAP_KEY), and the oracle filters identically.
     counts = (
@@ -240,7 +241,7 @@ def distribution_rank_functions(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from kafka_streams_example_spark.sources.files import load_table
 
-    cust = _load_parallel(spark, sf_dir, "customer")
+    cust = load_table(spark, sf_dir, "customer")
     nation = load_table(spark, sf_dir, "nation")
     w = Window.partitionBy("n_name").orderBy(F.col("c_acctbal").desc(), F.col("c_custkey"))
     return (
@@ -288,7 +289,7 @@ def value_window_functions(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from kafka_streams_example_spark.sources.files import load_table
 
-    cust = _load_parallel(spark, sf_dir, "customer")
+    cust = load_table(spark, sf_dir, "customer")
     nation = load_table(spark, sf_dir, "nation")
     order = [F.col("c_acctbal").desc(), F.col("c_custkey")]
     w_run = Window.partitionBy("n_name").orderBy(*order)
@@ -341,7 +342,7 @@ def cohort_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregation that finds the cohort week, so there is no events⋈events
     join and no second fact shuffle; the triangle aggregate and its
     window run on cohort-cardinality rows."""
-    ev = _load_parallel(spark, sf_dir, "events")
+    ev = load_table(spark, sf_dir, "events")
     week = F.date_trunc("week", F.col("ts"))
     per_user = (
         ev.select("user_id", week.alias("week"))
@@ -409,7 +410,7 @@ def order_window_overlaps(spark: SparkSession, sf_dir: str) -> DataFrame:
     overlap predicate evaluated inside bounded per-key groups — pair
     count is quadratic only in the per-customer order count, never a
     cartesian or a date-crossed blowup."""
-    o = _load_parallel(spark, sf_dir, "orders")
+    o = load_table(spark, sf_dir, "orders")
     w = o.select(
         "o_custkey",
         "o_orderkey",
@@ -467,7 +468,7 @@ def lateral_top_orders_per_segment(spark: SparkSession, sf_dir: str) -> DataFram
     the driving side is the 5-row distinct-segment relation, so the only
     corpus-scale work is the single orders⋈customer broadcast join."""
     for t in ("customer", "orders"):
-        _load_parallel(spark, sf_dir, t).createOrReplaceTempView(t)
+        load_table(spark, sf_dir, t).createOrReplaceTempView(t)
     return spark.sql(_LATERAL_SQL)
 
 
@@ -504,7 +505,7 @@ def event_transition_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     100 TB shape: one shuffle on user_id (lead inside bounded user
     partitions), then a type x type aggregate; the row-normalizing
     window runs over those few aggregate rows."""
-    ev = _load_parallel(spark, sf_dir, "events")
+    ev = load_table(spark, sf_dir, "events")
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     seq = ev.select(
         F.col("event_type").alias("cur"),
@@ -556,7 +557,7 @@ def orders_rfm_segmentation(spark: SparkSession, sf_dir: str) -> DataFrame:
     100 TB shape: one shuffle into the customer-cardinality RFM
     aggregate; the three ntile windows rank that aggregate, not the
     fact table."""
-    o = _load_parallel(spark, sf_dir, "orders")
+    o = load_table(spark, sf_dir, "orders")
     rfm = o.groupBy(F.col("o_custkey").alias("custkey")).agg(
         F.max("o_orderdate").alias("last_order"),
         F.count("*").alias("frequency"),
@@ -631,7 +632,7 @@ def top_session_paths(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregate, so session length never inflates executor state. The
     final path count is a map-side-combined aggregate over short
     strings."""
-    ev = _load_parallel(spark, sf_dir, "events")
+    ev = load_table(spark, sf_dir, "events")
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     gap_us = _SESSION_GAP_MIN * 60 * 1_000_000
     prev = F.lag(F.unix_micros("ts")).over(w)
@@ -712,7 +713,7 @@ def funnel_time_bounded(spark: SparkSession, sf_dir: str) -> DataFrame:
     a residual predicate inside bounded per-user groups). Time deltas
     aggregate as exact integer microseconds, divided once at the end —
     so both engines average bit-identical sums."""
-    ev = _load_parallel(spark, sf_dir, "events")
+    ev = load_table(spark, sf_dir, "events")
     s = (
         ev.filter(F.col("event_type") == "signup")
         .groupBy("user_id")
@@ -783,7 +784,7 @@ def pareto_revenue_concentration(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregate (money rounded before ranking so summation order can't
     flip a decile boundary); ranking and cumulative windows run over
     customers, never over line items."""
-    o = _load_parallel(spark, sf_dir, "orders")
+    o = load_table(spark, sf_dir, "orders")
     rev = o.groupBy("o_custkey").agg(
         F.round(F.sum("o_totalprice"), 4).alias("revenue")
     )
@@ -852,7 +853,7 @@ def basket_part_pairs_lift(spark: SparkSession, sf_dir: str) -> DataFrame:
     order count broadcast back onto the vocabulary-sized pair table.
     Integer products stay < 2^53 so the lift division is exact on both
     engines."""
-    li = _load_parallel(spark, sf_dir, "lineitem")
+    li = load_table(spark, sf_dir, "lineitem")
     # consumed by the order-count, part-frequency AND basket branches;
     # two longs per row (far smaller than the lineitem it replaces), so
     # caching is scale-safe — same policy as ngram_jaccard_pairs' hash set
@@ -938,8 +939,8 @@ def order_to_ship_latency(spark: SparkSession, sf_dir: str) -> DataFrame:
     over lineitem BEFORE the join (one row per order joins, line items
     never multiply); the orders⋈first_ship equi-join is the natural
     orderkey shuffle; exact percentiles aggregate per 5-value priority."""
-    li = _load_parallel(spark, sf_dir, "lineitem")
-    o = _load_parallel(spark, sf_dir, "orders")
+    li = load_table(spark, sf_dir, "lineitem")
+    o = load_table(spark, sf_dir, "orders")
     first_ship = li.groupBy("l_orderkey").agg(F.min("l_shipdate").alias("first_ship"))
     days = F.datediff("first_ship", "o_orderdate").cast("double")
     lat = o.join(first_ship, o.o_orderkey == first_ship.l_orderkey).select(
@@ -984,7 +985,7 @@ def hourly_activity_heatmap(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     100 TB shape: one scan into at most 7x24 cells (map-side combined);
     the share window runs over those cells."""
-    ev = _load_parallel(spark, sf_dir, "events")
+    ev = load_table(spark, sf_dir, "events")
     cells = ev.groupBy(
         F.expr("CAST(((dayofweek(ts) + 5) % 7) + 1 AS BIGINT)").alias("dow"),
         F.hour("ts").cast("bigint").alias("hod"),
@@ -1039,7 +1040,7 @@ def repeat_purchase_interval(spark: SparkSession, sf_dir: str) -> DataFrame:
     on user_id (lag inside user partitions); gaps aggregate to a single
     distribution row. Gap values divide exact integer microseconds by a
     constant, so both engines aggregate identical doubles."""
-    ev = _load_parallel(spark, sf_dir, "events").filter(
+    ev = load_table(spark, sf_dir, "events").filter(
         F.col("event_type") == "purchase"
     )
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
@@ -1115,7 +1116,7 @@ def user_activity_islands(spark: SparkSession, sf_dir: str) -> DataFrame:
     running max over the cumulative interval end and the island id a
     running sum of flags — two stacked windows over the SAME partition
     ordering (one exchange, one sort), then a per-user aggregate."""
-    ev = _load_parallel(spark, sf_dir, "events")
+    ev = load_table(spark, sf_dir, "events")
     iv = ev.select(
         "user_id",
         F.col("ts").cast("long").alias("s"),
@@ -1198,7 +1199,7 @@ def sessionized_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     channel-count aggregate over purchases only. last_value(... IGNORE
     NULLS) keeps the state one struct per row; no self-join against the
     event history."""
-    ev = _load_parallel(spark, sf_dir, "events")
+    ev = load_table(spark, sf_dir, "events")
     e = ev.select(
         "user_id",
         "event_type",
@@ -1240,7 +1241,6 @@ def sessionized_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
 # registration order stays pinned by query_order.py)
 # ---------------------------------------------------------------------------
 from kafka_streams_example_spark.registry import _dec, _sum_dbl  # noqa: E402
-from kafka_streams_example_spark.sources.files import load_table  # noqa: E402
 
 
 # --------------------------------------------------------------------------
@@ -1266,7 +1266,7 @@ def sliding_window_counts(spark, sf_dir):
     in 2 windows (Catalyst's Expand operator; still one shuffle)."""
     from kafka_streams_example_spark.operators.windows import sliding_agg
 
-    ev = _load_parallel(spark, sf_dir, "events")
+    ev = load_table(spark, sf_dir, "events")
     out = sliding_agg(
         ev,
         "ts",
@@ -1319,7 +1319,7 @@ def session_windows(spark, sf_dir):
     oracle replicates it with the gaps-and-islands pattern."""
     from kafka_streams_example_spark.operators.windows import session_agg
 
-    ev = _load_parallel(spark, sf_dir, "events")
+    ev = load_table(spark, sf_dir, "events")
     out = session_agg(
         ev,
         "ts",
@@ -1394,15 +1394,11 @@ def events_json_stats(spark, sf_dir):
     """Semi-structured JSON extraction (the reference's whole serde layer is
     two expressions in Spark: from_json/get_json_object).
 
-    Keeps the explicit parallelism floor (r12 loser sweep): per-row JSON
-    parsing of ``props`` runs BEFORE the aggregate's exchange, so a
-    1-split local scan pins it to one core — the documented
-    documents/embeddings exception class, not the narrow-table shape
-    (measured A/B: floored 0.27 s vs 0.36 s steady at sf0.1)."""
-    from kafka_streams_example_spark.operators import ensure_min_partitions
-    from kafka_streams_example_spark.sources.files import load_table
-
-    ev = ensure_min_partitions(load_table(spark, sf_dir, "events"))
+    Keeps the parallelism floor (``_load_parallel``, r12 loser sweep):
+    per-row JSON parsing of ``props`` runs BEFORE the aggregate's
+    exchange, so a 1-split local scan pins it to one core (measured A/B:
+    floored 0.27 s vs 0.36 s steady at sf0.1)."""
+    ev = _load_parallel(spark, sf_dir, "events")
     k = F.get_json_object(F.col("props"), "$.k").cast("long")
     return ev.groupBy("event_type").agg(
         F.count("*").alias("cnt"),
@@ -1428,13 +1424,11 @@ def events_variant_extract(spark, sf_dir):
     point vs get_json_object, which re-parses the string for each field).
     try_variant_get on an absent path yields NULL instead of erroring.
 
-    Keeps the explicit parallelism floor (r12 loser sweep): parse_json
-    runs per row before anything else — the CPU-heavy pre-exchange
-    derivation class (measured A/B: floored 0.26 s vs 0.36 s steady)."""
-    from kafka_streams_example_spark.operators import ensure_min_partitions
-    from kafka_streams_example_spark.sources.files import load_table
-
-    ev = ensure_min_partitions(load_table(spark, sf_dir, "events"))
+    Keeps the parallelism floor (``_load_parallel``, r12 loser sweep):
+    parse_json runs per row before anything else — the CPU-heavy
+    pre-exchange derivation class (measured A/B: floored 0.26 s vs
+    0.36 s steady)."""
+    ev = _load_parallel(spark, sf_dir, "events")
     v = F.parse_json(F.col("props"))
     return ev.withColumn("v", v).select(
         "event_id",
@@ -1468,7 +1462,7 @@ def dedup_events_keyed(spark, sf_dir):
     exactly the (ts, event_id)-first row, but the aggregate gets map-side
     partial combine — at scale only one candidate per key per partition
     shuffles, instead of every row sorting within its key partition."""
-    ev = _load_parallel(spark, sf_dir, "events")
+    ev = load_table(spark, sf_dir, "events")
     first = F.min(
         F.struct(F.unix_micros(F.col("ts")).alias("ts_us"), F.col("event_id"))
     ).alias("f")
@@ -1520,7 +1514,7 @@ GROUP BY user_id
 def pivot_user_events(spark, sf_dir):
     """Pivot: event types to columns (Catalyst rewrites to conditional
     aggregation — exactly the oracle's FILTER form)."""
-    ev = _load_parallel(spark, sf_dir, "events")
+    ev = load_table(spark, sf_dir, "events")
     return (
         ev.groupBy("user_id")
         .pivot("event_type", ["click", "error", "purchase", "signup", "view"])
@@ -1544,7 +1538,7 @@ def value_percentiles(spark, sf_dir):
     """Exact percentiles (linear interpolation — Spark `percentile` and
     DuckDB `quantile_cont` share the definition; rounded to absorb the
     interpolation's last-ULP arithmetic)."""
-    ev = _load_parallel(spark, sf_dir, "events")
+    ev = load_table(spark, sf_dir, "events")
     return ev.groupBy("event_type").agg(
         F.round(F.expr("percentile(value, 0.5)"), 6).alias("p50"),
         F.round(F.expr("percentile(value, 0.9)"), 6).alias("p90"),
@@ -1570,7 +1564,7 @@ FROM firsts
 def funnel_signup_purchase(spark, sf_dir):
     """Event-funnel analysis: users whose first purchase follows their
     first signup — conditional-min aggregation, one shuffle."""
-    ev = _load_parallel(spark, sf_dir, "events")
+    ev = load_table(spark, sf_dir, "events")
     firsts = ev.groupBy("user_id").agg(
         F.min(F.when(F.col("event_type") == "signup", F.col("ts"))).alias("first_signup"),
         F.min(F.when(F.col("event_type") == "purchase", F.col("ts"))).alias("first_purchase"),
@@ -1600,7 +1594,7 @@ def cumulative_user_value(spark, sf_dir):
     exact decimal accumulation so every prefix sum matches bit-for-bit."""
     from pyspark.sql import Window
 
-    ev = _load_parallel(spark, sf_dir, "events")
+    ev = load_table(spark, sf_dir, "events")
     w = (
         Window.partitionBy("user_id")
         .orderBy("ts", "event_id")
@@ -1631,7 +1625,7 @@ def lag_lead_deltas(spark, sf_dir):
     per user — the building block of funnel and retention analyses."""
     from pyspark.sql import Window
 
-    ev = _load_parallel(spark, sf_dir, "events")
+    ev = load_table(spark, sf_dir, "events")
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     ts_us = F.unix_micros(F.col("ts"))
     return ev.select(

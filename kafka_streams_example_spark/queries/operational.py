@@ -27,6 +27,7 @@ from kafka_streams_example_spark.registry import (
     _load_parallel,
     register,
 )
+from kafka_streams_example_spark.sources.files import load_table
 
 
 # (from llm_extra.py)
@@ -88,7 +89,7 @@ def skew_salted_event_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from kafka_streams_example_spark.operators.skew import salted_agg
 
-    ev = _load_parallel(spark, sf_dir, "events").withColumn(
+    ev = load_table(spark, sf_dir, "events").withColumn(
         "fv", F.floor("value").cast("long")
     )
     # salt from the unique row key: perfect spread, no hashing of the
@@ -120,7 +121,7 @@ def pii_scrub_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     production pass swaps in real PII regexes (emails, phones, SSNs)
     with the identical plan.
     """
-    events = _load_parallel(spark, sf_dir, "events")
+    events = load_table(spark, sf_dir, "events")
     return events.select(
         "event_id",
         F.regexp_replace("props", r"[0-9]+", "<NUM>").alias("scrubbed"),
@@ -216,7 +217,7 @@ def scd2_user_state(spark: SparkSession, sf_dir: str) -> DataFrame:
     100 TB shape: one shuffle on user_id; the change-flag window, running
     version sum, collapse aggregate and valid_to lead all reuse that same
     partitioning (exchange reuse), and per-user partitions are bounded."""
-    ev = _load_parallel(spark, sf_dir, "events")
+    ev = load_table(spark, sf_dir, "events")
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     changed = F.when(
         ~F.lag("event_type").over(w).eqNullSafe(F.col("event_type")), 1
@@ -334,7 +335,7 @@ def orders_column_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     Expand (6× row multiply, each row carrying one column's value) —
     exact by design here, with approx_count_distinct as the documented
     sketch alternative at corpus scale (see approx_distinct_users)."""
-    o = _load_parallel(spark, sf_dir, "orders")
+    o = load_table(spark, sf_dir, "orders")
     agg = o.agg(
         F.count(F.lit(1)).alias("n_rows"),
         *[F.count(c).alias(f"nn_{c}") for c in _PROFILE_COLS],
@@ -466,7 +467,7 @@ def key_skew_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     scan, no join, no corpus-sized window."""
     from pyspark.sql import Window
 
-    ev = _load_parallel(spark, sf_dir, "events")
+    ev = load_table(spark, sf_dir, "events")
     per_sub = ev.groupBy("event_type", "user_id").agg(F.count("*").alias("cnt"))
     per_key = per_sub.groupBy("event_type").agg(
         F.sum("cnt").alias("n_events"),
@@ -822,7 +823,7 @@ def watermark_late_event_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     exactly the state layout the streaming engine itself would hold —
     then a per-type fold; late_share is k/n → portable rounding."""
     ev = (
-        _load_parallel(spark, sf_dir, "events")
+        load_table(spark, sf_dir, "events")
         .filter(F.col("ts").isNotNull())
         .select(
             "event_type",
@@ -953,7 +954,7 @@ def zorder_locality_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     whose cardinality is the BLOCK count, not the row count), so the
     audit costs one scan regardless of corpus size — exactly how you'd
     validate a CLUSTER BY choice before rewriting 100 TB of parquet."""
-    orders = _load_parallel(spark, sf_dir, "orders")
+    orders = load_table(spark, sf_dir, "orders")
     x = F.col("o_custkey") % 256
     y = (F.col("o_orderdate").cast("long") / F.lit(86400)).cast("long") % 256
     base = orders.select(x.alias("x"), y.alias("y"))
@@ -1043,7 +1044,7 @@ def k_anonymity_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     event_type (5 rows). Nothing but small integer tuples shuffles, and
     the epoch-day arithmetic avoids session-timezone coupling on both
     engines."""
-    ev = _load_parallel(spark, sf_dir, "events")
+    ev = load_table(spark, sf_dir, "events")
     qi = ev.groupBy(
         "event_type",
         (F.floor(F.col("ts").cast("long") / 86400) % 7).alias("dow_idx"),
@@ -1105,7 +1106,7 @@ def dp_noisy_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     100 TB shape: one hash aggregate to 5 rows; the noise math is
     per-group scalar arithmetic on the aggregate output."""
-    ev = _load_parallel(spark, sf_dir, "events")
+    ev = load_table(spark, sf_dir, "events")
     c = ev.groupBy("event_type").agg(F.count("*").alias("n"))
     uc = (
         stable_long(F.concat(F.col("event_type"), F.lit(_DP_SEED))).cast("double")
@@ -1196,7 +1197,7 @@ def merge_incremental_aggs(spark: SparkSession, sf_dir: str) -> DataFrame:
     partial aggregation already does the same algebra inside each side.
     (sumsq/variance states would join the same merge at DECIMAL(38)
     width — left out here to keep int64 exactness at every SF.)"""
-    orders = _load_parallel(spark, sf_dir, "orders")
+    orders = load_table(spark, sf_dir, "orders")
     o = orders.select(
         F.col("o_orderpriority").alias("pri"),
         F.floor(F.col("o_totalprice") * 100.0 + 0.5).cast("long").alias("cents"),
@@ -1305,10 +1306,10 @@ def data_contract_validation(spark: SparkSession, sf_dir: str) -> DataFrame:
     the output is one long per check. Row-level checks ride a single
     scan each. At scale you run this suite per ingest batch, not per
     corpus, and the counts merge across batches as plain sums."""
-    orders = _load_parallel(spark, sf_dir, "orders")
-    customer = _load_parallel(spark, sf_dir, "customer")
-    lineitem = _load_parallel(spark, sf_dir, "lineitem")
-    events = _load_parallel(spark, sf_dir, "events")
+    orders = load_table(spark, sf_dir, "orders")
+    customer = load_table(spark, sf_dir, "customer")
+    lineitem = load_table(spark, sf_dir, "lineitem")
+    events = load_table(spark, sf_dir, "events")
 
     def row(name, table, n_viol):
         return n_viol.select(
@@ -1461,7 +1462,7 @@ def psi_value_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     the two halves generalize to (reference window, current window) and
     the cell counts merge across days as plain sums, so the reference
     never rescans."""
-    ev = _load_parallel(spark, sf_dir, "events")
+    ev = load_table(spark, sf_dir, "events")
     mid = ev.agg(
         F.floor(
             (

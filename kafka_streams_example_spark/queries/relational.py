@@ -33,7 +33,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from kafka_streams_example_spark.registry import _dec, _load_parallel, _sum_dbl, register
+from kafka_streams_example_spark.registry import _dec, _sum_dbl, register
 from kafka_streams_example_spark.sources.files import load_table
 
 _REV = "CAST(l_extendedprice AS DECIMAL(18,4)) * CAST(1 - l_discount AS DECIMAL(8,4))"
@@ -305,7 +305,7 @@ def q11_important_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
     factor). The HAVING-vs-scalar-subquery is a broadcast of a 1-row
     aggregate; the threshold and per-part values derive from exact
     decimal sums so the strict comparison agrees across engines."""
-    from kafka_streams_example_spark.operators import checkpoint_reused
+    from kafka_streams_example_spark.operators import share
 
     li = load_table(spark, sf_dir, "lineitem")
     # ONE lineitem pass: the threshold's corpus revenue sum and distinct
@@ -313,7 +313,7 @@ def q11_important_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
     # addition is exact and associative; one row per group makes
     # count(l_partkey) the distinct count) — the former shape scanned and
     # re-aggregated lineitem a second time just for the 1-row threshold.
-    vdec = checkpoint_reused(
+    vdec = share(
         li.groupBy("l_partkey").agg(F.sum(_revenue()).alias("v"))
     )
     val = vdec.select(
@@ -486,13 +486,13 @@ def q21_waiting_suppliers(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("l_shipdate") > F.date_add(F.col("o_orderdate"), 90), 1
         ).otherwise(0).alias("is_late"),
     )
-    from kafka_streams_example_spark.operators import checkpoint_reused
+    from kafka_streams_example_spark.operators import share
 
     # per_os ((order, supplier) rollup — the EXISTS-rewrite's pivot table)
     # feeds BOTH the per-order stats and the final filter join; without
     # materialization the lineitem⋈orders join + aggregation executed
     # once per consumer.
-    per_os = checkpoint_reused(
+    per_os = share(
         lo.groupBy("l_orderkey", "l_suppkey").agg(
             F.max("is_late").alias("supp_late"),
             F.sum("is_late").cast("bigint").alias("late_rows"),
@@ -852,7 +852,7 @@ def bitmap_exact_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     (count(DISTINCT) shuffles all values to one reducer per key), while
     staying exact — unlike approx_count_distinct's HLL. The oracle is the
     plain COUNT(DISTINCT), proving the bitmap path's exactness."""
-    ev = _load_parallel(spark, sf_dir, "events")
+    ev = load_table(spark, sf_dir, "events")
     partial = (
         ev.select(
             "event_type",

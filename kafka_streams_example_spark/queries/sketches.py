@@ -20,6 +20,7 @@ from kafka_streams_example_spark.registry import (
     _load_parallel,
     register,
 )
+from kafka_streams_example_spark.sources.files import load_table
 
 
 # (from llm_extra15.py)
@@ -112,16 +113,16 @@ def bloom_filter_probe_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     the bit set (DuckDB checks position membership directly — the same
     set the bitmap encodes) reproduces exactly, false positives
     included."""
-    orders = _load_parallel(spark, sf_dir, "orders")
-    cust = _load_parallel(spark, sf_dir, "customer")
-    from kafka_streams_example_spark.operators import checkpoint_reused
+    orders = load_table(spark, sf_dir, "orders")
+    cust = load_table(spark, sf_dir, "customer")
+    from kafka_streams_example_spark.operators import share
 
     # members (distinct finished-order custkeys — the filter's build set)
     # feeds BOTH the bitmap fold and the confusion-matrix join; without
     # materialization the orders scan + distinct executed twice. This is
     # exactly the "small side scanned twice" cost of Bloom pre-filtering
     # (guide §3.2) — pay it once.
-    members = checkpoint_reused(
+    members = share(
         orders.filter(F.col("o_orderstatus") == "F").select("o_custkey").distinct()
     )
     js = F.explode(F.array(*[F.lit(j) for j in range(_BF_K)])).alias("j")
@@ -563,7 +564,7 @@ def theta_sketch_set_ops(spark: SparkSession, sf_dir: str) -> DataFrame:
     union sketch and membership flags operate on <= 2k rows, broadcast.
     Sketches are mergeable — per-shard sketches union by re-taking the
     k smallest, which is how the 100 TB path would roll segments up."""
-    events = _load_parallel(spark, sf_dir, "events")
+    events = load_table(spark, sf_dir, "events")
     uday = F.conv(
         F.substring(
             F.md5(
@@ -716,7 +717,6 @@ def feature_hashing_sparse(spark: SparkSession, sf_dir: str) -> DataFrame:
 # (from registry.py, round-8 consolidation — query sections moved verbatim;
 # registration order stays pinned by query_order.py)
 # ---------------------------------------------------------------------------
-from kafka_streams_example_spark.sources.files import load_table  # noqa: E402
 
 
 @register(
@@ -795,7 +795,7 @@ def hll_sketch_rollup(spark, sf_dir):
     inside a 5% envelope — the rollup's accuracy contract is what the
     DuckDB oracle hash-verifies. Day is the tz-independent epoch day
     (floor(epoch/86400)) so both engines bucket identically."""
-    ev = _load_parallel(spark, sf_dir, "events")
+    ev = load_table(spark, sf_dir, "events")
     day = F.floor(F.col("ts").cast("long") / 86400).cast("long")
     daily = ev.groupBy(day.alias("day"), "event_type").agg(
         F.hll_sketch_agg("user_id").alias("sk")
@@ -841,7 +841,7 @@ def value_percentiles_approx(spark, sf_dir):
     multiple of the sketch bound, tie-safe via the lt/le pair). The DuckDB
     oracle recomputes n exactly and pins the booleans TRUE — turning an
     engine-specific sketch into a driver-hash-verifiable contract."""
-    ev = _load_parallel(spark, sf_dir, "events")
+    ev = load_table(spark, sf_dir, "events")
     ap = ev.groupBy("event_type").agg(
         F.percentile_approx("value", [0.5, 0.9, 0.99], 10000).alias("p")
     )

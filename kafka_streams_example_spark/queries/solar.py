@@ -14,7 +14,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from kafka_streams_example_spark.plans import solar
-from kafka_streams_example_spark.registry import _load_parallel, register
+from kafka_streams_example_spark.registry import register
+from kafka_streams_example_spark.sources.files import load_table
 
 
 # --------------------------------------------------------------------------
@@ -62,7 +63,7 @@ def _module_agg_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
     exactly the table the reference's Kafka Streams topology materializes
     as its module-aggregate KTable changelog — windows × panels × modules
     rows, bounded and narrow, never the raw events."""
-    df = solar.events_as_solar(_load_parallel(spark, sf_dir, "events"))
+    df = solar.events_as_solar(load_table(spark, sf_dir, "events"))
     return solar.module_aggregates(df).cache()
 
 

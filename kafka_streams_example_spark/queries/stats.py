@@ -23,6 +23,7 @@ from kafka_streams_example_spark.registry import (
     _load_parallel,
     register,
 )
+from kafka_streams_example_spark.sources.files import load_table
 
 
 # (from llm_extra2.py)
@@ -53,7 +54,7 @@ def value_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     is one map-side-combinable groupBy on a 20-value key. The sum runs in
     decimal for cross-engine bit-exactness (see registry._dec).
     """
-    events = _load_parallel(spark, sf_dir, "events")
+    events = load_table(spark, sf_dir, "events")
     step = (_H_HI - _H_LO) / _H_NB
     bucket = F.least(
         F.greatest(F.floor((F.col("value") - _H_LO) / step), F.lit(0)),
@@ -119,7 +120,7 @@ def median_mad_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     group-cardinality tables, broadcast back onto the fact scan) — never
     a window over the fact table partitioned by a 5-value key, which
     would funnel the corpus through 5 reducers."""
-    ev = _load_parallel(spark, sf_dir, "events")
+    ev = load_table(spark, sf_dir, "events")
     med = ev.groupBy("event_type").agg(F.percentile("value", F.lit(0.5)).alias("med"))
     dev = ev.join(F.broadcast(med), "event_type").select(
         "event_type", F.abs(F.col("value") - F.col("med")).alias("adev"), "med"
@@ -316,7 +317,7 @@ def ab_test_analysis(spark: SparkSession, sf_dir: str) -> DataFrame:
     float summation order can't leak into the statistic; the only
     irrational step is an IEEE-correctly-rounded sqrt, and a zero
     standard error yields NULL (nullif) on both engines."""
-    ev = _load_parallel(spark, sf_dir, "events").filter(F.col("value").isNotNull())
+    ev = load_table(spark, sf_dir, "events").filter(F.col("value").isNotNull())
     bucket = (
         stable_long(F.concat(F.col("user_id").cast("string"), F.lit(_AB_SALT))) % 2
     )
@@ -399,7 +400,7 @@ def benford_first_digit(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: one map-only digit extraction + a 9-group aggregate with
     map-side combine; the grand total broadcasts back. No wide shuffle
     at any size."""
-    orders = _load_parallel(spark, sf_dir, "orders")
+    orders = load_table(spark, sf_dir, "orders")
     digit = F.substring(
         F.floor(F.col("o_totalprice")).cast("long").cast("string"), 1, 1
     ).cast("long")
@@ -494,8 +495,8 @@ def ols_trend_nation_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     full map-side combine, then the per-nation fold; nation is a
     25-row broadcast. At petabyte row counts the sufficient statistics
     would widen to DECIMAL(38,0) (SCALE.md)."""
-    o = _load_parallel(spark, sf_dir, "orders")
-    cu = _load_parallel(spark, sf_dir, "customer").select(
+    o = load_table(spark, sf_dir, "orders")
+    cu = load_table(spark, sf_dir, "customer").select(
         "c_custkey", "c_nationkey"
     )
     nat = spark.read.parquet(f"{sf_dir}/nation.parquet").select(
@@ -604,7 +605,7 @@ def chisq_eventtype_dow(spark: SparkSession, sf_dir: str) -> DataFrame:
     combine; marginals, the cross-joined grid (bounded: types × 7) and
     the statistic all run broadcast-scale."""
     ev = (
-        _load_parallel(spark, sf_dir, "events")
+        load_table(spark, sf_dir, "events")
         .filter(F.col("ts").isNotNull())
         .select(
             "event_type",
@@ -823,7 +824,7 @@ def kaplan_meier_conversion(spark: SparkSession, sf_dir: str) -> DataFrame:
     keyed on user (map-side combined), the duration table is one row
     per user, and everything after is day-grain — the window runs over
     the bounded study-length series, never over users."""
-    ev = _load_parallel(spark, sf_dir, "events").select(
+    ev = load_table(spark, sf_dir, "events").select(
         "user_id", "event_type", F.col("ts").cast("long").alias("sec")
     )
     s = (
@@ -851,7 +852,7 @@ def kaplan_meier_conversion(spark: SparkSession, sf_dir: str) -> DataFrame:
             .alias("day"),
         )
     )
-    from kafka_streams_example_spark.operators import checkpoint_reused
+    from kafka_streams_example_spark.operators import share
 
     # byday (day-grain, bounded by study length) feeds the study-size
     # total AND the risk window — checkpoint it once, and derive the
@@ -859,7 +860,7 @@ def kaplan_meier_conversion(spark: SparkSession, sf_dir: str) -> DataFrame:
     # row, so sum(n_events) + sum(n_censored) IS count(*) over dur).
     # Without this the whole dur subtree (events scan + two min-agg
     # joins) executed twice — once per consumer.
-    byday = checkpoint_reused(
+    byday = share(
         dur.groupBy("day").agg(
             F.sum("ev").cast("long").alias("n_events"),
             F.sum(1 - F.col("ev")).cast("long").alias("n_censored"),

@@ -24,7 +24,7 @@ from kafka_streams_example_spark.registry import (
     _load_parallel,
     register,
 )
-from kafka_streams_example_spark.sources.files import table_row_count
+from kafka_streams_example_spark.sources.files import load_table, table_row_count
 
 
 # Portable HALF_UP quality rounding: floor(x*10^4+0.5)/10^4 — the SAME
@@ -451,7 +451,7 @@ def tfidf_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
     checkpointed once per invocation; DF is vocabulary-sized and
     broadcasts back onto it.
     """
-    from kafka_streams_example_spark.operators import checkpoint_reused
+    from kafka_streams_example_spark.operators import share
 
     docs = _load_parallel(spark, sf_dir, "documents")
     # scalar dimension from parquet footers — no Spark count job
@@ -459,7 +459,7 @@ def tfidf_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
     toks = docs.select(
         "doc_id", F.explode(tx.tokens(F.lower(F.col("text")))).alias("term")
     )
-    tf = checkpoint_reused(
+    tf = share(
         toks.groupBy("doc_id", "term").agg(F.count("*").alias("tf"))
     )
     df = tf.groupBy("term").agg(F.count("*").alias("df"))
@@ -576,7 +576,7 @@ def preference_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     ranking windows + self-join: one shuffle on the pair key, constant
     state per group, no sort. The oracle's window form is the same
     result by construction."""
-    ev = _load_parallel(spark, sf_dir, "events")
+    ev = load_table(spark, sf_dir, "events")
     day = F.floor(F.unix_timestamp("ts") / 86400).cast("bigint").alias("day")
     g = (
         ev.select("user_id", day, "event_id", "value")
@@ -958,11 +958,11 @@ def _bigram_pair_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     query-call time."""
     from kafka_streams_example_spark.queries.eval import _bigram_split_lang_counts
 
-    from kafka_streams_example_spark.operators import cache_bounded
+    from kafka_streams_example_spark.operators import share
     from kafka_streams_example_spark.sources.files import table_uncompressed_bytes
 
     master = _bigram_split_lang_counts(spark, sf_dir)
-    return cache_bounded(
+    return share(
         master.groupBy("a", "b")
         .agg(F.sum("c").alias("n_ab"))
         .select(F.col("a").alias("tok_a"), F.col("b").alias("tok_b"), "n_ab"),
@@ -1326,7 +1326,7 @@ def token_pagerank_centrality(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("u", "v")
         .cache()
     )
-    from kafka_streams_example_spark.operators import checkpoint_reused
+    from kafka_streams_example_spark.operators import share
 
     und = e.union(e.select(F.col("v"), F.col("u"))).select(
         F.col("u"), F.col("v")
@@ -1335,11 +1335,11 @@ def token_pagerank_centrality(spark: SparkSession, sf_dir: str) -> DataFrame:
     # every iteration's contribution join (3): checkpoint both once —
     # the vocabulary table and the degree-annotated edge list are the
     # structures every PageRank implementation materializes up front.
-    nodes = checkpoint_reused(und.select(F.col("u").alias("tok")).distinct())
+    nodes = share(und.select(F.col("u").alias("tok")).distinct())
     n = nodes.agg(F.count("*").alias("cnt"))
     deg = und.groupBy("u").agg(F.count("*").alias("d"))
     # (u, v, d): contribution edges with out-degree
-    src = checkpoint_reused(und.join(deg, "u"))
+    src = share(und.join(deg, "u"))
     r = nodes.crossJoin(F.broadcast(n)).select(
         "tok", (F.lit(1.0) / F.col("cnt")).alias("r")
     )
@@ -1774,13 +1774,13 @@ def trigram_backoff_lm(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         ).alias("g")
     ).select("g.w1", "g.w2", "g.w3")
-    from kafka_streams_example_spark.operators import checkpoint_reused
+    from kafka_streams_example_spark.operators import share
 
     # c3 feeds FOUR consumers (the filter + the three context rollups);
     # without materialization each one re-runs the corpus tokenize +
     # trigram explode + count. The trigram count table IS the artifact an
     # LM pipeline materializes — checkpoint it once per invocation.
-    c3 = checkpoint_reused(
+    c3 = share(
         tg.groupBy("w1", "w2", "w3").agg(F.count("*").alias("n_123"))
     )
     c12 = c3.groupBy("w1", "w2").agg(F.sum("n_123").alias("n_12"))
@@ -1810,7 +1810,6 @@ def trigram_backoff_lm(spark: SparkSession, sf_dir: str) -> DataFrame:
 # (from registry.py, round-8 consolidation — query sections moved verbatim;
 # registration order stays pinned by query_order.py)
 # ---------------------------------------------------------------------------
-from kafka_streams_example_spark.sources.files import load_table  # noqa: E402
 
 
 @register(
@@ -1939,7 +1938,7 @@ def _unigram_freq(spark, sf_dir):
     so the cache could never hit). Counts are invariant to the extra
     doc_id in the pre-aggregation projection — groupBy(token) sees the
     same token stream."""
-    from kafka_streams_example_spark.operators import cache_bounded
+    from kafka_streams_example_spark.operators import share
     from kafka_streams_example_spark.sources.files import table_uncompressed_bytes
 
     docs = _load_parallel(spark, sf_dir, "documents")
@@ -1948,7 +1947,7 @@ def _unigram_freq(spark, sf_dir):
     )
     # vocab keys are distinct substrings of the corpus, so the source
     # byte size upper-bounds the table (SCALE.md §caches)
-    return cache_bounded(
+    return share(
         toks.groupBy("token").agg(F.count("*").alias("c")),
         table_uncompressed_bytes(sf_dir, "documents"),
     )
@@ -2001,13 +2000,13 @@ def doc_perplexity_proxy(spark, sf_dir):
         .join(F.broadcast(total))
         .withColumn("logp", F.log(F.col("c").cast("double") / F.col("n")))
     )
-    from kafka_streams_example_spark.operators import cache_bounded
+    from kafka_streams_example_spark.operators import share
     from kafka_streams_example_spark.sources.files import table_row_count
 
     # per-doc score table: 3 narrow scalars per doc — rows ∝ docs, so the
     # session cache is budgeted at ~40 B/doc (SCALE.md §caches; r11
     # VERDICT #6 named this frame explicitly)
-    return cache_bounded(
+    return share(
         scored.groupBy("doc_id").agg(
             F.count("*").alias("n_tokens"),
             F.round(-F.sum("logp") / F.count("*"), 6).alias("avg_neg_logp"),
@@ -2499,7 +2498,7 @@ def ccnet_perplexity_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
     broadcast-join back onto the binned docs. Bucket boundaries land on
     bin edges — bin-resolution quantiles by design, corpus-size-
     independent state."""
-    from kafka_streams_example_spark.operators import checkpoint_reused
+    from kafka_streams_example_spark.operators import share
 
     docs = _load_parallel(spark, sf_dir, "documents")
     toks = docs.select(
@@ -2526,7 +2525,7 @@ def ccnet_perplexity_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
     # scoring and bucketing passes — narrow: id, lang, score, bin) feeds
     # BOTH the histogram/threshold branch and the final bucket join.
     # Without the checkpoint the whole scoring subtree ran twice.
-    binned = checkpoint_reused(
+    binned = share(
         scored.withColumn(
             "bin", F.floor(F.col("score") * F.lit(_CC_BIN)).cast("bigint")
         )
@@ -2704,14 +2703,14 @@ def heaps_law_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
             "cut",
         )
     )
-    from kafka_streams_example_spark.operators import checkpoint_reused
+    from kafka_streams_example_spark.operators import share
 
     # logs is a len(_HEAPS_CUTS)-row frame, but it feeds BOTH the OLS
     # sufficient-statistics aggregate and the final join — without
     # materialization the entire curve subtree (TWO tokenize+explode
     # corpus passes) executed twice. Checkpointing the 4-row curve halves
     # the corpus work.
-    logs = checkpoint_reused(
+    logs = share(
         curve.select(
             "*",
             tx.round_half_up(F.log(F.col("n_tokens").cast("double")), 6)

@@ -11,7 +11,8 @@ they stay engine-exact and shuffle-bounded.
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
-from kafka_streams_example_spark.registry import _load_parallel, register
+from kafka_streams_example_spark.registry import register
+from kafka_streams_example_spark.sources.files import load_table
 
 
 # (from llm_extra2.py)
@@ -54,7 +55,7 @@ def ewma_trailing_signal(spark: SparkSession, sf_dir: str) -> DataFrame:
     that overflow doubles on long histories; fixed taps are a bounded
     window frame per user, exact, and identical across engines.
     """
-    events = _load_parallel(spark, sf_dir, "events")
+    events = load_table(spark, sf_dir, "events")
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     num = sum(
         (F.coalesce(F.lag("value", k).over(w), F.lit(0.0)) * (_EWMA_ALPHA**k)
@@ -114,7 +115,7 @@ def time_weighted_average(spark: SparkSession, sf_dir: str) -> DataFrame:
     microsecond differences (bit-identical across engines); the final
     order-dependent float sum is rounded at 6dp like every other float
     aggregate in the registry."""
-    ev = _load_parallel(spark, sf_dir, "events")
+    ev = load_table(spark, sf_dir, "events")
     w = Window.partitionBy("user_id").orderBy(F.unix_micros("ts"), F.col("event_id"))
     span = Window.partitionBy("user_id")
     o = ev.select(
@@ -181,7 +182,7 @@ def resample_fill_forward(spark: SparkSession, sf_dir: str) -> DataFrame:
     (user, day) aggregate (one corpus shuffle, map-side combined); the
     grid is generated per user with sequence() (bounded by calendar days,
     not events) and the LOCF window runs inside user partitions."""
-    ev = _load_parallel(spark, sf_dir, "events")
+    ev = load_table(spark, sf_dir, "events")
     day = F.date_trunc("day", F.col("ts"))
     obs = ev.groupBy("user_id", day.alias("day")).agg(
         F.max(F.struct("ts", "event_id", "value"))["value"].alias("day_last"),
@@ -251,7 +252,7 @@ def seasonal_residual_anomalies(spark: SparkSession, sf_dir: str) -> DataFrame:
     broadcast onto a second fact scan; μ/σ are rounded to 6 decimals
     BEFORE the residual math so both engines compare identical doubles,
     and zero-σ slots yield NULL (no anomaly) on both engines."""
-    ev = _load_parallel(spark, sf_dir, "events")
+    ev = load_table(spark, sf_dir, "events")
     slotted = ev.select(
         "event_id",
         "event_type",
@@ -309,7 +310,7 @@ def rolling_active_users(spark: SparkSession, sf_dir: str) -> DataFrame:
     into the <=7 later days it contributes to, turning the trailing
     window into a plain equi-join aggregate — no day-range theta-join,
     no repeated 7-day re-scans."""
-    ev = _load_parallel(spark, sf_dir, "events")
+    ev = load_table(spark, sf_dir, "events")
     active = ev.select(
         "user_id", F.date_trunc("day", F.col("ts")).alias("day")
     ).distinct()
@@ -375,7 +376,7 @@ def error_burst_detection(spark: SparkSession, sf_dir: str) -> DataFrame:
     100 TB shape: one shuffle on user_id; both row_numbers, the island
     grouping and the burst aggregate run inside user partitions
     (exchange reuse), and each island is bounded by its run length."""
-    ev = _load_parallel(spark, sf_dir, "events")
+    ev = load_table(spark, sf_dir, "events")
     w_all = Window.partitionBy("user_id").orderBy("ts", "event_id")
     is_err = F.col("event_type") == "error"
     w_err = Window.partitionBy("user_id", is_err).orderBy("ts", "event_id")
@@ -437,7 +438,7 @@ def weekly_revenue_wow(spark: SparkSession, sf_dir: str) -> DataFrame:
     100 TB shape: one shuffle into the week-cardinality aggregate
     (money rounded before the ratio so both engines divide identical
     doubles); the lag window orders a handful of week rows."""
-    o = _load_parallel(spark, sf_dir, "orders")
+    o = load_table(spark, sf_dir, "orders")
     weekly = o.groupBy(F.date_trunc("week", F.col("o_orderdate")).alias("week")).agg(
         F.round(F.sum("o_totalprice"), 4).alias("revenue"),
         F.count("*").alias("n_orders"),
@@ -504,7 +505,7 @@ def acf_daily_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     equi-join on day+lag over the exploded 1..{_ACF_MAX_LAG} lag set),
     and the per-lag reduction — operates on the tiny daily series, which
     broadcasts. Day bucketing uses tz-independent epoch days."""
-    events = _load_parallel(spark, sf_dir, "events")
+    events = load_table(spark, sf_dir, "events")
     series = (
         events.select(
             F.floor(F.col("ts").cast("long") / 86400).cast("long").alias("day")
@@ -603,7 +604,7 @@ def cusum_changepoint(spark: SparkSession, sf_dir: str) -> DataFrame:
     of input size."""
     from pyspark.sql import Window
 
-    events = _load_parallel(spark, sf_dir, "events")
+    events = load_table(spark, sf_dir, "events")
     series = (
         events.select(
             F.floor(F.col("ts").cast("long") / 86400).cast("long").alias("day")
@@ -692,7 +693,7 @@ def theil_sen_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
     day table (a year is ~365 rows -> 66k pairs), never on events. At
     decade-scale series you'd switch to the repeated-median variant or
     sample pairs; the corpus-side cost is unchanged either way."""
-    ev = _load_parallel(spark, sf_dir, "events")
+    ev = load_table(spark, sf_dir, "events")
     byday = ev.groupBy(
         F.floor(F.col("ts").cast("long") / 86400).cast("long").alias("day")
     ).agg(F.count("*").alias("cnt"))
@@ -778,7 +779,7 @@ def holt_linear_trace(spark: SparkSession, sf_dir: str) -> DataFrame:
     state depends on the last) and runs on day-count rows — the right
     place for a sequential stage. Forecasts are level + h*trend off the
     final row."""
-    ev = _load_parallel(spark, sf_dir, "events")
+    ev = load_table(spark, sf_dir, "events")
     byday = ev.groupBy(
         F.floor(F.col("ts").cast("long") / 86400).cast("long").alias("day")
     ).agg(F.count("*").alias("cnt"))

@@ -45,36 +45,29 @@ def _sum_dbl(expr) -> F.Column:
     return F.round(F.sum(expr), 6).cast("double")
 
 
-
-# Tables whose rows are narrow scalars and whose consumers' first operation
-# is an exchange (groupBy/window/join) or a cheap partial aggregate. For
-# these the parallelism floor below is a NET LOSS locally: repartition(n)
-# round-robins the FULL input through an exchange (plus the
-# sortBeforeRepartition local sort, SPARK-23207) just to parallelize work
-# the next exchange would distribute anyway — measured at sf0.1:
-# funnel_signup_purchase 0.50→0.21 s, error_burst_detection 0.61→0.36 s,
-# session_windows 0.64→0.42 s, data_contract_validation 1.46→0.80 s,
-# solar_panel_stats 1.04→0.78 s by dropping it (guide §2.4: remove
-# shuffles outright). documents/embeddings stay floored: their consumers
-# run CPU-heavy per-row derivations (shingling, hashing, vector folds)
-# BEFORE any exchange, where a 1-split scan pins the work to one core.
-# At real scale the scan yields >= cores splits and BOTH paths are no-ops.
-_NARROW_TABLES = frozenset(
-    {"events", "orders", "lineitem", "customer", "part", "supplier",
-     "nation", "region"}
-)
-
-
 def _load_parallel(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    """load_table + parallelism floor for text/vector tables: local
-    testdata arrives as one parquet row-group, which would pin scan-side
-    work (shingling, hashing, vector math over 1M rows) to a single core.
-    Narrow relational tables skip the floor (see _NARROW_TABLES). No-op on
-    real multi-split inputs — see operators.ensure_min_partitions."""
+    """load_table + the parallelism floor (operators.ensure_min_partitions):
+    local testdata arrives as one parquet row-group, which would pin
+    CPU-heavy per-row work that runs BEFORE any exchange (shingling,
+    hashing, JSON/variant parsing over 1M rows) to a single core. No-op on
+    real multi-split inputs.
+
+    The call site picks this or plain ``load_table``; no table name
+    decides for it. Pick ``load_table`` when the consumer's first
+    operation is an exchange (groupBy/window/join) or a cheap partial
+    aggregate: there the floor is a NET LOSS locally, because
+    repartition(n) round-robins the FULL input through an exchange (plus
+    the sortBeforeRepartition local sort, SPARK-23207) just to
+    parallelize work the next exchange would distribute anyway. Measured
+    at sf0.1 by dropping it: funnel_signup_purchase 0.50→0.21 s,
+    error_burst_detection 0.61→0.36 s, session_windows 0.64→0.42 s,
+    data_contract_validation 1.46→0.80 s, solar_panel_stats 1.04→0.78 s
+    (guide §2.4: remove shuffles outright). The similarity operators
+    floor their embedding corpus side themselves (operators/similarity.py):
+    a floor at load would also put a round-robin exchange on the
+    broadcast query side."""
     from kafka_streams_example_spark.operators import ensure_min_partitions
 
-    if name in _NARROW_TABLES:
-        return load_table(spark, sf_dir, name)
     return ensure_min_partitions(load_table(spark, sf_dir, name))
 
 

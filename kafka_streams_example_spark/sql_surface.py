@@ -21,7 +21,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
-from kafka_streams_example_spark.registry import _load_parallel, register
+from kafka_streams_example_spark.registry import register
+from kafka_streams_example_spark.sources.files import load_table
 
 # --------------------------------------------------------------------------
 # sql_scalar_udf_revenue — Catalyst-inlined SQL UDF
@@ -50,7 +51,7 @@ def sql_scalar_udf_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     100 TB shape: identical to the hand-inlined query — one scan with
     the quantity filter pushed down, map-side partial aggregation on a
     3-value key."""
-    _load_parallel(spark, sf_dir, "lineitem").createOrReplaceTempView("lineitem")
+    load_table(spark, sf_dir, "lineitem").createOrReplaceTempView("lineitem")
     spark.sql(
         "CREATE OR REPLACE TEMPORARY FUNCTION gross_rev(p DOUBLE, d DOUBLE, t DOUBLE)"
         " RETURNS DOUBLE RETURN p * (1.0 - d) * (1.0 + t)"
@@ -93,7 +94,7 @@ def pipe_syntax_shipmode_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     100 TB shape: scan with the discount range pushed down, map-side
     partial aggregation on a low-cardinality composite key."""
-    _load_parallel(spark, sf_dir, "lineitem").createOrReplaceTempView("lineitem")
+    load_table(spark, sf_dir, "lineitem").createOrReplaceTempView("lineitem")
     return spark.sql(
         """
         FROM lineitem

@@ -541,11 +541,9 @@ def streaming_ingest_neardup(
     import tempfile
 
     from kafka_streams_example_spark.operators.dedup import (
-        hashed_shingles_sql,
         minhash_band_hashes,
-        minhash_signature_sql,
+        minhash_signed,
     )
-    from kafka_streams_example_spark.operators.text import word_ngrams
 
     owner = index_seed.sparkSession
     root = state_dir or tempfile.mkdtemp(prefix="ingest_neardup_state_")
@@ -554,17 +552,7 @@ def streaming_ingest_neardup(
     def _bands_of(df: DataFrame) -> DataFrame:
         """(doc_id, text, ...) → exploded (id, band, bhash); docs too
         short to shingle drop out here (no bands → classified new)."""
-        signed = (
-            df.select(F.col("doc_id").alias("id"), F.col("text").alias("txt"))
-            .withColumn("shingles", word_ngrams(F.col("txt"), ngram))
-            .drop("txt")
-            .filter(F.size("shingles") > 0)
-            .withColumn(
-                "hsh", F.expr(f"array_distinct({hashed_shingles_sql('shingles')})")
-            )
-            .drop("shingles")
-            .withColumn("sig", F.expr(minhash_signature_sql("hsh", num_hashes, seed)))
-        )
+        signed = minhash_signed(df, ngram=ngram, num_hashes=num_hashes, seed=seed)
         return minhash_band_hashes(signed, num_hashes=num_hashes, bands=bands)
 
     def write_seed() -> None:

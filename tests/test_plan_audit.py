@@ -59,6 +59,20 @@ def test_anti_join_is_broadcast(spark):
     )
 
 
+@pytest.mark.parametrize(
+    "name",
+    ["minhash_jaccard_estimate", "neardup_dedup_corpus", "similarity_pair_histogram"],
+)
+def test_at_most_one_parallelism_floor_per_scan(spark, name):
+    """The call site floors a scan once (``_load_parallel``); an operator
+    must not round-robin the same input a second time. Each extra
+    RoundRobinPartitioning exchange reshuffles the full input for no
+    added parallelism."""
+    plan = _plan(registry.QUERIES[name](spark, SF_SMOKE))
+    floors = plan.count("Exchange RoundRobinPartitioning")
+    assert floors <= plan.count("FileScan parquet"), plan[:3000]
+
+
 def test_selective_filters_pushed_to_scan(spark):
     """q19's brand/size predicates must reach the part parquet scan as
     PushedFilters, not run post-scan only."""

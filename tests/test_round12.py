@@ -25,14 +25,15 @@ def _norm(pdf: pd.DataFrame) -> pd.DataFrame:
 
 def test_cache_bounded_respects_budget(spark):
     df = spark.range(10)
-    cached = ops.cache_bounded(df, 100)  # tiny estimate -> session cache
+    cached = ops.share(df, 100)  # tiny estimate -> session cache
     assert cached.storageLevel.useMemory
     cached.unpersist()
-    # above budget (and unknown size) -> per-invocation lazy checkpoint,
-    # never a session cache entry
-    over = ops.cache_bounded(spark.range(10), ops._CACHE_MAX_BYTES + 1)
-    unknown = ops.cache_bounded(spark.range(10), -1)
-    for d in (over, unknown):
+    # above budget, unknown size, or no estimate -> per-invocation lazy
+    # checkpoint, never a session cache entry
+    over = ops.share(spark.range(10), ops._CACHE_MAX_BYTES + 1)
+    unknown = ops.share(spark.range(10), -1)
+    no_estimate = ops.share(spark.range(10))
+    for d in (over, unknown, no_estimate):
         assert not d.storageLevel.useMemory
         # the decisive check: the SQL cache manager holds no entry for it
         assert not spark._jsparkSession.sharedState().cacheManager().lookupCachedData(
@@ -54,7 +55,7 @@ def test_cache_bounded_respects_budget(spark):
 )
 def test_forced_cache_fallback_is_result_identical(spark, name, monkeypatch):
     """With the per-frame cache budget forced to zero every guarded site
-    takes the checkpoint_reused fallback — results must be identical to
+    takes share's per-invocation checkpoint — results must be identical to
     the cached path (r11 VERDICT #6 'Done' condition)."""
     spark.catalog.clearCache()
     base = _norm(registry.QUERIES[name](spark, SF_SMOKE).toPandas())
@@ -63,6 +64,25 @@ def test_forced_cache_fallback_is_result_identical(spark, name, monkeypatch):
     forced = _norm(registry.QUERIES[name](spark, SF_SMOKE).toPandas())
     spark.catalog.clearCache()
     pd.testing.assert_frame_equal(base, forced, check_dtype=True)
+
+
+def test_minhash_pairs_unknown_size_pins_no_session_cache(spark):
+    """An in-memory input has no scan bytes to budget from, so the signed
+    frame is shared per invocation only: once the query has run, the
+    session's cache manager holds nothing for it."""
+    from kafka_streams_example_spark.operators.dedup import minhash_pairs
+
+    spark.catalog.clearCache()
+    docs = spark.createDataFrame(
+        [
+            (1, "the quick brown fox jumps over the lazy dog"),
+            (2, "the quick brown fox jumps over the lazy dog"),
+            (3, "an entirely different sentence about solar panels"),
+        ],
+        "doc_id LONG, text STRING",
+    )
+    assert minhash_pairs(docs, threshold=0.5).count() == 1
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
 
 
 def test_unigram_freq_shared_across_consumers(spark):

@@ -3,10 +3,12 @@ registry — the plan-shape evidence behind the scale claims.
 
 For every registered query (plan only, nothing executes): number of
 shuffle exchanges, broadcast exchanges/joins, sort-merge joins, parquet
-scans with pushed filters, whole-stage-codegen coverage, and any
-red-flag nodes (CartesianProduct, single-partition Exchange). Run after
-adding operators; the committed PLANS.md is reviewable evidence that
-each plan is the intended one, not just a passing one.
+scans with pushed filters, whole-stage-codegen coverage, the sharing and
+parallelism-floor footprint (round-robin exchanges, cached relations,
+checkpoint scans), and any red-flag nodes (CartesianProduct,
+single-partition Exchange). Run after adding operators; the committed
+PLANS.md is reviewable evidence that each plan is the intended one, not
+just a passing one.
 
 Usage: python tools/plan_report.py [sf_dir]  (default /root/testdata/sf0.1)
 """
@@ -30,6 +32,7 @@ def plan_stats(plan: str) -> dict:
     c = Counter()
     c["exchange"] = len(re.findall(r"Exchange hashpartitioning", plan))
     c["exchange_single"] = len(re.findall(r"Exchange SinglePartition", plan))
+    c["roundrobin"] = len(re.findall(r"Exchange RoundRobinPartitioning", plan))
     c["broadcast"] = len(re.findall(r"BroadcastExchange", plan))
     c["bhj"] = len(re.findall(r"BroadcastHashJoin", plan))
     c["smj"] = len(re.findall(r"SortMergeJoin", plan))
@@ -43,6 +46,7 @@ def plan_stats(plan: str) -> dict:
         re.findall(r"(MapInPandas|ArrowEvalPython|FlatMapGroupsInPandas|MapInArrow|PythonDataSource)", plan)
     )
     c["cached"] = len(re.findall(r"InMemoryTableScan|InMemoryRelation", plan))
+    c["checkpoint"] = len(re.findall(r"Scan ExistingRDD", plan))
     return c
 
 
@@ -57,8 +61,11 @@ def main() -> None:
         "# PLANS — physical-plan audit (generated by tools/plan_report.py)",
         "",
         f"Scale dir: `{sf_dir}`. Columns: hash exchanges / single-partition",
-        "exchanges / broadcasts / BHJ / SMJ / BNLJ / parquet scans (with",
-        "pushed filters) / WholeStageCodegen spans / Python stages.",
+        "exchanges / round-robin exchanges (parallelism floors) / broadcasts /",
+        "BHJ / SMJ / BNLJ / parquet scans (with pushed filters) /",
+        "WholeStageCodegen spans / Python stages / cached-relation nodes",
+        "(InMemoryRelation + InMemoryTableScan) / checkpoint scans",
+        "(Scan ExistingRDD, a `localCheckpoint` read).",
         "",
         "Plan-only (nothing executed); AQE may further coalesce/convert at",
         "runtime. `tests/test_plan_audit.py` asserts the hard invariants",
@@ -85,8 +92,8 @@ def main() -> None:
         "that doubles per iteration (2^N scans). Their cost is measured",
         "in BENCH_DETAIL.json/SCALE_SWEEP.json, not visible in this table.",
         "",
-        "| query | exch | 1-part | bcast | BHJ | SMJ | BNLJ | scans | pushed | codegen | py |",
-        "|---|---|---|---|---|---|---|---|---|---|---|",
+        "| query | exch | 1-part | rr | bcast | BHJ | SMJ | BNLJ | scans | pushed | codegen | py | cache | ckpt |",
+        "|---|---|---|---|---|---|---|---|---|---|---|---|---|---|",
     ]
     flagged: list[str] = []
     for name, fn in registry.QUERIES.items():
@@ -94,7 +101,7 @@ def main() -> None:
             df = fn(spark, sf_dir)
             plan = df._jdf.queryExecution().executedPlan().toString()
         except Exception as exc:  # plan-time failure is itself a finding
-            lines.append(f"| {name} | PLAN ERROR: {type(exc).__name__} | | | | | | | | | |")
+            lines.append(f"| {name} | PLAN ERROR: {type(exc).__name__} | | | | | | | | | | | | |")
             flagged.append(name)
             continue
         s = plan_stats(plan)
@@ -103,9 +110,10 @@ def main() -> None:
         if s["cached"]:
             name = f"{name} †"
         lines.append(
-            f"| {name} | {s['exchange']} | {s['exchange_single']} | {s['broadcast']} "
-            f"| {s['bhj']} | {s['smj']} | {s['bnlj']} | {s['scans']} | {s['pushed']} "
-            f"| {s['codegen']} | {s['python']} |"
+            f"| {name} | {s['exchange']} | {s['exchange_single']} | {s['roundrobin']} "
+            f"| {s['broadcast']} | {s['bhj']} | {s['smj']} | {s['bnlj']} | {s['scans']} "
+            f"| {s['pushed']} | {s['codegen']} | {s['python']} | {s['cached']} "
+            f"| {s['checkpoint']} |"
         )
     lines += [
         "",
