@@ -5,29 +5,35 @@ the pattern that scales to 100TB because Spark never interprets the bytes
 except inside explicitly vectorized stages:
 
 - metadata (sizes, fingerprints, format sniffing) = JVM-side expressions;
-- decode / feature-extract / resize / frame-sample = Arrow-batched
+- decode / feature-extract / resize / fingerprint = Arrow-batched
   ``mapInPandas`` stages, one Python process per partition, zero-copy
   batch transfer.
 
+Every such stage runs in ONE shell, ``map_rows``: a per-row function
+over the listed input columns, with the batch loop, the column assembly
+and the failure contract in one place. A codec error degrades one row
+(``ok=False``, NULL fields) and never fails the job, because one corrupt
+or exotic blob must not kill a 100TB decode job. The shell is also the
+one place a per-task byte budget for media kernels belongs.
+
 This container has no image/audio libraries, but the decode path is REAL
-for the two open formats simple enough to implement from spec with the
-stdlib: PNG and WAV (functions/codecs.py — full chunk/CRC parse, inflate,
-all five scanline filters). ``fake=False`` decodes/resizes actual PNG
-blobs; blobs in formats that would need an external codec (JPEG, MP4, …)
-yield ``ok=False`` rows — per-row failure tolerance, because one corrupt
-or exotic blob must not kill a 100TB decode job. A deterministic fake
-path (``fake=True``) remains for plumbing tests that don't care about
-pixel content. The byte-level feature extractor (entropy, byte stats) is
-also real: numpy over Arrow batches.
+for the three formats simple enough to implement from spec with the
+stdlib (functions/codecs.py, with numpy fast paths in codecs_np.py):
+PNG (full chunk/CRC parse, inflate, all five scanline filters), baseline
+JPEG (``decode_jpegs``: marker walk, Huffman, dequant, IDCT) and WAV.
+Blobs in any other format (MP4, progressive JPEG, …) yield ``ok=False``
+rows. The fixture flows (``with_png_payload``, ``with_jpeg_payload``)
+build real blobs from functions/fixtures.py. A deterministic fake path
+(``fake=True``) remains for plumbing tests that don't care about pixel
+content. The byte-level feature extractor (entropy, byte stats) is also
+real: numpy over Arrow batches.
 """
 
 from __future__ import annotations
 
 import hashlib
-import math
 import struct
 import zlib
-from collections.abc import Iterator
 
 import pandas as pd
 
@@ -35,51 +41,94 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from kafka_streams_example_spark.functions import codecs as _codecs
-from kafka_streams_example_spark.functions import codecs_np as _codecs_np
+from kafka_streams_example_spark.functions import codecs_np as cx
+from kafka_streams_example_spark.functions import fixtures as fx
 
 
 def _ship_codecs():
-    """Register the codec modules BY VALUE so mapInPandas kernels can call
-    them on workers that do not have this repo on sys.path (the driver
-    contract runs from an arbitrary cwd), and return the numpy-vectorized
-    one (functions/codecs_np.py — byte-identical to the stdlib reference
-    functions/codecs.py, the per-doc decode constant cut ~6-10x). Both
-    ship: codecs_np's globals reference the codecs module."""
+    """Register the codec and fixture modules BY VALUE so mapInPandas
+    kernels can call them on workers that do not have this repo on
+    sys.path (the driver contract runs from an arbitrary cwd), and
+    return the numpy-vectorized codecs (functions/codecs_np.py —
+    byte-identical to the stdlib reference functions/codecs.py, the
+    per-doc decode constant cut ~6-10x). Both codec modules ship:
+    codecs_np's globals reference the codecs module.
+
+    cloudpickle ships every other module-level function of this package
+    BY REFERENCE, so a kernel may call only these three modules, the
+    standard library, numpy and pandas (tests/test_kernel_shipping.py)."""
     from pyspark import cloudpickle
 
-    cloudpickle.register_pickle_by_value(_codecs)
-    cloudpickle.register_pickle_by_value(_codecs_np)
-    return _codecs_np
+    for module in (_codecs, cx, fx):
+        cloudpickle.register_pickle_by_value(module)
+    return cx
 
 
-DECODED_SCHEMA = (
-    "doc_id LONG, width INT, height INT, channels INT, ok BOOLEAN"
-)
-FEATURES_SCHEMA = (
-    "doc_id LONG, n_bytes LONG, byte_entropy DOUBLE, mean_byte DOUBLE"
-)
+# The codec failures that degrade a row instead of failing the task:
+# ValueError/TypeError/KeyError/IndexError from the format checks,
+# struct.error from a truncated blob (unpack past the end of the buffer
+# in a chunk or marker walk), zlib.error from a corrupt deflate stream
+# under a valid chunk CRC.
+_CODEC_ERRORS = (ValueError, TypeError, KeyError, IndexError, struct.error, zlib.error)
+
+# nullable pandas dtypes for the integer columns a failed row leaves NULL
+_NULLABLE = {"INT": "Int32", "LONG": "Int64"}
+
+
+def map_rows(df: DataFrame, in_cols: list[str], out_ddl: str, fn) -> DataFrame:
+    """The batch shell every media kernel runs in: ``fn(*row)`` over the
+    ``in_cols`` values of each input row yields zero or more output
+    tuples in ``out_ddl`` order (a flat ``"name TYPE, ..."`` list).
+
+    The shell owns the Arrow batch loop (one map-only ``mapInPandas``
+    stage, no shuffle) and the column assembly. When the output carries
+    an ``ok`` column it also owns the failure contract: a
+    ``_CODEC_ERRORS`` raise anywhere in ``fn`` for a row replaces that
+    row's output with one row of its id (the first input column), NULL
+    fields and ``ok=False``. Without an ``ok`` column an error fails the
+    task like any other.
+
+    ``fn`` is pickled by value and runs on workers that cannot import
+    this package: it may call only what ``_ship_codecs`` registers (this
+    module's ``cx`` and ``fx``), the standard library, numpy and pandas,
+    and read plain constants."""
+    _ship_codecs()
+    fields = [f.split() for f in out_ddl.split(",")]
+    names = [name for name, _ in fields]
+    dtypes = [_NULLABLE.get(kind) for _, kind in fields]
+    ok = names.index("ok") if "ok" in names else None
+    errors = _CODEC_ERRORS if ok is not None else ()
+
+    def batches(it):
+        for pdf in it:
+            rows = []
+            for args in zip(*(pdf[c].tolist() for c in in_cols)):
+                try:
+                    rows += list(fn(*args))
+                except errors:
+                    bad = [None] * len(names)
+                    bad[0], bad[ok] = args[0], False
+                    rows.append(bad)
+            cols = list(zip(*rows)) if rows else [()] * len(names)
+            yield pd.DataFrame(
+                {n: pd.Series(c, dtype=d) for n, c, d in zip(names, cols, dtypes)}
+            )
+
+    return df.select(*in_cols).mapInPandas(batches, out_ddl)
 
 
 def with_png_payload(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
-    """Fixture flow with REAL image blobs: builds a spec-conformant 8-bit
-    grayscale PNG per row (dims derived from the id, pixels from the md5
-    digest of the text, repeated to fill) — so decode stages downstream
-    exercise an actual codec. In production the binary arrives from the
-    source; this generator stands in for the object-store read while
-    keeping every byte deterministic and oracle-reproducible."""
-    cx = _ship_codecs()
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            blobs = []
-            for i, t in zip(pdf[id_col], pdf[text_col]):
-                w, h = 16 + int(i) % 17, 16 + int(i) % 13
-                digest = hashlib.md5(str(t).encode("utf-8")).digest()
-                px = (digest * (w * h // 16 + 1))[: w * h]
-                blobs.append(cx.encode_png_gray8(w, h, px))
-            yield pd.DataFrame({"doc_id": pdf[id_col], "payload": blobs})
-
-    return df.select(id_col, text_col).mapInPandas(batches, "doc_id LONG, payload BINARY")
+    """Fixture flow with REAL image blobs: a spec-conformant 8-bit
+    grayscale PNG per row (functions/fixtures.py:png_gray8 — dims from
+    the id, pixels from the md5 digest of the text) — so decode stages
+    downstream exercise an actual codec. In production the binary
+    arrives from the source; this generator stands in for the
+    object-store read while keeping every byte deterministic and
+    oracle-reproducible."""
+    return map_rows(
+        df, [id_col, text_col], "doc_id LONG, payload BINARY",
+        lambda i, t: [(i, cx.encode_png_gray8(*fx.png_gray8(i, t)))],
+    )
 
 
 def with_binary_payload(df: DataFrame, text_col: str = "text") -> DataFrame:
@@ -97,11 +146,14 @@ def with_binary_payload(df: DataFrame, text_col: str = "text") -> DataFrame:
     )
 
 
+DECODED_SCHEMA = "doc_id LONG, width INT, height INT, channels INT, ok BOOLEAN"
+
+
 def decode_images(
     df: DataFrame, fake: bool = False, id_col: str = "doc_id", bin_col: str = "payload"
 ) -> DataFrame:
     """Decode stage: binary → (width, height, channels). The real path
-    (``fake=False``) runs the stdlib PNG codec — full chunk walk, CRC
+    (``fake=False``) runs the PNG codec — full chunk walk, CRC
     verification, inflate, unfilter (functions/codecs.py) — and emits
     ``ok=False`` with NULL dims for blobs that are not decodable PNGs
     (corrupt bytes or formats needing an external codec), so a bad blob
@@ -109,55 +161,17 @@ def decode_images(
     deterministically from the content hash for plumbing-only tests."""
     if fake:
 
-        def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            for pdf in it:
-                h = pdf[bin_col].map(
-                    lambda b: hashlib.md5(bytes(b)).digest() if b is not None else b"\0" * 16
-                )
-                yield pd.DataFrame(
-                    {
-                        "doc_id": pdf[id_col],
-                        "width": h.map(lambda d: 64 + d[0] % 192).astype("int32"),
-                        "height": h.map(lambda d: 64 + d[1] % 192).astype("int32"),
-                        "channels": h.map(lambda d: 1 + d[2] % 4).astype("int32"),
-                        "ok": pdf[bin_col].notna(),
-                    }
-                )
+        def row(i, b):
+            d = hashlib.md5(bytes(b)).digest() if b is not None else b"\0" * 16
+            yield i, 64 + d[0] % 192, 64 + d[1] % 192, 1 + d[2] % 4, b is not None
 
-        return df.select(id_col, bin_col).mapInPandas(batches, DECODED_SCHEMA)
+    else:
 
-    cx = _ship_codecs()
+        def row(i, b):
+            d = cx.decode_png(bytes(b))
+            yield i, d["width"], d["height"], d["channels"], True
 
-    def real_batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            ws, hs, cs, oks = [], [], [], []
-            for b in pdf[bin_col]:
-                try:
-                    d = cx.decode_png(bytes(b))
-                    ws.append(d["width"])
-                    hs.append(d["height"])
-                    cs.append(d["channels"])
-                    oks.append(True)
-                except (ValueError, TypeError, KeyError, struct.error, zlib.error):
-                    # struct.error: truncated blob (unpack_from past end of
-                    # buffer in the chunk walk); zlib.error: corrupt deflate
-                    # stream with a valid chunk CRC. Both must degrade the
-                    # row, not kill the Spark task.
-                    ws.append(None)
-                    hs.append(None)
-                    cs.append(None)
-                    oks.append(False)
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf[id_col],
-                    "width": pd.Series(ws, dtype="Int32"),
-                    "height": pd.Series(hs, dtype="Int32"),
-                    "channels": pd.Series(cs, dtype="Int32"),
-                    "ok": oks,
-                }
-            )
-
-    return df.select(id_col, bin_col).mapInPandas(real_batches, DECODED_SCHEMA)
+    return map_rows(df, [id_col, bin_col], DECODED_SCHEMA, row)
 
 
 def byte_features(
@@ -168,38 +182,25 @@ def byte_features(
     any embed/score/transform pass over media bytes."""
     import numpy as np
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            ents, means, sizes = [], [], []
-            for b in pdf[bin_col]:
-                if b is None:
-                    # NULL payload: NULL size, zeroed features — matches
-                    # the SQL oracle (octet_length(NULL)=NULL; the entropy
-                    # coalesce yields 0.0 with no byte rows)
-                    sizes.append(None)
-                    ents.append(0.0)
-                    means.append(0.0)
-                    continue
-                arr = np.frombuffer(bytes(b), dtype=np.uint8)
-                sizes.append(len(arr))
-                if len(arr) == 0:
-                    ents.append(0.0)
-                    means.append(0.0)
-                    continue
-                counts = np.bincount(arr, minlength=256)
-                p = counts[counts > 0] / len(arr)
-                ents.append(float(-(p * np.log2(p)).sum()))
-                means.append(float(arr.mean()))
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf[id_col],
-                    "n_bytes": pd.Series(sizes, dtype="Int64"),
-                    "byte_entropy": ents,
-                    "mean_byte": means,
-                }
-            )
+    def row(i, b):
+        if b is None:
+            # NULL payload: NULL size, zeroed features — matches the SQL
+            # oracle (octet_length(NULL)=NULL; the entropy coalesce
+            # yields 0.0 with no byte rows)
+            yield i, None, 0.0, 0.0
+            return
+        arr = np.frombuffer(bytes(b), dtype=np.uint8)
+        if len(arr) == 0:
+            yield i, 0, 0.0, 0.0
+            return
+        counts = np.bincount(arr, minlength=256)
+        p = counts[counts > 0] / len(arr)
+        yield i, len(arr), float(-(p * np.log2(p)).sum()), float(arr.mean())
 
-    return df.select(id_col, bin_col).mapInPandas(batches, FEATURES_SCHEMA)
+    return map_rows(
+        df, [id_col, bin_col],
+        "doc_id LONG, n_bytes LONG, byte_entropy DOUBLE, mean_byte DOUBLE", row,
+    )
 
 
 def sample_frames(
@@ -230,12 +231,6 @@ def sample_frames(
     )
 
 
-RESIZED_SCHEMA = (
-    "doc_id LONG, width INT, height INT, out_width INT, out_height INT, "
-    "resized BINARY, ok BOOLEAN"
-)
-
-
 def resize_images(
     df: DataFrame,
     out_width: int = 224,
@@ -245,75 +240,46 @@ def resize_images(
     bin_col: str = "payload",
 ) -> DataFrame:
     """Resize stage: binary image → fixed-dims binary (the normalize-to-
-    model-input pass). The real path decodes PNG via the stdlib codec,
-    resamples nearest-neighbor, and re-encodes a real PNG at the target
-    dims; non-PNG/corrupt blobs yield ``ok=False`` rows. The fake path
-    emits a deterministic hash-derived pseudo-image of exactly
+    model-input pass). The real path decodes PNG, resamples
+    nearest-neighbor, and re-encodes a real PNG at the target dims;
+    non-PNG/corrupt blobs yield ``ok=False`` rows. The fake path emits a
+    deterministic hash-derived pseudo-image of exactly
     ``out_width*out_height`` bytes for plumbing-only tests.
 
-    Scale: mapInPandas keeps this a map-only stage (no shuffle); output
-    blobs are bounded (out_width*out_height*channels) so downstream
-    partition sizing is predictable regardless of input image sizes.
+    Scale: a map-only stage (no shuffle); output blobs are bounded
+    (out_width*out_height*channels) so downstream partition sizing is
+    predictable regardless of input image sizes.
     """
-    if not fake:
-        cx = _ship_codecs()
+    n_out = out_width * out_height
+    if fake:
 
-        def real_batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            for pdf in it:
-                ws, hs, blobs, oks = [], [], [], []
-                for b in pdf[bin_col]:
-                    try:
-                        d = cx.decode_png(bytes(b))
-                        if d["channels"] != 1:
-                            raise ValueError("resize path supports gray8")
-                        small = cx.resize_gray8_nearest(
-                            d["pixels"], d["width"], d["height"], out_width, out_height
-                        )
-                        ws.append(d["width"])
-                        hs.append(d["height"])
-                        blobs.append(cx.encode_png_gray8(out_width, out_height, small))
-                        oks.append(True)
-                    except (ValueError, TypeError, KeyError, struct.error, zlib.error):
-                        ws.append(None)
-                        hs.append(None)
-                        blobs.append(None)
-                        oks.append(False)
-                yield pd.DataFrame(
-                    {
-                        "doc_id": pdf[id_col],
-                        "width": pd.Series(ws, dtype="Int32"),
-                        "height": pd.Series(hs, dtype="Int32"),
-                        "out_width": pd.Series([out_width] * len(pdf), dtype="int32"),
-                        "out_height": pd.Series([out_height] * len(pdf), dtype="int32"),
-                        "resized": blobs,
-                        "ok": oks,
-                    }
-                )
+        def row(i, b):
+            d = hashlib.md5(bytes(b)).digest() if b is not None else b"\0" * 16
+            # deterministic pseudo-pixels: repeat the digest to size
+            yield (i, 64 + d[0] % 192, 64 + d[1] % 192,
+                   (d * (n_out // len(d) + 1))[:n_out], b is not None)
 
-        return df.select(id_col, bin_col).mapInPandas(real_batches, RESIZED_SCHEMA)
+    else:
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            h = pdf[bin_col].map(
-                lambda b: hashlib.md5(bytes(b)).digest() if b is not None else b"\0" * 16
+        def row(i, b):
+            d = cx.decode_png(bytes(b))
+            if d["channels"] != 1:
+                raise ValueError("resize path supports gray8")
+            small = cx.resize_gray8_nearest(
+                d["pixels"], d["width"], d["height"], out_width, out_height
             )
-            n_out = out_width * out_height
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf[id_col],
-                    "width": h.map(lambda d: 64 + d[0] % 192).astype("int32"),
-                    "height": h.map(lambda d: 64 + d[1] % 192).astype("int32"),
-                    "out_width": pd.Series([out_width] * len(pdf), dtype="int32"),
-                    "out_height": pd.Series([out_height] * len(pdf), dtype="int32"),
-                    # deterministic pseudo-pixels: repeat the digest to size
-                    "resized": h.map(
-                        lambda d: (d * (n_out // len(d) + 1))[:n_out]
-                    ),
-                    "ok": pdf[bin_col].notna(),
-                }
-            )
+            yield (i, d["width"], d["height"],
+                   cx.encode_png_gray8(out_width, out_height, small), True)
 
-    return df.select(id_col, bin_col).mapInPandas(batches, RESIZED_SCHEMA)
+    out = map_rows(
+        df, [id_col, bin_col],
+        "doc_id LONG, width INT, height INT, resized BINARY, ok BOOLEAN", row,
+    )
+    return out.select(
+        "doc_id", "width", "height",
+        F.lit(out_width).alias("out_width"), F.lit(out_height).alias("out_height"),
+        "resized", "ok",
+    )
 
 
 def multimodal_meta(docs: DataFrame) -> DataFrame:
@@ -328,89 +294,19 @@ def multimodal_meta(docs: DataFrame) -> DataFrame:
     )
 
 
-def byte_features_arrow(
-    df: DataFrame, id_col: str = "doc_id", bin_col: str = "payload"
-) -> DataFrame:
-    """``mapInArrow`` flavor of byte_features: RecordBatch in, RecordBatch
-    out, no pandas materialization — the lowest-overhead Python interop
-    Spark offers and the right default for byte-level media passes at
-    scale. Values are identical to byte_features (same numpy math)."""
-    import numpy as np
-    import pyarrow as pa
-
-    def batches(it: Iterator["pa.RecordBatch"]) -> Iterator["pa.RecordBatch"]:
-        for batch in it:
-            ids = batch.column(0)
-            payloads = batch.column(1)
-            ents, means, sizes = [], [], []
-            for buf in payloads:
-                raw = buf.as_py()
-                if raw is None:  # NULL payload — same contract as pandas path
-                    sizes.append(None)
-                    ents.append(0.0)
-                    means.append(0.0)
-                    continue
-                arr = np.frombuffer(raw, dtype=np.uint8)
-                sizes.append(len(arr))
-                if len(arr) == 0:
-                    ents.append(0.0)
-                    means.append(0.0)
-                    continue
-                counts = np.bincount(arr, minlength=256)
-                p = counts[counts > 0] / len(arr)
-                ents.append(float(-(p * np.log2(p)).sum()))
-                means.append(float(arr.mean()))
-            yield pa.RecordBatch.from_arrays(
-                [
-                    ids,
-                    pa.array(sizes, type=pa.int64()),
-                    pa.array(ents, type=pa.float64()),
-                    pa.array(means, type=pa.float64()),
-                ],
-                names=["doc_id", "n_bytes", "byte_entropy", "mean_byte"],
-            )
-
-    return df.select(id_col, bin_col).mapInArrow(batches, FEATURES_SCHEMA)
-
-
-JPEG_DECODED_SCHEMA = (
-    "doc_id LONG, width INT, height INT, n_blocks INT, n_pixels LONG, "
-    "pixel_sum LONG, ok BOOLEAN"
-)
-
-
 def with_jpeg_payload(
     df: DataFrame, text_col: str = "text", id_col: str = "doc_id"
 ) -> DataFrame:
-    """Fixture flow with REAL baseline-JPEG blobs: dims ``8*(1+id%3) ×
-    8*(1+id%2)``, each 8×8 block a constant value = md5(text) digest byte
-    (block index mod 16). Per-block-constant content makes the lossy
-    format numerically exact (only the DC coefficient is nonzero and it
-    quantizes to an integer under the all-1 table), so a full-value
-    oracle over the decoded pixels exists — while the encoder/decoder
-    still run the complete baseline pipeline (DCT, quantization, zigzag,
+    """Fixture flow with REAL baseline-JPEG blobs
+    (functions/fixtures.py:jpeg_gray8 — per-8×8-block-constant content,
+    so the lossy format stays numerically exact and a full-value oracle
+    over the decoded pixels exists) — while the encoder/decoder still
+    run the complete baseline pipeline (DCT, quantization, zigzag,
     DC-diff + AC run-length Huffman, byte stuffing, IDCT)."""
-    cx = _ship_codecs()
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            blobs = []
-            for i, t in zip(pdf[id_col], pdf[text_col]):
-                i = int(i)
-                w, h = 8 * (1 + i % 3), 8 * (1 + i % 2)
-                digest = hashlib.md5(str(t).encode("utf-8")).digest()
-                wb = w // 8
-                px = bytearray(w * h)
-                for by in range(h // 8):
-                    for bx in range(wb):
-                        v = digest[(by * wb + bx) % 16]
-                        for y in range(8):
-                            row = (by * 8 + y) * w + bx * 8
-                            px[row : row + 8] = bytes([v]) * 8
-                blobs.append(cx.encode_jpeg_gray8(w, h, bytes(px)))
-            yield pd.DataFrame({"doc_id": pdf[id_col], "payload": blobs})
-
-    return df.select(id_col, text_col).mapInPandas(batches, "doc_id LONG, payload BINARY")
+    return map_rows(
+        df, [id_col, text_col], "doc_id LONG, payload BINARY",
+        lambda i, t: [(i, cx.encode_jpeg_gray8(*fx.jpeg_gray8(i, t)))],
+    )
 
 
 def decode_jpegs(
@@ -422,38 +318,61 @@ def decode_jpegs(
     blobs (corrupt bytes, progressive/multi-component streams, formats
     needing an external codec) emit ``ok=False`` with NULL fields — a bad
     blob degrades one row, never the job."""
-    cx = _ship_codecs()
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            out = {k: [] for k in (
-                "width", "height", "n_blocks", "n_pixels", "pixel_sum", "ok",
-            )}
-            for b in pdf[bin_col]:
-                try:
-                    d = cx.decode_jpeg(bytes(b))
-                    out["width"].append(d["width"])
-                    out["height"].append(d["height"])
-                    out["n_blocks"].append(
-                        ((d["width"] + 7) // 8) * ((d["height"] + 7) // 8)
-                    )
-                    out["n_pixels"].append(len(d["pixels"]))
-                    out["pixel_sum"].append(sum(d["pixels"]))
-                    out["ok"].append(True)
-                except (ValueError, TypeError, KeyError, IndexError, struct.error):
-                    for k in ("width", "height", "n_blocks", "n_pixels", "pixel_sum"):
-                        out[k].append(None)
-                    out["ok"].append(False)
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf[id_col],
-                    "width": pd.Series(out["width"], dtype="Int32"),
-                    "height": pd.Series(out["height"], dtype="Int32"),
-                    "n_blocks": pd.Series(out["n_blocks"], dtype="Int32"),
-                    "n_pixels": pd.Series(out["n_pixels"], dtype="Int64"),
-                    "pixel_sum": pd.Series(out["pixel_sum"], dtype="Int64"),
-                    "ok": out["ok"],
-                }
+    def row(i, b):
+        d = cx.decode_jpeg(bytes(b))
+        w, h = d["width"], d["height"]
+        yield (i, w, h, ((w + 7) // 8) * ((h + 7) // 8),
+               len(d["pixels"]), sum(d["pixels"]), True)
+
+    return map_rows(
+        df, [id_col, bin_col],
+        "doc_id LONG, width INT, height INT, n_blocks INT, n_pixels LONG, "
+        "pixel_sum LONG, ok BOOLEAN",
+        row,
+    )
+
+
+# 60-bit dHash: an 11×6 thumbnail gives the SimHash width, so the same
+# 4×15-bit banding applies
+_DH_GRID_W, _DH_GRID_H = 11, 6
+_DH_BANDS, _DH_BITS = 4, 15
+
+
+def phash_fingerprints(docs: DataFrame) -> DataFrame:
+    """The perceptual fingerprint scan over a ``(doc_id, text)`` frame:
+    per doc, build the PNG fixture image (functions/fixtures.py:png_gray8),
+    encode it, fully DECODE it (CRC chunk walk + inflate + unfilter) and
+    take the 60-bit dHash of the decoded pixels (codecs.dhash60 —
+    Krawetz's difference hash). Emits (doc_id, width, height, dhash);
+    the blob exists only inside the batch. A production pipeline swaps
+    the synthesis for the source's blob column."""
+
+    def row(i, t):
+        d = cx.decode_png(cx.encode_png_gray8(*fx.png_gray8(i, t)))
+        w, h = d["width"], d["height"]
+        yield i, w, h, cx.dhash60(d["pixels"], w, h, _DH_GRID_W, _DH_GRID_H)
+
+    return map_rows(
+        docs, ["doc_id", "text"], "doc_id LONG, width INT, height INT, dhash LONG", row
+    )
+
+
+def dhash_bands(fp: DataFrame, bands: int = _DH_BANDS, bits: int = _DH_BITS) -> DataFrame:
+    """Explode a frame with a ``dhash`` column to one row per band: its
+    columns plus ``band`` (index) and ``bv`` (the band's ``bits``-bit
+    value), the LSH keys near-dup candidates join on."""
+    band_structs = F.array(
+        *[
+            F.struct(
+                F.lit(b).alias("band"),
+                F.shiftright(F.col("dhash"), b * bits)
+                .bitwiseAND(F.lit((1 << bits) - 1))
+                .alias("bv"),
             )
-
-    return df.select(id_col, bin_col).mapInPandas(batches, JPEG_DECODED_SCHEMA)
+            for b in range(bands)
+        ]
+    )
+    return fp.select(*fp.columns, F.explode(band_structs).alias("bk")).select(
+        *fp.columns, F.col("bk.band").alias("band"), F.col("bk.bv").alias("bv")
+    )

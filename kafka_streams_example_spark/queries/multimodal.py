@@ -1,31 +1,32 @@
 """Multimodal queries over binary media columns: fake and real
-(pure-stdlib codec) PNG decode, WAV round-trips, frame sampling, and
-resize — the Spark-side plumbing (schema, partitioning, Arrow batch
-shape) for image/audio feature extraction.
+(pure-stdlib codec) PNG/JPEG decode, WAV round-trips, frame sampling,
+resize and perceptual fingerprints — the Spark-side plumbing (schema,
+partitioning, Arrow batch shape) for image/audio/video feature
+extraction.
 
-Regrouped from the numbered query tranches in round 7 (code unchanged;
-registration order pinned by query_order.py). Kernels run as
-Arrow-batched mapInPandas with per-row failure degradation; blobs stay
-in binary columns and never transit a shuffle.
+Every kernel is a per-row function run by the one batch shell
+(operators/multimodal.py:map_rows) over fixture media synthesized by
+functions/fixtures.py; blobs stay inside the batch or in binary columns
+and never transit a shuffle. A kernel may call only the shipped modules
+``cx`` and ``fx``, the standard library and plain constants (see
+``map_rows``). Registration order is pinned by query_order.py.
 """
 
-import hashlib
 import math as _math
-from collections.abc import Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from kafka_streams_example_spark.operators import multimodal as mm
-from kafka_streams_example_spark.operators.multimodal import _ship_codecs
+from kafka_streams_example_spark.operators.multimodal import (
+    _DH_BANDS,
+    _DH_BITS,
+    _DH_GRID_H,
+    _DH_GRID_W,
+    cx,
+    fx,
+)
 from kafka_streams_example_spark.registry import _load_parallel, register
-
-
-# ---------------------------------------------------------------------------
-# (from registry.py, round-8 consolidation — query sections moved verbatim;
-# registration order stays pinned by query_order.py)
-# ---------------------------------------------------------------------------
 
 
 @register(
@@ -115,15 +116,14 @@ FROM h
 )
 def multimodal_decode_fake(spark, sf_dir):
     """Decode-stage plumbing (binary → width/height/channels) with the
-    deterministic fake codec; the real path raises NotImplementedError
-    until an image library is present (operators/multimodal.py). The fake
+    deterministic fake codec (the real PNG path is
+    multimodal_decode_real's codec; see operators/multimodal.py). The fake
     dims derive from md5 digest bytes, which DuckDB reproduces from the
     hex string — so even the Python mapInPandas path is oracle-exact."""
     docs = mm.with_binary_payload(_load_parallel(spark, sf_dir, "documents"))
     return mm.decode_images(docs, fake=True)
 
 
-# (from llm_extra.py)
 @register(
     "multimodal_frame_sample",
     """
@@ -143,14 +143,11 @@ def multimodal_frame_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     is oracle-exact (the payload is utf-8 text bytes, so byte lengths and
     the 32-char prefix hash reproduce in DuckDB via strlen/substr).
     """
-    from kafka_streams_example_spark.operators import multimodal as mm
-
     docs = _load_parallel(spark, sf_dir, "documents")
     frames = mm.sample_frames(mm.with_binary_payload(docs))
     return frames.select("doc_id", "frame_no", "byte_offset", "frame_md5")
 
 
-# (from llm_extra.py)
 def _resize_fake_sql() -> str:
 
     # fake path: output blob = md5 digest (16B) repeated to 32*32 = 1024B,
@@ -172,14 +169,13 @@ FROM h
 
 @register("multimodal_resize_fake", _resize_fake_sql())
 def multimodal_resize_fake(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Resize stage over opaque binary payloads (fake deterministic path —
-    no image codec in this container; see operators/multimodal.py). The
+    """Resize stage over opaque binary payloads (the fake deterministic
+    path: the payload is text bytes, not an image; the real PNG resize is
+    operators/multimodal.py:resize_images with fake=False). The
     Spark-side contract is fully real: mapInPandas schema, fixed-size
     output blobs, 1:1 row mapping. The output blob is fingerprinted via
     md5(lower(hex(blob))), which DuckDB reproduces as md5(repeat(md5hex,
     64)) — a full value oracle over the Python resize path."""
-    from kafka_streams_example_spark.operators import multimodal as mm
-
     docs = _load_parallel(spark, sf_dir, "documents")
     out = mm.resize_images(
         mm.with_binary_payload(docs), out_width=32, out_height=32, fake=True
@@ -196,7 +192,6 @@ def multimodal_resize_fake(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# (from llm_extra14.py)
 # hex-pair -> byte value, replicated in DuckDB over md5()'s hex output
 _HEXVAL = "strpos('0123456789abcdef', substr(hx, {i}, 1)) - 1"
 
@@ -247,38 +242,21 @@ def multimodal_decode_real(spark: SparkSession, sf_dir: str) -> DataFrame:
     pixel sum. The oracle recomputes dims and pixel sum arithmetically
     from doc_id and md5(text) in SQL, so the hash check passes only if the
     codec reproduced every pixel bit-exactly (functions/codecs.py)."""
-    cx = _ship_codecs()
-    docs = _load_parallel(spark, sf_dir, "documents")
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            out = {k: [] for k in (
-                "doc_id", "width", "height", "bit_depth", "color_type",
-                "n_pixels", "pixel_sum", "roundtrip_ok",
-            )}
-            for i, t in zip(pdf["doc_id"], pdf["text"]):
-                w, h = 16 + int(i) % 17, 16 + int(i) % 13
-                digest = hashlib.md5(str(t).encode("utf-8")).digest()
-                px = (digest * (w * h // 16 + 1))[: w * h]
-                d = cx.decode_png(cx.encode_png_gray8(w, h, px))
-                out["doc_id"].append(int(i))
-                out["width"].append(d["width"])
-                out["height"].append(d["height"])
-                out["bit_depth"].append(d["bit_depth"])
-                out["color_type"].append(d["color_type"])
-                out["n_pixels"].append(len(d["pixels"]))
-                out["pixel_sum"].append(sum(d["pixels"]))
-                out["roundtrip_ok"].append(d["pixels"] == px)
-            yield pd.DataFrame(out)
+    def row(i, t):
+        w, h, px = fx.png_gray8(i, t)
+        d = cx.decode_png(cx.encode_png_gray8(w, h, px))
+        yield (i, d["width"], d["height"], d["bit_depth"], d["color_type"],
+               len(d["pixels"]), sum(d["pixels"]), d["pixels"] == px)
 
-    return docs.select("doc_id", "text").mapInPandas(
-        batches,
+    return mm.map_rows(
+        _load_parallel(spark, sf_dir, "documents"), ["doc_id", "text"],
         "doc_id LONG, width INT, height INT, bit_depth INT, color_type INT, "
         "n_pixels LONG, pixel_sum LONG, roundtrip_ok BOOLEAN",
+        row,
     )
 
 
-# (from llm_extra14.py)
 @register(
     "multimodal_wav_roundtrip",
     """
@@ -298,39 +276,25 @@ FROM documents
 )
 def multimodal_wav_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """REAL WAV codec roundtrip: per doc, synthesize ``64+id%64`` PCM16
-    samples from a fixed recurrence, write a canonical RIFF/WAVE blob
-    (struct-packed fmt/data chunks), parse it back (chunk walk, length
-    checks), and emit the DECODED stream properties and sample sum. The
-    oracle replays the recurrence in SQL — a byte-order, alignment, or
-    length-accounting bug in either direction breaks the hash match."""
-    cx = _ship_codecs()
-    docs = _load_parallel(spark, sf_dir, "documents")
+    samples from a fixed recurrence (functions/fixtures.py:pcm16_ramp),
+    write a canonical RIFF/WAVE blob (struct-packed fmt/data chunks),
+    parse it back (chunk walk, length checks), and emit the DECODED
+    stream properties and sample sum. The oracle replays the recurrence
+    in SQL — a byte-order, alignment, or length-accounting bug in either
+    direction breaks the hash match."""
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            out = {k: [] for k in (
-                "doc_id", "n_channels", "sample_rate", "bits_per_sample",
-                "n_samples", "sample_sum", "duration_us", "roundtrip_ok",
-            )}
-            for i in pdf["doc_id"]:
-                i = int(i)
-                n = 64 + i % 64
-                samples = [(i * 31 + j * 17) % 65536 - 32768 for j in range(n)]
-                d = cx.decode_wav(cx.encode_wav_pcm16(16000, samples))
-                out["doc_id"].append(i)
-                out["n_channels"].append(d["n_channels"])
-                out["sample_rate"].append(d["sample_rate"])
-                out["bits_per_sample"].append(d["bits_per_sample"])
-                out["n_samples"].append(d["n_samples"])
-                out["sample_sum"].append(sum(d["samples"]))
-                out["duration_us"].append(d["n_samples"] * 1_000_000 // d["sample_rate"])
-                out["roundtrip_ok"].append(d["samples"] == samples)
-            yield pd.DataFrame(out)
+    def row(i):
+        samples = fx.pcm16_ramp(i)
+        d = cx.decode_wav(cx.encode_wav_pcm16(16000, samples))
+        yield (i, d["n_channels"], d["sample_rate"], d["bits_per_sample"],
+               d["n_samples"], sum(d["samples"]),
+               d["n_samples"] * 1_000_000 // d["sample_rate"], d["samples"] == samples)
 
-    return docs.select("doc_id").mapInPandas(
-        batches,
+    return mm.map_rows(
+        _load_parallel(spark, sf_dir, "documents"), ["doc_id"],
         "doc_id LONG, n_channels INT, sample_rate INT, bits_per_sample INT, "
         "n_samples LONG, sample_sum LONG, duration_us LONG, roundtrip_ok BOOLEAN",
+        row,
     )
 
 
@@ -338,40 +302,18 @@ def multimodal_wav_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
 # image_phash_neardup — perceptual (dHash) image near-dup over decoded pixels
 # --------------------------------------------------------------------------
 
-_DH_GRID_W, _DH_GRID_H = 11, 6  # 60-bit dHash = SimHash width → same banding
-_DH_BANDS, _DH_BITS = 4, 15
 _DH_HAM = 6  # near-dup verify threshold (same as neardup_simhash_pairs)
 
 
 def _phash_fp_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The shared decode-scan: (doc_id, width, height, dhash) via ONE
-    map-only Arrow kernel (encode+decode+hash per doc — blob bytes exist
-    only inside the batch), checkpointed so the plan's multiple
-    references execute the Python stage once (the BPE lineage-cut
-    precedent) — exactly the "write the fingerprint table, then
-    self-join it" shape a production pipeline ships at 100 TB."""
-    cx = _ship_codecs()
-    docs = _load_parallel(spark, sf_dir, "documents")
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            out = {"doc_id": [], "width": [], "height": [], "dhash": []}
-            for i, t in zip(pdf["doc_id"], pdf["text"]):
-                w, h = 16 + int(i) % 17, 16 + int(i) % 13
-                digest = hashlib.md5(str(t).encode("utf-8")).digest()
-                px = (digest * (w * h // 16 + 1))[: w * h]
-                d = cx.decode_png(cx.encode_png_gray8(w, h, px))
-                out["doc_id"].append(int(i))
-                out["width"].append(d["width"])
-                out["height"].append(d["height"])
-                out["dhash"].append(
-                    cx.dhash60(d["pixels"], d["width"], d["height"],
-                               _DH_GRID_W, _DH_GRID_H)
-                )
-            yield pd.DataFrame(out)
-
-    return docs.select("doc_id", "text").mapInPandas(
-        batches, "doc_id LONG, width INT, height INT, dhash LONG"
+    map-only Arrow kernel (operators/multimodal.py:phash_fingerprints —
+    blob bytes exist only inside the batch), checkpointed so the plan's
+    multiple references execute the Python stage once (the BPE
+    lineage-cut precedent) — exactly the "write the fingerprint table,
+    then self-join it" shape a production pipeline ships at 100 TB."""
+    return mm.phash_fingerprints(
+        _load_parallel(spark, sf_dir, "documents")
     ).localCheckpoint(eager=True)
 
 
@@ -395,20 +337,7 @@ def _phash_band_stats(
     near-dup group small enough to review survives (true re-encode
     groups are small; mass-duplicate groups are Hamming-0 and belong to
     the exact-hash dedup-cut tier, which has no pair explosion)."""
-    band_structs = F.array(
-        *[
-            F.struct(
-                F.lit(b).alias("band"),
-                F.shiftright(F.col("dhash"), b * bits)
-                .bitwiseAND(F.lit((1 << bits) - 1))
-                .alias("bv"),
-            )
-            for b in range(bands)
-        ]
-    )
-    banded = fp.select(
-        "doc_id", F.col("dhash").alias("f"), F.explode(band_structs).alias("bk")
-    ).select("doc_id", "f", F.col("bk.band").alias("band"), F.col("bk.bv").alias("bv"))
+    banded = mm.dhash_bands(fp.select("doc_id", "dhash"), bands, bits)
     if max_bucket is not None:
         ok_buckets = (
             banded.groupBy("band", "bv")
@@ -428,8 +357,8 @@ def _phash_band_stats(
         .select(
             F.col("l.doc_id").alias("doc_id"),
             F.col("r.doc_id").alias("id_b"),
-            F.col("l.f").alias("fa"),
-            F.col("r.f").alias("fb"),
+            F.col("l.dhash").alias("fa"),
+            F.col("r.dhash").alias("fb"),
         )
         .dropDuplicates(["doc_id", "id_b"])
     )
@@ -543,10 +472,10 @@ FROM fp LEFT JOIN stats s USING (doc_id)
 def image_phash_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Perceptual image near-dup — the dedup tier for the image modality
     (the text tiers are exact/MinHash/SimHash; this is their pixel-space
-    sibling). Per doc: build the deterministic PNG payload
-    (operators/multimodal.py:with_png_payload — REAL spec-conformant blob,
-    dims ``16+id%17 × 16+id%13``, pixels = md5(text) digest repeated),
-    fully DECODE it (CRC chunk walk + inflate + unfilter,
+    sibling). Per doc (operators/multimodal.py:phash_fingerprints): build
+    the deterministic PNG fixture (functions/fixtures.py:png_gray8 — REAL
+    spec-conformant blob, dims ``16+id%17 × 16+id%13``, pixels = md5(text)
+    digest repeated), fully DECODE it (CRC chunk walk + inflate + unfilter,
     functions/codecs.py:decode_png), downsample the decoded pixels to an
     11×6 thumbnail and take the 60-bit dHash (functions/codecs.py:dhash60
     — Krawetz's difference hash, public scheme). The near-dup readout then
@@ -645,7 +574,7 @@ FROM b
 def multimodal_decode_real_jpeg(spark: SparkSession, sf_dir: str) -> DataFrame:
     """REAL baseline-JPEG roundtrip over the documents corpus — the
     dominant web-image wire format a multimodal crawl actually carries
-    (PNG and WAV got their real codecs in r07; this closes the set).
+    (with PNG and WAV it completes the set of real codecs).
     Per doc: synthesize the per-block-constant grayscale image
     (operators/multimodal.py:with_jpeg_payload), ENCODE it as a
     spec-conformant baseline JFIF stream (forward DCT, all-1 quant
@@ -714,49 +643,17 @@ def audio_features_real(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: one map-only Arrow mapInPandas stage; blobs and samples
     never leave the scan. Undecodable blobs degrade per-row (ok=False),
     same contract as the image decode stages."""
-    cx = _ship_codecs()
-    docs = _load_parallel(spark, sf_dir, "documents")
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            out = {k: [] for k in (
-                "doc_id", "n_samples", "energy", "peak_abs", "zero_crossings", "ok",
-            )}
-            for i in pdf["doc_id"]:
-                i = int(i)
-                n = 64 + i % 64
-                samples = [(i * 31 + j * 17) % 65536 - 32768 for j in range(n)]
-                out["doc_id"].append(i)
-                try:
-                    d = cx.decode_wav(cx.encode_wav_pcm16(16000, samples))
-                    sm = d["samples"]
-                    zc = sum(
-                        1 for a, b in zip(sm, sm[1:]) if (a >= 0) != (b >= 0)
-                    )
-                    out["n_samples"].append(len(sm))
-                    out["energy"].append(sum(x * x for x in sm))
-                    out["peak_abs"].append(max(abs(x) for x in sm))
-                    out["zero_crossings"].append(zc)
-                    out["ok"].append(True)
-                except (ValueError, TypeError, KeyError, IndexError):
-                    for k in ("n_samples", "energy", "peak_abs", "zero_crossings"):
-                        out[k].append(None)
-                    out["ok"].append(False)
-            yield pd.DataFrame(
-                {
-                    "doc_id": out["doc_id"],
-                    "n_samples": pd.Series(out["n_samples"], dtype="Int64"),
-                    "energy": pd.Series(out["energy"], dtype="Int64"),
-                    "peak_abs": pd.Series(out["peak_abs"], dtype="Int32"),
-                    "zero_crossings": pd.Series(out["zero_crossings"], dtype="Int32"),
-                    "ok": out["ok"],
-                }
-            )
+    def row(i):
+        sm = cx.decode_wav(cx.encode_wav_pcm16(16000, fx.pcm16_ramp(i)))["samples"]
+        zc = sum(1 for a, b in zip(sm, sm[1:]) if (a >= 0) != (b >= 0))
+        yield i, len(sm), sum(x * x for x in sm), max(abs(x) for x in sm), zc, True
 
-    return docs.select("doc_id").mapInPandas(
-        batches,
+    return mm.map_rows(
+        _load_parallel(spark, sf_dir, "documents"), ["doc_id"],
         "doc_id LONG, n_samples LONG, energy LONG, peak_abs INT, "
         "zero_crossings INT, ok BOOLEAN",
+        row,
     )
 
 
@@ -827,28 +724,8 @@ def image_phash_dedup_cut(spark: SparkSession, sf_dir: str) -> DataFrame:
     groupBy(dhash) (min + count) joined back on the 8-byte hash — the
     exact-dedup survivorship shape (dedup_survivorship), no windows, no
     pair explosion."""
-    cx = _ship_codecs()
-    docs = _load_parallel(spark, sf_dir, "documents")
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            ids, hashes = [], []
-            for i, t in zip(pdf["doc_id"], pdf["text"]):
-                w, h = 16 + int(i) % 17, 16 + int(i) % 13
-                digest = hashlib.md5(str(t).encode("utf-8")).digest()
-                px = (digest * (w * h // 16 + 1))[: w * h]
-                d = cx.decode_png(cx.encode_png_gray8(w, h, px))
-                ids.append(int(i))
-                hashes.append(
-                    cx.dhash60(d["pixels"], d["width"], d["height"],
-                               _DH_GRID_W, _DH_GRID_H)
-                )
-            yield pd.DataFrame({"doc_id": ids, "dhash": hashes})
-
     # one decode pass, not one per plan reference (see image_phash_neardup)
-    fp = docs.select("doc_id", "text").mapInPandas(
-        batches, "doc_id LONG, dhash LONG"
-    ).localCheckpoint(eager=True)
+    fp = _phash_fp_frame(spark, sf_dir).select("doc_id", "dhash")
     grp = fp.groupBy("dhash").agg(
         F.min("doc_id").alias("keeper_id"),
         F.count("*").cast("int").alias("n_members"),
@@ -927,61 +804,25 @@ def image_crossformat_phash_match(spark: SparkSession, sf_dir: str) -> DataFrame
     hash, so a crawl carrying the same picture as PNG here and JPEG
     there still collapses it to one keeper. One map-only Arrow kernel;
     nothing but the 8-byte hash leaves the scan."""
-    cx = _ship_codecs()
-    docs = _load_parallel(spark, sf_dir, "documents")
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            out = {"doc_id": [], "width": [], "height": [], "dhash": [],
-                   "formats_match": []}
-            for i, t in zip(pdf["doc_id"], pdf["text"]):
-                i = int(i)
-                w, h = 8 * (1 + i % 3), 8 * (1 + i % 2)
-                digest = hashlib.md5(str(t).encode("utf-8")).digest()
-                wb = w // 8
-                px = bytearray(w * h)
-                for by in range(h // 8):
-                    for bx in range(wb):
-                        v = digest[(by * wb + bx) % 16]
-                        for y in range(8):
-                            row = (by * 8 + y) * w + bx * 8
-                            px[row : row + 8] = bytes([v]) * 8
-                px = bytes(px)
-                dp = cx.decode_png(cx.encode_png_gray8(w, h, px))
-                dj = cx.decode_jpeg(cx.encode_jpeg_gray8(w, h, px))
-                hp = cx.dhash60(dp["pixels"], w, h, _DH_GRID_W, _DH_GRID_H)
-                hj = cx.dhash60(dj["pixels"], w, h, _DH_GRID_W, _DH_GRID_H)
-                out["doc_id"].append(i)
-                out["width"].append(w)
-                out["height"].append(h)
-                out["dhash"].append(hp)
-                out["formats_match"].append(
-                    hp == hj and dp["pixels"] == dj["pixels"]
-                )
-            yield pd.DataFrame(out)
+    def row(i, t):
+        w, h, px = fx.jpeg_gray8(i, t)
+        dp = cx.decode_png(cx.encode_png_gray8(w, h, px))
+        dj = cx.decode_jpeg(cx.encode_jpeg_gray8(w, h, px))
+        hp = cx.dhash60(dp["pixels"], w, h, _DH_GRID_W, _DH_GRID_H)
+        hj = cx.dhash60(dj["pixels"], w, h, _DH_GRID_W, _DH_GRID_H)
+        yield i, w, h, hp, hp == hj and dp["pixels"] == dj["pixels"]
 
-    return docs.select("doc_id", "text").mapInPandas(
-        batches,
+    return mm.map_rows(
+        _load_parallel(spark, sf_dir, "documents"), ["doc_id", "text"],
         "doc_id LONG, width INT, height INT, dhash LONG, formats_match BOOLEAN",
+        row,
     )
 
 
-# (round 11)
 # --------------------------------------------------------------------------
 # video_scene_neardup — cross-frame perceptual dedup (the video modality)
 # --------------------------------------------------------------------------
-
-_VS_SHIFT = 7  # digest-offset step between scenes (any nonzero value works)
-
-
-def _video_frame_pixels(digest: bytes, w: int, h: int, scene: int) -> bytes:
-    """Frame pixels: the doc's md5 digest cycled with a per-scene offset —
-    pixel j = digest[(j + 7*scene) % 16]. Same-scene frames are therefore
-    pixel-identical; a scene change rotates the texture. Deterministic and
-    SQL-replayable (the oracle samples the same arithmetic)."""
-    start = (_VS_SHIFT * scene) % 16
-    return (digest * (w * h // 16 + 2))[start : start + w * h]
-
 
 @register(
     "video_scene_neardup",
@@ -1009,13 +850,13 @@ frames AS (
     FROM b, unnest(generate_series(0, nf - 1)) AS fr(f)
 ),
 -- 11x6 nearest-neighbor thumbnail of the frame whose pixel j is
--- db[(j + {_VS_SHIFT}*scene) % 16] (the _video_frame_pixels synthesis)
+-- db[(j + {fx.SCENE_SHIFT}*scene) % 16] (the _video_frame_pixels synthesis)
 g AS (
     SELECT doc_id, nf, frame_no,
            list_transform(generate_series(0, {_DH_GRID_W * _DH_GRID_H - 1}), i ->
                db[(least((i // {_DH_GRID_W}) * h // {_DH_GRID_H}, h - 1) * w
                    + least((i % {_DH_GRID_W}) * w // {_DH_GRID_W}, w - 1)
-                   + {_VS_SHIFT} * scene) % 16 + 1]
+                   + {fx.SCENE_SHIFT} * scene) % 16 + 1]
            ) AS p
     FROM frames
 ),
@@ -1076,54 +917,27 @@ def video_scene_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     indexing, dHash bits, the lag window and the Hamming cut in DuckDB —
     the hash match fails unless the codec roundtrip preserved every
     frame's pixels bit-exactly."""
-    cx = _ship_codecs()
-    docs = _load_parallel(spark, sf_dir, "documents")
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            out = {k: [] for k in (
-                "doc_id", "n_frames", "n_transitions", "n_static",
-                "n_cuts", "n_scenes", "static_fraction",
-            )}
-            for i, t in zip(pdf["doc_id"], pdf["text"]):
-                i = int(i)
-                w, h = 16 + i % 17, 16 + i % 13
-                nf, slen = 4 + i % 5, 1 + i % 3
-                digest = hashlib.md5(str(t).encode("utf-8")).digest()
-                hashes = []
-                for f in range(nf):
-                    # inline _video_frame_pixels: the kernel must reference
-                    # no module-level functions of THIS package — workers
-                    # in the driver's environment do not have the repo on
-                    # sys.path, and cloudpickle serializes module functions
-                    # by reference (only `cx` ships by value)
-                    start = (_VS_SHIFT * (f // slen)) % 16
-                    px = (digest * (w * h // 16 + 2))[start : start + w * h]
-                    d = cx.decode_png(cx.encode_png_gray8(w, h, px))
-                    hashes.append(
-                        cx.dhash60(d["pixels"], d["width"], d["height"],
-                                   _DH_GRID_W, _DH_GRID_H)
-                    )
-                n_static = sum(
-                    1 for a, b in zip(hashes, hashes[1:])
-                    if bin(a ^ b).count("1") <= _DH_HAM
-                )
-                n_tr = nf - 1
-                out["doc_id"].append(i)
-                out["n_frames"].append(nf)
-                out["n_transitions"].append(n_tr)
-                out["n_static"].append(n_static)
-                out["n_cuts"].append(n_tr - n_static)
-                out["n_scenes"].append(n_tr - n_static + 1)
-                out["static_fraction"].append(
-                    _math.floor(n_static / n_tr * 1000000.0 + 0.5) / 1000000.0
-                )
-            yield pd.DataFrame(out)
+    def row(i, t):
+        w, h, frames = fx.video(i, t)
+        hashes = []
+        for px in frames:
+            d = cx.decode_png(cx.encode_png_gray8(w, h, px))
+            hashes.append(
+                cx.dhash60(d["pixels"], d["width"], d["height"], _DH_GRID_W, _DH_GRID_H)
+            )
+        n_static = sum(
+            1 for a, b in zip(hashes, hashes[1:]) if bin(a ^ b).count("1") <= _DH_HAM
+        )
+        n_tr = len(frames) - 1
+        yield (i, len(frames), n_tr, n_static, n_tr - n_static, n_tr - n_static + 1,
+               _math.floor(n_static / n_tr * 1000000.0 + 0.5) / 1000000.0)
 
-    return docs.select("doc_id", "text").mapInPandas(
-        batches,
+    return mm.map_rows(
+        _load_parallel(spark, sf_dir, "documents"), ["doc_id", "text"],
         "doc_id LONG, n_frames INT, n_transitions INT, n_static INT, "
         "n_cuts INT, n_scenes INT, static_fraction DOUBLE",
+        row,
     )
 
 
@@ -1164,48 +978,30 @@ def image_metadata_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: one map-only Arrow kernel, no shuffle; in production
     the blob arrives from the source and the same kernel runs exiftool-
     class extraction per row with per-row failure degradation."""
-    cx = _ship_codecs()
-    docs = _load_parallel(spark, sf_dir, "documents")
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            out = {k: [] for k in (
-                "doc_id", "n_chunks", "title", "author", "source_md5",
-                "n_compressed", "pixels_ok",
-            )}
-            for i, lang, t in zip(pdf["doc_id"], pdf["lang"], pdf["text"]):
-                i = int(i)
-                w, h = 16 + i % 17, 16 + i % 13
-                digest = hashlib.md5(str(t).encode("utf-8")).digest()
-                px = (digest * (w * h // 16 + 1))[: w * h]
-                blob = cx.encode_png_gray8(
-                    w, h, px,
-                    text_chunks=[
-                        ("Title", f"doc {i}"),
-                        ("Author", str(lang)),
-                        ("Source", "z:" + digest.hex()),
-                    ],
-                )
-                chunks = cx.png_text_chunks(blob)
-                meta = {kw: (val, comp) for kw, val, comp in chunks}
-                d = cx.decode_png(blob)
-                out["doc_id"].append(i)
-                out["n_chunks"].append(len(chunks))
-                out["title"].append(meta["Title"][0])
-                out["author"].append(meta["Author"][0])
-                out["source_md5"].append(meta["Source"][0])
-                out["n_compressed"].append(sum(1 for _, c in meta.values() if c))
-                out["pixels_ok"].append(d["pixels"] == px)
-            yield pd.DataFrame(out)
+    def row(i, lang, t):
+        w, h, px = fx.png_gray8(i, t)
+        blob = cx.encode_png_gray8(
+            w, h, px,
+            text_chunks=[
+                ("Title", f"doc {i}"),
+                ("Author", str(lang)),
+                ("Source", "z:" + fx.digest(t).hex()),
+            ],
+        )
+        chunks = cx.png_text_chunks(blob)
+        meta = {kw: (val, comp) for kw, val, comp in chunks}
+        yield (i, len(chunks), meta["Title"][0], meta["Author"][0], meta["Source"][0],
+               sum(1 for _, c in meta.values() if c), cx.decode_png(blob)["pixels"] == px)
 
-    return docs.select("doc_id", "lang", "text").mapInPandas(
-        batches,
+    return mm.map_rows(
+        _load_parallel(spark, sf_dir, "documents"), ["doc_id", "lang", "text"],
         "doc_id LONG, n_chunks INT, title STRING, author STRING, "
         "source_md5 STRING, n_compressed INT, pixels_ok BOOLEAN",
+        row,
     )
 
 
-# (round 11, continued)
 # --------------------------------------------------------------------------
 # video_fingerprint_neardup — cross-VIDEO perceptual dedup
 # --------------------------------------------------------------------------
@@ -1253,10 +1049,10 @@ g AS (
            list_transform(generate_series(0, {_DH_GRID_W * _DH_GRID_H - 1}), i ->
                (db[(least((i // {_DH_GRID_W}) * h // {_DH_GRID_H}, h - 1) * w
                     + least((i % {_DH_GRID_W}) * w // {_DH_GRID_W}, w - 1)
-                    + {_VS_SHIFT} * scene) % 16 + 1]
+                    + {fx.SCENE_SHIFT} * scene) % 16 + 1]
                 * (1 + ((least((i // {_DH_GRID_W}) * h // {_DH_GRID_H}, h - 1) * w
                          + least((i % {_DH_GRID_W}) * w // {_DH_GRID_W}, w - 1)
-                         + {_VS_SHIFT} * scene) * 2654435761) % 255)
+                         + {fx.SCENE_SHIFT} * scene) * 2654435761) % 255)
                ) % 256
            ) AS p
     FROM frames
@@ -1318,48 +1114,24 @@ def video_fingerprint_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     Oracle: the full replay — synthesis, variant planting, thumbnail
     indexing, dHash bits, set dedup, pair counting, Jaccard — fails
     unless every frame's codec round-trip preserved pixels bit-exactly."""
-    cx = _ship_codecs()
-    docs = _load_parallel(spark, sf_dir, "documents")
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            out = {"video_id": [], "fhash": []}
-            for i, t in zip(pdf["doc_id"], pdf["text"]):
-                i = int(i)
-                w, h = 16 + i % 17, 16 + i % 13
-                nf, slen = 4 + i % 5, 1 + i % 3
-                digest = hashlib.md5(str(t).encode("utf-8")).digest()
-                hashes = []
-                for f in range(nf):
-                    # inlined synthesis (no module-level helpers: workers
-                    # in the driver's environment lack the repo on
-                    # sys.path; only `cx` ships by value): digest byte
-                    # scrambled by a position-dependent multiplier — the
-                    # scene offset keeps same-scene frames identical
-                    # while the scramble gives each (doc, scene) a
-                    # collision-free 60-bit dHash (see the oracle note)
-                    off = _VS_SHIFT * (f // slen)
-                    px = bytes(
-                        (digest[(p + off) % 16]
-                         * (1 + ((p + off) * 2654435761) % 255)) % 256
-                        for p in range(w * h)
-                    )
-                    d = cx.decode_png(cx.encode_png_gray8(w, h, px))
-                    hashes.append(
-                        cx.dhash60(d["pixels"], d["width"], d["height"],
-                                   _DH_GRID_W, _DH_GRID_H)
-                    )
-                for fh in set(hashes):
-                    out["video_id"].append(i)
-                    out["fhash"].append(fh)
-                if i % 4 == 1:
-                    for fh in set(hashes[:-1]):
-                        out["video_id"].append(-i - 1)
-                        out["fhash"].append(fh)
-            yield pd.DataFrame(out)
+    def row(i, t):
+        w, h, frames = fx.video(i, t, scrambled=True)
+        hashes = []
+        for px in frames:
+            d = cx.decode_png(cx.encode_png_gray8(w, h, px))
+            hashes.append(
+                cx.dhash60(d["pixels"], d["width"], d["height"], _DH_GRID_W, _DH_GRID_H)
+            )
+        for fh in set(hashes):
+            yield i, fh
+        if i % 4 == 1:
+            for fh in set(hashes[:-1]):
+                yield -i - 1, fh
 
-    fps = docs.select("doc_id", "text").mapInPandas(
-        batches, "video_id LONG, fhash LONG"
+    fps = mm.map_rows(
+        _load_parallel(spark, sf_dir, "documents"), ["doc_id", "text"],
+        "video_id LONG, fhash LONG", row,
     ).localCheckpoint(eager=True)
     sizes = fps.groupBy("video_id").agg(F.count("*").alias("n"))
     pairs = (
@@ -1497,52 +1269,24 @@ def audio_fingerprint_match(spark: SparkSession, sf_dir: str) -> DataFrame:
     PCM recurrence and word packing in SQL; the attenuated rendition's
     rows replay via the invariance theorem, so any codec or halving
     defect in the kernel breaks the hash match."""
-    cx = _ship_codecs()
-    docs = _load_parallel(spark, sf_dir, "documents")
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        def words(samples: list[int]) -> set[int]:
-            out = set()
-            for f in range(len(samples) // 16):
-                w = 0
-                for b in range(16):
-                    if samples[16 * f + b] >= 0:
-                        w |= 1 << b
-                out.add(f * 65536 + w)
-            return out
+    def row(i, t):
+        base = fx.pcm16_tournament(i, t)
+        rends = [(i, base)]
+        if i % 4 == 2:
+            rends.append((-i - 1, [x // 2 for x in base]))
+        elif i % 4 == 3:
+            rends.append((-i - 1, base[:-16]))
+        for aid, samples in rends:
+            sm = cx.decode_wav(cx.encode_wav_pcm16(16000, samples))["samples"]
+            # positional sign words: frame f -> bit b = sample[16f+b] >= 0
+            for f in range(len(sm) // 16):
+                word = sum(1 << b for b in range(16) if sm[16 * f + b] >= 0)
+                yield aid, f * 65536 + word
 
-        for pdf in it:
-            out = {"audio_id": [], "wkey": []}
-            for i, t in zip(pdf["doc_id"], pdf["text"]):
-                i = int(i)
-                n = 64 + i % 64
-                # digest-tournament PCM: sample 16f+b = (db[a]-db[b])*128
-                # + db[a]%128, indices a/b frame-varying permutations of
-                # the md5(text) bytes — sign ⟺ db[a] >= db[b], so each
-                # doc carries ~n pseudo-random identity bits (a 16-bit
-                # multiplier synthesis saturated its signal space and
-                # went quadratic in output pairs at x30)
-                dg = hashlib.md5(str(t).encode("utf-8")).digest()
-                base = []
-                for j in range(n):
-                    f = j // 16
-                    a = dg[(j * 7 + 3 * f) % 16]
-                    b = dg[(j * 13 + 5 + 11 * f) % 16]
-                    base.append((a - b) * 128 + a % 128)
-                rends = [(i, base)]
-                if i % 4 == 2:
-                    rends.append((-i - 1, [x // 2 for x in base]))
-                elif i % 4 == 3:
-                    rends.append((-i - 1, base[:-16]))
-                for aid, samples in rends:
-                    decoded = cx.decode_wav(cx.encode_wav_pcm16(16000, samples))
-                    for wk in words(decoded["samples"]):
-                        out["audio_id"].append(aid)
-                        out["wkey"].append(wk)
-            yield pd.DataFrame(out)
-
-    fps = docs.select("doc_id", "text").mapInPandas(
-        batches, "audio_id LONG, wkey LONG"
+    fps = mm.map_rows(
+        _load_parallel(spark, sf_dir, "documents"), ["doc_id", "text"],
+        "audio_id LONG, wkey LONG", row,
     ).localCheckpoint(eager=True)
     sizes = fps.groupBy("audio_id").agg(F.count("*").alias("n"))
     pairs = (
@@ -1617,48 +1361,22 @@ def jpeg_metadata_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale shape: one map-only Arrow kernel, no shuffle — the EXIF/COM
     sweep a curation pipeline runs over a crawl's image column."""
-    cx = _ship_codecs()
-    docs = _load_parallel(spark, sf_dir, "documents")
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            out = {k: [] for k in (
-                "doc_id", "n_comments", "title", "author", "jfif_version",
-                "units", "x_density", "y_density", "pixels_ok",
-            )}
-            for i, lang, t in zip(pdf["doc_id"], pdf["lang"], pdf["text"]):
-                i = int(i)
-                w, h = 8 * (1 + i % 3), 8 * (1 + i % 2)
-                digest = hashlib.md5(str(t).encode("utf-8")).digest()
-                wb = w // 8
-                px = bytearray(w * h)
-                for by in range(h // 8):
-                    for bx in range(wb):
-                        v = digest[(by * wb + bx) % 16]
-                        for y in range(8):
-                            row = (by * 8 + y) * w + bx * 8
-                            px[row : row + 8] = bytes([v]) * 8
-                blob = cx.encode_jpeg_gray8(
-                    w, h, bytes(px),
-                    jfif=(1, 2, 1, 72 + i % 5, 96),
-                    comments=[f"doc {i}", str(lang)],
-                )
-                meta = cx.jpeg_metadata(blob)
-                d = cx.decode_jpeg(blob)
-                out["doc_id"].append(i)
-                out["n_comments"].append(len(meta["comments"]))
-                out["title"].append(meta["comments"][0])
-                out["author"].append(meta["comments"][1])
-                out["jfif_version"].append(meta["jfif"]["version"])
-                out["units"].append(meta["jfif"]["units"])
-                out["x_density"].append(meta["jfif"]["x_density"])
-                out["y_density"].append(meta["jfif"]["y_density"])
-                out["pixels_ok"].append(d["pixels"] == bytes(px))
-            yield pd.DataFrame(out)
+    def row(i, lang, t):
+        w, h, px = fx.jpeg_gray8(i, t)
+        blob = cx.encode_jpeg_gray8(
+            w, h, px, jfif=(1, 2, 1, 72 + i % 5, 96), comments=[f"doc {i}", str(lang)]
+        )
+        meta = cx.jpeg_metadata(blob)
+        jfif = meta["jfif"]
+        yield (i, len(meta["comments"]), meta["comments"][0], meta["comments"][1],
+               jfif["version"], jfif["units"], jfif["x_density"], jfif["y_density"],
+               cx.decode_jpeg(blob)["pixels"] == px)
 
-    return docs.select("doc_id", "lang", "text").mapInPandas(
-        batches,
+    return mm.map_rows(
+        _load_parallel(spark, sf_dir, "documents"), ["doc_id", "lang", "text"],
         "doc_id LONG, n_comments INT, title STRING, author STRING, "
         "jfif_version STRING, units INT, x_density INT, y_density INT, "
         "pixels_ok BOOLEAN",
+        row,
     )

@@ -28,6 +28,14 @@ from kafka_streams_example_spark.registry import (
     register,
 )
 from kafka_streams_example_spark.sources.files import load_table
+from kafka_streams_example_spark.streaming.contract import (
+    _MAN_MOD,
+    _MAN_SHARDS,
+    _PSI_ALERT,
+    _PSI_BIN_WIDTH,
+    _PSI_BINS,
+    _PSI_EPS,
+)
 
 
 # (from llm_extra.py)
@@ -713,9 +721,6 @@ def corpus_mixture_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
 # shard_manifest — reproducible dataset manifest with content checksums
 # --------------------------------------------------------------------------
 
-_MAN_SHARDS = 16
-_MAN_MOD = (1 << 60) - 1  # commutative-checksum modulus
-
 
 @register(
     "shard_manifest",
@@ -1397,11 +1402,6 @@ def data_contract_validation(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --------------------------------------------------------------------------
 # psi_value_drift — population stability index between time halves
 # --------------------------------------------------------------------------
-
-_PSI_BINS = 10
-_PSI_BIN_WIDTH = 50.0  # value domain [0, 500) -> 10 fixed bins
-_PSI_EPS = 0.5  # Laplace smoothing so empty bins stay finite
-_PSI_ALERT = 0.25  # industry-standard "significant shift" threshold
 
 
 @register(

@@ -21,6 +21,15 @@ from typing import Callable
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+# Definitions shared with the batch twins in queries/operational.py
+# (psi_value_drift, shard_manifest), whose DuckDB oracles read them too.
+_PSI_BINS = 10
+_PSI_BIN_WIDTH = 50.0  # value domain [0, 500) -> 10 fixed bins
+_PSI_EPS = 0.5  # Laplace smoothing so empty bins stay finite
+_PSI_ALERT = 0.25  # industry-standard "significant shift" threshold
+_MAN_SHARDS = 16
+_MAN_MOD = (1 << 60) - 1  # commutative-checksum modulus
+
 
 # ---------------------------------------------------------------------------
 # Shared commit-state machinery. The five standing ingest gates (exact-fp
@@ -253,13 +262,6 @@ def streaming_psi_monitor(
     always see the committed slot); an EXTERNAL multi-reader surface
     should instead read the committed marker and scan the named slot,
     or publish to append-only storage."""
-    from kafka_streams_example_spark.queries.operational import (
-        _PSI_ALERT,
-        _PSI_BIN_WIDTH,
-        _PSI_BINS,
-        _PSI_EPS,
-    )
-
     cells = (
         events_stream.select(
             "event_type",
@@ -385,10 +387,6 @@ def streaming_shard_manifest(docs_stream: DataFrame) -> DataFrame:
         normalize_text,
         stable_long,
     )
-    from kafka_streams_example_spark import registry  # noqa: F401 — query
-    # modules bootstrap through the registry; importing queries.operational
-    # directly before registry loads would hit a partial ORACLES table
-    from kafka_streams_example_spark.queries.operational import _MAN_MOD, _MAN_SHARDS
 
     t = docs_stream.select(
         (stable_long(F.col("doc_id").cast("string")) % _MAN_SHARDS).alias(
@@ -1050,10 +1048,10 @@ def streaming_ingest_phash(
     twin, closing the modality set (exact text, MinHash near-dup text,
     benchmark decontam, quality, now images): each arriving micro-batch's
     images are DECODED through the real PNG codec and dHashed
-    (functions/codecs.py:dhash60, the batch machinery of
-    queries/multimodal.py:image_phash_neardup — same 60-bit hash, same
-    4×15-bit banding), probe the persisted index for band collisions
-    with already-ingested images, VERIFY candidates by exact Hamming
+    (operators/multimodal.py:phash_fingerprints and dhash_bands, the
+    kernel behind queries/multimodal.py:image_phash_neardup — same 60-bit
+    hash, same 4×15-bit banding), probe the persisted index for band
+    collisions with already-ingested images, VERIFY candidates by exact Hamming
     distance (≤ ``max_hamming``), classify near-dup-vs-new per language,
     and extend the index with the batch's novel images.
 
@@ -1089,60 +1087,19 @@ def streaming_ingest_phash(
     cap is applied to the strictly-earlier-batch view the probe already
     uses, so replay determinism is unchanged.
     """
-    import hashlib as _hashlib
     import tempfile
 
-    import pandas as _pd
-
-    from kafka_streams_example_spark.operators.multimodal import _ship_codecs
-    from kafka_streams_example_spark.queries.multimodal import (
-        _DH_BANDS,
-        _DH_BITS,
-        _DH_GRID_H,
-        _DH_GRID_W,
-    )
+    from kafka_streams_example_spark.operators import multimodal as mm
 
     owner = index_seed.sparkSession
     root = state_dir or tempfile.mkdtemp(prefix="ingest_phash_state_")
     idx_dir = os.path.join(root, "phash_index")
-    cx = _ship_codecs()
 
     def _hashes_of(df: DataFrame) -> DataFrame:
-        """(doc_id, text, ...) → (id, band, bv, dhash): decode + dHash in
-        one Arrow kernel, then the 4×15-bit band explode (JVM-side)."""
-
-        def batches(it):
-            for pdf in it:
-                ids, hashes = [], []
-                for i, t in zip(pdf["doc_id"], pdf["text"]):
-                    w, h = 16 + int(i) % 17, 16 + int(i) % 13
-                    digest = _hashlib.md5(str(t).encode("utf-8")).digest()
-                    px = (digest * (w * h // 16 + 1))[: w * h]
-                    d = cx.decode_png(cx.encode_png_gray8(w, h, px))
-                    ids.append(int(i))
-                    hashes.append(
-                        cx.dhash60(d["pixels"], d["width"], d["height"],
-                                   _DH_GRID_W, _DH_GRID_H)
-                    )
-                yield _pd.DataFrame({"id": ids, "dhash": hashes})
-
-        fp = df.select("doc_id", "text").mapInPandas(
-            batches, "id LONG, dhash LONG"
-        )
-        band_structs = F.array(
-            *[
-                F.struct(
-                    F.lit(b).alias("band"),
-                    F.shiftright(F.col("dhash"), b * _DH_BITS)
-                    .bitwiseAND(F.lit((1 << _DH_BITS) - 1))
-                    .alias("bv"),
-                )
-                for b in range(_DH_BANDS)
-            ]
-        )
-        return fp.select(
-            "id", "dhash", F.explode(band_structs).alias("bk")
-        ).select("id", "dhash", F.col("bk.band").alias("band"), F.col("bk.bv").alias("bv"))
+        """(doc_id, text, ...) → (id, dhash, band, bv): the fingerprint
+        kernel, then the 4×15-bit band explode (JVM-side)."""
+        fp = mm.phash_fingerprints(df).select(F.col("doc_id").alias("id"), "dhash")
+        return mm.dhash_bands(fp)
 
     def write_seed() -> None:
         _hashes_of(index_seed).select("band", "bv", "dhash").distinct().write.mode(

@@ -49,6 +49,11 @@ def stream_module_aggregates(
     """A1 as a streaming aggregation (append mode ready).
 
     Reference: SolarConsumer.java:107-115 (windowed aggregate + suppress).
+    Written with ``outputMode("update")`` the same frame is the changelog
+    form: a row is emitted every time a window's aggregate changes, which
+    is exactly the reference's behavior with the record cache disabled
+    (CACHE_MAX_BYTES_BUFFERING_CONFIG=0, SolarConsumer.java:207): every
+    update flows downstream. The watermark still bounds state.
     """
     return solar.module_aggregates(
         stream_df.withWatermark(ts_col, watermark), ts_col=ts_col, **kwargs
@@ -159,18 +164,3 @@ def bounded_state_configs(ttl_minutes: int = 60) -> dict[str, str]:
         "engine.recommended.stateTTL.ms": str(ttl_minutes * 60 * 1000),
     }
 
-
-def stream_module_aggregates_changelog(
-    stream_df: DataFrame,
-    ts_col: str = "ts",
-    watermark: str = WATERMARK,
-    **kwargs,
-) -> DataFrame:
-    """A1 in CHANGELOG form — update output mode emits a row every time a
-    window's aggregate changes, which is exactly the reference's behavior
-    with the record cache disabled (CACHE_MAX_BYTES_BUFFERING_CONFIG=0,
-    reference: SolarConsumer.java:207): every update flows downstream.
-    The watermark still bounds state. Write with outputMode('update')."""
-    return solar.module_aggregates(
-        stream_df.withWatermark(ts_col, watermark), ts_col=ts_col, **kwargs
-    )

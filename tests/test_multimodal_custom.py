@@ -90,6 +90,27 @@ def test_decode_fake_deterministic(spark, bin_docs):
     assert all(64 <= w < 256 and 64 <= h < 256 and 1 <= c <= 4 for w, h, c in a.values())
 
 
+def test_map_rows_failure_replaces_the_whole_row(spark):
+    """A codec error raised after a kernel already yielded part of a
+    row's output replaces ALL of that row's output with one ok=False row
+    (id kept, other fields NULL); other rows keep their 0..n outputs."""
+    df = spark.createDataFrame([(1,), (2,), (3,), (4,)], "doc_id LONG")
+
+    def row(i):
+        for k in range(i % 3):
+            yield i, k, True
+        if i % 2:
+            raise ValueError("corrupt after a partial yield")
+
+    rows = sorted(
+        tuple(r)
+        for r in mm.map_rows(df, ["doc_id"], "doc_id LONG, k INT, ok BOOLEAN", row)
+        .collect()
+    )
+    assert rows == [(1, None, False), (2, 0, True), (2, 1, True), (3, None, False),
+                    (4, 0, True)]
+
+
 def test_decode_real_path_stdlib_png(spark):
     """The real decode path executes an actual codec: real PNG blobs
     (with_png_payload) decode to their true dims; non-PNG bytes yield
@@ -218,15 +239,6 @@ def test_running_panel_totals_across_batches(spark, tmp_path):
     rows = spark.sql("SELECT * FROM running_totals").collect()
     latest = max((r for r in rows if r.panel == "p1"), key=lambda r: r.total_count)
     assert latest.total_count == 3 and latest.total_power == 7.0
-
-
-def test_byte_features_arrow_matches_pandas(spark, bin_docs):
-    """mapInArrow and mapInPandas flavors produce identical features."""
-    a = {r.doc_id: (r.n_bytes, r.byte_entropy, r.mean_byte)
-         for r in mm.byte_features(bin_docs).collect()}
-    b = {r.doc_id: (r.n_bytes, r.byte_entropy, r.mean_byte)
-         for r in mm.byte_features_arrow(bin_docs).collect()}
-    assert a == b
 
 
 def test_hll_rollup_accuracy(spark):

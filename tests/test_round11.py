@@ -90,12 +90,6 @@ def test_video_scene_neardup_planted_replay(spark, tmp_path):
     import os
 
     from kafka_streams_example_spark.functions import codecs as cx
-    from kafka_streams_example_spark.queries.multimodal import (
-        _DH_GRID_H,
-        _DH_GRID_W,
-        _DH_HAM,
-        _video_frame_pixels,
-    )
 
     # ids chosen for coverage: 2 -> slen=3/nf=6 (static runs), 3 -> slen=1
     # (all cuts), 17 -> slen=3/nf=6, 30 -> slen=1/nf=4, 7 -> slen=2/nf=6
@@ -107,15 +101,18 @@ def test_video_scene_neardup_planted_replay(spark, tmp_path):
         digest = hashlib.md5(t.encode("utf-8")).digest()
         hashes = []
         for f in range(nf):
-            px = _video_frame_pixels(digest, w, h, f // slen)
+            # frame pixel j = digest[(j + 7*scene) % 16]: the scene's
+            # texture is the digest cycle rotated by 7 positions per scene
+            start = (7 * (f // slen)) % 16
+            px = (digest * (w * h // 16 + 2))[start : start + w * h]
             d = cx.decode_png(cx.encode_png_gray8(w, h, px))
-            hashes.append(cx.dhash60(d["pixels"], w, h, _DH_GRID_W, _DH_GRID_H))
+            hashes.append(cx.dhash60(d["pixels"], w, h, 11, 6))
         # same-scene consecutive frames are pixel-identical -> Hamming 0
         for f in range(1, nf):
             if f // slen == (f - 1) // slen:
                 assert hashes[f] == hashes[f - 1]
         n_static = sum(
-            1 for a, b in zip(hashes, hashes[1:]) if bin(a ^ b).count("1") <= _DH_HAM
+            1 for a, b in zip(hashes, hashes[1:]) if bin(a ^ b).count("1") <= 6
         )
         n_tr = nf - 1
         want[i] = (

@@ -101,11 +101,6 @@ def test_video_fingerprint_neardup_planted_replay(spark, tmp_path):
 
     from kafka_streams_example_spark import registry
     from kafka_streams_example_spark.functions import codecs as cx
-    from kafka_streams_example_spark.queries.multimodal import (
-        _DH_GRID_H,
-        _DH_GRID_W,
-        _VS_SHIFT,
-    )
 
     # 1, 5, 13: doc_id % 4 == 1 -> planted trimmed variant; 2, 3: none.
     # 5 -> slen=3 (trim keeps the last scene alive: jaccard 1.0),
@@ -120,14 +115,14 @@ def test_video_fingerprint_neardup_planted_replay(spark, tmp_path):
         for f in range(nf):
             # the fingerprint tier's scrambled texture (collision-free
             # dHash alphabet), not the scene tier's bare digest cycle
-            off = _VS_SHIFT * (f // slen)
+            off = 7 * (f // slen)
             px = bytes(
                 (digest[(p + off) % 16] * (1 + ((p + off) * 2654435761) % 255))
                 % 256
                 for p in range(w * h)
             )
             d = cx.decode_png(cx.encode_png_gray8(w, h, px))
-            hashes.append(cx.dhash60(d["pixels"], w, h, _DH_GRID_W, _DH_GRID_H))
+            hashes.append(cx.dhash60(d["pixels"], w, h, 11, 6))
         fps[i] = set(hashes)
         if i % 4 == 1:
             fps[-i - 1] = set(hashes[:-1])

@@ -564,10 +564,6 @@ def test_update_mode_changelog_emission(spark, tmp_path):
     """Update mode re-emits a window's row as new records arrive across
     batches — the reference's cache-disabled changelog behavior
     (SolarConsumer.java:207) — vs append's emit-once-final."""
-    from kafka_streams_example_spark.streaming.solar_stream import (
-        stream_module_aggregates_changelog,
-    )
-
     src = tmp_path / "chlog_in"
     os.makedirs(src)
     write_jsonl(str(src / "b0.json"), [
@@ -577,7 +573,7 @@ def test_update_mode_changelog_emission(spark, tmp_path):
         "ts TIMESTAMP, panel STRING, name STRING, power DOUBLE"
     ).json(str(src))
     q = (
-        stream_module_aggregates_changelog(stream)
+        stream_module_aggregates(stream)
         .select(F.col("w.start").cast("long").alias("ws"), "sum_power")
         .writeStream.outputMode("update")
         .format("memory")
