@@ -59,7 +59,9 @@ def _rotated(names: list[str]) -> list[str]:
        ``no_oracle`` row for a query that now has an oracle) — re-verified
        before anything else so defects can't rotate out of the window;
     2. queries never recorded in any CORRECTNESS_r*.json;
-    3. green queries, STALEST first: ordered by the round of their most
+    3. green queries in ``_TOUCHED_THIS_ROUND``, whose plan changed after
+       their green row;
+    4. the other green queries, STALEST first: ordered by the round of their most
        recent green record (then by how often they've been verified).
        Recency, not count, is the staleness signal — a flagship verified
        twice by r04 has gone unchecked for longer than a query verified
@@ -102,9 +104,7 @@ def _rotated(names: list[str]) -> list[str]:
             return 1
         if n in _TOUCHED_THIS_ROUND:
             return 2
-        if n in _REVERIFY_THIS_ROUND:
-            return 3
-        return 4
+        return 3
 
     return sorted(
         names,
@@ -114,11 +114,12 @@ def _rotated(names: list[str]) -> list[str]:
 
 # Queries whose executing plan changed after their last recorded green
 # row: that row verified a different plan, so these re-verify ahead of
-# merely least-often-verified greens. Every name here was proven
-# identical against the DuckDB oracle at sf0.01 (259/259) before its
-# change was committed; the driver re-verifies only a window of about 50
-# queries per round, so the set stays well inside it. Replace it, do not
-# append to it, when a later change re-plans other queries.
+# the other green queries. Every name here was proven identical against
+# the DuckDB oracle at sf0.01 (259/259) before its change was committed.
+# A name may leave the set only once a CORRECTNESS_r*.json newer than
+# its change records it green; until such a record exists, a change
+# that re-plans more queries adds them. Each verification round covers
+# a window of about 50 queries, so the set must stay inside it.
 _TOUCHED_THIS_ROUND: set[str] = {
     # media kernels rebuilt on one batch shell (operators/multimodal.py:
     # map_rows) with the fixture synthesis in functions/fixtures.py
@@ -154,12 +155,15 @@ _TOUCHED_THIS_ROUND: set[str] = {
     "minhash_band_tuning_report",
     "neardup_containment_pairs",
     "cross_source_duplication_matrix",
+    # batch queries that share one operator with their streaming twin
+    # (streaming/contract.py:psi_by_type, operators/text.py:
+    # unigram_lm_scores) and the three that compose doc_perplexity_proxy
+    "psi_value_drift",
+    "doc_perplexity_proxy",
+    "quality_filter_threshold_sweep",
+    "quality_threshold_for_budget",
+    "corpus_curation_pipeline",
 }
-
-# Explicitly pinned re-verification cohort (cleared once recorded):
-# empty in r11 — the r10 solar-flagship pinning was recorded green in
-# CORRECTNESS_r10, and no family needs unit-pinning this round.
-_REVERIFY_THIS_ROUND: set[str] = set()
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:

@@ -56,10 +56,6 @@ def main() -> None:
     # the same fully-warmed heat, so per-query numbers stay comparable
     # across rounds as the surface grows. Same total executions.
     n_runs = int(os.environ.get("SPARK_GRAFT_BENCH_RUNS", "3"))
-    # escape hatch for one-off cross-round comparisons against pre-r11
-    # sweep3 records: disables the per-run pool warm-up and restores the
-    # old protocol tag (and with it the worker-reaper lottery — see below)
-    pool_warm = os.environ.get("SPARK_GRAFT_BENCH_NO_POOLWARM", "") != "1"
     # warm exactly one worker per task slot — sizing the warm-up to the
     # session's parallelism keeps its untimed cost ~50-80ms
     n_slots = int(cpus) if cpus.isdigit() else 32
@@ -81,8 +77,7 @@ def main() -> None:
             # the representative ones. No-op cost (~60-80ms, untimed) for
             # JVM-only queries; protocol tag bumped to sweep3w because
             # Python-stage numbers are not comparable with sweep3 records.
-            if pool_warm:
-                warm_df.mapInPandas(_ident, "id LONG").count()
+            warm_df.mapInPandas(_ident, "id LONG").count()
             t0 = time.perf_counter()
             fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
             all_runs[name].append(time.perf_counter() - t0)
@@ -108,8 +103,7 @@ def main() -> None:
         spark.catalog.clearCache()
         for name in HEADLINE:
             fn = registry.QUERIES[name]
-            if pool_warm:
-                warm_df.mapInPandas(_ident, "id LONG").count()
+            warm_df.mapInPandas(_ident, "id LONG").count()
             t0 = time.perf_counter()
             fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
             cc_all[name].append(time.perf_counter() - t0)
@@ -136,7 +130,7 @@ def main() -> None:
     # timing protocol (the r5 back-to-back -> r6 sweep change shifted the
     # per-query mean ~1.1x with zero plan changes; tools/compare_bench.py
     # refuses cross-protocol per-query diffs).
-    protocol = f"sweep{n_runs}w" if pool_warm else f"sweep{n_runs}"  # w = per-run Python-worker-pool warm-up
+    protocol = f"sweep{n_runs}w"  # w = per-run Python-worker-pool warm-up
     detail = {
         "metric": "headline_queries_total_wall_steady",
         "value": round(sum(timings.values()), 3),

@@ -9,7 +9,7 @@ higher-order array functions.
 
 from __future__ import annotations
 
-from pyspark.sql import Column
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 # Tiny per-language stopword lists for the n-gram/stopword heuristic
@@ -148,3 +148,25 @@ def jaccard(a: Column, b: Column) -> Column:
     inter = F.size(F.array_intersect(a, b))
     union = F.size(a) + F.size(b) - inter
     return F.when(union > 0, inter / union).otherwise(F.lit(0.0))
+
+
+def unigram_lm_scores(docs: DataFrame, lm: DataFrame, n: Column, *keys: str) -> DataFrame:
+    """The unigram-LM document score per ``keys`` group of ``docs``: the
+    lower-cased whitespace tokens of ``text`` inner-join the LM ``lm``
+    (token, c), where c is a token's corpus count and ``n`` the corpus
+    token total (a literal, or a column of ``lm``). Each group gets
+    n_tokens, its in-vocabulary token count, and score =
+    round(-sum(log(c / n)) / count(*), 6), the mean negative log corpus
+    probability of those tokens. Out-of-vocabulary tokens drop out, so a
+    group with none has no row."""
+    toks = docs.select(*keys, F.explode(tokens(F.lower(F.col("text")))).alias("token"))
+    return (
+        toks.join(lm, "token")
+        .groupBy(*keys)
+        .agg(
+            F.count("*").alias("n_tokens"),
+            F.round(
+                -F.sum(F.log(F.col("c").cast("double") / n)) / F.count("*"), 6
+            ).alias("score"),
+        )
+    )

@@ -47,6 +47,10 @@ from kafka_streams_example_spark.sources.files import (
     table_row_count,
     table_uncompressed_bytes,
 )
+from kafka_streams_example_spark.streaming.contract import (
+    fingerprint_probe,
+    lang_counters,
+)
 
 
 # ---------------------------------------------------------------------------
@@ -269,8 +273,6 @@ FROM verified WHERE jac >= {threshold}
 ORACLES["neardup_minhash_pairs"] = _duck_minhash_sql()
 
 
-# (from llm_extra.py)
-
 # Estimated eval-split GRAM bytes above which the decontam family's bench
 # gram table stops being broadcast (the "benchmark set is tiny"
 # assumption, valid for real eval suites, is NOT assumed for arbitrary
@@ -383,7 +385,6 @@ def decontam_ngram_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# (from llm_extra2.py)
 # --------------------------------------------------------------------------
 # neardup_dedup_corpus
 # --------------------------------------------------------------------------
@@ -456,7 +457,6 @@ def neardup_dedup_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# (from llm_extra2.py)
 # --------------------------------------------------------------------------
 # chunk_dedup_ratio — line/segment-level dedup signal (C4 / RefinedWeb shape)
 # --------------------------------------------------------------------------
@@ -528,7 +528,6 @@ def chunk_dedup_ratio(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# (from llm_extra2.py)
 # --------------------------------------------------------------------------
 # substring_span_dupes — exact-substring dedup signal (token-span level)
 # --------------------------------------------------------------------------
@@ -615,7 +614,6 @@ def substring_span_dupes(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# (from llm_extra2.py)
 # --------------------------------------------------------------------------
 # winnowing_fingerprints — rolling-hash document fingerprints (MOSS)
 # --------------------------------------------------------------------------
@@ -725,7 +723,6 @@ def winnowing_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# (from llm_extra2.py)
 # --------------------------------------------------------------------------
 # incremental_ingest_dedup — new-batch dedup against the existing corpus
 # --------------------------------------------------------------------------
@@ -768,31 +765,19 @@ def incremental_ingest_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     text never shuffles — fingerprints are computed in the scan stage.
     The same split extends to the MinHash index for near-dup probes
     (operators/dedup.py:minhash_pairs on incoming ∪ candidate bands).
+    The probe and the counters are ``fingerprint_probe`` and
+    ``lang_counters``, which streaming_ingest_dedup runs per micro-batch.
     """
-    from kafka_streams_example_spark.functions.hashing import fingerprint_md5
-
     docs = _load_parallel(spark, sf_dir, "documents")
     idx = (
         docs.filter(F.col("doc_id") < _INGEST_SPLIT)
         .select(fingerprint_md5(F.col("text")).alias("fp"))
         .distinct()
-        .withColumn("hit", F.lit(1))
     )
-    incoming = docs.filter(F.col("doc_id") >= _INGEST_SPLIT).select(
-        "doc_id", "lang", fingerprint_md5(F.col("text")).alias("fp")
-    )
-    return (
-        incoming.join(idx, "fp", "left")
-        .groupBy("lang")
-        .agg(
-            F.count("*").alias("n_incoming"),
-            F.count(F.when(F.col("hit").isNotNull(), 1)).alias("n_dup_vs_index"),
-            F.count(F.when(F.col("hit").isNull(), 1)).alias("n_new"),
-        )
-    )
+    incoming = docs.filter(F.col("doc_id") >= _INGEST_SPLIT)
+    return lang_counters(fingerprint_probe(incoming, idx), "n_dup_vs_index")
 
 
-# (from llm_extra2.py)
 # --------------------------------------------------------------------------
 # neardup_simhash_pairs — Hamming-distance near-dup via SimHash banding
 # --------------------------------------------------------------------------
@@ -904,7 +889,6 @@ def neardup_simhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# (from llm_extra3.py)
 # --------------------------------------------------------------------------
 # dedup_survivorship — canonical record per exact-duplicate group
 # --------------------------------------------------------------------------
@@ -956,7 +940,6 @@ def dedup_survivorship(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# (from llm_extra3.py)
 # --------------------------------------------------------------------------
 # minhash_jaccard_estimate — sketch accuracy vs exact Jaccard
 # --------------------------------------------------------------------------
@@ -1078,7 +1061,6 @@ def minhash_jaccard_estimate(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# (from llm_extra3.py)
 # --------------------------------------------------------------------------
 # contamination_blast_radius — hop-capped recursive closure (WITH RECURSIVE)
 # --------------------------------------------------------------------------
@@ -1175,7 +1157,6 @@ def contamination_blast_radius(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# (from llm_extra7.py)
 # --------------------------------------------------------------------------
 # neardup_levenshtein_pairs — banded edit-distance near-dup
 # --------------------------------------------------------------------------
@@ -1263,7 +1244,6 @@ def neardup_levenshtein_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# (from llm_extra10.py)
 # --------------------------------------------------------------------------
 # neardup_transitivity_audit — wedge closure of the similarity graph
 # --------------------------------------------------------------------------
@@ -1368,7 +1348,6 @@ def neardup_transitivity_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# (from llm_extra12.py)
 # --------------------------------------------------------------------------
 # shared: the unblocked near-dup pair table (3-gram Jaccard >= 0.3)
 # --------------------------------------------------------------------------
@@ -1456,7 +1435,6 @@ def cross_split_leakage_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out.filter(F.col("split_a") != F.col("split_b"))
 
 
-# (from llm_extra12.py)
 # --------------------------------------------------------------------------
 # cross_lingual_neardup_pairs — mislabeled-language detection
 # --------------------------------------------------------------------------
@@ -1498,7 +1476,6 @@ def cross_lingual_neardup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# (from llm_extra12.py)
 # --------------------------------------------------------------------------
 # minhash_band_tuning_report — LSH S-curve on measured similarities
 # --------------------------------------------------------------------------
@@ -1578,7 +1555,6 @@ def minhash_band_tuning_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# (from llm_extra12.py)
 # --------------------------------------------------------------------------
 # dedup_cluster_size_histogram — dup-cluster shape
 # --------------------------------------------------------------------------
@@ -1625,7 +1601,6 @@ def dedup_cluster_size_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).select(F.col("cluster_size").cast("bigint").alias("cluster_size"), "n_clusters")
 
 
-# (from llm_extra12.py)
 # --------------------------------------------------------------------------
 # semdedup_prune — SemDeDup: cluster-then-prune semantic dedup
 # --------------------------------------------------------------------------
@@ -1823,7 +1798,6 @@ def semdedup_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# (from llm_extra13.py)
 # --------------------------------------------------------------------------
 # minhash_recall_report — sketch recall vs exact, measured
 # --------------------------------------------------------------------------
@@ -1917,7 +1891,6 @@ def minhash_recall_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# (from llm_extra13.py)
 # --------------------------------------------------------------------------
 # dedup_reduction_report — what exact dedup buys, in one row
 # --------------------------------------------------------------------------
@@ -1995,7 +1968,6 @@ def dedup_reduction_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# (from llm_extra18.py)
 # --------------------------------------------------------------------------
 # sorted_neighborhood_neardup — blocked sorted-neighborhood near-dup pairs
 # --------------------------------------------------------------------------
@@ -2127,7 +2099,6 @@ def sorted_neighborhood_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# (from llm_extra20.py)
 # --------------------------------------------------------------------------
 # phonetic_blocking_pairs — soundex-style blocking for entity resolution
 # --------------------------------------------------------------------------
@@ -2257,7 +2228,6 @@ def phonetic_blocking_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# (from llm_extra21.py)
 # --------------------------------------------------------------------------
 # bbit_minhash_estimate — 1-bit signature compression accuracy audit
 # --------------------------------------------------------------------------
@@ -2445,7 +2415,6 @@ def bbit_minhash_estimate(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# (from llm_extra22.py)
 # --------------------------------------------------------------------------
 # er_merge_survivorship — the merge stage of the blocking ER flow
 # --------------------------------------------------------------------------
@@ -2561,7 +2530,6 @@ def er_merge_survivorship(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# (round 8)
 # --------------------------------------------------------------------------
 # substring_exact_spans — corpus-wide exact-substring dedup with EXACT span
 # boundaries (the Lee-et-al ExactSubstr pass)
@@ -2693,7 +2661,6 @@ def substring_exact_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# (round 8)
 # --------------------------------------------------------------------------
 # substring_dedup_cut — APPLY the exact-substring cut list: the deduplicated
 # corpus with one canonical occurrence kept per repeat
@@ -2897,7 +2864,6 @@ def substring_dedup_cut(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# (round 9)
 # --------------------------------------------------------------------------
 # neardup_containment_pairs — asymmetric (quote/superset) near-dup tier
 # --------------------------------------------------------------------------
@@ -2939,7 +2905,6 @@ def neardup_containment_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     return dd.containment_pairs(docs, threshold=_CONT_T)
 
 
-# (round 9, session 2)
 # --------------------------------------------------------------------------
 # cluster_aware_split — leakage-safe split assignment (split AFTER dedup)
 # --------------------------------------------------------------------------
@@ -2992,7 +2957,6 @@ def cluster_aware_split(spark, sf_dir):
     )
 
 
-# (round 9, session 2)
 # --------------------------------------------------------------------------
 # cross_source_duplication_matrix — which domains mirror each other
 # --------------------------------------------------------------------------
@@ -3054,7 +3018,6 @@ def cross_source_duplication_matrix(spark: SparkSession, sf_dir: str) -> DataFra
     )
 
 
-# (round 9, session 2)
 # --------------------------------------------------------------------------
 # corpus_curation_pipeline — the whole funnel as one declarative plan
 # --------------------------------------------------------------------------

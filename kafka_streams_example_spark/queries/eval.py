@@ -28,7 +28,6 @@ from kafka_streams_example_spark.registry import (
 )
 
 
-# (from llm_extra2.py)
 # --------------------------------------------------------------------------
 # curriculum_quality_bins — per-language difficulty deciles
 # --------------------------------------------------------------------------
@@ -83,7 +82,6 @@ def curriculum_quality_bins(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# (from llm_extra3.py)
 # --------------------------------------------------------------------------
 # train_eval_split — deterministic hash split with integrity stats
 # --------------------------------------------------------------------------
@@ -158,7 +156,6 @@ def train_eval_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# (from llm_extra10.py)
 # --------------------------------------------------------------------------
 # langid_confusion_matrix — classifier evaluation
 # --------------------------------------------------------------------------
@@ -200,7 +197,6 @@ def langid_confusion_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# (from llm_extra10.py)
 # --------------------------------------------------------------------------
 # filter_ablation_report — cumulative curation-funnel accounting
 # --------------------------------------------------------------------------
@@ -300,7 +296,6 @@ def filter_ablation_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# (from llm_extra12.py)
 # --------------------------------------------------------------------------
 # quality_filter_threshold_sweep — pick the filter cutoff from data
 # --------------------------------------------------------------------------
@@ -378,7 +373,6 @@ def quality_filter_threshold_sweep(spark: SparkSession, sf_dir: str) -> DataFram
     )
 
 
-# (from llm_extra14.py)
 # --------------------------------------------------------------------------
 # split_token_kl — train/eval token-distribution drift
 # --------------------------------------------------------------------------
@@ -476,7 +470,6 @@ def split_token_kl(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# (from llm_extra16.py)
 # --------------------------------------------------------------------------
 # score_calibration_bins — calibration audit of the quality classifier
 # --------------------------------------------------------------------------
@@ -554,7 +547,6 @@ ORACLES["score_calibration_bins"] = ORACLES["score_calibration_bins"].format(
 )
 
 
-# (from llm_extra17.py)
 # --------------------------------------------------------------------------
 # roc_auc_quality — exact ROC-AUC of the quality classifier vs is_en
 # --------------------------------------------------------------------------
@@ -646,7 +638,6 @@ def roc_auc_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# (from llm_extra17.py)
 # --------------------------------------------------------------------------
 # cohens_kappa_langid — chance-corrected lang-id agreement
 # --------------------------------------------------------------------------
@@ -753,7 +744,6 @@ def cohens_kappa_langid(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# (from llm_extra17.py)
 # --------------------------------------------------------------------------
 # bigram_crossentropy_eval — eval-split cross-entropy under the train LM
 # --------------------------------------------------------------------------
@@ -930,7 +920,6 @@ def bigram_crossentropy_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# (from llm_extra18.py)
 # --------------------------------------------------------------------------
 # loo_group_influence — leave-one-source-out influence on corpus mean
 # --------------------------------------------------------------------------
@@ -999,7 +988,6 @@ def loo_group_influence(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# (from llm_extra19.py)
 # --------------------------------------------------------------------------
 # ndcg_retrieval_eval — nDCG@10 of the cosine arm against embedding labels
 # --------------------------------------------------------------------------
@@ -1107,7 +1095,6 @@ ORACLES["ndcg_retrieval_eval"] = ORACLES["ndcg_retrieval_eval"].format(
 )
 
 
-# (round 9, session 2)
 # --------------------------------------------------------------------------
 # quality_threshold_for_budget — token-budget-constrained filter cutoff
 # --------------------------------------------------------------------------

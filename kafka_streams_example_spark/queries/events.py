@@ -18,7 +18,6 @@ from kafka_streams_example_spark.registry import _load_parallel, register
 from kafka_streams_example_spark.sources.files import load_table
 
 
-# (from llm_extra.py)
 # Value-band dimension for the non-equi range join: [lo, hi) tiers that
 # cover the full `events.value` domain (0.01 .. 490.02 in the testdata).
 _TIERS: list[tuple[str, float, float]] = [
@@ -71,7 +70,6 @@ def range_join_value_tiers(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# (from llm_extra.py)
 @register(
     "user_event_timeline",
     """
@@ -116,7 +114,6 @@ def user_event_timeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# (from llm_extra.py)
 @register(
     "sft_next_event_pairs",
     """
@@ -156,7 +153,6 @@ def sft_next_event_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# (from llm_extra.py)
 @register(
     "map_functions_roundtrip",
     """
@@ -214,7 +210,6 @@ def map_functions_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# (from llm_extra.py)
 @register(
     "distribution_rank_functions",
     """
@@ -261,7 +256,6 @@ def distribution_rank_functions(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# (from llm_extra.py)
 @register(
     "value_window_functions",
     """
@@ -303,7 +297,6 @@ def value_window_functions(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# (from llm_extra4.py)
 # --------------------------------------------------------------------------
 # cohort_retention — weekly signup-cohort retention triangle
 # --------------------------------------------------------------------------
@@ -373,7 +366,6 @@ def cohort_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# (from llm_extra4.py)
 # --------------------------------------------------------------------------
 # order_window_overlaps — interval-overlap self-join per customer
 # --------------------------------------------------------------------------
@@ -441,7 +433,6 @@ def order_window_overlaps(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# (from llm_extra4.py)
 # --------------------------------------------------------------------------
 # lateral_top_orders_per_segment — correlated LATERAL subquery
 # --------------------------------------------------------------------------
@@ -472,7 +463,6 @@ def lateral_top_orders_per_segment(spark: SparkSession, sf_dir: str) -> DataFram
     return spark.sql(_LATERAL_SQL)
 
 
-# (from llm_extra7.py)
 # --------------------------------------------------------------------------
 # event_transition_matrix — first-order Markov transitions
 # --------------------------------------------------------------------------
@@ -521,7 +511,6 @@ def event_transition_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# (from llm_extra7.py)
 # --------------------------------------------------------------------------
 # orders_rfm_segmentation — recency/frequency/monetary quartiles
 # --------------------------------------------------------------------------
@@ -583,7 +572,6 @@ def orders_rfm_segmentation(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# (from llm_extra8.py)
 # --------------------------------------------------------------------------
 # top_session_paths — 3-step session path mining
 # --------------------------------------------------------------------------
@@ -670,7 +658,6 @@ def top_session_paths(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# (from llm_extra8.py)
 # --------------------------------------------------------------------------
 # funnel_time_bounded — signup→purchase within 7 days
 # --------------------------------------------------------------------------
@@ -745,7 +732,6 @@ def funnel_time_bounded(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# (from llm_extra8.py)
 # --------------------------------------------------------------------------
 # pareto_revenue_concentration — Lorenz curve by customer decile
 # --------------------------------------------------------------------------
@@ -809,7 +795,6 @@ def pareto_revenue_concentration(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# (from llm_extra8.py)
 # --------------------------------------------------------------------------
 # basket_part_pairs_lift — market-basket affinity
 # --------------------------------------------------------------------------
@@ -900,7 +885,6 @@ def basket_part_pairs_lift(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# (from llm_extra11.py)
 # --------------------------------------------------------------------------
 # order_to_ship_latency — fulfillment SLA distribution
 # --------------------------------------------------------------------------
@@ -956,7 +940,6 @@ def order_to_ship_latency(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# (from llm_extra11.py)
 # --------------------------------------------------------------------------
 # hourly_activity_heatmap — weekday x hour rhythm
 # --------------------------------------------------------------------------
@@ -1005,7 +988,6 @@ def hourly_activity_heatmap(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# (from llm_extra11.py)
 # --------------------------------------------------------------------------
 # repeat_purchase_interval — inter-purchase gap distribution
 # --------------------------------------------------------------------------
@@ -1062,7 +1044,6 @@ def repeat_purchase_interval(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# (from llm_extra13.py)
 # --------------------------------------------------------------------------
 # user_activity_islands — gaps-and-islands interval merge
 # --------------------------------------------------------------------------
@@ -1150,7 +1131,6 @@ def user_activity_islands(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# (from llm_extra19.py)
 # --------------------------------------------------------------------------
 # sessionized_attribution — last-touch revenue attribution
 # --------------------------------------------------------------------------

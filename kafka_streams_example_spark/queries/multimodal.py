@@ -850,7 +850,7 @@ frames AS (
     FROM b, unnest(generate_series(0, nf - 1)) AS fr(f)
 ),
 -- 11x6 nearest-neighbor thumbnail of the frame whose pixel j is
--- db[(j + {fx.SCENE_SHIFT}*scene) % 16] (the _video_frame_pixels synthesis)
+-- db[(j + {fx.SCENE_SHIFT}*scene) % 16] (the functions/fixtures.py:video synthesis)
 g AS (
     SELECT doc_id, nf, frame_no,
            list_transform(generate_series(0, {_DH_GRID_W * _DH_GRID_H - 1}), i ->

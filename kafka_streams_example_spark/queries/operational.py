@@ -35,10 +35,13 @@ from kafka_streams_example_spark.streaming.contract import (
     _PSI_BIN_WIDTH,
     _PSI_BINS,
     _PSI_EPS,
+    manifest_by_shard,
+    orders_row_flags,
+    psi_by_type,
+    psi_cells,
 )
 
 
-# (from llm_extra.py)
 # Per-language keep-rates (percent): downsample the dominant language,
 # keep everything rare — the standard corpus language-rebalancing move.
 _LANG_RATES: dict[str, int] = {"en": 20, "de": 40, "es": 60, "fr": 80, "zh": 100}
@@ -73,7 +76,6 @@ def stratified_sample_by_lang(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).select("doc_id", "lang")
 
 
-# (from llm_extra.py)
 @register(
     "skew_salted_event_totals",
     """
@@ -107,7 +109,6 @@ def skew_salted_event_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# (from llm_extra2.py)
 # --------------------------------------------------------------------------
 # pii_scrub_events
 # --------------------------------------------------------------------------
@@ -137,7 +138,6 @@ def pii_scrub_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# (from llm_extra2.py)
 # --------------------------------------------------------------------------
 # domain_mixture_weights — sampling weights for corpus domain re-balancing
 # --------------------------------------------------------------------------
@@ -181,7 +181,6 @@ def domain_mixture_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# (from llm_extra4.py)
 # --------------------------------------------------------------------------
 # scd2_user_state — type-2 slowly-changing-dimension history
 # --------------------------------------------------------------------------
@@ -255,7 +254,6 @@ def scd2_user_state(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# (from llm_extra4.py)
 # --------------------------------------------------------------------------
 # deterministic_group_sample — stable k-per-group sample
 # --------------------------------------------------------------------------
@@ -308,7 +306,6 @@ def deterministic_group_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# (from llm_extra4.py)
 # --------------------------------------------------------------------------
 # orders_column_profile — one-scan data-quality profile
 # --------------------------------------------------------------------------
@@ -363,7 +360,6 @@ def orders_column_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# (from llm_extra5.py)
 # --------------------------------------------------------------------------
 # weighted_domain_sample — Efraimidis–Spirakis without-replacement sample
 # --------------------------------------------------------------------------
@@ -422,7 +418,6 @@ def weighted_domain_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# (from llm_extra5.py)
 # --------------------------------------------------------------------------
 # key_skew_report — partition-key skew diagnosis
 # --------------------------------------------------------------------------
@@ -496,7 +491,6 @@ def key_skew_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# (from llm_extra6.py)
 # --------------------------------------------------------------------------
 # dataset_mixture_resample — temperature-flattened source mixture
 # --------------------------------------------------------------------------
@@ -583,7 +577,6 @@ def dataset_mixture_resample(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# (from llm_extra10.py)
 # --------------------------------------------------------------------------
 # output_shard_balance — pre-write layout audit
 # --------------------------------------------------------------------------
@@ -646,7 +639,6 @@ def output_shard_balance(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# (from llm_extra12.py)
 # --------------------------------------------------------------------------
 # corpus_mixture_entropy — mixture concentration in one row
 # --------------------------------------------------------------------------
@@ -716,7 +708,6 @@ def corpus_mixture_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# (from llm_extra15.py)
 # --------------------------------------------------------------------------
 # shard_manifest — reproducible dataset manifest with content checksums
 # --------------------------------------------------------------------------
@@ -756,28 +747,11 @@ def shard_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
     DuckDB's sum() promotes to HUGEINT (128-bit) and Spark's sum of
     longs wraps at 2^63 — so fingerprints stay in [0, 2^60) and the
     Spark side sums DECIMAL(38,0) to match the exact wide sum before the
-    final modulus."""
-    docs = _load_parallel(spark, sf_dir, "documents")
-    from kafka_streams_example_spark.functions.hashing import (
-        normalize_text,
-        stable_long,
-    )
-
-    t = docs.select(
-        (stable_long(F.col("doc_id").cast("string")) % _MAN_SHARDS).alias("shard"),
-        "n_chars",
-        stable_long(normalize_text(F.col("text"))).alias("fph"),
-    )
-    return t.groupBy("shard").agg(
-        F.count("*").cast("long").alias("n_docs"),
-        F.sum("n_chars").cast("long").alias("total_chars"),
-        (F.sum(F.col("fph").cast("decimal(38,0)")) % _MAN_MOD)
-        .cast("long")
-        .alias("content_checksum"),
-    )
+    final modulus; the aggregate is ``manifest_by_shard``, which the
+    streaming twin runs too."""
+    return manifest_by_shard(_load_parallel(spark, sf_dir, "documents"))
 
 
-# (from llm_extra17.py)
 # --------------------------------------------------------------------------
 # watermark_late_event_audit — batch replay of streaming watermark drops
 # --------------------------------------------------------------------------
@@ -866,7 +840,6 @@ def watermark_late_event_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# (from llm_extra18.py)
 # --------------------------------------------------------------------------
 # zorder_locality_report — read amplification of a range scan under
 # Z-order vs row-major physical layout
@@ -1006,7 +979,6 @@ def zorder_locality_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# (from llm_extra18.py)
 # --------------------------------------------------------------------------
 # k_anonymity_audit — re-identification risk of a quasi-identifier tuple
 # --------------------------------------------------------------------------
@@ -1068,7 +1040,6 @@ def k_anonymity_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# (from llm_extra18.py)
 # --------------------------------------------------------------------------
 # dp_noisy_counts — epsilon-DP count release with seeded Laplace noise
 # --------------------------------------------------------------------------
@@ -1138,7 +1109,6 @@ def dp_noisy_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# (from llm_extra18.py)
 # --------------------------------------------------------------------------
 # merge_incremental_aggs — incremental view maintenance: base+delta
 # partial states merge exactly to the full recompute
@@ -1252,7 +1222,6 @@ def merge_incremental_aggs(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# (from llm_extra19.py)
 # --------------------------------------------------------------------------
 # data_contract_validation — dbt-style contract checks with violation counts
 # --------------------------------------------------------------------------
@@ -1329,20 +1298,12 @@ def data_contract_validation(spark: SparkSession, sf_dir: str) -> DataFrame:
     # out to one row per check — the former shape ran a separate
     # scan+aggregate subtree per check (orders scanned 3x, events 2x).
     # Same counts, same output rows (guide §2.3 — aggregate in one pass).
+    flags = orders_row_flags()
     pk_orders = orders.agg(
         F.count("*").alias("n"),
         (F.count("*") - F.countDistinct("o_orderkey")).alias("v_pk"),
-        F.sum(
-            (
-                ~F.col("o_orderstatus").isin("O", "F", "P")
-                | F.col("o_orderstatus").isNull()
-            ).cast("int")
-        ).alias("v_enum"),
-        F.sum(
-            (F.col("o_totalprice").isNull() | (F.col("o_totalprice") <= 0.0)).cast(
-                "int"
-            )
-        ).alias("v_rng"),
+        F.sum(flags["enum_orderstatus"].cast("int")).alias("v_enum"),
+        F.sum(flags["range_totalprice_positive"].cast("int")).alias("v_rng"),
     ).selectExpr(
         "stack(3,"
         " 'pk_unique_orders', 'orders', CAST(n AS LONG), CAST(v_pk AS LONG),"
@@ -1361,7 +1322,7 @@ def data_contract_validation(spark: SparkSession, sf_dir: str) -> DataFrame:
             cust_keys, orders["o_custkey"] == cust_keys["c_custkey"], "left"
         ).agg(
             F.count("*").alias("n"),
-            F.sum(F.col("c_custkey").isNull().cast("int")).alias("v"),
+            F.sum(flags["fk_orders_customer"].cast("int")).alias("v"),
         )
     )
     order_keys = orders.select("o_orderkey")
@@ -1398,7 +1359,6 @@ def data_contract_validation(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out
 
 
-# (from llm_extra19.py)
 # --------------------------------------------------------------------------
 # psi_value_drift — population stability index between time halves
 # --------------------------------------------------------------------------
@@ -1461,7 +1421,8 @@ def psi_value_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     on the bounded cell grid. This is the standing weekly monitor shape:
     the two halves generalize to (reference window, current window) and
     the cell counts merge across days as plain sums, so the reference
-    never rescans."""
+    never rescans. The cells and the PSI math are ``psi_cells`` and
+    ``psi_by_type``, which streaming_psi_monitor runs too."""
     ev = load_table(spark, sf_dir, "events")
     mid = ev.agg(
         F.floor(
@@ -1474,52 +1435,17 @@ def psi_value_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
         .cast("long")
         .alias("m")
     )
-    b = ev.join(F.broadcast(mid)).select(
+    halves = ev.join(F.broadcast(mid)).select(
         "event_type",
         F.when(F.col("ts").cast("long") <= F.col("m"), 0).otherwise(1).alias("half"),
-        F.least(
-            F.floor(F.col("value") / _PSI_BIN_WIDTH).cast("long"),
-            F.lit(_PSI_BINS - 1),
-        ).alias("bin"),
+        "value",
     )
-    cells = b.groupBy("event_type", "half", "bin").agg(F.count("*").alias("c"))
-    types = cells.select("event_type").distinct()
-    grid_keys = types.join(
-        F.broadcast(
-            types.sparkSession.range(_PSI_BINS).select(F.col("id").alias("bin"))
-        )
-    )
-    b0 = cells.filter(F.col("half") == 0).select(
-        "event_type", "bin", F.col("c").alias("nb")
-    )
-    b1 = cells.filter(F.col("half") == 1).select(
-        "event_type", "bin", F.col("c").alias("na")
-    )
-    grid = (
-        grid_keys.join(b0, ["event_type", "bin"], "left")
-        .join(b1, ["event_type", "bin"], "left")
-        .fillna(0, subset=["nb", "na"])
-    )
-    w_tot = Window.partitionBy("event_type")
-    denom = float(_PSI_EPS * _PSI_BINS)
-    p = (F.col("nb") + _PSI_EPS) / (F.sum("nb").over(w_tot) + denom)
-    q = (F.col("na") + _PSI_EPS) / (F.sum("na").over(w_tot) + denom)
-    terms = grid.select(
-        "event_type",
-        F.sum("nb").over(w_tot).alias("tnb"),
-        F.sum("na").over(w_tot).alias("tna"),
-        ((p - q) * F.log(p / q)).alias("term"),
-    )
-    psi = F.round(F.sum("term"), 6)
-    return terms.groupBy("event_type").agg(
-        F.max("tnb").cast("long").alias("n_before"),
-        F.max("tna").cast("long").alias("n_after"),
-        psi.alias("psi"),
-        (psi > _PSI_ALERT).alias("drifted"),
+    cells = psi_cells(halves, "half")
+    return psi_by_type(
+        cells.filter(F.col("half") == 0), cells.filter(F.col("half") == 1)
     )
 
 
-# (from llm_extra19.py)
 # --------------------------------------------------------------------------
 # context_budget_report — fit/truncation/utilization per context length
 # --------------------------------------------------------------------------
@@ -1587,7 +1513,6 @@ def context_budget_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# (from llm_extra19.py)
 # --------------------------------------------------------------------------
 # corpus_version_diff — snapshot manifest diff between two corpus versions
 # --------------------------------------------------------------------------
@@ -1708,7 +1633,6 @@ def corpus_version_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# (from llm_extra20.py)
 # --------------------------------------------------------------------------
 # proportional_allocation_sample — Hamilton apportionment stratified sample
 # --------------------------------------------------------------------------
@@ -1812,7 +1736,6 @@ def proportional_allocation_sample(spark: SparkSession, sf_dir: str) -> DataFram
     )
 
 
-# (from llm_extra22.py)
 # --------------------------------------------------------------------------
 # mixture_budget_allocation — greedy quality-first token budgeting
 # --------------------------------------------------------------------------
@@ -1920,7 +1843,6 @@ def mixture_budget_allocation(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# (round 9, session 2)
 # --------------------------------------------------------------------------
 # temperature_sampling_mixture — alpha-power language sampling (mT5/XLM-R)
 # --------------------------------------------------------------------------

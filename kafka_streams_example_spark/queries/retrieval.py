@@ -241,7 +241,6 @@ WHERE rnk <= {k}
 ORACLES["similarity_ivf_topk"] = _duck_ivf_sql()
 
 
-# (from llm_extra.py)
 def _duck_q(i: int) -> str:
     """DuckDB int8-quantized value of embedding element i (1-based)."""
     return f"round((e)[{i}]::DOUBLE / scale)"
@@ -308,7 +307,6 @@ def embedding_quantize_int8(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# (from llm_extra.py)
 def _duck_dequant_cte() -> str:
     """Shared oracle CTEs: per-vector int8 reconstruction (same math as
     embedding_quantize_int8)."""
@@ -420,7 +418,6 @@ def similarity_cosine_topk_vectorized(spark: SparkSession, sf_dir: str) -> DataF
     return sim.cosine_topk_vectorized(emb, emb.filter(F.col("vec_id") < 8), k=10)
 
 
-# (from llm_extra.py)
 def _register_vectorized_oracle() -> None:
     from kafka_streams_example_spark.registry import ORACLES
 
@@ -430,7 +427,6 @@ def _register_vectorized_oracle() -> None:
 _register_vectorized_oracle()
 
 
-# (from llm_extra2.py)
 # --------------------------------------------------------------------------
 # label_mean_embeddings — element-wise vector pooling per group
 # --------------------------------------------------------------------------
@@ -475,7 +471,6 @@ def label_mean_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# (from llm_extra3.py)
 # --------------------------------------------------------------------------
 # power_iteration_top_component — PCA direction, declaratively
 # --------------------------------------------------------------------------
@@ -575,7 +570,6 @@ def power_iteration_top_component(spark: SparkSession, sf_dir: str) -> DataFrame
     )
 
 
-# (from llm_extra3.py)
 # --------------------------------------------------------------------------
 # ann_recall_at_k — index-quality evaluation (IVF vs exact)
 # --------------------------------------------------------------------------
@@ -635,7 +629,6 @@ def ann_recall_at_k(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# (from llm_extra3.py)
 # --------------------------------------------------------------------------
 # similarity_pair_histogram — dedup-threshold calibration curve
 # --------------------------------------------------------------------------
@@ -694,7 +687,6 @@ def similarity_pair_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# (from llm_extra4.py)
 # --------------------------------------------------------------------------
 # inverted_index_postings — token -> doc_freq / total_tf / capped postings
 # --------------------------------------------------------------------------
@@ -749,7 +741,6 @@ def inverted_index_postings(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# (from llm_extra12.py)
 # --------------------------------------------------------------------------
 # hard_negative_mining — contrastive negatives by label-filtered top-k
 # --------------------------------------------------------------------------
@@ -817,7 +808,6 @@ def hard_negative_mining(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).filter(F.col("rnk") <= _HN_K)
 
 
-# (from llm_extra12.py)
 # --------------------------------------------------------------------------
 # embedding_norm_outliers — embedding-space health check
 # --------------------------------------------------------------------------
@@ -893,7 +883,6 @@ def embedding_norm_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# (from llm_extra13.py)
 # --------------------------------------------------------------------------
 # bm25_topk_docs — classic IR scoring over the proven postings shapes
 # --------------------------------------------------------------------------
@@ -1007,7 +996,6 @@ def bm25_topk_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# (from llm_extra14.py)
 # --------------------------------------------------------------------------
 # rrf_hybrid_retrieval — lexical + semantic rank fusion
 # --------------------------------------------------------------------------
@@ -1154,7 +1142,6 @@ def rrf_hybrid_retrieval(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# (round 9, session 2)
 # --------------------------------------------------------------------------
 # embedding_dispersion_by_label — exact mean pairwise cosine per label
 # --------------------------------------------------------------------------
@@ -1273,7 +1260,6 @@ def embedding_dispersion_by_label(spark: SparkSession, sf_dir: str) -> DataFrame
     )
 
 
-# (round 11)
 # --------------------------------------------------------------------------
 # similarity_ivf_trained_topk — IVF over TRAINED (k-means) centroids
 # --------------------------------------------------------------------------
@@ -1475,7 +1461,6 @@ def ann_recall_trained_vs_fixed(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# (round 11, continued)
 # --------------------------------------------------------------------------
 # similarity_pq_topk — product quantization with asymmetric distance
 # --------------------------------------------------------------------------

@@ -23,7 +23,6 @@ from kafka_streams_example_spark.registry import (
 from kafka_streams_example_spark.sources.files import load_table
 
 
-# (from llm_extra15.py)
 # --------------------------------------------------------------------------
 # bloom_filter_probe_join — distributed Bloom build + broadcast probe
 # --------------------------------------------------------------------------
@@ -167,7 +166,6 @@ def bloom_filter_probe_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# (from llm_extra15.py)
 # --------------------------------------------------------------------------
 # jl_projection_distortion — Johnson–Lindenstrauss pair-distance audit
 # --------------------------------------------------------------------------
@@ -278,7 +276,6 @@ def jl_projection_distortion(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# (from llm_extra15.py)
 # --------------------------------------------------------------------------
 # kmv_distinct_sketch — k-minimum-values cardinality estimate
 # --------------------------------------------------------------------------
@@ -368,7 +365,6 @@ def kmv_distinct_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# (from llm_extra16.py)
 # --------------------------------------------------------------------------
 # countmin_heavy_hitters — Count-Min sketch + exact heavy-hitter audit
 # --------------------------------------------------------------------------
@@ -488,7 +484,6 @@ def countmin_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# (from llm_extra16.py)
 # --------------------------------------------------------------------------
 # theta_sketch_set_ops — KMV union + intersection estimates across segments
 # --------------------------------------------------------------------------
@@ -635,7 +630,6 @@ def theta_sketch_set_ops(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# (from llm_extra16.py)
 # --------------------------------------------------------------------------
 # feature_hashing_sparse — hashing-trick sparse featurizer
 # --------------------------------------------------------------------------

@@ -26,7 +26,6 @@ from kafka_streams_example_spark.registry import (
 from kafka_streams_example_spark.sources.files import load_table
 
 
-# (from llm_extra2.py)
 # --------------------------------------------------------------------------
 # value_histogram
 # --------------------------------------------------------------------------
@@ -75,7 +74,6 @@ def value_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# (from llm_extra4.py)
 # --------------------------------------------------------------------------
 # median_mad_outliers — robust per-group outlier detection
 # --------------------------------------------------------------------------
@@ -146,7 +144,6 @@ def median_mad_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# (from llm_extra4.py)
 # --------------------------------------------------------------------------
 # winsorized_chars_by_source — outlier-robust corpus length statistics
 # --------------------------------------------------------------------------
@@ -207,7 +204,6 @@ def winsorized_chars_by_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# (from llm_extra5.py)
 # --------------------------------------------------------------------------
 # robust_scaler_features — per-language feature scaling
 # --------------------------------------------------------------------------
@@ -266,7 +262,6 @@ def robust_scaler_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# (from llm_extra9.py)
 # --------------------------------------------------------------------------
 # ab_test_analysis — deterministic experiment readout
 # --------------------------------------------------------------------------
@@ -348,7 +343,6 @@ def ab_test_analysis(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# (from llm_extra16.py)
 # --------------------------------------------------------------------------
 # benford_first_digit — first-significant-digit distribution audit
 # --------------------------------------------------------------------------
@@ -428,7 +422,6 @@ def benford_first_digit(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# (from llm_extra17.py)
 ORACLES["roc_auc_quality"] = ORACLES["roc_auc_quality"].format(
     logreg=ORACLES["quality_logreg_score"]
 )
@@ -548,7 +541,6 @@ def ols_trend_nation_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# (from llm_extra17.py)
 # --------------------------------------------------------------------------
 # chisq_eventtype_dow — chi-square independence screen
 # --------------------------------------------------------------------------
@@ -655,7 +647,6 @@ def chisq_eventtype_dow(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# (from llm_extra20.py)
 # --------------------------------------------------------------------------
 # woe_information_value — WOE/IV feature scoring of length vs is-English
 # --------------------------------------------------------------------------
@@ -750,7 +741,6 @@ def woe_information_value(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# (from llm_extra21.py)
 # --------------------------------------------------------------------------
 # kaplan_meier_conversion — signup→purchase survival with right censoring
 # --------------------------------------------------------------------------
@@ -908,7 +898,6 @@ def kaplan_meier_conversion(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# (from llm_extra21.py)
 # --------------------------------------------------------------------------
 # mannwhitney_doclen_test — tie-corrected Mann-Whitney U, en vs non-en
 # --------------------------------------------------------------------------

@@ -40,7 +40,6 @@ _QUALITY_SQL = """floor((0.4 * least(1.0, len(toks) / 100.0)
                      / CAST(length(regexp_replace(text, '[ \\t\\n\\x0B\\f\\r]+', '', 'g')) AS DOUBLE) ELSE 0.0 END)) * 10000.0 + 0.5) / 10000.0"""
 
 
-# (from llm_extra.py)
 @register(
     "repetition_quality_stats",
     f"""
@@ -108,7 +107,6 @@ def repetition_quality_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# (from llm_extra.py)
 @register(
     "vocab_stats_by_lang",
     f"""
@@ -202,7 +200,6 @@ def bpe_pair_candidates(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# (from llm_extra.py)
 @register(
     "corpus_quality_rollup",
     f"""
@@ -256,7 +253,6 @@ def corpus_quality_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# (from llm_extra2.py)
 # --------------------------------------------------------------------------
 # doc_chunking
 # --------------------------------------------------------------------------
@@ -314,7 +310,6 @@ def doc_chunking(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# (from llm_extra2.py)
 # --------------------------------------------------------------------------
 # pack_sequences
 # --------------------------------------------------------------------------
@@ -408,7 +403,6 @@ def pack_sequences(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# (from llm_extra2.py)
 # --------------------------------------------------------------------------
 # tfidf_top_terms
 # --------------------------------------------------------------------------
@@ -480,7 +474,6 @@ def tfidf_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# (from llm_extra2.py)
 # --------------------------------------------------------------------------
 # udtf_word_windows — Python UDTF surface (Spark 4)
 # --------------------------------------------------------------------------
@@ -534,7 +527,6 @@ def udtf_word_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# (from llm_extra2.py)
 # --------------------------------------------------------------------------
 # preference_pairs — RLHF-style chosen/rejected example assembly
 # --------------------------------------------------------------------------
@@ -601,7 +593,6 @@ def preference_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# (from llm_extra2.py)
 # --------------------------------------------------------------------------
 # pack_sequences_greedy — true budget-disciplined packing (stateful)
 # --------------------------------------------------------------------------
@@ -724,7 +715,6 @@ def pack_sequences_greedy(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# (from llm_extra2.py)
 # --------------------------------------------------------------------------
 # zipf_law_fit — corpus token-frequency power-law diagnostics
 # --------------------------------------------------------------------------
@@ -778,7 +768,6 @@ def zipf_law_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# (from llm_extra3.py)
 # --------------------------------------------------------------------------
 # vocab_coverage_oov — tokenizer-fit / OOV-rate signal
 # --------------------------------------------------------------------------
@@ -853,7 +842,6 @@ def vocab_coverage_oov(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# (from llm_extra4.py)
 # --------------------------------------------------------------------------
 # token_pmi_pairs — collocation mining via PMI
 # --------------------------------------------------------------------------
@@ -938,7 +926,6 @@ def token_pmi_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# (from llm_extra5.py)
 # --------------------------------------------------------------------------
 # bigram_lm_probs — add-k smoothed bigram LM
 # --------------------------------------------------------------------------
@@ -1036,7 +1023,6 @@ def bigram_lm_probs(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# (from llm_extra5.py)
 # --------------------------------------------------------------------------
 # cooccurrence_triangles — triangles on the token co-occurrence graph
 # --------------------------------------------------------------------------
@@ -1113,7 +1099,6 @@ def cooccurrence_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# (from llm_extra6.py)
 # --------------------------------------------------------------------------
 # ngram_novelty_curve — corpus saturation diagnostic
 # --------------------------------------------------------------------------
@@ -1180,7 +1165,6 @@ def ngram_novelty_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# (from llm_extra12.py)
 # --------------------------------------------------------------------------
 # tokenizer_fertility_by_lang — tokenizer-fit readout
 # --------------------------------------------------------------------------
@@ -1239,7 +1223,6 @@ def tokenizer_fertility_by_lang(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# (from llm_extra13.py)
 # --------------------------------------------------------------------------
 # token_pagerank_centrality — unrolled power iteration on the token graph
 # --------------------------------------------------------------------------
@@ -1367,7 +1350,6 @@ def token_pagerank_centrality(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# (from llm_extra13.py)
 # --------------------------------------------------------------------------
 # phrase_blocklist_rates — policy-filter impact report
 # --------------------------------------------------------------------------
@@ -1418,7 +1400,6 @@ def phrase_blocklist_rates(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# (from llm_extra15.py)
 # --------------------------------------------------------------------------
 # quality_logreg_score — fixed-weight logistic quality classifier
 # --------------------------------------------------------------------------
@@ -1519,7 +1500,6 @@ def quality_logreg_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# (from llm_extra18.py)
 # --------------------------------------------------------------------------
 # kneser_ney_bigram — interpolated Kneser-Ney bigram LM
 # --------------------------------------------------------------------------
@@ -1604,7 +1584,6 @@ def kneser_ney_bigram(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# (from llm_extra20.py)
 # --------------------------------------------------------------------------
 # token_clustering_coefficient — local clustering on the co-occurrence graph
 # --------------------------------------------------------------------------
@@ -1712,7 +1691,6 @@ def token_clustering_coefficient(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# (from llm_extra20.py)
 # --------------------------------------------------------------------------
 # trigram_backoff_lm — stupid-backoff trigram scores
 # --------------------------------------------------------------------------
@@ -1985,32 +1963,24 @@ def doc_perplexity_proxy(spark, sf_dir):
     tokenize+explode passes run once per session for every consumer (the
     _neardup_pairs discipline). The former per-invocation freq
     localCheckpoint could not be plan-shared (fresh RDD id per
-    invocation) and re-ran the scoring per consumer query."""
-    docs = _load_parallel(spark, sf_dir, "documents")
-    toks = docs.select(
-        "doc_id", F.explode(tx.tokens(F.lower(F.col("text")))).alias("token")
-    )
+    invocation) and re-ran the scoring per consumer query. The score is
+    ``unigram_lm_scores``, the quality gate's scorer too."""
+    from kafka_streams_example_spark.operators import share
+    from kafka_streams_example_spark.sources.files import table_row_count
+
     # freq feeds the total rollup AND the broadcast join — the cache also
     # covers that intra-plan multi-reference (both scan one
     # InMemoryRelation): tokenize passes stay 2 per materialization.
     freq = _unigram_freq(spark, sf_dir)
-    total = freq.agg(F.sum("c").alias("n"))
-    scored = (
-        toks.join(F.broadcast(freq), "token")
-        .join(F.broadcast(total))
-        .withColumn("logp", F.log(F.col("c").cast("double") / F.col("n")))
+    lm = F.broadcast(freq.join(F.broadcast(freq.agg(F.sum("c").alias("n")))))
+    scored = tx.unigram_lm_scores(
+        _load_parallel(spark, sf_dir, "documents"), lm, F.col("n"), "doc_id"
     )
-    from kafka_streams_example_spark.operators import share
-    from kafka_streams_example_spark.sources.files import table_row_count
-
     # per-doc score table: 3 narrow scalars per doc — rows ∝ docs, so the
     # session cache is budgeted at ~40 B/doc (SCALE.md §caches; r11
     # VERDICT #6 named this frame explicitly)
     return share(
-        scored.groupBy("doc_id").agg(
-            F.count("*").alias("n_tokens"),
-            F.round(-F.sum("logp") / F.count("*"), 6).alias("avg_neg_logp"),
-        ),
+        scored.withColumnRenamed("score", "avg_neg_logp"),
         table_row_count(spark, sf_dir, "documents") * 40,
     )
 
@@ -2160,7 +2130,6 @@ def regex_extraction(spark, sf_dir):
     )
 
 
-# (round 9)
 # --------------------------------------------------------------------------
 # bpe_train_merges — iterative BPE tokenizer-training loop (N merges)
 # --------------------------------------------------------------------------
@@ -2429,7 +2398,6 @@ def bpe_corpus_compression(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out
 
 
-# (round 9, session 2)
 # --------------------------------------------------------------------------
 # ccnet_perplexity_buckets — CCNet head/middle/tail LM-quality partitioning
 # --------------------------------------------------------------------------
@@ -2500,27 +2468,13 @@ def ccnet_perplexity_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
     independent state."""
     from kafka_streams_example_spark.operators import share
 
-    docs = _load_parallel(spark, sf_dir, "documents")
-    toks = docs.select(
-        "doc_id", "lang", F.explode(tx.tokens(F.lower(F.col("text")))).alias("token")
-    )
-    # Same discipline as doc_perplexity_proxy — and now the SAME cached
-    # vocabulary table (r12: _unigram_freq): the former per-invocation
-    # checkpoint rebuilt an identical count table whose plan differed
-    # only by the lang column in the pre-aggregation projection, paying
-    # one extra corpus tokenize pass per run.
+    # Same discipline as doc_perplexity_proxy — the same scorer over the
+    # SAME cached vocabulary table (_unigram_freq).
     freq = _unigram_freq(spark, sf_dir)
-    total = freq.agg(F.sum("c").alias("n"))
-    scored = (
-        toks.join(F.broadcast(freq), "token")
-        .join(F.broadcast(total))
-        .groupBy("doc_id", "lang")
-        .agg(
-            F.round(
-                -F.sum(F.log(F.col("c").cast("double") / F.col("n"))) / F.count("*"), 6
-            ).alias("score")
-        )
-    )
+    lm = F.broadcast(freq.join(F.broadcast(freq.agg(F.sum("c").alias("n")))))
+    scored = tx.unigram_lm_scores(
+        _load_parallel(spark, sf_dir, "documents"), lm, F.col("n"), "doc_id", "lang"
+    ).drop("n_tokens")
     # …and binned (the per-doc score table CCNet materializes between its
     # scoring and bucketing passes — narrow: id, lang, score, bin) feeds
     # BOTH the histogram/threshold branch and the final bucket join.
@@ -2568,7 +2522,6 @@ def ccnet_perplexity_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# (round 9, session 2)
 # --------------------------------------------------------------------------
 # heaps_law_fit — vocabulary-growth curve over nested random subsamples
 # --------------------------------------------------------------------------

@@ -15,7 +15,6 @@ from kafka_streams_example_spark.registry import register
 from kafka_streams_example_spark.sources.files import load_table
 
 
-# (from llm_extra2.py)
 # --------------------------------------------------------------------------
 # ewma_trailing_signal
 # --------------------------------------------------------------------------
@@ -75,7 +74,6 @@ def ewma_trailing_signal(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# (from llm_extra3.py)
 # --------------------------------------------------------------------------
 # time_weighted_average — piecewise-constant TWA per user
 # --------------------------------------------------------------------------
@@ -138,7 +136,6 @@ def time_weighted_average(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# (from llm_extra6.py)
 # --------------------------------------------------------------------------
 # resample_fill_forward — daily LOCF resampling per user
 # --------------------------------------------------------------------------
@@ -214,7 +211,6 @@ def resample_fill_forward(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# (from llm_extra7.py)
 # --------------------------------------------------------------------------
 # seasonal_residual_anomalies — anomalies vs a periodic baseline
 # --------------------------------------------------------------------------
@@ -276,7 +272,6 @@ def seasonal_residual_anomalies(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# (from llm_extra7.py)
 # --------------------------------------------------------------------------
 # rolling_active_users — DAU / trailing WAU / stickiness
 # --------------------------------------------------------------------------
@@ -330,7 +325,6 @@ def rolling_active_users(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# (from llm_extra9.py)
 # --------------------------------------------------------------------------
 # error_burst_detection — consecutive-error runs (gaps-and-islands)
 # --------------------------------------------------------------------------
@@ -409,7 +403,6 @@ def error_burst_detection(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# (from llm_extra9.py)
 # --------------------------------------------------------------------------
 # weekly_revenue_wow — period-over-period trend
 # --------------------------------------------------------------------------
@@ -455,7 +448,6 @@ def weekly_revenue_wow(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# (from llm_extra16.py)
 # --------------------------------------------------------------------------
 # acf_daily_events — autocorrelation profile of the daily activity series
 # --------------------------------------------------------------------------
@@ -543,7 +535,6 @@ def acf_daily_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# (from llm_extra16.py)
 # --------------------------------------------------------------------------
 # cusum_changepoint — CUSUM drift scan over the daily series
 # --------------------------------------------------------------------------
@@ -643,7 +634,6 @@ def cusum_changepoint(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# (from llm_extra22.py)
 # --------------------------------------------------------------------------
 # theil_sen_trend — robust daily-volume slope vs OLS
 # --------------------------------------------------------------------------
@@ -729,7 +719,6 @@ def theil_sen_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# (from llm_extra22.py)
 # --------------------------------------------------------------------------
 # holt_linear_trace — double exponential smoothing, dyadic coefficients
 # --------------------------------------------------------------------------

@@ -1,15 +1,21 @@
-"""Streaming ingest contract gate — the data-contract validation suite
-(queries/operational.py:data_contract_validation) as a standing Structured
-Streaming program. Violation counts are plain sums, so they aggregate
-incrementally in update mode and the cumulative stream state always
-equals the batch suite run over the union of everything ingested —
-exactly the "run the contract per ingest batch, merge counts as sums"
-scale story SCALE.md §14 claims, here proven by the batch/stream parity
-test.
+"""Standing Structured Streaming twins of batch queries, and the
+operators each twin shares with its batch query, so that one decision
+is written once and both execution modes run it:
 
-FK integrity uses a stream-static join against the parent dimension
-(Spark re-plans the static side per micro-batch, so a slowly-changing
-parent is picked up without restarting the query).
+- ``psi_cells`` and ``psi_by_type``: ``psi_value_drift`` and
+  ``streaming_psi_monitor``;
+- ``manifest_by_shard``: ``shard_manifest`` and
+  ``streaming_shard_manifest``;
+- ``orders_row_flags``: ``data_contract_validation`` and
+  ``streaming_contract_gate``;
+- ``fingerprint_probe`` and ``lang_counters``:
+  ``queries/dedup.py:incremental_ingest_dedup`` and the ingest gates.
+
+The quality gate scores with ``operators/text.py:unigram_lm_scores``,
+the operator of ``doc_perplexity_proxy``. Counters and cell counts
+merge as sums, so each twin's cumulative state equals its batch query
+over everything ingested (SCALE.md §14); the parity tests in
+tests/test_streaming.py check that.
 """
 
 from __future__ import annotations
@@ -18,8 +24,14 @@ import json
 import os
 from typing import Callable
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+
+from kafka_streams_example_spark.functions.hashing import (
+    fingerprint_md5,
+    normalize_text,
+    stable_long,
+)
 
 # Definitions shared with the batch twins in queries/operational.py
 # (psi_value_drift, shard_manifest), whose DuckDB oracles read them too.
@@ -29,6 +41,128 @@ _PSI_EPS = 0.5  # Laplace smoothing so empty bins stay finite
 _PSI_ALERT = 0.25  # industry-standard "significant shift" threshold
 _MAN_SHARDS = 16
 _MAN_MOD = (1 << 60) - 1  # commutative-checksum modulus
+
+
+def psi_cells(events: DataFrame, *keys: str) -> DataFrame:
+    """(event_type, *keys, bin, c): event counts per value bin. A value
+    falls in one of _PSI_BINS bins of width _PSI_BIN_WIDTH; the last bin
+    is open-ended."""
+    return (
+        events.select(
+            "event_type",
+            *keys,
+            F.least(
+                F.floor(F.col("value") / _PSI_BIN_WIDTH).cast("long"),
+                F.lit(_PSI_BINS - 1),
+            ).alias("bin"),
+        )
+        .groupBy("event_type", *keys, "bin")
+        .agg(F.count("*").alias("c"))
+    )
+
+
+def psi_by_type(reference: DataFrame, current: DataFrame) -> DataFrame:
+    """Population Stability Index per event type between the psi_cells
+    of a reference and a current window:
+    (event_type, n_before, n_after, psi, drifted).
+
+    The grid crosses the event types of EITHER window with every bin,
+    and a missing cell counts 0, so a type seen only in the current
+    window is scored against an empty reference. Shares are smoothed by
+    _PSI_EPS per bin; psi is the sum of (p - q)·ln(p / q) over the bins,
+    rounded to 6 dp, and drifted compares that rounded value with
+    _PSI_ALERT so every engine thresholds the same number."""
+    cells = reference.select(
+        "event_type", "bin", F.col("c").alias("nb"), F.lit(0).alias("na")
+    ).unionByName(
+        current.select("event_type", "bin", F.lit(0).alias("nb"), F.col("c").alias("na"))
+    )
+    # Each cell spreads over all bins of its type, counting in its own bin
+    # and 0 in the others: that builds the full grid while reading each
+    # window once (a distinct-types branch would rescan both).
+    spread = cells.select(
+        "*", F.explode(F.sequence(F.lit(0), F.lit(_PSI_BINS - 1))).alias("g")
+    )
+    own = F.col("g") == F.col("bin")
+    grid = spread.groupBy("event_type", "g").agg(
+        F.sum(F.when(own, F.col("nb")).otherwise(0)).alias("nb"),
+        F.sum(F.when(own, F.col("na")).otherwise(0)).alias("na"),
+    )
+    w_tot = Window.partitionBy("event_type")
+    denom = float(_PSI_EPS * _PSI_BINS)
+    p = (F.col("nb") + _PSI_EPS) / (F.sum("nb").over(w_tot) + denom)
+    q = (F.col("na") + _PSI_EPS) / (F.sum("na").over(w_tot) + denom)
+    terms = grid.select(
+        "event_type",
+        F.sum("nb").over(w_tot).alias("tnb"),
+        F.sum("na").over(w_tot).alias("tna"),
+        ((p - q) * F.log(p / q)).alias("term"),
+    )
+    psi = F.round(F.sum("term"), 6)
+    return terms.groupBy("event_type").agg(
+        F.max("tnb").cast("long").alias("n_before"),
+        F.max("tna").cast("long").alias("n_after"),
+        psi.alias("psi"),
+        (psi > _PSI_ALERT).alias("drifted"),
+    )
+
+
+def manifest_by_shard(docs: DataFrame) -> DataFrame:
+    """(shard, n_docs, total_chars, content_checksum) over
+    (doc_id, text, n_chars) rows. Docs go to _MAN_SHARDS shards by id
+    hash; the checksum is the sum of the 60-bit normalized-text
+    fingerprints mod _MAN_MOD. The sum is commutative, so scan order,
+    partitioning, shuffles and micro-batch boundaries cannot change it.
+    It runs in DECIMAL(38,0) before the modulus, because a long sum of
+    fingerprints below 2^60 would wrap at 2^63 where DuckDB's HUGEINT
+    does not."""
+    t = docs.select(
+        (stable_long(F.col("doc_id").cast("string")) % _MAN_SHARDS).alias("shard"),
+        "n_chars",
+        stable_long(normalize_text(F.col("text"))).alias("fph"),
+    )
+    return t.groupBy("shard").agg(
+        F.count("*").cast("long").alias("n_docs"),
+        F.sum("n_chars").cast("long").alias("total_chars"),
+        (F.sum(F.col("fph").cast("decimal(38,0)")) % _MAN_MOD)
+        .cast("long")
+        .alias("content_checksum"),
+    )
+
+
+def orders_row_flags() -> dict[str, Column]:
+    """The row-level orders checks of the data contract, by check name:
+    one boolean per row, true on a violation. ``fk_orders_customer``
+    reads ``c_custkey`` of an orders→customer left join (null means an
+    orphan order); the others read the orders row alone. A function,
+    not module constants, so importing this module needs no live
+    SparkContext."""
+    return {
+        "fk_orders_customer": F.col("c_custkey").isNull(),
+        "enum_orderstatus": ~F.col("o_orderstatus").isin("O", "F", "P")
+        | F.col("o_orderstatus").isNull(),
+        "range_totalprice_positive": F.col("o_totalprice").isNull()
+        | (F.col("o_totalprice") <= 0.0),
+    }
+
+
+def fingerprint_probe(docs: DataFrame, index_fps: DataFrame) -> DataFrame:
+    """(fp, lang, hit): each doc's normalized-text fingerprint, left-joined
+    to the distinct index fingerprints ``index_fps`` (fp); hit is 1 on a
+    match and null for a new fingerprint."""
+    return docs.select("lang", fingerprint_md5(F.col("text")).alias("fp")).join(
+        index_fps.withColumn("hit", F.lit(1)), "fp", "left"
+    )
+
+
+def lang_counters(probed: DataFrame, dup: str) -> DataFrame:
+    """Per-lang (n_incoming, <dup>, n_new) over (lang, hit) rows: a
+    non-null hit counts as a duplicate of the index, a null one as new."""
+    return probed.groupBy("lang").agg(
+        F.count("*").alias("n_incoming"),
+        F.count(F.when(F.col("hit").isNotNull(), 1)).alias(dup),
+        F.count(F.when(F.col("hit").isNull(), 1)).alias("n_new"),
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -179,46 +313,54 @@ def _exactly_once_publish(
     return publish
 
 
+def _earlier_index(owner: SparkSession, idx_dir: str, batch_id: int) -> DataFrame:
+    """An ingest index's partitions from batches STRICTLY before
+    ``batch_id`` (partition-pruned), so a crashed attempt's own
+    half-written batch=<id> partition can never flip its replay's
+    classifications."""
+    return owner.read.parquet(idx_dir).filter(F.col("batch") < batch_id)
+
+
+def _classify_by_id(
+    batch_df: DataFrame, keyed: DataFrame, hits: DataFrame, index_cols: list[str]
+) -> tuple[DataFrame, DataFrame]:
+    """The near-dup gates' per-batch outcome. ``hits`` holds the ``id``
+    of every batch doc that matched the index; the counters classify
+    those docs as n_neardup_vs_index, and the novel docs' ``keyed``
+    rows (id, *index_cols) become the batch's distinct index rows."""
+    hit_ids = hits.select("id").distinct().withColumn("hit", F.lit(1))
+    probed = batch_df.select(F.col("doc_id").alias("id"), "lang").join(
+        hit_ids, "id", "left"
+    )
+    novel = keyed.join(hit_ids, "id", "left_anti").select(*index_cols).distinct()
+    return lang_counters(probed, "n_neardup_vs_index"), novel
+
+
 def streaming_contract_gate(orders_stream: DataFrame, customer: DataFrame) -> DataFrame:
     """Cumulative contract-violation counters over an orders stream:
     one output row per check with running (n_rows, n_violations) —
     update mode emits refreshed counters each micro-batch.
 
-    Checks mirror the batch suite's orders rows: FK orders→customer
-    (stream-static left join), enum domain on o_orderstatus, and the
-    o_totalprice positivity range check. (PK uniqueness needs
-    cross-batch distinct state and belongs to the dedup tier —
-    dedup_stream_within_watermark — not a counter gate.)"""
+    The checks are ``orders_row_flags``, the orders rows of the batch
+    suite, with the FK probe a stream-static left join (Spark re-plans
+    the static side per micro-batch, so a slowly-changing parent is
+    picked up without a restart). PK uniqueness needs cross-batch
+    distinct state and belongs to the dedup tier —
+    dedup_stream_within_watermark — not a counter gate."""
     probed = orders_stream.join(
         F.broadcast(customer.select("c_custkey")),
         orders_stream["o_custkey"] == customer["c_custkey"],
         "left",
     )
-    checks = probed.select(
-        F.col("c_custkey").isNull().cast("long").alias("fk_orders_customer"),
-        (
-            ~F.col("o_orderstatus").isin("O", "F", "P")
-            | F.col("o_orderstatus").isNull()
-        )
-        .cast("long")
-        .alias("enum_orderstatus"),
-        (F.col("o_totalprice").isNull() | (F.col("o_totalprice") <= 0.0))
-        .cast("long")
-        .alias("range_totalprice_positive"),
-    )
-    stacked = checks.select(
+    stacked = probed.select(
         F.explode(
             F.array(
                 *[
                     F.struct(
                         F.lit(name).alias("check_name"),
-                        F.col(name).alias("v"),
+                        flag.cast("long").alias("v"),
                     )
-                    for name in (
-                        "fk_orders_customer",
-                        "enum_orderstatus",
-                        "range_totalprice_positive",
-                    )
+                    for name, flag in orders_row_flags().items()
                 ]
             )
         ).alias("c")
@@ -235,17 +377,18 @@ def streaming_psi_monitor(
     state_dir: str | None = None,
 ) -> tuple[DataFrame, "callable"]:
     """The PSI drift monitor (queries/operational.py:psi_value_drift) as a
-    standing stream: the reference window is a STATIC per-(type, bin)
-    count table (computed once, never rescanned); the current window is
-    the stream's cumulative (type, bin) counts in update mode. Returns
-    the aggregated cell stream plus a foreachBatch function that joins
-    the refreshed cells against the broadcast reference grid and
-    publishes the per-type PSI to a ``psi_live`` view backed by a real
-    parquet table under ``state_dir`` — the alerting surface a monitor
-    would publish. The running cell table is likewise published as
-    ``psi_cells``; both views are registered on the session the monitor
-    was BUILT on (foreachBatch runs under a cloned session whose temp
-    views the caller cannot see).
+    standing stream: the reference window is a STATIC psi_cells table
+    (event_type, bin, c), computed once and never rescanned; the current
+    window is the stream's cumulative psi_cells counts in update mode.
+    Returns the aggregated cell stream plus a foreachBatch function that
+    merges the refreshed cells and publishes ``psi_by_type`` of the two
+    windows as (event_type, psi, drifted) to a ``psi_live`` view backed
+    by a real parquet table under ``state_dir`` — the alerting surface a
+    monitor would publish. Every event type of either window gets a row.
+    The running cell table is likewise published as ``psi_cells`` (its
+    count column is ``na``); both views are registered on the session
+    the monitor was BUILT on (foreachBatch runs under a cloned session
+    whose temp views the caller cannot see).
 
     This is the incremental shape SCALE.md §14 describes: cell counts
     merge as sums, so the monitor's per-batch work is the micro-batch
@@ -262,18 +405,7 @@ def streaming_psi_monitor(
     always see the committed slot); an EXTERNAL multi-reader surface
     should instead read the committed marker and scan the named slot,
     or publish to append-only storage."""
-    cells = (
-        events_stream.select(
-            "event_type",
-            F.least(
-                F.floor(F.col("value") / _PSI_BIN_WIDTH).cast("long"),
-                F.lit(_PSI_BINS - 1),
-            ).alias("bin"),
-        )
-        .groupBy("event_type", "bin")
-        .agg(F.count("*").alias("na"))
-    )
-    ref = reference_cells.withColumnRenamed("c", "nb")
+    cells = psi_cells(events_stream).withColumnRenamed("c", "na")
 
     # Standing-monitor state is a REAL table, not a per-batch cache chain
     # (ADVICE r06: the old cache()-per-batch design grew one FULL OUTER
@@ -341,27 +473,9 @@ def streaming_psi_monitor(
         cells_now = owner.read.parquet(path)
         state["cells"] = cells_now
         cells_now.createOrReplaceTempView("psi_cells")
-        denom = float(_PSI_EPS * _PSI_BINS)
-        types = ref.select("event_type").distinct()
-        grid = (
-            types.join(
-                F.broadcast(
-                    owner.range(_PSI_BINS).select(F.col("id").alias("bin"))
-                )
-            )
-            .join(ref, ["event_type", "bin"], "left")
-            .join(cells_now, ["event_type", "bin"], "left")
-            .fillna(0, subset=["nb", "na"])
-        )
-        from pyspark.sql import Window as W
-
-        wt = W.partitionBy("event_type")
-        p = (F.col("nb") + _PSI_EPS) / (F.sum("nb").over(wt) + denom)
-        q = (F.col("na") + _PSI_EPS) / (F.sum("na").over(wt) + denom)
-        psi = F.round(F.sum((p - q) * F.log(p / q)).over(wt), 6)
-        out = grid.select(
-            "event_type", psi.alias("psi"), (psi > _PSI_ALERT).alias("drifted")
-        ).distinct()
+        out = psi_by_type(
+            reference_cells, cells_now.withColumnRenamed("na", "c")
+        ).select("event_type", "psi", "drifted")
         live_path = os.path.join(gen_root, f"live_gen{gen % 2}")
         out.write.mode("overwrite").parquet(live_path)
         owner.read.parquet(live_path).createOrReplaceTempView("psi_live")
@@ -371,37 +485,17 @@ def streaming_psi_monitor(
 
 def streaming_shard_manifest(docs_stream: DataFrame) -> DataFrame:
     """The reproducible shard manifest (queries/operational.py:shard_manifest)
-    as a streaming accumulator: because the content checksum is a
-    COMMUTATIVE mod-sum, it aggregates incrementally in update mode and
-    the cumulative stream state equals the batch manifest over
-    everything ingested — regardless of arrival order, micro-batch
-    boundaries or shuffle placement. This is the manifest an ingest
-    pipeline publishes continuously so any training run can pin the
-    corpus version without a batch rescan; the batch/stream parity test
-    delivers the fixture out of order and still matches exactly.
+    as a streaming accumulator: ``manifest_by_shard`` over the stream.
+    Its checksum is a COMMUTATIVE mod-sum, so it aggregates incrementally
+    in update mode and the cumulative stream state equals the batch
+    manifest over everything ingested — regardless of arrival order,
+    micro-batch boundaries or shuffle placement. This is the manifest an
+    ingest pipeline publishes continuously so any training run can pin
+    the corpus version without a batch rescan; the batch/stream parity
+    test delivers the fixture out of order and still matches exactly.
 
-    Expects columns: doc_id LONG, text STRING, n_chars LONG. The wide
-    sum runs in DECIMAL(38,0) before the final modulus (fingerprints
-    are < 2^60; a long sum would wrap)."""
-    from kafka_streams_example_spark.functions.hashing import (
-        normalize_text,
-        stable_long,
-    )
-
-    t = docs_stream.select(
-        (stable_long(F.col("doc_id").cast("string")) % _MAN_SHARDS).alias(
-            "shard"
-        ),
-        "n_chars",
-        stable_long(normalize_text(F.col("text"))).alias("fph"),
-    )
-    return t.groupBy("shard").agg(
-        F.count("*").cast("long").alias("n_docs"),
-        F.sum("n_chars").cast("long").alias("total_chars"),
-        (F.sum(F.col("fph").cast("decimal(38,0)")) % _MAN_MOD)
-        .cast("long")
-        .alias("content_checksum"),
-    )
+    Expects columns: doc_id LONG, text STRING, n_chars LONG."""
+    return manifest_by_shard(docs_stream)
 
 
 def streaming_ingest_dedup(
@@ -439,14 +533,12 @@ def streaming_ingest_dedup(
     Exactly-once counters, replay/rewind handling, restart resume, O(1)
     plan depth and the ``ingest_dedup_totals`` view publish are
     ``_exactly_once_publish``'s; this gate supplies the index seed and
-    the probe. The probe filters ``batch < batch_id`` (partition-pruned),
-    so a crashed attempt's own half-written partition can never flip its
-    replay's classifications. See ``streaming_psi_monitor`` for the
-    shared single-reader concurrency note on generation-slot views.
+    the probe, which is the batch query's ``fingerprint_probe`` and
+    ``lang_counters`` against the strictly-earlier index partitions
+    (``_earlier_index``). See ``streaming_psi_monitor`` for the shared
+    single-reader concurrency note on generation-slot views.
     """
     import tempfile
-
-    from kafka_streams_example_spark.functions.hashing import fingerprint_md5
 
     owner = index_seed.sparkSession
     root = state_dir or tempfile.mkdtemp(prefix="ingest_dedup_state_")
@@ -462,29 +554,13 @@ def streaming_ingest_dedup(
         )
 
     def probe(batch_df: DataFrame, batch_id: int) -> tuple[DataFrame, DataFrame]:
-        # The probe reads only index partitions from STRICTLY EARLIER
-        # batches (partition-pruned) — a crashed attempt's own half-written
-        # batch=<id> partition can never flip its replay's classifications.
-        index = (
-            owner.read.parquet(idx_dir)
-            .filter(F.col("batch") < batch_id)
-            .select("fp")
-            .withColumn("hit", F.lit(1))
-        )
-        probed = (
-            batch_df.select(
-                "lang", fingerprint_md5(F.col("text")).alias("fp")
-            )
-            .join(index, "fp", "left")
-        )
-        batch_counts = probed.groupBy("lang").agg(
-            F.count("*").alias("n_incoming"),
-            F.count(F.when(F.col("hit").isNotNull(), 1)).alias("n_dup_vs_index"),
-            F.count(F.when(F.col("hit").isNull(), 1)).alias("n_new"),
+        probed = fingerprint_probe(
+            batch_df, _earlier_index(owner, idx_dir, batch_id).select("fp")
         )
         # novel fingerprints: distinct within the batch, absent from the
         # index snapshot
-        return batch_counts, probed.filter(F.col("hit").isNull()).select("fp").distinct()
+        novel = probed.filter(F.col("hit").isNull()).select("fp").distinct()
+        return lang_counters(probed, "n_dup_vs_index"), novel
 
     return docs_stream, _exactly_once_publish(
         owner, root, "ingest_dedup_totals", "fp_index", write_seed, probe
@@ -559,40 +635,15 @@ def streaming_ingest_neardup(
         ).parquet(os.path.join(idx_dir, "batch=-1"))
 
     def probe(batch_df: DataFrame, batch_id: int) -> tuple[DataFrame, DataFrame]:
-        # probe: any band collision against STRICTLY EARLIER batches'
-        # novel docs (partition-pruned; a crashed attempt's half-written
-        # batch=<id> partition can never flip its replay's classes)
+        # any band collision against the strictly-earlier index
         index = (
-            owner.read.parquet(idx_dir)
-            .filter(F.col("batch") < batch_id)
+            _earlier_index(owner, idx_dir, batch_id)
             .select("band", "bhash")
             .distinct()
-            .withColumn("hit", F.lit(1))
         )
         batch_bands = _bands_of(batch_df)
-        hit_ids = (
-            batch_bands.join(index, ["band", "bhash"])
-            .select("id")
-            .distinct()
-            .withColumn("dup", F.lit(1))
-        )
-        probed = batch_df.select(F.col("doc_id").alias("id"), "lang").join(
-            hit_ids, "id", "left"
-        )
-        batch_counts = probed.groupBy("lang").agg(
-            F.count("*").alias("n_incoming"),
-            F.count(F.when(F.col("dup").isNotNull(), 1)).alias(
-                "n_neardup_vs_index"
-            ),
-            F.count(F.when(F.col("dup").isNull(), 1)).alias("n_new"),
-        )
-        # novel docs' band hashes extend the index
-        new_bands = (
-            batch_bands.join(hit_ids, "id", "left_anti")
-            .select("band", "bhash")
-            .distinct()
-        )
-        return batch_counts, new_bands
+        hits = batch_bands.join(index, ["band", "bhash"])
+        return _classify_by_id(batch_df, batch_bands, hits, ["band", "bhash"])
 
     return docs_stream, _exactly_once_publish(
         owner, root, "ingest_neardup_totals", "band_index", write_seed, probe
@@ -881,8 +932,9 @@ def streaming_quality_gate(
     threshold: float | None = None,
 ) -> tuple[DataFrame, "callable"]:
     """Quality filtering as a STANDING ingest gate — the fourth ingest
-    twin: the batch quality cutoff (``doc_perplexity_proxy`` scoring +
-    ``quality_threshold_for_budget``'s token-budget threshold solve) as a
+    twin: the batch quality cutoff (``doc_perplexity_proxy``'s
+    ``unigram_lm_scores`` + ``quality_threshold_for_budget``'s
+    token-budget threshold solve) as a
     per-micro-batch keep/drop decision published through
     ``_exactly_once_publish`` (exactly-once counters, replay/rewind
     handling, restart resume, O(1) plan depth).
@@ -908,10 +960,10 @@ def streaming_quality_gate(
       center-valued ``score <= bin`` cut would reject the upper half of
       the threshold bin and systematically undershoot the budget).
 
-    Per batch: tokenize, score avg-neg-logp over IN-VOCAB tokens
-    (rounded 6dp, the batch query's discipline), keep docs passing the
-    cutoff predicate above. Docs with ZERO in-vocab tokens are unscorable
-    and REJECTED — the safe direction for a quality gate (and the
+    Per batch: score each doc with ``unigram_lm_scores`` against the
+    seed LM, keep docs passing the cutoff predicate above. Docs with
+    ZERO in-vocab tokens are unscorable and REJECTED — the safe
+    direction for a quality gate (and the
     correct reading of the proxy: a doc sharing no vocabulary with the
     reference corpus is exactly what the filter exists to stop).
     Rejected ids land in append-only ``rejects/batch=<id>/`` parquet
@@ -921,32 +973,17 @@ def streaming_quality_gate(
     """
     import tempfile
 
-    from kafka_streams_example_spark.operators.text import tokens
+    from kafka_streams_example_spark.operators.text import tokens, unigram_lm_scores
 
     owner = seed_corpus.sparkSession
     root = state_dir or tempfile.mkdtemp(prefix="quality_state_")
     lm_path = os.path.join(root, "lm_freq")
     thr_path = os.path.join(root, "threshold.json")
 
-    def _doc_tokens(df: DataFrame) -> DataFrame:
-        return df.select(
-            F.col("doc_id").alias("id"), F.col("text").alias("txt")
-        ).select("id", F.explode(tokens(F.lower(F.col("txt")))).alias("token"))
-
-    def _scores(tok_df: DataFrame, freq: DataFrame, n_total: int) -> DataFrame:
-        """(id, token) ⨝ LM → (id, score) over in-vocab tokens, 6dp."""
-        return (
-            tok_df.join(freq, "token")
-            .withColumn(
-                "logp", F.log(F.col("c").cast("double") / F.lit(float(n_total)))
-            )
-            .groupBy("id")
-            .agg(F.round(-F.sum("logp") / F.count("*"), 6).alias("score"))
-        )
-
     def write_seed() -> None:
-        seed_toks = _doc_tokens(seed_corpus)
-        seed_toks.groupBy("token").agg(F.count("*").alias("c")).write.mode(
+        seed_corpus.select(
+            F.explode(tokens(F.lower(F.col("text")))).alias("token")
+        ).groupBy("token").agg(F.count("*").alias("c")).write.mode(
             "overwrite"
         ).parquet(lm_path)
         freq = owner.read.parquet(lm_path)
@@ -955,23 +992,19 @@ def streaming_quality_gate(
         if cutoff is None:
             # histogram-CDF token-budget solve on the SEED
             # (floor(score*100) integer bins — quality_threshold_for_
-            # budget's binning — bins-bounded frame, no corpus sort)
-            sc = _scores(seed_toks, freq, n_total)
+            # budget's binning — bins-bounded frame, no corpus sort). The
+            # LM is the seed's own, so every seed token is in vocabulary
+            # and n_tokens is each doc's full token mass.
             mass = (
-                _doc_tokens(seed_corpus)
-                .groupBy("id")
-                .agg(F.count("*").alias("nt"))
-                .join(sc, "id")
+                unigram_lm_scores(seed_corpus, freq, F.lit(float(n_total)), "doc_id")
                 .groupBy(
                     F.floor(F.col("score") * 100.0).cast("bigint").alias("bin")
                 )
-                .agg(F.sum("nt").alias("m"))
+                .agg(F.sum("n_tokens").alias("m"))
             )
-            from pyspark.sql.window import Window as _W
-
             cum = mass.withColumn(
-                "cm", F.sum("m").over(_W.orderBy("bin").rowsBetween(
-                    _W.unboundedPreceding, _W.currentRow))
+                "cm", F.sum("m").over(Window.orderBy("bin").rowsBetween(
+                    Window.unboundedPreceding, Window.currentRow))
             )
             total_m = mass.agg(F.sum("m")).first()[0] or 0
             row = (
@@ -1001,10 +1034,10 @@ def streaming_quality_gate(
         freq = owner.read.parquet(lm_path)
         if _parquet_dir_rows(lm_path) <= _BENCH_IDX_BCAST_MAX_ROWS:
             freq = F.broadcast(freq)
-        sc = _scores(_doc_tokens(batch_df), freq, n_total)
+        sc = unigram_lm_scores(batch_df, freq, F.lit(float(n_total)), "doc_id")
         probed = (
-            batch_df.select(F.col("doc_id").alias("id"), "lang")
-            .join(sc, "id", "left")
+            batch_df.select("doc_id", "lang")
+            .join(sc.select("doc_id", "score"), "doc_id", "left")
             .withColumn(
                 "kept",
                 F.col("score").isNotNull() & _keep_pred(F.col("score")),
@@ -1016,9 +1049,7 @@ def streaming_quality_gate(
             F.count(F.when(~F.col("kept"), 1)).alias("n_rejected"),
             F.count(F.when(F.col("score").isNull(), 1)).alias("n_unscorable"),
         )
-        rejected = probed.filter(~F.col("kept")).select(
-            F.col("id").alias("doc_id"), "score"
-        )
+        rejected = probed.filter(~F.col("kept")).select("doc_id", "score")
         return batch_counts, rejected
 
     publish = _exactly_once_publish(
@@ -1110,8 +1141,7 @@ def streaming_ingest_phash(
         # probe strictly-earlier batches: band collision proposes, exact
         # Hamming on the stored full hashes confirms
         index = (
-            owner.read.parquet(idx_dir)
-            .filter(F.col("batch") < batch_id)
+            _earlier_index(owner, idx_dir, batch_id)
             .select("band", "bv", F.col("dhash").alias("idx_dhash"))
             .distinct()
         )
@@ -1125,33 +1155,10 @@ def streaming_ingest_phash(
             )
             index = index.join(ok_buckets, ["band", "bv"])
         batch_bands = _hashes_of(batch_df)
-        hit_ids = (
-            batch_bands.join(index, ["band", "bv"])
-            .filter(
-                F.bit_count(F.col("dhash").bitwiseXOR(F.col("idx_dhash")))
-                <= max_hamming
-            )
-            .select("id")
-            .distinct()
-            .withColumn("dup", F.lit(1))
+        hits = batch_bands.join(index, ["band", "bv"]).filter(
+            F.bit_count(F.col("dhash").bitwiseXOR(F.col("idx_dhash"))) <= max_hamming
         )
-        probed = batch_df.select(F.col("doc_id").alias("id"), "lang").join(
-            hit_ids, "id", "left"
-        )
-        batch_counts = probed.groupBy("lang").agg(
-            F.count("*").alias("n_incoming"),
-            F.count(F.when(F.col("dup").isNotNull(), 1)).alias(
-                "n_neardup_vs_index"
-            ),
-            F.count(F.when(F.col("dup").isNull(), 1)).alias("n_new"),
-        )
-        # novel images extend the index
-        new_hashes = (
-            batch_bands.join(hit_ids, "id", "left_anti")
-            .select("band", "bv", "dhash")
-            .distinct()
-        )
-        return batch_counts, new_hashes
+        return _classify_by_id(batch_df, batch_bands, hits, ["band", "bv", "dhash"])
 
     return docs_stream, _exactly_once_publish(
         owner, root, "ingest_phash_totals", "phash_index", write_seed, probe

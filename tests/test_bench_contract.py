@@ -132,6 +132,29 @@ def test_rotation_regressed_query_returns_to_front(tmp_path, monkeypatch):
     assert names.index(other[0]) > len(names) - 3
 
 
+def test_rotation_touched_green_query_precedes_untouched_green(tmp_path, monkeypatch):
+    """A green query whose plan changed after its green row (one listed
+    in _TOUCHED_THIS_ROUND) re-verifies ahead of an untouched green
+    query with the same recorded history, even one registered earlier."""
+    sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+    import __spark_entry__ as e
+    from kafka_streams_example_spark import registry
+
+    names = list(registry.QUERIES)
+    untouched = next(n for n in names if n not in e._TOUCHED_THIS_ROUND)
+    touched = next(
+        n for n in names[names.index(untouched) + 1 :] if n in e._TOUCHED_THIS_ROUND
+    )
+    green_row = {"rows_match": True, "schema_match": True,
+                 "hash_match": True, "err": None, "spark_rows": 1}
+    (tmp_path / "CORRECTNESS_r90.json").write_text(
+        json.dumps({untouched: green_row, touched: green_row})
+    )
+    monkeypatch.setattr(e, "_REPO", str(tmp_path))
+    order = e._rotated(names)
+    assert order.index(touched) < order.index(untouched)
+
+
 def test_driver_verification_backlog_fits_window():
     """The driver verifies only the first ~50 registered queries per
     round. Registering new queries faster than the window drains leaves

@@ -78,3 +78,30 @@ def test_any_query_module_imports_standalone():
             cwd=os.path.dirname(PKG),
         )
         assert r.returncode == 0, (m, r.stderr[-2000:])
+
+
+def test_lower_layers_never_import_queries():
+    """operators/, streaming/, plans/, functions/ and sources/ hold the
+    operators that batch queries and their streaming twins share, so
+    they sit below queries/: none of them may import it, at module
+    level or inside a function."""
+    queries = "kafka_streams_example_spark.queries"
+    bad = []
+    for sub in ("operators", "streaming", "plans", "functions", "sources"):
+        for path in glob.glob(os.path.join(PKG, sub, "**", "*.py"), recursive=True):
+            package = os.path.relpath(os.path.dirname(path), os.path.dirname(PKG))
+            package = package.split(os.sep)
+            for node in ast.walk(ast.parse(open(path).read())):
+                if isinstance(node, ast.Import):
+                    mods = [a.name for a in node.names]
+                elif isinstance(node, ast.ImportFrom):
+                    base = node.module or ""
+                    if node.level:
+                        parent = package[: len(package) - node.level + 1]
+                        base = ".".join(parent + ([base] if base else []))
+                    mods = [base] + [f"{base}.{a.name}" for a in node.names]
+                else:
+                    continue
+                if any(m == queries or m.startswith(queries + ".") for m in mods):
+                    bad.append((os.path.relpath(path, PKG), node.lineno))
+    assert not bad, bad

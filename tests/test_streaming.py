@@ -1298,6 +1298,52 @@ def test_streaming_psi_monitor_matches_batch_query(spark, tmp_path):
         assert live[et].drifted == b.drifted
 
 
+def test_streaming_psi_monitor_scores_a_type_new_in_the_stream(spark, tmp_path):
+    """An event type absent from the reference window still gets a
+    psi_live row: scored against an empty reference, exactly as the
+    batch operator psi_by_type scores the same two cell tables."""
+    from kafka_streams_example_spark.streaming.contract import (
+        psi_by_type,
+        psi_cells,
+        streaming_psi_monitor,
+    )
+
+    schema = "event_type STRING, value DOUBLE"
+    ref_rows = [("click", v) for v in (10.0, 60.0, 120.0, 130.0, 260.0, 480.0)]
+    live_rows = [("click", 20.0), ("click", 70.0)] + [
+        ("refund", v) for v in (5.0, 15.0, 25.0)
+    ]
+    ref = psi_cells(spark.createDataFrame(ref_rows, schema))
+    src = tmp_path / "psi_new_type_in"
+    write_jsonl(
+        str(src / "b0.json"), [{"event_type": t, "value": v} for t, v in live_rows]
+    )
+    stream = spark.readStream.schema(schema).json(str(src))
+    cells, publish = streaming_psi_monitor(
+        stream, ref, state_dir=str(tmp_path / "psi_new_type_state")
+    )
+    q = (
+        cells.writeStream.outputMode("update")
+        .foreachBatch(publish)
+        .option("checkpointLocation", str(tmp_path / "psi_new_type_ck"))
+        .start()
+    )
+    q.processAllAvailable()
+    q.stop()
+    live = {r.event_type: r for r in spark.sql("SELECT * FROM psi_live").collect()}
+    batch = {
+        r.event_type: r
+        for r in psi_by_type(
+            ref, psi_cells(spark.createDataFrame(live_rows, schema))
+        ).collect()
+    }
+    assert set(live) == set(batch) == {"click", "refund"}
+    for et, b in batch.items():
+        assert abs(live[et].psi - b.psi) < 1e-9, (et, live[et].psi, b.psi)
+        assert live[et].drifted == b.drifted
+    assert live["refund"].drifted is True
+
+
 def test_streaming_psi_monitor_state_stays_bounded(spark, tmp_path):
     """A STANDING monitor must not grow per-batch: after many micro-batches
     the published psi_cells table is a lineage-free checkpoint (no join
