@@ -163,6 +163,13 @@ _TOUCHED_THIS_ROUND: set[str] = {
     "quality_filter_threshold_sweep",
     "quality_threshold_for_budget",
     "corpus_curation_pipeline",
+    # NULL-safe blocking key and shared LSH/token operators (operators/
+    # dedup.py:block_key, band_pairs; operators/text.py:token_counts)
+    "neardup_ngram_pairs",
+    "dedup_clusters",
+    "contamination_blast_radius",
+    "bbit_minhash_estimate",
+    "zipf_law_fit",
 }
 
 

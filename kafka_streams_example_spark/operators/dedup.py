@@ -6,7 +6,7 @@ Four tiers, cheapest first — the order a real 100TB dedup pass runs them:
                             shuffle on the (high-cardinality, unskewed)
                             hash key; survives any scale.
 2. ``ngram_jaccard_pairs``  exact near-dup pairs within cheap blocking
-                            buckets (prefix key) — the verifier stage.
+                            buckets (``block_key``) — the verifier stage.
 3. ``minhash_pairs``        MinHash + LSH banding: signature → band →
                             bucket equi-join → candidate pairs, then exact
                             Jaccard verify. The scale path: no cross
@@ -14,6 +14,17 @@ Four tiers, cheapest first — the order a real 100TB dedup pass runs them:
                             cardinality grows with the corpus.
 4. ``simhash64``            64-bit SimHash fingerprint for Hamming-distance
                             near-dup (cheap bitwise comparison downstream).
+
+The LSH pieces are shared by every banded near-dup query: band keys come
+from ``minhash_band_hashes`` (md5 of signature runs) or
+``fingerprint_bands`` (bit slices of a 60-bit SimHash/dHash), and
+``band_pairs`` is the one (band, key) self-join that turns them into
+candidate pairs.
+
+Blocking rule (``block_key``): two documents share a block only when
+``lang`` and ``source`` are both non-NULL and equal on both — the
+pairing of the SQL equality join ``a.lang = b.lang AND a.source =
+b.source``. A NULL ``lang`` or ``source`` never blocks.
 
 Determinism: keep-min(doc_id) per duplicate group; MinHash permutations are
 seeded linear hashes over a portable md5-derived base hash, so results are
@@ -51,6 +62,22 @@ def exact_dedup(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -
 # compressed scan bytes -> hashed-shingle frame (parquet decompression
 # plus the int-array expansion; SCALE.md §caches)
 _CORPUS_CACHE_EXPANSION = 8
+
+
+def block_key() -> Column:
+    """The near-dup blocking key: ``lang`` and ``source`` each
+    base64-encoded, joined by '|'. base64 never contains '|', so distinct
+    (lang, source) pairs never collide (a plain ``concat_ws('|', ...)``
+    merges ('a|b', 'c') with ('a', 'b|c')). ``concat`` is NULL if any
+    part is, and a NULL key joins nothing, so a document with a NULL
+    ``lang`` or ``source`` pairs with no other — the SQL equality join's
+    semantics, where ``concat_ws`` would skip the NULL and merge
+    (NULL, 'x') with ('x', NULL)."""
+    return F.concat(
+        F.base64(F.encode(F.col("lang"), "utf-8")),
+        F.lit("|"),
+        F.base64(F.encode(F.col("source"), "utf-8")),
+    )
 
 
 def hashed_shingles_sql(shingles: str) -> str:
@@ -146,6 +173,54 @@ def minhash_band_hashes(
     ).select("id", F.col("bk.band").alias("band"), F.col("bk.bhash").alias("bhash"))
 
 
+def fingerprint_bands(fp: DataFrame, col: str, bands: int, bits: int) -> DataFrame:
+    """Explode a frame with an integer fingerprint column ``col`` to one
+    row per band: its columns plus ``band`` (index) and ``bv`` (bits
+    ``band*bits`` to ``(band+1)*bits - 1`` of the fingerprint), the LSH
+    keys Hamming near-dup candidates join on. Two fingerprints within
+    Hamming distance d < ``bands`` agree on some band (pigeonhole). The
+    slices are unrolled with LITERAL shift widths: shiftright takes a
+    Python int, and a float-pow division would corrupt low bits once the
+    fingerprint exceeds 2^53."""
+    band_structs = F.array(
+        *[
+            F.struct(
+                F.lit(b).alias("band"),
+                F.shiftright(F.col(col), b * bits)
+                .bitwiseAND(F.lit((1 << bits) - 1))
+                .alias("bv"),
+            )
+            for b in range(bands)
+        ]
+    )
+    return fp.select(*fp.columns, F.explode(band_structs).alias("bk")).select(
+        *fp.columns, F.col("bk.band").alias("band"), F.col("bk.bv").alias("bv")
+    )
+
+
+def band_pairs(
+    banded: DataFrame, key: str, id_col: str = "id", carry: str | None = None
+) -> DataFrame:
+    """Distinct candidate pairs (id_a, id_b), id_a < id_b, of documents
+    that share a (``band``, ``key``) bucket of ``banded``: the LSH band
+    self-join. Only the ids, the band keys and ``carry`` (if given,
+    returned as ``<carry>a`` / ``<carry>b``) ride the shuffle."""
+    out = [F.col(f"l.{id_col}").alias("id_a"), F.col(f"r.{id_col}").alias("id_b")]
+    if carry is not None:
+        out += [F.col(f"l.{carry}").alias(f"{carry}a"), F.col(f"r.{carry}").alias(f"{carry}b")]
+    return (
+        banded.alias("l")
+        .join(
+            banded.alias("r"),
+            (F.col("l.band") == F.col("r.band"))
+            & (F.col(f"l.{key}") == F.col(f"r.{key}"))
+            & (F.col(f"l.{id_col}") < F.col(f"r.{id_col}")),
+        )
+        .select(*out)
+        .dropDuplicates(["id_a", "id_b"])
+    )
+
+
 def minhash_pairs(
     df: DataFrame,
     text_col: str = "text",
@@ -172,18 +247,7 @@ def minhash_pairs(
     # Banding carries ONLY (id, band key) through the self-join — the
     # shingle arrays would otherwise dominate shuffle volume.
     banded = minhash_band_hashes(docs, num_hashes=num_hashes, bands=bands)
-
-    cand = (
-        banded.alias("l")
-        .join(
-            banded.alias("r"),
-            (F.col("l.band") == F.col("r.band"))
-            & (F.col("l.bhash") == F.col("r.bhash"))
-            & (F.col("l.id") < F.col("r.id")),
-        )
-        .select(F.col("l.id").alias("id_a"), F.col("r.id").alias("id_b"))
-        .dropDuplicates(["id_a", "id_b"])
-    )
+    cand = band_pairs(banded, "bhash")
     sets = docs.select("id", "hsh")
     pairs = (
         cand.join(sets.withColumnRenamed("id", "id_a").withColumnRenamed("hsh", "sh_a"), "id_a")

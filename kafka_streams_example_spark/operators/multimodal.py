@@ -356,23 +356,3 @@ def phash_fingerprints(docs: DataFrame) -> DataFrame:
     return map_rows(
         docs, ["doc_id", "text"], "doc_id LONG, width INT, height INT, dhash LONG", row
     )
-
-
-def dhash_bands(fp: DataFrame, bands: int = _DH_BANDS, bits: int = _DH_BITS) -> DataFrame:
-    """Explode a frame with a ``dhash`` column to one row per band: its
-    columns plus ``band`` (index) and ``bv`` (the band's ``bits``-bit
-    value), the LSH keys near-dup candidates join on."""
-    band_structs = F.array(
-        *[
-            F.struct(
-                F.lit(b).alias("band"),
-                F.shiftright(F.col("dhash"), b * bits)
-                .bitwiseAND(F.lit((1 << bits) - 1))
-                .alias("bv"),
-            )
-            for b in range(bands)
-        ]
-    )
-    return fp.select(*fp.columns, F.explode(band_structs).alias("bk")).select(
-        *fp.columns, F.col("bk.band").alias("band"), F.col("bk.bv").alias("bv")
-    )

@@ -5,12 +5,26 @@ whole-stage codegen — at 100TB, a per-row Python hop here would dominate the
 job. Tokenization is whitespace/regex-based; everything downstream (quality
 scoring, language ID, n-grams) composes from `pyspark.sql.functions`
 higher-order array functions.
+
+Corpus-level building blocks shared by the text queries and the quality
+gate:
+
+- ``token_stream``: one row per lower-cased whitespace token of ``text``
+  (the only place the corpus token explode is written), and
+  ``token_counts``, its (token, c) count — the unigram LM that
+  ``unigram_lm_scores`` scores documents against;
+- the token co-occurrence graph: ``doc_token_sets`` (each document's
+  sorted distinct tokens), ``cooccurrence_edges`` (token pairs u < v with
+  the number of documents holding both, above a support floor) and
+  ``edge_triangles`` (the a < b < c triangle join over that edge table).
 """
 
 from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+
+from kafka_streams_example_spark.operators import sql_name
 
 # Tiny per-language stopword lists for the n-gram/stopword heuristic
 # language scorer. Deterministic and engine-portable; a production system
@@ -150,6 +164,74 @@ def jaccard(a: Column, b: Column) -> Column:
     return F.when(union > 0, inter / union).otherwise(F.lit(0.0))
 
 
+def token_stream(docs: DataFrame, name: str, *keys: str | Column) -> DataFrame:
+    """The corpus token stream: ``keys`` plus one row per lower-cased
+    whitespace token of ``docs.text``, named ``name``. A document with no
+    tokens has no row."""
+    return docs.select(*keys, F.explode(tokens(F.lower(F.col("text")))).alias(name))
+
+
+def token_counts(docs: DataFrame) -> DataFrame:
+    """(token, c): each token's count over the corpus token stream."""
+    return token_stream(docs, "token").groupBy("token").agg(F.count("*").alias("c"))
+
+
+def doc_token_sets(docs: DataFrame) -> DataFrame:
+    """(doc_id, ts): each document's distinct lower-cased tokens, sorted."""
+    return docs.select(
+        "doc_id",
+        F.array_sort(F.array_distinct(tokens(F.lower(F.col("text"))))).alias("ts"),
+    )
+
+
+def cooccurrence_edges(
+    sets: DataFrame, min_support: int, u: str = "u", v: str = "v", support: str = "support"
+) -> DataFrame:
+    """The token co-occurrence graph over ``doc_token_sets`` rows: one
+    (u, v, support) edge per token pair u < v that shares at least
+    ``min_support`` documents, support the number of such documents.
+    Pairs are generated per document from its sorted token set (bounded
+    by the per-doc distinct-token count squared, never a corpus
+    self-join); only the pair count shuffles."""
+    pairs = sets.select(
+        F.explode(
+            F.expr(
+                "flatten(transform(ts, (x, i) ->"
+                " transform(slice(ts, i + 2, size(ts)),"
+                f" y -> struct(x AS {sql_name(u)}, y AS {sql_name(v)}))))"
+            )
+        ).alias("p")
+    ).select(f"p.{u}", f"p.{v}")
+    return (
+        pairs.groupBy(u, v)
+        .agg(F.count("*").alias(support))
+        .filter(F.col(support) >= min_support)
+    )
+
+
+def edge_triangles(
+    e: DataFrame, a: str, b: str, c: str, weight: str | None = None
+) -> DataFrame:
+    """Every triangle of the graph ``e`` (u, v) with u < v exactly once,
+    in a < b < c orientation: the (a, b) edge joins the (b, c) edge on b
+    and the (a, c) edge closes the triangle. With ``weight``, that column
+    of the three edges rides along as s1 (a-b), s2 (b-c) and s3 (a-c).
+    The vocabulary graph is small next to the corpus, so both joins
+    broadcast."""
+
+    def side(x: str, y: str, i: int) -> DataFrame:
+        cols = [F.col("u").alias(x), F.col("v").alias(y)]
+        if weight is not None:
+            cols.append(F.col(weight).alias(f"s{i}"))
+        return e.select(*cols)
+
+    return (
+        side(a, b, 1)
+        .join(F.broadcast(side(b, c, 2)), b)
+        .join(F.broadcast(side(a, c, 3)), [a, c])
+    )
+
+
 def unigram_lm_scores(docs: DataFrame, lm: DataFrame, n: Column, *keys: str) -> DataFrame:
     """The unigram-LM document score per ``keys`` group of ``docs``: the
     lower-cased whitespace tokens of ``text`` inner-join the LM ``lm``
@@ -159,9 +241,9 @@ def unigram_lm_scores(docs: DataFrame, lm: DataFrame, n: Column, *keys: str) -> 
     round(-sum(log(c / n)) / count(*), 6), the mean negative log corpus
     probability of those tokens. Out-of-vocabulary tokens drop out, so a
     group with none has no row."""
-    toks = docs.select(*keys, F.explode(tokens(F.lower(F.col("text")))).alias("token"))
     return (
-        toks.join(lm, "token")
+        token_stream(docs, "token", *keys)
+        .join(lm, "token")
         .groupBy(*keys)
         .agg(
             F.count("*").alias("n_tokens"),

@@ -6,11 +6,10 @@ cluster reports, recall/band-tuning audits, decontamination and
 cross-split leakage, phonetic blocking and entity-resolution merge
 survivorship, and SemDeDup embedding-space pruning.
 
-Regrouped from the numbered query tranches in round 7 (code unchanged;
-registration order is pinned by query_order.py). Reference parity: the
-reference engine (Kafka Streams DSL, SolarConsumer.java) has no
-analogue — this family extends the engine toward the LLM-data-pipeline
-north star (SURVEY.md §2, beyond-reference table).
+Reference parity: the reference engine (Kafka Streams DSL,
+SolarConsumer.java) has no analogue — this family extends the engine
+toward the LLM-data-pipeline north star (SURVEY.md §2,
+beyond-reference table).
 
 Scale discipline (SCALE.md): pair generation is always banded/blocked/
 prefix-filtered — never all-pairs; raw text and blobs never transit a
@@ -51,12 +50,6 @@ from kafka_streams_example_spark.streaming.contract import (
     fingerprint_probe,
     lang_counters,
 )
-
-
-# ---------------------------------------------------------------------------
-# (from registry.py, round-8 consolidation — query sections moved verbatim;
-# registration order stays pinned by query_order.py)
-# ---------------------------------------------------------------------------
 
 
 @register(
@@ -136,11 +129,7 @@ def _blocked_pairs_05(spark, sf_dir):
     # the table materializes per invocation instead of pinning session
     # memory (identical output either way).
     return share(
-        dd.ngram_jaccard_pairs(
-            docs,
-            block_key=F.concat_ws("|", F.col("lang"), F.col("source")),
-            threshold=0.5,
-        ),
+        dd.ngram_jaccard_pairs(docs, block_key=dd.block_key(), threshold=0.5),
         table_row_count(spark, sf_dir, "documents") * 96,
     )
 
@@ -405,7 +394,6 @@ pairs AS (
 """
 
 
-
 @register(
     "neardup_dedup_corpus",
     _PAIRS_CTE.format(ngrams=_NGRAMS3)
@@ -431,18 +419,7 @@ def neardup_dedup_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     (operators/dedup.py:minhash_pairs) instead of exact blocking.
     """
     docs = _load_parallel(spark, sf_dir, "documents")
-    # Collision-free, NULL-faithful block key: base64 never contains '|',
-    # so distinct (lang, source) pairs can't collide the way a plain
-    # concat_ws could when values contain the delimiter; and F.concat
-    # null-propagates, matching the oracle's equality join (which pairs
-    # nothing when lang/source is NULL — concat_ws would have skipped the
-    # NULL and merged (NULL,'x') with ('x',NULL)).
-    blk = F.concat(
-        F.base64(F.encode(F.col("lang"), "utf-8")),
-        F.lit("|"),
-        F.base64(F.encode(F.col("source"), "utf-8")),
-    )
-    pairs = dd.ngram_jaccard_pairs(docs, block_key=blk, threshold=0.5)
+    pairs = dd.ngram_jaccard_pairs(docs, block_key=dd.block_key(), threshold=0.5)
     dups = pairs.select(F.col("id_b").alias("dup_id")).distinct()
     return (
         docs.join(
@@ -848,39 +825,8 @@ def neardup_simhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.size("ng") > 0)
         .select("doc_id", simhash64(F.col("ng")).alias("f"))
     )
-    # band slices unrolled with LITERAL shift widths: shiftright takes a
-    # Python int, and a float-pow division would corrupt low bits once the
-    # fingerprint exceeds 2^53
-    band_structs = F.array(
-        *[
-            F.struct(
-                F.lit(b).alias("band"),
-                F.shiftright(F.col("f"), b * _SH_BITS)
-                .bitwiseAND(F.lit((1 << _SH_BITS) - 1))
-                .alias("bv"),
-            )
-            for b in range(_SH_BANDS)
-        ]
-    )
-    banded = fp.select(
-        "doc_id", "f", F.explode(band_structs).alias("bk")
-    ).select("doc_id", "f", F.col("bk.band").alias("band"), F.col("bk.bv").alias("bv"))
-    cand = (
-        banded.alias("l")
-        .join(
-            banded.alias("r"),
-            (F.col("l.band") == F.col("r.band"))
-            & (F.col("l.bv") == F.col("r.bv"))
-            & (F.col("l.doc_id") < F.col("r.doc_id")),
-        )
-        .select(
-            F.col("l.doc_id").alias("id_a"),
-            F.col("r.doc_id").alias("id_b"),
-            F.col("l.f").alias("fa"),
-            F.col("r.f").alias("fb"),
-        )
-        .dropDuplicates(["id_a", "id_b"])
-    )
+    banded = dd.fingerprint_bands(fp, "f", _SH_BANDS, _SH_BITS)
+    cand = dd.band_pairs(banded, "bv", id_col="doc_id", carry="f")
     ham = F.bit_count(F.col("fa").bitwiseXOR(F.col("fb"))).cast("int")
     return (
         cand.withColumn("hamming", ham)
@@ -1015,12 +961,7 @@ def minhash_jaccard_estimate(spark: SparkSession, sf_dir: str) -> DataFrame:
     permutations are the exact ones minhash_signature_sql(seed=42) uses,
     reproduced literally in the oracle."""
     docs = _load_parallel(spark, sf_dir, "documents")
-    blk = F.concat(
-        F.base64(F.encode(F.col("lang"), "utf-8")),
-        F.lit("|"),
-        F.base64(F.encode(F.col("source"), "utf-8")),
-    )
-    pairs = dd.ngram_jaccard_pairs(docs, block_key=blk, threshold=0.3)
+    pairs = dd.ngram_jaccard_pairs(docs, block_key=dd.block_key(), threshold=0.3)
     melt = pairs.select(
         "id_a",
         "id_b",
@@ -1122,17 +1063,8 @@ def contamination_blast_radius(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the whole pair-generation join once per hop (measured 8 s → 1 s at
     # sf0.1). The checkpointed edge list is pairs-sized — trivially small
     # next to the corpus that produced it.
-    # NULL-safe, collision-free block key (same construction as the
-    # sketch-audit query): concat_ws would merge NULL-bearing blocks and
-    # collide on '|'-containing values, diverging from the oracle's
-    # NULL-propagating equality join.
-    blk = F.concat(
-        F.base64(F.encode(F.col("lang"), "utf-8")),
-        F.lit("|"),
-        F.base64(F.encode(F.col("source"), "utf-8")),
-    )
     pairs = (
-        dd.ngram_jaccard_pairs(docs, block_key=blk, threshold=0.5)
+        dd.ngram_jaccard_pairs(docs, block_key=dd.block_key(), threshold=0.5)
         .select("id_a", "id_b")
         .localCheckpoint(eager=True)
     )
@@ -2342,39 +2274,10 @@ def bbit_minhash_estimate(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("sig"),
         )
     )
-    rows = _BB_HASHES // _BB_BANDS
-    band_structs = F.array(
-        *[
-            F.struct(
-                F.lit(b).alias("band"),
-                F.md5(
-                    F.array_join(
-                        F.slice(F.col("sig"), b * rows + 1, rows).cast(
-                            "array<string>"
-                        ),
-                        ",",
-                    )
-                ).alias("bhash"),
-            )
-            for b in range(_BB_BANDS)
-        ]
+    banded = dd.minhash_band_hashes(
+        sigs.select(F.col("doc_id").alias("id"), "sig"), _BB_HASHES, _BB_BANDS
     )
-    banded = sigs.select(
-        "doc_id", F.explode(band_structs).alias("bk")
-    ).select("doc_id", F.col("bk.band").alias("band"), F.col("bk.bhash").alias("bhash"))
-    cand = (
-        banded.alias("l")
-        .join(
-            banded.alias("r"),
-            (F.col("l.band") == F.col("r.band"))
-            & (F.col("l.bhash") == F.col("r.bhash"))
-            & (F.col("l.doc_id") < F.col("r.doc_id")),
-        )
-        .select(
-            F.col("l.doc_id").alias("id_a"), F.col("r.doc_id").alias("id_b")
-        )
-        .distinct()
-    )
+    cand = dd.band_pairs(banded, "bhash")
     a = sigs.select(
         F.col("doc_id").alias("id_a"),
         F.col("h60").alias("h60_a"),

@@ -3,10 +3,9 @@ confusion matrices and Cohen's kappa, ROC-AUC, calibration bins,
 cross-entropy and KL between splits, nDCG retrieval evaluation,
 leave-one-out group influence, and quality-threshold sweeps.
 
-Regrouped from the numbered query tranches in round 7 (code unchanged;
-registration order pinned by query_order.py). Split assignment is the
-shared deterministic-hash device (split_col/split_case_sql) so every
-eval query is reproducible and oracle-exact.
+Split assignment is the shared deterministic-hash device
+(split_col/split_case_sql) so every eval query is reproducible and
+oracle-exact.
 """
 
 from pyspark.sql import Column, DataFrame, SparkSession, Window
@@ -434,12 +433,13 @@ def split_token_kl(spark: SparkSession, sf_dir: str) -> DataFrame:
     of ~vocab ln-terms are rounded to 6dp on both engines (absolute
     summation error ~1e-12, far inside the rounding)."""
     docs = _load_parallel(spark, sf_dir, "documents")
-    toks = docs.select(
+    toks = tx.token_stream(
+        docs,
+        "tok",
         "lang",
         F.when(split_col(F.col("doc_id")) == "train", "train")
         .otherwise("eval")
         .alias("split"),
-        F.explode(tx.tokens(F.lower(F.col("text")))).alias("tok"),
     )
     cnt = toks.groupBy("lang", "tok").agg(
         F.sum(F.when(F.col("split") == "train", 1).otherwise(0)).alias("c_tr"),

@@ -4,10 +4,9 @@ matrices, cohort retention, RFM segmentation, activity islands and
 heatmaps, purchase intervals, order latencies, window-function
 batteries, and basket-lift pairs.
 
-Regrouped from the numbered query tranches in round 7 (code unchanged;
-registration order pinned by query_order.py). Everything groups or
-windows on user/order keys — one hash exchange each, no corpus-wide
-sorts (sort_array over grouped structs replaces global orderBy).
+Everything groups or windows on user/order keys — one hash exchange
+each, no corpus-wide sorts (sort_array over grouped structs replaces
+global orderBy).
 """
 
 from pyspark.sql import DataFrame, SparkSession, Window
@@ -1216,10 +1215,6 @@ def sessionized_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# ---------------------------------------------------------------------------
-# (from registry.py, round-8 consolidation — query sections moved verbatim;
-# registration order stays pinned by query_order.py)
-# ---------------------------------------------------------------------------
 from kafka_streams_example_spark.registry import _dec, _sum_dbl  # noqa: E402
 
 

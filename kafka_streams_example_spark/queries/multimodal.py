@@ -17,6 +17,7 @@ import math as _math
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from kafka_streams_example_spark.operators import dedup as dd
 from kafka_streams_example_spark.operators import multimodal as mm
 from kafka_streams_example_spark.operators.multimodal import (
     _DH_BANDS,
@@ -337,7 +338,7 @@ def _phash_band_stats(
     near-dup group small enough to review survives (true re-encode
     groups are small; mass-duplicate groups are Hamming-0 and belong to
     the exact-hash dedup-cut tier, which has no pair explosion)."""
-    banded = mm.dhash_bands(fp.select("doc_id", "dhash"), bands, bits)
+    banded = dd.fingerprint_bands(fp.select("doc_id", "dhash"), "dhash", bands, bits)
     if max_bucket is not None:
         ok_buckets = (
             banded.groupBy("band", "bv")

@@ -6,10 +6,9 @@ scrub, k-anonymity, seeded-DP noisy counts), SCD2 state, skew reports,
 Z-order locality, watermark lateness, incremental agg-state merges,
 and token-budget mixture allocation.
 
-Regrouped from the numbered query tranches in round 7 (code unchanged;
-registration order pinned by query_order.py). These are the standing
-jobs of a 100 TB ingest: each is a bounded-output aggregate over one
-scan, and several have streaming batch-twins under streaming/.
+These are the standing jobs of a 100 TB ingest: each is a
+bounded-output aggregate over one scan, and several have streaming
+batch-twins under streaming/.
 """
 
 from pyspark.sql import Column, DataFrame, SparkSession, Window

@@ -933,10 +933,6 @@ def q20_excess_supply(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# ---------------------------------------------------------------------------
-# (from registry.py, round-8 consolidation — query sections moved verbatim;
-# registration order stays pinned by query_order.py)
-# ---------------------------------------------------------------------------
 from kafka_streams_example_spark.operators import custom_agg as ca  # noqa: E402
 
 

@@ -4,10 +4,9 @@ pruning, embedding norm/component diagnostics, inverted-index postings,
 BM25 lexical scoring, reciprocal-rank-fusion hybrid retrieval, and
 hard-negative mining.
 
-Regrouped from the numbered query tranches in round 7 (code unchanged;
-registration order pinned by query_order.py). The corpus side is never
-collected: the bounded query set is the broadcast side, candidates are
-bucketed, and Python appears only as Arrow-batched vectorized stages.
+The corpus side is never collected: the bounded query set is the
+broadcast side, candidates are bucketed, and Python appears only as
+Arrow-batched vectorized stages.
 """
 
 from pyspark.sql import DataFrame, SparkSession, Window
@@ -26,12 +25,6 @@ from kafka_streams_example_spark.registry import (
     register,
 )
 from kafka_streams_example_spark.sources.files import load_table, table_row_count
-
-
-# ---------------------------------------------------------------------------
-# (from registry.py, round-8 consolidation — query sections moved verbatim;
-# registration order stays pinned by query_order.py)
-# ---------------------------------------------------------------------------
 
 
 @register(
@@ -668,12 +661,7 @@ def similarity_pair_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     source swaps to the MinHash candidate path like every other consumer
     of the pair generator."""
     docs = _load_parallel(spark, sf_dir, "documents")
-    blk = F.concat(
-        F.base64(F.encode(F.col("lang"), "utf-8")),
-        F.lit("|"),
-        F.base64(F.encode(F.col("source"), "utf-8")),
-    )
-    pairs = dd.ngram_jaccard_pairs(docs, block_key=blk, threshold=0.2)
+    pairs = dd.ngram_jaccard_pairs(docs, block_key=dd.block_key(), threshold=0.2)
     bucket = F.least(F.floor(F.col("jaccard") * 10), F.lit(9)).cast("int")
     return (
         pairs.withColumn("bucket", bucket)
@@ -721,9 +709,7 @@ def inverted_index_postings(spark: SparkSession, sf_dir: str) -> DataFrame:
     Per-token executor state is bounded to 8 postings even for
     stopwords; doc_freq/total_tf come from counters, not lists."""
     docs = _load_parallel(spark, sf_dir, "documents")
-    toks = docs.select(
-        "doc_id", F.explode(tx.tokens(F.lower(F.col("text")))).alias("tok")
-    )
+    toks = tx.token_stream(docs, "tok", "doc_id")
     td = toks.groupBy("tok", "doc_id").agg(F.count("*").alias("tf"))
     rn = F.row_number().over(Window.partitionBy("tok").orderBy("doc_id"))
     return (

@@ -3,11 +3,10 @@ theta distinct sketches, Bloom-filter probe joins (runtime-filter
 shape), Johnson-Lindenstrauss projection distortion audits, and
 feature hashing.
 
-Regrouped from the numbered query tranches in round 7 (code unchanged;
-registration order pinned by query_order.py). Every sketch here is
-mergeable (fixed cells, map-side combine) and each query carries the
-accuracy audit its estimate must satisfy, so the driver hash-verifies
-the sketch's contract, not a float coincidence.
+Every sketch here is mergeable (fixed cells, map-side combine) and
+each query carries the accuracy audit its estimate must satisfy, so
+the oracle check hash-verifies the sketch's contract, not a float
+coincidence.
 """
 
 import hashlib
@@ -448,7 +447,7 @@ def countmin_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
     from kafka_streams_example_spark.operators import text as tx
 
     counts = (
-        docs.select(F.explode(tx.tokens(F.lower(F.col("text")))).alias("token"))
+        tx.token_stream(docs, "token")
         .groupBy("token")
         .agg(F.count("*").cast("long").alias("cnt"))
     )
@@ -678,9 +677,7 @@ def feature_hashing_sparse(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = _load_parallel(spark, sf_dir, "documents")
     from kafka_streams_example_spark.operators import text as tx
 
-    tok = docs.select(
-        "doc_id", F.explode(tx.tokens(F.lower(F.col("text")))).alias("token")
-    )
+    tok = tx.token_stream(docs, "token", "doc_id")
     dim = (
         F.conv(
             F.substring(F.md5(F.concat(F.lit("fh:"), F.col("token"))), 1, 15),
@@ -705,12 +702,6 @@ def feature_hashing_sparse(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.sum("sign").cast("long").alias("weight"))
         .select("doc_id", F.col("dim").cast("long").alias("dim"), "weight")
     )
-
-
-# ---------------------------------------------------------------------------
-# (from registry.py, round-8 consolidation — query sections moved verbatim;
-# registration order stays pinned by query_order.py)
-# ---------------------------------------------------------------------------
 
 
 @register(

@@ -4,10 +4,8 @@ first-digit audits, robust location/scale (median/MAD, winsorized,
 robust scaler), histogram/quantile profiles, A/B analysis,
 Kaplan-Meier survival, and WOE/information value.
 
-Regrouped from the numbered query tranches in round 7 (code unchanged;
-registration order pinned by query_order.py). Test statistics are
-computed from exact BIGINT sufficient statistics with 6dp portable
-rounding only at the final projection.
+Test statistics are computed from exact BIGINT sufficient statistics
+with 6dp portable rounding only at the final projection.
 """
 
 import math

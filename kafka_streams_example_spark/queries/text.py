@@ -5,11 +5,9 @@ coefficients, BPE pair candidates, quality scoring and corpus rollups,
 Zipf fits, chunking and sequence packing, and fertility/coverage
 diagnostics.
 
-Regrouped from the numbered query tranches in round 7 (code unchanged;
-registration order pinned by query_order.py). Corpus-scale stages are
-single-scan token explodes into hash aggregates; LM smoothing math is
-expressed in exact integer sufficient statistics wherever the oracle
-must hash-match.
+Corpus-scale stages are single-scan token explodes into hash
+aggregates; LM smoothing math is expressed in exact integer sufficient
+statistics wherever the oracle must hash-match.
 """
 
 from pyspark.sql import Column, DataFrame, SparkSession, Window
@@ -450,9 +448,7 @@ def tfidf_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = _load_parallel(spark, sf_dir, "documents")
     # scalar dimension from parquet footers — no Spark count job
     n_docs = table_row_count(spark, sf_dir, "documents")
-    toks = docs.select(
-        "doc_id", F.explode(tx.tokens(F.lower(F.col("text")))).alias("term")
-    )
+    toks = tx.token_stream(docs, "term", "doc_id")
     tf = share(
         toks.groupBy("doc_id", "term").agg(F.count("*").alias("tf"))
     )
@@ -752,7 +748,7 @@ def zipf_law_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
     deterministic ranks on both engines."""
     docs = _load_parallel(spark, sf_dir, "documents")
     freq = (
-        docs.select(F.explode(tx.tokens(F.lower(F.col("text")))).alias("term"))
+        tx.token_stream(docs, "term")
         .groupBy("term")
         .agg(F.count("*").alias("f"))
     )
@@ -814,9 +810,7 @@ def vocab_coverage_oov(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-doc aggregate); empty-token documents drop out of the token
     explode on both engines identically."""
     docs = _load_parallel(spark, sf_dir, "documents")
-    toks = docs.select(
-        "doc_id", "lang", F.explode(tx.tokens(F.lower(F.col("text")))).alias("tok")
-    )
+    toks = tx.token_stream(docs, "tok", "doc_id", "lang")
     vocab = (
         toks.groupBy("tok")
         .agg(F.count("*").alias("c"))
@@ -883,28 +877,11 @@ def token_pmi_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     broadcast scalar. The integer products stay < 2^53 so the double
     division is exact on both engines."""
     docs = _load_parallel(spark, sf_dir, "documents")
-    t = docs.select(
-        "doc_id",
-        F.array_sort(F.array_distinct(tx.tokens(F.lower(F.col("text"))))).alias("ts"),
-    )
+    t = tx.doc_token_sets(docs)
     exploded = t.select("doc_id", F.explode("ts").alias("tok"))
     nd = exploded.agg(F.countDistinct("doc_id").alias("nd"))
     freq = exploded.groupBy("tok").agg(F.count("*").alias("df"))
-    pairs = t.select(
-        "doc_id",
-        F.explode(
-            F.expr(
-                "flatten(transform(ts, (x, i) ->"
-                " transform(slice(ts, i + 2, size(ts)),"
-                " y -> struct(x AS tok_a, y AS tok_b))))"
-            )
-        ).alias("p"),
-    ).select("doc_id", "p.tok_a", "p.tok_b")
-    pc = (
-        pairs.groupBy("tok_a", "tok_b")
-        .agg(F.count("*").alias("pair_docs"))
-        .filter(F.col("pair_docs") >= 5)
-    )
+    pc = tx.cooccurrence_edges(t, 5, "tok_a", "tok_b", "pair_docs")
     fa = F.broadcast(freq.withColumnRenamed("tok", "tok_a").withColumnRenamed("df", "df_a"))
     fb = F.broadcast(freq.withColumnRenamed("tok", "tok_b").withColumnRenamed("df", "df_b"))
     return (
@@ -1027,7 +1004,7 @@ def bigram_lm_probs(spark: SparkSession, sf_dir: str) -> DataFrame:
 # cooccurrence_triangles — triangles on the token co-occurrence graph
 # --------------------------------------------------------------------------
 
-_TRI_SUPPORT = 10  # min co-occurring docs for an edge
+_COOC_SUPPORT = 10  # min co-occurring docs for a token-graph edge
 
 
 @register(
@@ -1041,7 +1018,7 @@ e AS (
     FROM t a JOIN t b USING (doc_id)
     WHERE a.tok < b.tok
     GROUP BY 1, 2
-    HAVING count(*) >= {_TRI_SUPPORT}
+    HAVING count(*) >= {_COOC_SUPPORT}
 )
 SELECT e1.u AS tok_a, e1.v AS tok_b, e2.v AS tok_c,
        CAST(least(e1.support, e2.support, e3.support) AS BIGINT)
@@ -1063,33 +1040,9 @@ def cooccurrence_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
     join ever exists. The a<b<c orientation makes each triangle appear
     exactly once."""
     docs = _load_parallel(spark, sf_dir, "documents")
-    t = docs.select(
-        "doc_id",
-        F.array_sort(F.array_distinct(tx.tokens(F.lower(F.col("text"))))).alias("ts"),
-    )
-    pairs = t.select(
-        F.explode(
-            F.expr(
-                "flatten(transform(ts, (x, i) ->"
-                " transform(slice(ts, i + 2, size(ts)),"
-                " y -> struct(x AS u, y AS v))))"
-            )
-        ).alias("p")
-    ).select("p.u", "p.v")
-    e = (
-        pairs.groupBy("u", "v")
-        .agg(F.count("*").alias("support"))
-        .filter(F.col("support") >= _TRI_SUPPORT)
-    )
-    e1 = e.select(F.col("u").alias("tok_a"), F.col("v").alias("tok_b"),
-                  F.col("support").alias("s1"))
-    e2 = e.select(F.col("u").alias("tok_b"), F.col("v").alias("tok_c"),
-                  F.col("support").alias("s2"))
-    e3 = e.select(F.col("u").alias("tok_a"), F.col("v").alias("tok_c"),
-                  F.col("support").alias("s3"))
+    e = tx.cooccurrence_edges(tx.doc_token_sets(docs), _COOC_SUPPORT)
     return (
-        e1.join(F.broadcast(e2), "tok_b")
-        .join(F.broadcast(e3), ["tok_a", "tok_c"])
+        tx.edge_triangles(e, "tok_a", "tok_b", "tok_c", weight="support")
         .select(
             "tok_a",
             "tok_b",
@@ -1227,7 +1180,6 @@ def tokenizer_fertility_by_lang(spark: SparkSession, sf_dir: str) -> DataFrame:
 # token_pagerank_centrality — unrolled power iteration on the token graph
 # --------------------------------------------------------------------------
 
-_PR_SUPPORT = 10   # same co-occurrence support floor as the triangle query
 _PR_D = 0.85
 _PR_ITERS = 3
 _PR_K = 20
@@ -1241,7 +1193,7 @@ e AS (
     FROM t a JOIN t b USING (doc_id)
     WHERE a.tok < b.tok
     GROUP BY 1, 2
-    HAVING count(*) >= {_PR_SUPPORT}
+    HAVING count(*) >= {_COOC_SUPPORT}
 ),
 und AS (SELECT u, v FROM e UNION ALL SELECT v, u FROM e),
 nodes AS (SELECT DISTINCT u AS tok FROM und),
@@ -1286,26 +1238,11 @@ def token_pagerank_centrality(spark: SparkSession, sf_dir: str) -> DataFrame:
     6dp-ROUNDED rank (token tiebreak) on both engines so last-ulp
     summation noise can't flip the LIMIT boundary."""
     docs = _load_parallel(spark, sf_dir, "documents")
-    t = docs.select(
-        "doc_id",
-        F.array_sort(F.array_distinct(tx.tokens(F.lower(F.col("text"))))).alias("ts"),
-    )
-    pairs = t.select(
-        F.explode(
-            F.expr(
-                "flatten(transform(ts, (x, i) ->"
-                " transform(slice(ts, i + 2, size(ts)),"
-                " y -> struct(x AS u, y AS v))))"
-            )
-        ).alias("p")
-    ).select("p.u", "p.v")
     # the edge table feeds 4+ consumers (both und directions, deg,
     # nodes, every unrolled iteration's src join) and is the ONLY
     # corpus-scale stage — cache so the explode+aggregate runs once
     e = (
-        pairs.groupBy("u", "v")
-        .agg(F.count("*").alias("support"))
-        .filter(F.col("support") >= _PR_SUPPORT)
+        tx.cooccurrence_edges(tx.doc_token_sets(docs), _COOC_SUPPORT)
         .select("u", "v")
         .cache()
     )
@@ -1588,8 +1525,6 @@ def kneser_ney_bigram(spark: SparkSession, sf_dir: str) -> DataFrame:
 # token_clustering_coefficient — local clustering on the co-occurrence graph
 # --------------------------------------------------------------------------
 
-_TCC_SUPPORT = 10  # same edge support floor as cooccurrence_triangles
-
 
 @register(
     "token_clustering_coefficient",
@@ -1602,7 +1537,7 @@ e AS (
     FROM t a JOIN t b USING (doc_id)
     WHERE a.tok < b.tok
     GROUP BY 1, 2
-    HAVING count(*) >= {_TCC_SUPPORT}
+    HAVING count(*) >= {_COOC_SUPPORT}
 ),
 deg AS (
     SELECT tok, CAST(count(*) AS BIGINT) AS degree
@@ -1639,38 +1574,15 @@ def token_clustering_coefficient(spark: SparkSession, sf_dir: str) -> DataFrame:
     graph is tiny, so the triangle joins broadcast and the degree/
     triangle-count aggregates are vocabulary-sized."""
     docs = _load_parallel(spark, sf_dir, "documents")
-    t = docs.select(
-        "doc_id",
-        F.array_sort(F.array_distinct(tx.tokens(F.lower(F.col("text"))))).alias("ts"),
-    )
-    pairs = t.select(
-        F.explode(
-            F.expr(
-                "flatten(transform(ts, (x, i) ->"
-                " transform(slice(ts, i + 2, size(ts)),"
-                " y -> struct(x AS u, y AS v))))"
-            )
-        ).alias("p")
-    ).select("p.u", "p.v")
-    e = (
-        pairs.groupBy("u", "v")
-        .agg(F.count("*").alias("support"))
-        .filter(F.col("support") >= _TCC_SUPPORT)
-        .select("u", "v")
-    )
+    e = tx.cooccurrence_edges(tx.doc_token_sets(docs), _COOC_SUPPORT).select("u", "v")
     deg = (
         e.select(F.col("u").alias("tok"))
         .unionByName(e.select(F.col("v").alias("tok")))
         .groupBy("tok")
         .agg(F.count("*").alias("degree"))
     )
-    e1 = e.select(F.col("u").alias("ta"), F.col("v").alias("tb"))
-    e2 = e.select(F.col("u").alias("tb"), F.col("v").alias("tc"))
-    e3 = e.select(F.col("u").alias("ta"), F.col("v").alias("tc"))
-    tri = (
-        e1.join(F.broadcast(e2), "tb")
-        .join(F.broadcast(e3), ["ta", "tc"])
-        .select(F.explode(F.array("ta", "tb", "tc")).alias("tok"))
+    tri = tx.edge_triangles(e, "ta", "tb", "tc").select(
+        F.explode(F.array("ta", "tb", "tc")).alias("tok")
     )
     tcnt = tri.groupBy("tok").agg(F.count("*").alias("n_triangles"))
     return (
@@ -1782,12 +1694,6 @@ def trigram_backoff_lm(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("s_backoff"),
         )
     )
-
-
-# ---------------------------------------------------------------------------
-# (from registry.py, round-8 consolidation — query sections moved verbatim;
-# registration order stays pinned by query_order.py)
-# ---------------------------------------------------------------------------
 
 
 @register(
@@ -1906,29 +1812,22 @@ def array_functions_docs(spark, sf_dir):
 
 
 def _unigram_freq(spark, sf_dir):
-    """The corpus unigram count table (token, c) — the vocabulary LM.
+    """The corpus unigram count table (token, c) — the vocabulary LM
+    (operators/text.py:token_counts).
 
     CACHED by plan equality (vocab-sized, narrow — the blessed frame
-    class): r11 shared it between doc_perplexity_proxy's four consumers;
-    r12 routes token_frequencies and ccnet_perplexity_buckets through
-    the SAME helper (each previously re-ran its own tokenize+explode+
-    count pass with a plan that differed only by a pruned-away column,
-    so the cache could never hit). Counts are invariant to the extra
-    doc_id in the pre-aggregation projection — groupBy(token) sees the
-    same token stream."""
+    class): doc_perplexity_proxy's four consumers, token_frequencies and
+    ccnet_perplexity_buckets build it through this helper, and the cache
+    lookup ignores column names, so zipf_law_fit's (term, f) count over
+    the same token stream reads it too — the tokenize+explode+count pass
+    runs once per session."""
     from kafka_streams_example_spark.operators import share
     from kafka_streams_example_spark.sources.files import table_uncompressed_bytes
 
     docs = _load_parallel(spark, sf_dir, "documents")
-    toks = docs.select(
-        "doc_id", F.explode(tx.tokens(F.lower(F.col("text")))).alias("token")
-    )
     # vocab keys are distinct substrings of the corpus, so the source
     # byte size upper-bounds the table (SCALE.md §caches)
-    return share(
-        toks.groupBy("token").agg(F.count("*").alias("c")),
-        table_uncompressed_bytes(sf_dir, "documents"),
-    )
+    return share(tx.token_counts(docs), table_uncompressed_bytes(sf_dir, "documents"))
 
 
 @register(
@@ -2239,7 +2138,7 @@ def _bpe_train(
     docs = _load_parallel(spark, sf_dir, "documents")
     S, E = chr(31), chr(30)
     words = (
-        docs.select(F.explode(tx.tokens(F.lower(F.col("text")))).alias("w0"))
+        tx.token_stream(docs, "w0")
         .select(
             F.replace(F.replace(F.col("w0"), F.lit(E), F.lit("")), F.lit(S), F.lit("")).alias("w")
         )
@@ -2613,11 +2512,7 @@ def heaps_law_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
     bucket = stable_long(
         F.concat(F.col("doc_id").cast("string"), F.lit(_HEAPS_SALT))
     ) % _HEAPS_BUCKETS
-    x = docs.select(
-        "doc_id",
-        bucket.alias("bucket"),
-        F.explode(tx.tokens(F.lower(F.col("text")))).alias("token"),
-    )
+    x = tx.token_stream(docs, "token", "doc_id", bucket.alias("bucket"))
     # per_bucket needs no token explode (r12): doc_id is the table's key,
     # so countDistinct(doc_id) over exploded tokens = the count of docs
     # with >= 1 token, and count(*) of exploded rows = sum of per-doc

@@ -3,10 +3,8 @@ CUSUM changepoints, seasonal-residual anomalies, error-burst
 detection, rolling actives, resample/fill-forward, time-weighted
 averages, week-over-week deltas, and Theil-Sen robust trends.
 
-Regrouped from the numbered query tranches in round 7 (code unchanged;
-registration order pinned by query_order.py). Sequential recurrences
-are expressed as window functions or dyadic-coefficient expansions so
-they stay engine-exact and shuffle-bounded.
+Sequential recurrences are expressed as window functions or dyadic-
+coefficient expansions so they stay engine-exact and shuffle-bounded.
 """
 
 from pyspark.sql import DataFrame, SparkSession, Window

@@ -973,7 +973,7 @@ def streaming_quality_gate(
     """
     import tempfile
 
-    from kafka_streams_example_spark.operators.text import tokens, unigram_lm_scores
+    from kafka_streams_example_spark.operators.text import token_counts, unigram_lm_scores
 
     owner = seed_corpus.sparkSession
     root = state_dir or tempfile.mkdtemp(prefix="quality_state_")
@@ -981,11 +981,7 @@ def streaming_quality_gate(
     thr_path = os.path.join(root, "threshold.json")
 
     def write_seed() -> None:
-        seed_corpus.select(
-            F.explode(tokens(F.lower(F.col("text")))).alias("token")
-        ).groupBy("token").agg(F.count("*").alias("c")).write.mode(
-            "overwrite"
-        ).parquet(lm_path)
+        token_counts(seed_corpus).write.mode("overwrite").parquet(lm_path)
         freq = owner.read.parquet(lm_path)
         n_total = freq.agg(F.sum("c")).first()[0] or 0
         cutoff, t_bin = threshold, None
@@ -1079,10 +1075,11 @@ def streaming_ingest_phash(
     twin, closing the modality set (exact text, MinHash near-dup text,
     benchmark decontam, quality, now images): each arriving micro-batch's
     images are DECODED through the real PNG codec and dHashed
-    (operators/multimodal.py:phash_fingerprints and dhash_bands, the
-    kernel behind queries/multimodal.py:image_phash_neardup — same 60-bit
-    hash, same 4×15-bit banding), probe the persisted index for band
-    collisions with already-ingested images, VERIFY candidates by exact Hamming
+    (operators/multimodal.py:phash_fingerprints and operators/dedup.py:
+    fingerprint_bands, the kernel behind queries/multimodal.py:
+    image_phash_neardup — same 60-bit hash, same 4×15-bit banding),
+    probe the persisted index for band collisions with already-ingested
+    images, VERIFY candidates by exact Hamming
     distance (≤ ``max_hamming``), classify near-dup-vs-new per language,
     and extend the index with the batch's novel images.
 
@@ -1121,6 +1118,7 @@ def streaming_ingest_phash(
     import tempfile
 
     from kafka_streams_example_spark.operators import multimodal as mm
+    from kafka_streams_example_spark.operators.dedup import fingerprint_bands
 
     owner = index_seed.sparkSession
     root = state_dir or tempfile.mkdtemp(prefix="ingest_phash_state_")
@@ -1130,7 +1128,7 @@ def streaming_ingest_phash(
         """(doc_id, text, ...) → (id, dhash, band, bv): the fingerprint
         kernel, then the 4×15-bit band explode (JVM-side)."""
         fp = mm.phash_fingerprints(df).select(F.col("doc_id").alias("id"), "dhash")
-        return mm.dhash_bands(fp)
+        return fingerprint_bands(fp, "dhash", mm._DH_BANDS, mm._DH_BITS)
 
     def write_seed() -> None:
         _hashes_of(index_seed).select("band", "bv", "dhash").distinct().write.mode(

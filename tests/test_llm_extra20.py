@@ -17,9 +17,9 @@ from kafka_streams_example_spark.queries.dedup import _PH_ALPHA, _PH_DIGITS
 from kafka_streams_example_spark.queries.operational import _PA_N, _PA_SALT
 from kafka_streams_example_spark.queries.stats import _WOE_BINS
 from kafka_streams_example_spark.queries.text import (
+    _COOC_SUPPORT,
     _SB_ALPHA,
     _SB_MIN_COUNT,
-    _TCC_SUPPORT,
 )
 from tests.conftest import SF_SMOKE
 
@@ -163,7 +163,7 @@ def test_clustering_coefficient_matches_python_replay(spark):
         for i, u in enumerate(toks):
             for v in toks[i + 1 :]:
                 pair_docs[(u, v)] += 1
-    edges = {p for p, c in pair_docs.items() if c >= _TCC_SUPPORT}
+    edges = {p for p, c in pair_docs.items() if c >= _COOC_SUPPORT}
     adj = defaultdict(set)
     for u, v in edges:
         adj[u].add(v)

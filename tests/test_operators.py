@@ -3,6 +3,8 @@ similarity recall, text functions."""
 
 from __future__ import annotations
 
+import os
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -22,6 +24,7 @@ from kafka_streams_example_spark.operators.text import (
     word_count,
     word_ngrams,
 )
+from tests.conftest import SF_SMOKE
 
 
 # ----------------------------------------------------------- as-of join --
@@ -95,6 +98,49 @@ def test_minhash_recall_vs_exact(spark, dup_docs):
         (r.id_a, r.id_b)
         for r in ngram_jaccard_pairs(dup_docs, block_key=F.lit(1), threshold=0.8).collect()
     }
+
+
+@pytest.fixture
+def reblocked_sf(tmp_path):
+    """sf0.001 with two near-dup pairs that an equality join on
+    (lang, source) must not pair: the sf0.001 pair (docs 328, 428) with
+    NULL ``lang``, and docs 10/11 made near-duplicates under the distinct
+    blocks ('en|x', 'src1') and ('en', 'x|src1'), which a plain
+    ``concat_ws('|', lang, source)`` key merges."""
+    import shutil
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    for name in os.listdir(SF_SMOKE):
+        if name != "documents.parquet":
+            shutil.copy(os.path.join(SF_SMOKE, name), tmp_path / name)
+    docs = pq.read_table(os.path.join(SF_SMOKE, "documents.parquet"))
+    df = docs.to_pandas()
+    df.loc[df.doc_id.isin([328, 428]), "lang"] = None
+    a, b = df.doc_id == 10, df.doc_id == 11
+    df.loc[a, ["lang", "source"]] = ["en|x", "src1"]
+    df.loc[b, ["lang", "source"]] = ["en", "x|src1"]
+    df.loc[b, "text"] = df.loc[a, "text"].iloc[0] + " tail"
+    pq.write_table(
+        pa.Table.from_pandas(df, schema=docs.schema, preserve_index=False),
+        tmp_path / "documents.parquet",
+    )
+    return str(tmp_path)
+
+
+@pytest.mark.parametrize("name", ["neardup_ngram_pairs", "dedup_clusters"])
+def test_blocking_never_pairs_null_or_delimiter_blocks(spark, reblocked_sf, name):
+    """The near-dup blocking key pairs exactly what the oracle's
+    ``a.lang = b.lang AND a.source = b.source`` pairs: a NULL block
+    column pairs nothing, and values containing the key's '|' separator
+    do not collide."""
+    from kafka_streams_example_spark import registry
+    from tests.parity import compare, duck_connection
+
+    got = registry.QUERIES[name](spark, reblocked_sf).toPandas()
+    want = duck_connection(reblocked_sf).execute(registry.ORACLES[name]).fetchdf()
+    assert compare(got, want) == []
 
 
 def test_simhash_hamming(spark, dup_docs):

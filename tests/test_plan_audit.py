@@ -270,3 +270,35 @@ def test_weighted_sample_is_take_ordered_not_global_sort(spark):
     would shuffle the whole corpus."""
     plan = _plan(registry.QUERIES["weighted_domain_sample"](spark, SF_SMOKE))
     assert "TakeOrderedAndProject" in plan, plan[:2000]
+
+
+def test_plan_fingerprint_ignores_expand_order_and_ids():
+    """Two builds of one multi-distinct aggregate that differ only in
+    expression ids, lambda-variable counters and the order the optimizer
+    lists the distinct groups (projections, grouping columns, gid
+    numbers) normalize to the same text; a changed plan does not."""
+    from tools.plan_report import normalized_plan, plan_fingerprint
+
+    a = (
+        "Aggregate [count(x#12L) FILTER (WHERE (gid#40 = 1)) AS nd_x#50L, "
+        "count(y#13) FILTER (WHERE (gid#40 = 2)) AS nd_y#51L]\n"
+        "+- Aggregate [x#41L, y#42, gid#40], [x#41L, y#42, gid#40]\n"
+        "   +- Expand [[x#12L, null, 1], [null, y#13, 2]], [x#41L, y#42, gid#40]\n"
+        "      +- Project [x#12L, y#13, filter(t#14, lambdafunction("
+        "NOT (lambda x_55#60 = ), lambda x_55#60, false)) AS f#15]\n"
+        "         +- Exchange hashpartitioning(x#12L, 4), [plan_id=7]"
+    )
+    b = (
+        "Aggregate [count(x#112L) FILTER (WHERE (gid#140 = 2)) AS nd_x#150L, "
+        "count(y#113) FILTER (WHERE (gid#140 = 1)) AS nd_y#151L]\n"
+        "+- Aggregate [y#142, x#141L, gid#140], [y#142, x#141L, gid#140]\n"
+        "   +- Expand [[null, y#113, 1], [x#112L, null, 2]], [y#142, x#141L, gid#140]\n"
+        "      +- Project [x#112L, y#113, filter(t#114, lambdafunction("
+        "NOT (lambda x_7#160 = ), lambda x_7#160, false)) AS f#115]\n"
+        "         +- Exchange hashpartitioning(x#112L, 4), [plan_id=93]"
+    )
+    assert normalized_plan(a) == normalized_plan(b)
+    assert plan_fingerprint(a) == plan_fingerprint(b)
+    assert len(plan_fingerprint(a)) == 12
+    changed = a.replace("hashpartitioning(x#12L, 4)", "hashpartitioning(y#13, 4)")
+    assert plan_fingerprint(changed) != plan_fingerprint(a)

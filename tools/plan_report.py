@@ -10,11 +10,16 @@ single-partition Exchange). Run after adding operators; the committed
 PLANS.md is reviewable evidence that each plan is the intended one, not
 just a passing one.
 
+The ``fp`` column fingerprints each query's optimized logical plan
+(:func:`plan_fingerprint`), so a diff of two PLANS.md files names the
+queries whose plan a change touched.
+
 Usage: python tools/plan_report.py [sf_dir]  (default /root/testdata/sf0.1)
 """
 
 from __future__ import annotations
 
+import hashlib
 import os
 import re
 import sys
@@ -26,6 +31,43 @@ from kafka_streams_example_spark import registry  # noqa: E402
 from kafka_streams_example_spark.session import get_spark  # noqa: E402
 
 FLAGS = ("CartesianProduct", "BroadcastNestedLoopJoin")
+
+# expression ids (``doc_id#123L``, ``subquery#7``), physical plan ids
+# (``[plan_id=42]``) and PySpark's lambda variables (``lambda x_55``)
+# are numbered by counters that run over the life of a session
+_EXPR_ID = re.compile(r"#\d+")
+_PLAN_ID = re.compile(r"plan_id=\d+")
+_LAMBDA_VAR = re.compile(r"(lambda \w+?)_\d+\b")
+_GID = re.compile(r"\(gid# = \d+\)")
+
+
+def normalized_plan(text: str) -> str:
+    """Plan text with what varies between identical builds taken out:
+    expression ids, plan ids and lambda-variable counters are stripped.
+
+    A multi-distinct aggregate is rewritten to an ``Expand`` with one
+    projection per distinct group, numbered by a ``gid`` column, under
+    aggregates that filter on ``gid``. The optimizer walks those groups
+    in hash order, and the hashes include expression ids, so the same
+    query lists the projections, the grouping columns and the gid
+    numbers in an order that depends on what the session built earlier.
+    On every line that carries ``gid#`` the gid literals in filters are
+    dropped and the comma-separated items are sorted, which sorts each
+    ``Expand`` projection list."""
+    text = _LAMBDA_VAR.sub(r"\1_", _PLAN_ID.sub("plan_id=", _EXPR_ID.sub("#", text)))
+    lines = []
+    for line in text.splitlines():
+        if "gid#" in line:
+            node, _, items = _GID.sub("(gid# = )", line).partition(" [")
+            items = sorted(x.strip("[] ") for x in items.split(","))
+            line = f"{node} [{', '.join(items)}]"
+        lines.append(line)
+    return "\n".join(lines)
+
+
+def plan_fingerprint(text: str) -> str:
+    """First 12 hex characters of the sha256 of :func:`normalized_plan`."""
+    return hashlib.sha256(normalized_plan(text).encode()).hexdigest()[:12]
 
 
 def plan_stats(plan: str) -> dict:
@@ -57,6 +99,10 @@ def main() -> None:
     # AQE defers codegen collapse to runtime (AdaptiveSparkPlan wraps the
     # unprepared plan) — audit the static plan so codegen spans are visible
     spark.conf.set("spark.sql.adaptive.enabled", "false")
+    # print scan metadata (pushed and data filters) untruncated: the cut
+    # falls at a fixed width, so its position moves with the width of the
+    # expression ids inside it and would leak them into the fingerprint
+    spark.conf.set("spark.sql.maxMetadataStringLength", "1000000")
     lines = [
         "# PLANS — physical-plan audit (generated by tools/plan_report.py)",
         "",
@@ -65,7 +111,10 @@ def main() -> None:
         "BHJ / SMJ / BNLJ / parquet scans (with pushed filters) /",
         "WholeStageCodegen spans / Python stages / cached-relation nodes",
         "(InMemoryRelation + InMemoryTableScan) / checkpoint scans",
-        "(Scan ExistingRDD, a `localCheckpoint` read).",
+        "(Scan ExistingRDD, a `localCheckpoint` read) / `fp`, the",
+        "fingerprint of the normalized optimized logical plan",
+        "(`plan_fingerprint`): a changed `fp` between two PLANS.md files",
+        "means the query's plan changed.",
         "",
         "Plan-only (nothing executed); AQE may further coalesce/convert at",
         "runtime. `tests/test_plan_audit.py` asserts the hard invariants",
@@ -92,16 +141,18 @@ def main() -> None:
         "that doubles per iteration (2^N scans). Their cost is measured",
         "in BENCH_DETAIL.json/SCALE_SWEEP.json, not visible in this table.",
         "",
-        "| query | exch | 1-part | rr | bcast | BHJ | SMJ | BNLJ | scans | pushed | codegen | py | cache | ckpt |",
-        "|---|---|---|---|---|---|---|---|---|---|---|---|---|---|",
+        "| query | exch | 1-part | rr | bcast | BHJ | SMJ | BNLJ | scans | pushed | codegen | py | cache | ckpt | fp |",
+        "|---|---|---|---|---|---|---|---|---|---|---|---|---|---|---|",
     ]
     flagged: list[str] = []
     for name, fn in registry.QUERIES.items():
         try:
             df = fn(spark, sf_dir)
-            plan = df._jdf.queryExecution().executedPlan().toString()
+            qe = df._jdf.queryExecution()
+            plan = qe.executedPlan().toString()
+            fp = plan_fingerprint(qe.optimizedPlan().toString())
         except Exception as exc:  # plan-time failure is itself a finding
-            lines.append(f"| {name} | PLAN ERROR: {type(exc).__name__} | | | | | | | | | | | | |")
+            lines.append(f"| {name} | PLAN ERROR: {type(exc).__name__} | | | | | | | | | | | | | |")
             flagged.append(name)
             continue
         s = plan_stats(plan)
@@ -113,7 +164,7 @@ def main() -> None:
             f"| {name} | {s['exchange']} | {s['exchange_single']} | {s['roundrobin']} "
             f"| {s['broadcast']} | {s['bhj']} | {s['smj']} | {s['bnlj']} | {s['scans']} "
             f"| {s['pushed']} | {s['codegen']} | {s['python']} | {s['cached']} "
-            f"| {s['checkpoint']} |"
+            f"| {s['checkpoint']} | {fp} |"
         )
     lines += [
         "",
