@@ -137,7 +137,22 @@ def share(df: DataFrame, est_bytes: int = -1) -> DataFrame:
       does (queries/dedup.py:_maybe_broadcast_bench).
 
     Output is identical on both paths (tests/test_round12.py forces the
-    budget to zero over seven queries); only the sharing scope changes.
+    budget to zero over every routed site); only the sharing scope changes.
+
+    This is the only code that materializes a frame for reuse, except
+    five materializations that are not sharing decisions
+    (tests/test_materialization_sites.py holds the list):
+
+    - ``queries/text.py:_bpe_train``, twice: the eager checkpoint of the
+      word table and of each merge step's word state cuts the lineage of
+      an iteration loop whose plan would otherwise grow with every step.
+    - ``queries/dedup.py:contamination_blast_radius``: the edge list is
+      materialized before a recursive CTE, which re-evaluates its source
+      once per hop.
+    - ``streaming/contract.py``, twice (``_exactly_once_publish`` and
+      the PSI monitor): the per-micro-batch ``persist()``, because Spark
+      requires foreachBatch to consume every partition of the batch;
+      the batch is unpersisted on every exit path.
 
     The checkpoint is LAZY, deliberately: an eager one runs the subtree
     as its own blocking job at DataFrame-construction time, which

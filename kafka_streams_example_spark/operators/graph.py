@@ -33,28 +33,16 @@ def connected_components(
     both = edges.select(
         F.col(src).alias("u"), F.col(dst).alias("v")
     ).union(edges.select(F.col(dst).alias("u"), F.col(src).alias("v")))
-    # Session CACHE when the estimate fits the budget (share): the round-1
-    # convergence count below still materializes the edge list and the
-    # fused init labels in ONE job (the cache fills as a side effect, no
-    # extra blocking job), every later iteration's join reads the cached
-    # partitions exactly like it read the checkpointed ones — and, unlike
-    # a checkpoint (a per-DataFrame RDD), the cache is keyed on plan
-    # equality, so the FOUR registered consumers
-    # of the dedup-cluster decision (dedup_clusters, cluster_aware_split,
-    # dedup_cluster_size_histogram, corpus_curation_pipeline) share one
-    # materialization of the pair-generation subtree per session instead of
-    # re-running AllPairs + exact-fp star + distinct per query (measured
-    # ~1.3 s of the 2.4 s steady dedup_clusters run at sf0.1). Scale-safe:
-    # the edge list is (long, long) pairs over the dup subset — the same
-    # kind of sparse hash-only frame the blessed _neardup_pairs cache holds;
-    # the text/blob columns never enter it. Lineage: `both` is the constant
+    # Shared: the FOUR registered consumers of the dedup-cluster decision
+    # (dedup_clusters, cluster_aware_split, dedup_cluster_size_histogram,
+    # corpus_curation_pipeline) read one materialization of the
+    # pair-generation subtree (measured ~1.3 s of the 2.4 s steady
+    # dedup_clusters run at sf0.1), and the round-1 convergence count
+    # below fills it in the same job. Lineage: `both` is the constant
     # BASE of every iteration join, so cutting ITS lineage was never what
     # bounded plan growth — the per-round label checkpoints below do
-    # that. ``edge_cache_bytes`` is the caller's
-    # footer-derived upper-bound estimate of the edge table; above the
-    # per-frame cache budget, or unknown, the table is materialized per
-    # invocation instead of pinned for the session (identical output,
-    # bounded memory).
+    # that. ``edge_cache_bytes`` is the caller's footer-derived
+    # upper-bound estimate of the edge table.
     both = share(both.distinct(), edge_cache_bytes)
 
     # Round 1 fused into label initialization: with component == id, the

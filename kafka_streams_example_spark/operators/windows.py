@@ -1,22 +1,17 @@
 """Event-time window operators.
 
 The reference supports exactly one window shape — 30s aligned tumbling
-(reference: SolarConsumer.java:53-55). A general engine needs sliding and
-session windows too; all three are single-shuffle groupBy aggregations in
-Spark (sliding multiplies input rows by window/slide before the exchange,
-which Catalyst handles via the Expand operator — still one shuffle).
+(reference: SolarConsumer.java:53-55; plans/solar.py). A general engine
+needs sliding and session windows too; both are single-shuffle groupBy
+aggregations in Spark (sliding multiplies input rows by window/slide
+before the exchange, which Catalyst handles via the Expand operator —
+still one shuffle).
 """
 
 from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-
-
-def tumbling_agg(
-    df: DataFrame, ts_col: str, duration: str, keys: list[str], aggs: list[Column]
-) -> DataFrame:
-    return df.groupBy(F.window(F.col(ts_col), duration).alias("w"), *keys).agg(*aggs)
 
 
 def sliding_agg(
@@ -41,13 +36,3 @@ def session_agg(
     return df.groupBy(
         F.session_window(F.col(ts_col), gap).alias("w"), *keys
     ).agg(*aggs)
-
-
-def window_epoch_micros(df: DataFrame) -> DataFrame:
-    """Emit the window struct as exact epoch-microsecond bounds —
-    engine-portable (struct columns don't hash identically across engines)."""
-    return (
-        df.withColumn("w_start_us", F.unix_micros(F.col("w.start")))
-        .withColumn("w_end_us", F.unix_micros(F.col("w.end")))
-        .drop("w")
-    )

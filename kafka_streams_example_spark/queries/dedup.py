@@ -27,6 +27,7 @@ from kafka_streams_example_spark.functions.hashing import (
     normalize_text,
 )
 from kafka_streams_example_spark.operators import dedup as dd
+from kafka_streams_example_spark.operators import share
 from kafka_streams_example_spark.operators import similarity as sim
 from kafka_streams_example_spark.operators import text as tx
 from kafka_streams_example_spark.queries._shared import _NGRAMS3
@@ -34,7 +35,6 @@ from kafka_streams_example_spark.queries.eval import split_case_sql, split_col
 from kafka_streams_example_spark.queries.text import _CHUNK
 from kafka_streams_example_spark.registry import (
     ORACLES,
-    _NGRAMS,
     _TOKS,
     _duck_cosine,
     _duck_round_half_up,
@@ -94,7 +94,7 @@ def doc_fingerprints(spark, sf_dir):
     "neardup_ngram_pairs",
     f"""
 WITH d AS (
-    SELECT doc_id, lang, source, {_NGRAMS} AS ng
+    SELECT doc_id, lang, source, {_NGRAMS3} AS ng
     FROM (SELECT doc_id, lang, source, {_TOKS} AS t FROM documents)
 ),
 nz AS (SELECT * FROM d WHERE len(ng) > 0)
@@ -116,18 +116,12 @@ def neardup_ngram_pairs(spark, sf_dir):
 
 
 def _blocked_pairs_05(spark, sf_dir):
-    """The verified blocked pair table at threshold 0.5 — CACHED by plan
-    equality for its two registered consumers (neardup_ngram_pairs,
-    dedup_clusters' near-edge side): the AllPairs candidate join + exact
-    verify runs once per session (the _neardup_pairs discipline; sparse
-    (ids, jaccard) rows only)."""
-    from kafka_streams_example_spark.operators import share
-
+    """The verified blocked pair table at threshold 0.5 (sparse (ids,
+    jaccard) rows), shared by its two registered consumers
+    (neardup_ngram_pairs, dedup_clusters' near-edge side)."""
     docs = _load_parallel(spark, sf_dir, "documents")
     # pair rows are O(dup rows) after the t>=0.5 verify — budgeted at
-    # ~4 pairs/doc x 24 B (SCALE.md §caches); above the per-frame budget
-    # the table materializes per invocation instead of pinning session
-    # memory (identical output either way).
+    # ~4 pairs/doc x 24 B (SCALE.md §caches)
     return share(
         dd.ngram_jaccard_pairs(docs, block_key=dd.block_key(), threshold=0.5),
         table_row_count(spark, sf_dir, "documents") * 96,
@@ -198,10 +192,9 @@ def dedup_clusters(spark, sf_dir):
         .filter(F.col("doc_id") != F.col("keeper"))
         .select(F.col("keeper").alias("id_a"), F.col("doc_id").alias("id_b"))
     )
-    # Edge-table cache budget (SCALE.md §caches): near pairs + fp stars
-    # are both O(dup rows); the undirected distinct edge list is bounded
-    # by ~2 x 4 x docs x 16 B — above the per-frame budget the operator
-    # materializes per invocation instead of pinning a TB-scale frame.
+    # Edge-table budget (SCALE.md §caches): near pairs + fp stars are
+    # both O(dup rows); the undirected distinct edge list is bounded by
+    # ~2 x 4 x docs x 16 B.
     est = table_row_count(spark, sf_dir, "documents") * 128
     return dc(near.union(fp_star), edge_cache_bytes=est)
 
@@ -292,14 +285,9 @@ def _maybe_broadcast_bench(sf_dir: str, bench: DataFrame) -> DataFrame:
 
 def _bench_grams(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The eval split's distinct word 5-gram set — the decontamination
-    INDEX a production pipeline builds once and probes per batch. CACHED
-    by plan equality for its two registered consumers
-    (decontam_ngram_overlap, corpus_curation_pipeline): the eval-split
-    tokenize + 5-gram + distinct pass runs once per session (the
-    _neardup_pairs discipline); gram strings are ~1/17th of corpus bytes
-    by the same footer arithmetic _maybe_broadcast_bench guards on."""
-    from kafka_streams_example_spark.operators import share
-
+    INDEX a production pipeline builds once and probes per batch, shared
+    by its two registered consumers (decontam_ngram_overlap,
+    corpus_curation_pipeline)."""
     docs = _load_parallel(spark, sf_dir, "documents")
     ng = docs.select("doc_id", tx.word_ngrams(F.col("text"), 5).alias("ng"))
     # same footer arithmetic as _maybe_broadcast_bench: eval share of the
@@ -1239,7 +1227,6 @@ def neardup_transitivity_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     # boilerplate-heavy case canonical frequency-ordered prefixes prune
     # best (measured >=10x fewer candidates, identical results —
     # test_freq_ordered_allpairs_same_result_fewer_candidates)
-    from kafka_streams_example_spark.operators import share
 
     # unblocked t>=0.3 pairs run denser than the blocked t>=0.5 table —
     # budgeted at ~8 pairs/doc x 16 B (SCALE.md §caches)
@@ -1290,7 +1277,7 @@ _PAIR_T = 0.3
 # brute-force in SQL (the oracle may be quadratic — the ENGINE may not).
 _PAIRS_CTE = f"""
 d AS (
-    SELECT doc_id, lang, {_NGRAMS} AS ng
+    SELECT doc_id, lang, {_NGRAMS3} AS ng
     FROM (SELECT doc_id, lang, {_TOKS} AS t FROM documents)
 ),
 nz AS (SELECT * FROM d WHERE len(ng) > 0),
@@ -1311,13 +1298,9 @@ def _neardup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Unblocked freq-ordered AllPairs near-dup pairs at threshold 0.3 —
     the shared input of the three pair-table audits.
 
-    Cached: the pair table is sparse (ids + one double) and feeds three
+    Shared: the pair table is sparse (ids + one double) and feeds three
     registered audits whose analyzed plans are identical up to this
-    point, so Spark's plan-equality cache lookup materializes the
-    expensive AllPairs pass ONCE per session for all of them (the same
-    discipline as neardup_transitivity_audit's cached edge table)."""
-    from kafka_streams_example_spark.operators import share
-
+    point."""
     docs = _load_parallel(spark, sf_dir, "documents")
     # same density budget as the transitivity edge table (~8 pairs/doc,
     # plus lang tags and the jaccard double; SCALE.md §caches)
@@ -1638,7 +1621,6 @@ def semdedup_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql.window import Window
 
     from kafka_streams_example_spark.operators import ensure_min_partitions
-    from kafka_streams_example_spark.sources.files import table_row_count
 
     emb = load_table(spark, sf_dir, "embeddings")
     n_b = sd_bucket_count(table_row_count(spark, sf_dir, "embeddings"))
@@ -1686,8 +1668,6 @@ def semdedup_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
     # bucket join + argmax assignment runs three times per invocation.
     # The cell-assignment table is what SemDeDup/faiss materialize as the
     # index; checkpoint it once.
-    from kafka_streams_example_spark.operators import share
-
     cells = share(
         scored.groupBy("vec_id").agg(best).select(
             "vec_id",
@@ -1742,9 +1722,9 @@ def _exact_pairs_sql(threshold: float) -> str:
     oracle-side ground truth the sketch is measured against."""
     return f"""
 SELECT a.doc_id AS id_a, b.doc_id AS id_b
-FROM (SELECT doc_id, {_NGRAMS} AS ng
+FROM (SELECT doc_id, {_NGRAMS3} AS ng
       FROM (SELECT doc_id, {_TOKS} AS t FROM documents)) a
-JOIN (SELECT doc_id, {_NGRAMS} AS ng
+JOIN (SELECT doc_id, {_NGRAMS3} AS ng
       FROM (SELECT doc_id, {_TOKS} AS t FROM documents)) b
   ON a.doc_id < b.doc_id
 WHERE len(a.ng) > 0 AND len(b.ng) > 0
@@ -1790,17 +1770,16 @@ def minhash_recall_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     on a SAMPLE — the standard recall protocol — which this query
     expresses by feeding it a sampled sf_dir."""
     docs = _load_parallel(spark, sf_dir, "documents")
-    # each pair table feeds TWO consumers (its count and the anti-join),
-    # and both are sparse id-pair frames — cache so the expensive
-    # generation runs once per materialization
-    exact = (
+    # each pair table feeds TWO consumers (its count and the anti-join);
+    # unblocked id pairs, budgeted like the t>=0.3 edge list (SCALE.md §caches)
+    est = table_row_count(spark, sf_dir, "documents") * 128
+    exact = share(
         dd.ngram_jaccard_pairs(
             docs, block_key=F.lit("all"), threshold=_MR_T, freq_order=True
-        )
-        .select("id_a", "id_b")
-        .cache()
+        ).select("id_a", "id_b"),
+        est,
     )
-    detected = dd.minhash_pairs(docs, threshold=_MR_T).select("id_a", "id_b").cache()
+    detected = share(dd.minhash_pairs(docs, threshold=_MR_T).select("id_a", "id_b"), est)
     n_exact = exact.agg(F.count("*").cast("bigint").alias("n_exact"))
     n_det = detected.agg(F.count("*").cast("bigint").alias("n_detected"))
     n_missed = (
@@ -2258,7 +2237,6 @@ def bbit_minhash_estimate(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.size("ng") > 0)
         .select("doc_id", F.expr(hashed_shingles_sql("ng")).alias("h60"))
     )
-    from kafka_streams_example_spark.operators import share
 
     # sigs feeds FOUR plan branches (both sides of the banded self-join +
     # both audit sides) — without materialization the shingle hash + the
@@ -2393,7 +2371,6 @@ def er_merge_survivorship(spark: SparkSession, sf_dir: str) -> DataFrame:
     t = dirty.select(
         "p_name", F.split(F.col("p_name"), " ").alias("w")
     ).filter(F.size("w") >= 2)
-    from kafka_streams_example_spark.operators import share
 
     # sig (the name-vocabulary census — one row per (signature, name))
     # feeds BOTH the survivorship window and the final join-back; without
@@ -2543,8 +2520,6 @@ def substring_exact_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     # + per-window slice/join/md5 pass runs twice. The window-hash table
     # is pass 1 of the ExactSubstr pipeline (Lee et al. materialize the
     # suffix array the same way); checkpoint it once per invocation.
-    from kafka_streams_example_spark.operators import share
-
     w = share(w)
     freq = w.groupBy("h").agg(F.count("*").alias("n_occ")).filter(
         F.col("n_occ") > 1
@@ -2694,8 +2669,6 @@ def substring_dedup_cut(spark: SparkSession, sf_dir: str) -> DataFrame:
     # same discipline as substring_exact_spans: w feeds the canonical-
     # occurrence aggregate AND the join-back — checkpoint the window-hash
     # table so the explode/slice/md5 pass runs once per invocation
-    from kafka_streams_example_spark.operators import share
-
     w = share(w)
     agg = (
         w.groupBy("h")
@@ -2778,7 +2751,7 @@ _CONT_T = 0.9
     "neardup_containment_pairs",
     f"""
 WITH t AS (SELECT doc_id, {_TOKS} AS t FROM documents),
-d AS (SELECT doc_id, {_NGRAMS} AS ng FROM t),
+d AS (SELECT doc_id, {_NGRAMS3} AS ng FROM t),
 nz AS (SELECT * FROM d WHERE len(ng) > 0)
 SELECT a.doc_id AS id_a, b.doc_id AS id_b,
        floor(len(list_intersect(a.ng, b.ng)) / CAST(len(a.ng) AS DOUBLE)

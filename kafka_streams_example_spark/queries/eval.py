@@ -15,6 +15,7 @@ from kafka_streams_example_spark.functions.hashing import (
     fingerprint_md5,
     stable_long,
 )
+from kafka_streams_example_spark.operators import share
 from kafka_streams_example_spark.operators import text as tx
 from kafka_streams_example_spark.queries.text import _duck_lang_sql
 from kafka_streams_example_spark.registry import (
@@ -25,6 +26,7 @@ from kafka_streams_example_spark.registry import (
     _load_parallel,
     register,
 )
+from kafka_streams_example_spark.sources.files import table_uncompressed_bytes
 
 
 # --------------------------------------------------------------------------
@@ -689,8 +691,6 @@ def cohens_kappa_langid(spark: SparkSession, sf_dir: str) -> DataFrame:
     100 TB shape: the lang_id scan collapses to a (langs × langs) cell
     table; marginals, diagonal and the kappa algebra all run on those
     few dozen rows. (N² would widen to DECIMAL(38,0) past ~3B docs.)"""
-    from kafka_streams_example_spark.operators import share
-
     docs = _load_parallel(spark, sf_dir, "documents")
     # cells is (langs × langs) tiny but feeds THREE consumers (tot, ra,
     # ca) — without materialization each one re-runs the corpus scan +
@@ -757,16 +757,14 @@ _XE_UNSEEN = (
 def _bigram_split_lang_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The (split, lang, tok_a, tok_b, c) bigram count table — the master
     n-gram count artifact of the LM family, built from ONE corpus
-    tokenize + zip_with + explode pass and CACHED by plan equality for
-    its three registered consumers: bigram_crossentropy_eval reads the
+    tokenize + zip_with + explode pass and shared by its three
+    registered consumers: bigram_crossentropy_eval reads the
     split/lang-tagged rows directly, kneser_ney_bigram and
     bigram_lm_probs roll global (a, b) counts up from it (integer sums
     over the split/lang tags — exact by construction, proven against the
     unchanged DuckDB oracles). Before r12 each consumer ran its own
     corpus pass; the count rollups are bigram-TYPE-sized, orders of
-    magnitude smaller than the token stream. Narrow sparse frame (4
-    strings + long), the blessed cache class; see operators/graph.py for
-    the size discipline."""
+    magnitude smaller than the token stream."""
     docs = _load_parallel(spark, sf_dir, "documents")
     d = docs.select(
         "lang",
@@ -786,8 +784,6 @@ def _bigram_split_lang_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         ).alias("p"),
     ).select("lang", "split", "p.a", "p.b")
-    from kafka_streams_example_spark.operators import share
-    from kafka_streams_example_spark.sources.files import table_uncompressed_bytes
 
     return share(
         bg.groupBy("split", "lang", "a", "b").agg(

@@ -12,9 +12,10 @@ global orderBy).
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from kafka_streams_example_spark.operators import share
 from kafka_streams_example_spark.operators import text as tx
 from kafka_streams_example_spark.registry import _load_parallel, register
-from kafka_streams_example_spark.sources.files import load_table
+from kafka_streams_example_spark.sources.files import load_table, table_uncompressed_bytes
 
 
 # Value-band dimension for the non-equi range join: [lo, hi) tiers that
@@ -839,9 +840,11 @@ def basket_part_pairs_lift(spark: SparkSession, sf_dir: str) -> DataFrame:
     engines."""
     li = load_table(spark, sf_dir, "lineitem")
     # consumed by the order-count, part-frequency AND basket branches;
-    # two longs per row (far smaller than the lineitem it replaces), so
-    # caching is scale-safe — same policy as ngram_jaccard_pairs' hash set
-    op = li.select("l_orderkey", "l_partkey").distinct().cache()
+    # two longs per row, far smaller than the lineitem it replaces
+    op = share(
+        li.select("l_orderkey", "l_partkey").distinct(),
+        table_uncompressed_bytes(sf_dir, "lineitem"),
+    )
     n = op.agg(F.countDistinct("l_orderkey").alias("n_orders"))
     f = op.groupBy("l_partkey").agg(F.count("*").alias("n_f"))
     baskets = op.groupBy("l_orderkey").agg(

@@ -19,6 +19,7 @@ from pyspark.sql import functions as F
 
 from kafka_streams_example_spark.operators import dedup as dd
 from kafka_streams_example_spark.operators import multimodal as mm
+from kafka_streams_example_spark.operators import share
 from kafka_streams_example_spark.operators.multimodal import (
     _DH_BANDS,
     _DH_BITS,
@@ -28,6 +29,7 @@ from kafka_streams_example_spark.operators.multimodal import (
     fx,
 )
 from kafka_streams_example_spark.registry import _load_parallel, register
+from kafka_streams_example_spark.sources.files import table_uncompressed_bytes
 
 
 @register(
@@ -309,13 +311,14 @@ _DH_HAM = 6  # near-dup verify threshold (same as neardup_simhash_pairs)
 def _phash_fp_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The shared decode-scan: (doc_id, width, height, dhash) via ONE
     map-only Arrow kernel (operators/multimodal.py:phash_fingerprints —
-    blob bytes exist only inside the batch), checkpointed so the plan's
-    multiple references execute the Python stage once (the BPE
-    lineage-cut precedent) — exactly the "write the fingerprint table,
-    then self-join it" shape a production pipeline ships at 100 TB."""
-    return mm.phash_fingerprints(
-        _load_parallel(spark, sf_dir, "documents")
-    ).localCheckpoint(eager=True)
+    blob bytes exist only inside the batch), shared so the plan's
+    multiple references execute the Python stage once — exactly the
+    "write the fingerprint table, then self-join it" shape a production
+    pipeline ships at 100 TB."""
+    return share(
+        mm.phash_fingerprints(_load_parallel(spark, sf_dir, "documents")),
+        table_uncompressed_bytes(sf_dir, "documents"),
+    )
 
 
 def _phash_band_stats(
@@ -1130,10 +1133,13 @@ def video_fingerprint_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
             for fh in set(hashes[:-1]):
                 yield -i - 1, fh
 
-    fps = mm.map_rows(
-        _load_parallel(spark, sf_dir, "documents"), ["doc_id", "text"],
-        "video_id LONG, fhash LONG", row,
-    ).localCheckpoint(eager=True)
+    fps = share(
+        mm.map_rows(
+            _load_parallel(spark, sf_dir, "documents"), ["doc_id", "text"],
+            "video_id LONG, fhash LONG", row,
+        ),
+        table_uncompressed_bytes(sf_dir, "documents"),
+    )
     sizes = fps.groupBy("video_id").agg(F.count("*").alias("n"))
     pairs = (
         fps.alias("l")
@@ -1285,10 +1291,13 @@ def audio_fingerprint_match(spark: SparkSession, sf_dir: str) -> DataFrame:
                 word = sum(1 << b for b in range(16) if sm[16 * f + b] >= 0)
                 yield aid, f * 65536 + word
 
-    fps = mm.map_rows(
-        _load_parallel(spark, sf_dir, "documents"), ["doc_id", "text"],
-        "audio_id LONG, wkey LONG", row,
-    ).localCheckpoint(eager=True)
+    fps = share(
+        mm.map_rows(
+            _load_parallel(spark, sf_dir, "documents"), ["doc_id", "text"],
+            "audio_id LONG, wkey LONG", row,
+        ),
+        table_uncompressed_bytes(sf_dir, "documents"),
+    )
     sizes = fps.groupBy("audio_id").agg(F.count("*").alias("n"))
     pairs = (
         fps.alias("l")

@@ -33,8 +33,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from kafka_streams_example_spark.operators import share
 from kafka_streams_example_spark.registry import _dec, _sum_dbl, register
-from kafka_streams_example_spark.sources.files import load_table
+from kafka_streams_example_spark.sources.files import load_table, table_uncompressed_bytes
 
 _REV = "CAST(l_extendedprice AS DECIMAL(18,4)) * CAST(1 - l_discount AS DECIMAL(8,4))"
 
@@ -305,8 +306,6 @@ def q11_important_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
     factor). The HAVING-vs-scalar-subquery is a broadcast of a 1-row
     aggregate; the threshold and per-part values derive from exact
     decimal sums so the strict comparison agrees across engines."""
-    from kafka_streams_example_spark.operators import share
-
     li = load_table(spark, sf_dir, "lineitem")
     # ONE lineitem pass: the threshold's corpus revenue sum and distinct
     # part count roll up exactly from the per-part decimal sums (decimal
@@ -486,7 +485,6 @@ def q21_waiting_suppliers(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("l_shipdate") > F.date_add(F.col("o_orderdate"), 90), 1
         ).otherwise(0).alias("is_late"),
     )
-    from kafka_streams_example_spark.operators import share
 
     # per_os ((order, supplier) rollup — the EXISTS-rewrite's pivot table)
     # feeds BOTH the per-order stats and the final filter join; without
@@ -778,16 +776,16 @@ def kmeans_centroids(spark: SparkSession, sf_dir: str) -> DataFrame:
     with identical fold-order cosine, and emit the final centroids
     exploded to (cid, dim_pos, cval).
 
-    CACHED (k×dim rows): the trained-IVF family
+    Shared (k×dim rows): the trained-IVF family
     (similarity_ivf_trained_topk, ann_recall_trained_vs_fixed via
-    retrieval._trained_centroid_vectors) consumes this exact frame, so
-    the plan-equality cache runs the two-iteration training once per
-    session for all three registered consumers — the _neardup_pairs
-    discipline (queries/dedup.py)."""
+    retrieval._trained_centroid_vectors) consumes this exact frame."""
     from kafka_streams_example_spark.operators.similarity import kmeans_lloyd
 
     emb = load_table(spark, sf_dir, "embeddings")
-    return kmeans_lloyd(emb, k=8, dim=64, iterations=2).cache()
+    return share(
+        kmeans_lloyd(emb, k=8, dim=64, iterations=2),
+        table_uncompressed_bytes(sf_dir, "embeddings"),
+    )
 
 
 @register(

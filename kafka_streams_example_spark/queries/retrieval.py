@@ -13,6 +13,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from kafka_streams_example_spark.operators import dedup as dd
+from kafka_streams_example_spark.operators import share
 from kafka_streams_example_spark.operators import similarity as sim
 from kafka_streams_example_spark.operators import text as tx
 from kafka_streams_example_spark.queries._shared import _DIM, _NGRAMS3
@@ -24,7 +25,11 @@ from kafka_streams_example_spark.registry import (
     _load_parallel,
     register,
 )
-from kafka_streams_example_spark.sources.files import load_table, table_row_count
+from kafka_streams_example_spark.sources.files import (
+    load_table,
+    table_row_count,
+    table_uncompressed_bytes,
+)
 
 
 @register(
@@ -56,19 +61,17 @@ def similarity_cosine_topk(spark, sf_dir):
 
 
 def _exact_topk_full(spark, sf_dir):
-    """Session-shared exact winner set (queries × k rows, full columns).
+    """Shared exact winner set (queries × k rows, full columns).
 
     FOUR registered queries read this frame — similarity_cosine_topk
     itself and the three recall evals (ann_recall_at_k,
-    ann_recall_trained_vs_fixed, ann_recall_pq_vs_ivf) — so it is CACHED:
-    Spark's plan-equality lookup materializes the brute-force pass once
-    per session for all of them (the _neardup_pairs discipline,
-    queries/dedup.py). Within one eval plan the cache also serves the
-    multi-reference dedup the per-invocation checkpoint used to provide
-    (base + overlap joins all scan the same InMemoryRelation). A fresh
-    session — the driver's oracle run — recomputes from parquet."""
+    ann_recall_trained_vs_fixed, ann_recall_pq_vs_ivf) — and within one
+    eval plan the base and overlap joins reference it more than once."""
     emb = load_table(spark, sf_dir, "embeddings")
-    return sim.cosine_topk(emb, emb.filter(F.col("vec_id") < 8), k=10, dim=64).cache()
+    return share(
+        sim.cosine_topk(emb, emb.filter(F.col("vec_id") < 8), k=10, dim=64),
+        table_uncompressed_bytes(sf_dir, "embeddings"),
+    )
 
 
 def _hyperplanes(n_planes: int = 6, dim: int = 64, seed: int = 7) -> list[list[float]]:
@@ -115,26 +118,25 @@ def similarity_ivf_topk(spark, sf_dir):
 
 
 def _fixed_ivf_full(spark, sf_dir):
-    """Session-shared fixed-seed IVF winner set (queries × k rows).
-
-    Read by similarity_ivf_topk and the three recall evals — cached by
-    plan equality exactly like _exact_topk_full above. The footer-metadata
-    row count (zero Spark jobs) sizes the candidate estimate so the Arrow
-    local-top-k prune only engages when the window shuffle it bounds
-    would actually be large (VERDICT r03 #3)."""
-    from kafka_streams_example_spark.sources.files import table_row_count
-
+    """Shared fixed-seed IVF winner set (queries × k rows), read by
+    similarity_ivf_topk and the three recall evals like _exact_topk_full
+    above. The footer-metadata row count (zero Spark jobs) sizes the
+    candidate estimate so the Arrow local-top-k prune only engages when
+    the window shuffle it bounds would actually be large (VERDICT r03 #3)."""
     emb = load_table(spark, sf_dir, "embeddings")
     est = 8 * table_row_count(spark, sf_dir, "embeddings") * 4 // 16
-    return sim.ivf_topk(
-        emb,
-        emb.filter(F.col("vec_id") < 8),
-        centroids=emb.filter(F.col("vec_id") < 16),
-        nprobe=4,
-        k=10,
-        dim=64,
-        candidate_rows=est,
-    ).cache()
+    return share(
+        sim.ivf_topk(
+            emb,
+            emb.filter(F.col("vec_id") < 8),
+            centroids=emb.filter(F.col("vec_id") < 16),
+            nprobe=4,
+            k=10,
+            dim=64,
+            candidate_rows=est,
+        ),
+        table_uncompressed_bytes(sf_dir, "embeddings"),
+    )
 
 
 def _duck_simhash_bucket(vec: str, planes: list[list[float]], dim: int = 64) -> str:
@@ -602,12 +604,9 @@ def ann_recall_at_k(spark: SparkSession, sf_dir: str) -> DataFrame:
     sample is the standard recall protocol) plus the IVF path being
     measured; the overlap join is per-query×k rows, trivially small.
 
-    Both winner sets come from the session-shared cached frames
-    (_exact_topk_full / _fixed_ivf_full): the brute-force pass and the
-    IVF path each materialize once per session for every consumer, and
-    the multi-reference dedup inside THIS plan (exact feeds base + hits)
-    rides the same InMemoryRelation — the role the per-invocation
-    checkpoint used to play."""
+    Both winner sets come from the shared frames (_exact_topk_full /
+    _fixed_ivf_full), which also serve the multi-reference inside THIS
+    plan (exact feeds base + hits)."""
     exact = _exact_topk_full(spark, sf_dir).select("q_id", "vec_id")
     approx = _fixed_ivf_full(spark, sf_dir).select("q_id", "vec_id")
     base = exact.groupBy("q_id").agg(F.count("*").alias("n_exact"))
@@ -1251,25 +1250,25 @@ def embedding_dispersion_by_label(spark: SparkSession, sf_dir: str) -> DataFrame
 # --------------------------------------------------------------------------
 
 
-def _trained_centroid_vectors(cent_long: DataFrame) -> DataFrame:
+def _trained_centroid_vectors(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Regroup kmeans_centroids' long output (cid, dim_pos, cval) into
     (vec_id, embedding) centroid vectors for ivf_topk — the same
     array_sort(collect_list(struct)) device kmeans_lloyd uses internally.
 
-    The k-row result is CACHED: ivf_topk references its centroid frame
+    The k-row result is shared: ivf_topk references its centroid frame
     TWICE (corpus assignment + query probe), and without materialization
     each reference re-runs the FULL two-iteration Lloyd's training
     (measured: similarity_ivf_trained_topk executed 8 parquet scans / 15
-    exchanges, ReusedExchange 0). Both references scan one
-    InMemoryRelation — training runs once, exactly what a production IVF
-    build does with its trained coarse quantizer — and, unlike the
-    earlier per-invocation localCheckpoint, the cache keys on plan
-    equality, so the TWO registered consumers of the trained quantizer
-    (similarity_ivf_trained_topk, ann_recall_trained_vs_fixed) share the
-    materialization per session AND the downstream trained-IVF frame
-    stays plan-deterministic (a checkpoint's fresh RDD id would defeat
-    _trained_ivf_full's own cross-query cache below)."""
-    return (
+    exchanges, ReusedExchange 0) — training runs once, exactly what a
+    production IVF build does with its trained coarse quantizer. It
+    budgets on the same footer figure as _trained_ivf_full, so both take
+    the same side of share: a checkpointed centroid frame gets a fresh
+    RDD id per invocation, which would defeat a session cache of the
+    frame built on it."""
+    from kafka_streams_example_spark import registry as _reg
+
+    cent_long = _reg.QUERIES["kmeans_centroids"](spark, sf_dir)
+    return share(
         cent_long.groupBy("cid")
         .agg(
             F.expr(
@@ -1277,8 +1276,8 @@ def _trained_centroid_vectors(cent_long: DataFrame) -> DataFrame:
                 " s -> s.cval)"
             ).alias("embedding")
         )
-        .selectExpr("CAST(cid AS LONG) AS vec_id", "embedding")
-        .cache()
+        .selectExpr("CAST(cid AS LONG) AS vec_id", "embedding"),
+        table_uncompressed_bytes(sf_dir, "embeddings"),
     )
 
 
@@ -1348,26 +1347,24 @@ def similarity_ivf_trained_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _trained_ivf_full(spark, sf_dir):
-    """Session-shared trained-IVF winner set (queries × k rows), cached
-    by plan equality for its two registered consumers
-    (similarity_ivf_trained_topk, ann_recall_trained_vs_fixed) — the
-    whole train-assign-probe-rerank pass runs once per session instead
-    of once per consumer."""
-    from kafka_streams_example_spark import registry as _reg
-
+    """Shared trained-IVF winner set (queries × k rows) for its two
+    registered consumers (similarity_ivf_trained_topk,
+    ann_recall_trained_vs_fixed)."""
     emb = load_table(spark, sf_dir, "embeddings")
-    cent = _trained_centroid_vectors(_reg.QUERIES["kmeans_centroids"](spark, sf_dir))
     # queries × rows × nprobe/cells: the window input unions the probed cells
     est = 8 * table_row_count(spark, sf_dir, "embeddings") * 2 // 8
-    return sim.ivf_topk(
-        emb,
-        emb.filter(F.col("vec_id") < 8),
-        centroids=cent,
-        nprobe=2,
-        k=10,
-        dim=64,
-        candidate_rows=est,
-    ).cache()
+    return share(
+        sim.ivf_topk(
+            emb,
+            emb.filter(F.col("vec_id") < 8),
+            centroids=_trained_centroid_vectors(spark, sf_dir),
+            nprobe=2,
+            k=10,
+            dim=64,
+            candidate_rows=est,
+        ),
+        table_uncompressed_bytes(sf_dir, "embeddings"),
+    )
 
 
 # --------------------------------------------------------------------------
@@ -1413,15 +1410,13 @@ def ann_recall_trained_vs_fixed(spark: SparkSession, sf_dir: str) -> DataFrame:
     the eval inherits their plans and their oracles; the overlap joins
     are per-query×k rows.
 
-    All three winner sets come from the session-shared cached frames
-    (_exact_topk_full / _fixed_ivf_full / _trained_ivf_full): each
-    expensive pass materializes once per session for every registered
-    consumer — the A/B reads the same indexes the standalone index
-    queries serve, which is also what the eval MEANS. Intra-plan
-    multi-reference dedup (exact feeds base + both overlap joins) rides
-    the same InMemoryRelation — the role the per-invocation checkpoint
-    used to play (without it the brute-force pass executed three times:
-    18 scans / 27 exchanges in the measured AQE plan, ReusedExchange 0)."""
+    All three winner sets come from the shared frames (_exact_topk_full
+    / _fixed_ivf_full / _trained_ivf_full) — the A/B reads the same
+    indexes the standalone index queries serve, which is also what the
+    eval MEANS. They also serve the intra-plan multi-reference (exact
+    feeds base + both overlap joins; unshared, the brute-force pass
+    executed three times: 18 scans / 27 exchanges in the measured AQE
+    plan, ReusedExchange 0)."""
     exact = _exact_topk_full(spark, sf_dir).select("q_id", "vec_id")
     fixed = _fixed_ivf_full(spark, sf_dir).select("q_id", "vec_id")
     trained = _trained_ivf_full(spark, sf_dir).select("q_id", "vec_id")
@@ -1535,19 +1530,20 @@ def similarity_pq_topk(spark, sf_dir):
 
 
 def _pq_topk_full(spark, sf_dir):
-    """Session-shared PQ/ADC winner set (queries × k rows), cached by
-    plan equality for its two registered consumers (similarity_pq_topk,
-    ann_recall_pq_vs_ivf) — encode + ADC scan + re-rank run once per
-    session instead of once per consumer."""
+    """Shared PQ/ADC winner set (queries × k rows) for its two
+    registered consumers (similarity_pq_topk, ann_recall_pq_vs_ivf)."""
     emb = load_table(spark, sf_dir, "embeddings")
-    return sim.pq_adc_topk(
-        emb,
-        emb.filter(F.col("vec_id") < 8),
-        codebook_src=emb.filter(F.col("vec_id") < 16),
-        n_sub=8,
-        d_sub=8,
-        k=10,
-    ).cache()
+    return share(
+        sim.pq_adc_topk(
+            emb,
+            emb.filter(F.col("vec_id") < 8),
+            codebook_src=emb.filter(F.col("vec_id") < 16),
+            n_sub=8,
+            d_sub=8,
+            k=10,
+        ),
+        table_uncompressed_bytes(sf_dir, "embeddings"),
+    )
 
 
 # --------------------------------------------------------------------------
@@ -1593,11 +1589,10 @@ def ann_recall_pq_vs_ivf(spark, sf_dir):
     reads. Both variants and the baseline reuse the registered operators
     and inherit their plans/oracles; overlap joins are queries × k rows.
 
-    All three winner sets come from the session-shared cached frames
-    (_exact_topk_full / _fixed_ivf_full / _pq_topk_full) — one
-    materialization per session per index, intra-plan multi-reference
-    dedup via the same InMemoryRelation (the ann_recall_trained_vs_fixed
-    measurement, same shape)."""
+    All three winner sets come from the shared frames (_exact_topk_full
+    / _fixed_ivf_full / _pq_topk_full), which also serve the intra-plan
+    multi-reference (the ann_recall_trained_vs_fixed measurement, same
+    shape)."""
     exact = _exact_topk_full(spark, sf_dir).select("q_id", "vec_id")
     ivf = _fixed_ivf_full(spark, sf_dir).select("q_id", "vec_id")
     pq = _pq_topk_full(spark, sf_dir).select("q_id", "vec_id")

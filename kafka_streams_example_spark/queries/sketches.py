@@ -12,6 +12,7 @@ coincidence.
 import hashlib
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from kafka_streams_example_spark.operators import share
 from kafka_streams_example_spark.operators import similarity as sim
 from kafka_streams_example_spark.operators import text as tx
 from kafka_streams_example_spark.registry import (
@@ -19,7 +20,7 @@ from kafka_streams_example_spark.registry import (
     _load_parallel,
     register,
 )
-from kafka_streams_example_spark.sources.files import load_table
+from kafka_streams_example_spark.sources.files import load_table, table_uncompressed_bytes
 
 
 # --------------------------------------------------------------------------
@@ -113,7 +114,6 @@ def bloom_filter_probe_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     included."""
     orders = load_table(spark, sf_dir, "orders")
     cust = load_table(spark, sf_dir, "customer")
-    from kafka_streams_example_spark.operators import share
 
     # members (distinct finished-order custkeys — the filter's build set)
     # feeds BOTH the bitmap fold and the confusion-matrix join; without
@@ -451,7 +451,7 @@ def countmin_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("token")
         .agg(F.count("*").cast("long").alias("cnt"))
     )
-    counts = counts.cache()
+    counts = share(counts, table_uncompressed_bytes(sf_dir, "documents"))
     ds = F.explode(F.array(*[F.lit(d) for d in range(_CM_D)])).alias("d")
 
     def pos_for_d(tok):
@@ -586,8 +586,9 @@ def theta_sketch_set_ops(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(uday.alias("h"))
         .distinct()
     )
-    ha = ha.cache()
-    hb = hb.cache()
+    est = table_uncompressed_bytes(sf_dir, "events")
+    ha = share(ha, est)
+    hb = share(hb, est)
     hu = ha.union(hb).distinct()
     sk = hu.orderBy("h").limit(_TH_K)
     kth = sk.agg(

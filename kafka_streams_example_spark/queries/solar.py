@@ -13,9 +13,10 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from kafka_streams_example_spark.operators import share
 from kafka_streams_example_spark.plans import solar
 from kafka_streams_example_spark.registry import register
-from kafka_streams_example_spark.sources.files import load_table
+from kafka_streams_example_spark.sources.files import load_table, table_uncompressed_bytes
 
 
 # --------------------------------------------------------------------------
@@ -55,16 +56,16 @@ stats AS (
 
 
 def _module_agg_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """A1 module aggregates over the events fixture, CACHED by plan
-    equality: the five batch solar queries (module agg, panel stats,
-    anomalies, both wire-format roundtrips) all start from this one
-    stage, so the events scan + window aggregation runs once per session
-    for the whole family (the _neardup_pairs discipline). This is
+    """A1 module aggregates over the events fixture, shared: the five
+    batch solar queries (module agg, panel stats, anomalies, both
+    wire-format roundtrips) all start from this one stage. This is
     exactly the table the reference's Kafka Streams topology materializes
     as its module-aggregate KTable changelog — windows × panels × modules
-    rows, bounded and narrow, never the raw events."""
+    rows, never more than the events it aggregates."""
     df = solar.events_as_solar(load_table(spark, sf_dir, "events"))
-    return solar.module_aggregates(df).cache()
+    # at most one 6-column row per event: measured 2.3-2.6x the events'
+    # footer bytes (SCALE.md §caches)
+    return share(solar.module_aggregates(df), table_uncompressed_bytes(sf_dir, "events") * 4)
 
 
 @register(

@@ -14,6 +14,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from kafka_streams_example_spark.functions.hashing import stable_long
+from kafka_streams_example_spark.operators import share
 from kafka_streams_example_spark.operators import text as tx
 from kafka_streams_example_spark.registry import (
     ORACLES,
@@ -840,7 +841,6 @@ def kaplan_meier_conversion(spark: SparkSession, sf_dir: str) -> DataFrame:
             .alias("day"),
         )
     )
-    from kafka_streams_example_spark.operators import share
 
     # byday (day-grain, bounded by study length) feeds the study-size
     # total AND the risk window — checkpoint it once, and derive the

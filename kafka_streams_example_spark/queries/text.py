@@ -13,16 +13,21 @@ statistics wherever the oracle must hash-match.
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from kafka_streams_example_spark.operators import share
 from kafka_streams_example_spark.operators import text as tx
+from kafka_streams_example_spark.queries._shared import _NGRAMS3
 from kafka_streams_example_spark.registry import (
     ORACLES,
-    _NGRAMS,
     _TOKS,
     _duck_round_half_up,
     _load_parallel,
     register,
 )
-from kafka_streams_example_spark.sources.files import load_table, table_row_count
+from kafka_streams_example_spark.sources.files import (
+    load_table,
+    table_row_count,
+    table_uncompressed_bytes,
+)
 
 
 # Portable HALF_UP quality rounding: floor(x*10^4+0.5)/10^4 — the SAME
@@ -443,8 +448,6 @@ def tfidf_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
     checkpointed once per invocation; DF is vocabulary-sized and
     broadcasts back onto it.
     """
-    from kafka_streams_example_spark.operators import share
-
     docs = _load_parallel(spark, sf_dir, "documents")
     # scalar dimension from parquet footers — no Spark count job
     n_docs = table_row_count(spark, sf_dir, "documents")
@@ -913,17 +916,14 @@ _LM_K = 0.5  # add-k smoothing constant (exactly representable)
 def _bigram_pair_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Global (tok_a, tok_b, n_ab) bigram count table, rolled up from the
     session-shared split/lang-tagged master (queries/eval.py:
-    _bigram_split_lang_counts) and CACHED for its two registered
+    _bigram_split_lang_counts) and shared by its two registered
     consumers (kneser_ney_bigram, bigram_lm_probs). The rollup is an
     exact integer sum over the split/lang tags; the rollup input is the
-    cached bigram-TYPE-sized master, so materializing this table costs a
+    shared bigram-TYPE-sized master, so materializing this table costs a
     types-sized aggregation, not a corpus pass. Lazy import: eval.py
     imports text.py at module load, so the reverse edge must resolve at
     query-call time."""
     from kafka_streams_example_spark.queries.eval import _bigram_split_lang_counts
-
-    from kafka_streams_example_spark.operators import share
-    from kafka_streams_example_spark.sources.files import table_uncompressed_bytes
 
     master = _bigram_split_lang_counts(spark, sf_dir)
     return share(
@@ -1063,7 +1063,7 @@ _NOVELTY_BATCH = 50  # docs per ingestion batch (by doc_id order)
     "ngram_novelty_curve",
     f"""
 WITH d AS (
-    SELECT doc_id // {_NOVELTY_BATCH} AS batch, {_NGRAMS} AS ng
+    SELECT doc_id // {_NOVELTY_BATCH} AS batch, {_NGRAMS3} AS ng
     FROM (SELECT doc_id, {_TOKS} AS t FROM documents)
 ),
 dp AS (
@@ -1240,14 +1240,11 @@ def token_pagerank_centrality(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = _load_parallel(spark, sf_dir, "documents")
     # the edge table feeds 4+ consumers (both und directions, deg,
     # nodes, every unrolled iteration's src join) and is the ONLY
-    # corpus-scale stage — cache so the explode+aggregate runs once
-    e = (
-        tx.cooccurrence_edges(tx.doc_token_sets(docs), _COOC_SUPPORT)
-        .select("u", "v")
-        .cache()
+    # corpus-scale stage (SCALE.md §caches)
+    e = share(
+        tx.cooccurrence_edges(tx.doc_token_sets(docs), _COOC_SUPPORT).select("u", "v"),
+        table_uncompressed_bytes(sf_dir, "documents"),
     )
-    from kafka_streams_example_spark.operators import share
-
     und = e.union(e.select(F.col("v"), F.col("u"))).select(
         F.col("u"), F.col("v")
     )
@@ -1664,7 +1661,6 @@ def trigram_backoff_lm(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         ).alias("g")
     ).select("g.w1", "g.w2", "g.w3")
-    from kafka_streams_example_spark.operators import share
 
     # c3 feeds FOUR consumers (the filter + the three context rollups);
     # without materialization each one re-runs the corpus tokenize +
@@ -1815,15 +1811,10 @@ def _unigram_freq(spark, sf_dir):
     """The corpus unigram count table (token, c) — the vocabulary LM
     (operators/text.py:token_counts).
 
-    CACHED by plan equality (vocab-sized, narrow — the blessed frame
-    class): doc_perplexity_proxy's four consumers, token_frequencies and
+    Shared: doc_perplexity_proxy's four consumers, token_frequencies and
     ccnet_perplexity_buckets build it through this helper, and the cache
     lookup ignores column names, so zipf_law_fit's (term, f) count over
-    the same token stream reads it too — the tokenize+explode+count pass
-    runs once per session."""
-    from kafka_streams_example_spark.operators import share
-    from kafka_streams_example_spark.sources.files import table_uncompressed_bytes
-
+    the same token stream reads it too."""
     docs = _load_parallel(spark, sf_dir, "documents")
     # vocab keys are distinct substrings of the corpus, so the source
     # byte size upper-bounds the table (SCALE.md §caches)
@@ -1858,26 +1849,16 @@ def doc_perplexity_proxy(spark, sf_dir):
     the vocabulary count table (the unigram LM, vocab-sized) and the
     per-doc score table (3 narrow scalars per doc — exactly what a
     production quality-filter pipeline materializes between scoring and
-    selection) are CACHED by plan equality: the two corpus
-    tokenize+explode passes run once per session for every consumer (the
-    _neardup_pairs discipline). The former per-invocation freq
-    localCheckpoint could not be plan-shared (fresh RDD id per
-    invocation) and re-ran the scoring per consumer query. The score is
-    ``unigram_lm_scores``, the quality gate's scorer too."""
-    from kafka_streams_example_spark.operators import share
-    from kafka_streams_example_spark.sources.files import table_row_count
-
-    # freq feeds the total rollup AND the broadcast join — the cache also
-    # covers that intra-plan multi-reference (both scan one
-    # InMemoryRelation): tokenize passes stay 2 per materialization.
+    selection) are shared. The score is ``unigram_lm_scores``, the
+    quality gate's scorer too."""
+    # freq feeds the total rollup AND the broadcast join
     freq = _unigram_freq(spark, sf_dir)
     lm = F.broadcast(freq.join(F.broadcast(freq.agg(F.sum("c").alias("n")))))
     scored = tx.unigram_lm_scores(
         _load_parallel(spark, sf_dir, "documents"), lm, F.col("n"), "doc_id"
     )
-    # per-doc score table: 3 narrow scalars per doc — rows ∝ docs, so the
-    # session cache is budgeted at ~40 B/doc (SCALE.md §caches; r11
-    # VERDICT #6 named this frame explicitly)
+    # per-doc score table: 3 narrow scalars per doc — budgeted at
+    # ~40 B/doc (SCALE.md §caches)
     return share(
         scored.withColumnRenamed("score", "avg_neg_logp"),
         table_row_count(spark, sf_dir, "documents") * 40,
@@ -2365,8 +2346,6 @@ def ccnet_perplexity_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
     broadcast-join back onto the binned docs. Bucket boundaries land on
     bin edges — bin-resolution quantiles by design, corpus-size-
     independent state."""
-    from kafka_streams_example_spark.operators import share
-
     # Same discipline as doc_perplexity_proxy — the same scorer over the
     # SAME cached vocabulary table (_unigram_freq).
     freq = _unigram_freq(spark, sf_dir)
@@ -2551,7 +2530,6 @@ def heaps_law_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
             "cut",
         )
     )
-    from kafka_streams_example_spark.operators import share
 
     # logs is a len(_HEAPS_CUTS)-row frame, but it feeds BOTH the OLS
     # sufficient-statistics aggregate and the final join — without

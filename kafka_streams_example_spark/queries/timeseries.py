@@ -9,8 +9,9 @@ coefficient expansions so they stay engine-exact and shuffle-bounded.
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+from kafka_streams_example_spark.operators import share
 from kafka_streams_example_spark.registry import register
-from kafka_streams_example_spark.sources.files import load_table
+from kafka_streams_example_spark.sources.files import load_table, table_uncompressed_bytes
 
 
 # --------------------------------------------------------------------------
@@ -503,7 +504,7 @@ def acf_daily_events(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("day")
         .agg(F.count("*").cast("long").alias("x"))
     )
-    series = series.cache()
+    series = share(series, table_uncompressed_bytes(sf_dir, "events"))
     # denom must use the same mu both engines derive: avg over exact longs
     mu_df = series.agg(F.avg("x").alias("mu"))
     denom_df = series.crossJoin(F.broadcast(mu_df)).agg(
@@ -601,7 +602,7 @@ def cusum_changepoint(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("day")
         .agg(F.count("*").cast("long").alias("x"))
     )
-    series = series.cache()
+    series = share(series, table_uncompressed_bytes(sf_dir, "events"))
     mu_df = series.agg(F.avg("x").alias("mu"))
     sig_df = (
         series.crossJoin(F.broadcast(mu_df))

@@ -83,10 +83,6 @@ def register(name: str, oracle: str | None = None):
 
 # DuckDB equivalents of the text.py tokenizer, shared by the doc oracles.
 _TOKS = "list_filter(string_split_regex(trim(lower(text)), '[ \\t\\n\\x0B\\f\\r]+'), x -> x <> '')"
-_NGRAMS = (
-    "list_distinct(list_transform(generate_series(1, greatest(len(t) - 2, 0)),"
-    " i -> t[i] || ' ' || t[i+1] || ' ' || t[i+2]))"
-)
 
 
 def _duck_round_half_up(expr: str, scale: int) -> str:

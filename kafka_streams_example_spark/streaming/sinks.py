@@ -8,8 +8,6 @@ non-invasive (no extra topology stages — sinks attach to any DataFrame):
 
 from __future__ import annotations
 
-from collections.abc import Callable
-
 from pyspark.sql import DataFrame
 
 
@@ -31,32 +29,5 @@ def memory_sink(stream_df: DataFrame, name: str, output_mode: str = "append"):
         stream_df.writeStream.format("memory")
         .queryName(name)
         .outputMode(output_mode)
-        .start()
-    )
-
-
-def foreach_batch_sink(
-    stream_df: DataFrame,
-    fn: Callable[[DataFrame, int], None],
-    checkpoint: str | None = None,
-    output_mode: str = "append",
-):
-    """The general side-effect sink (the reference's ``foreach``, but
-    batch-at-a-time): ``fn(batch_df, batch_id)`` with exactly-once batch
-    ids under checkpointing."""
-    writer = stream_df.writeStream.outputMode(output_mode).foreachBatch(fn)
-    if checkpoint:
-        writer = writer.option("checkpointLocation", checkpoint)
-    return writer.start()
-
-
-def parquet_sink(stream_df: DataFrame, path: str, checkpoint: str):
-    """File sink for downstream batch consumption (exactly-once via the
-    transaction log)."""
-    return (
-        stream_df.writeStream.format("parquet")
-        .option("path", path)
-        .option("checkpointLocation", checkpoint)
-        .outputMode("append")
         .start()
     )

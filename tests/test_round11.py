@@ -55,9 +55,7 @@ def test_trained_ivf_matches_manual_composition(spark):
     )
 
     emb = spark.read.parquet(f"{SF_SMOKE}/embeddings.parquet")
-    cent = _trained_centroid_vectors(
-        registry.QUERIES["kmeans_centroids"](spark, SF_SMOKE)
-    )
+    cent = _trained_centroid_vectors(spark, SF_SMOKE)
     want = sorted(
         map(
             tuple,

@@ -51,17 +51,38 @@ def test_cache_bounded_respects_budget(spark):
         "bigram_lm_probs",
         "bigram_crossentropy_eval",
         "neardup_minhash_pairs",
+        # one consumer per site that cached unconditionally before it
+        # went through share
+        "solar_module_agg",
+        "similarity_cosine_topk",
+        "similarity_ivf_topk",
+        "similarity_ivf_trained_topk",
+        "similarity_pq_topk",
+        "kmeans_centroids",
+        "acf_daily_events",
+        "cusum_changepoint",
+        "minhash_recall_report",
+        "token_pagerank_centrality",
+        "countmin_heavy_hitters",
+        "basket_part_pairs_lift",
+        "theta_sketch_set_ops",
+        # one per former eager checkpoint
+        "image_phash_neardup",
+        "video_fingerprint_neardup",
+        "audio_fingerprint_match",
     ],
 )
 def test_forced_cache_fallback_is_result_identical(spark, name, monkeypatch):
     """With the per-frame cache budget forced to zero every guarded site
     takes share's per-invocation checkpoint — results must be identical to
-    the cached path (r11 VERDICT #6 'Done' condition)."""
+    the cached path (r11 VERDICT #6 'Done' condition), and the forced run
+    must pin nothing in the session cache."""
     spark.catalog.clearCache()
     base = _norm(registry.QUERIES[name](spark, SF_SMOKE).toPandas())
     spark.catalog.clearCache()
     monkeypatch.setattr(ops, "_CACHE_MAX_BYTES", 0)
     forced = _norm(registry.QUERIES[name](spark, SF_SMOKE).toPandas())
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
     spark.catalog.clearCache()
     pd.testing.assert_frame_equal(base, forced, check_dtype=True)
 
