@@ -14,6 +14,7 @@ from __future__ import annotations
 import glob
 import json
 import os
+import re
 import sys
 from collections.abc import Callable
 
@@ -51,6 +52,33 @@ def _row_is_green(name: str, row: dict) -> bool:
     return row.get("err") in (None, "no_oracle") and row.get("spark_rows") is not None
 
 
+def _load_json(path: str) -> dict:
+    """The JSON object in ``path``; empty when the file is missing or
+    unreadable."""
+    try:
+        with open(path) as fh:
+            return json.load(fh)
+    except (OSError, ValueError):
+        return {}
+
+
+def _plan_fps(path: str) -> dict[str, str]:
+    """Query name -> the ``fp`` column of the PLANS.md table at ``path``
+    (tools/plan_report.py writes it); empty when the file is missing. A
+    PLAN ERROR row has no ``fp``."""
+    try:
+        with open(path) as fh:
+            lines = fh.read().splitlines()
+    except OSError:
+        return {}
+    fps = {}
+    for line in lines:
+        cells = [c.strip() for c in line.strip("| ").split("|")]
+        if len(cells) > 1 and re.fullmatch(r"[0-9a-f]{12}", cells[-1]):
+            fps[cells[0].removesuffix(" †")] = cells[-1]
+    return fps
+
+
 def _rotated(names: list[str]) -> list[str]:
     """Order queries so the driver's bounded per-round window (first ~50
     registrations) verifies the most urgent queries first:
@@ -59,15 +87,16 @@ def _rotated(names: list[str]) -> list[str]:
        ``no_oracle`` row for a query that now has an oracle) — re-verified
        before anything else so defects can't rotate out of the window;
     2. queries never recorded in any CORRECTNESS_r*.json;
-    3. green queries in ``_TOUCHED_THIS_ROUND``, whose plan changed after
-       their green row;
+    3. green queries whose plan changed after their green row: the
+       PLANS.md ``fp`` differs from the one VERIFIED_FP.json holds for the
+       query, or VERIFIED_FP.json holds none. ``tools/plan_report.py
+       --verified`` fills VERIFIED_FP.json from each new record;
     4. the other green queries, STALEST first: ordered by the round of their most
        recent green record (then by how often they've been verified).
        Recency, not count, is the staleness signal — a flagship verified
-       twice by r04 has gone unchecked for longer than a query verified
-       once in r09, and under a count-first policy the early cohort's
-       high counts would keep it out of the window indefinitely (found
-       in r10 when the r04/r05 solar rows sorted to positions 55+).
+       twice early has gone unchecked for longer than a query verified
+       once later, and under a count-first policy the early cohort's
+       high counts would keep it out of the window indefinitely.
 
     Stable registration order within each group.
     """
@@ -77,12 +106,7 @@ def _rotated(names: list[str]) -> list[str]:
     for rnd, path in enumerate(
         sorted(glob.glob(os.path.join(_REPO, "CORRECTNESS_r*.json")))
     ):
-        try:
-            with open(path) as fh:
-                seen = json.load(fh)
-        except (OSError, ValueError):
-            continue
-        for n, row in seen.items():
+        for n, row in _load_json(path).items():
             if n not in green_counts or not isinstance(row, dict):
                 continue
             ok = _row_is_green(n, row)
@@ -92,6 +116,8 @@ def _rotated(names: list[str]) -> list[str]:
             if ok:
                 green_counts[n] += 1
                 last_green_round[n] = rnd
+    current = _plan_fps(os.path.join(_REPO, "PLANS.md"))
+    verified = _load_json(os.path.join(_REPO, "VERIFIED_FP.json"))
     order = {n: i for i, n in enumerate(names)}
 
     def group(n: str) -> int:
@@ -102,7 +128,7 @@ def _rotated(names: list[str]) -> list[str]:
             return 0
         if green_counts[n] == 0:
             return 1
-        if n in _TOUCHED_THIS_ROUND:
+        if n not in verified or current.get(n) != verified[n]:
             return 2
         return 3
 
@@ -110,67 +136,6 @@ def _rotated(names: list[str]) -> list[str]:
         names,
         key=lambda n: (group(n), last_green_round[n], green_counts[n], order[n]),
     )
-
-
-# Queries whose executing plan changed after their last recorded green
-# row: that row verified a different plan, so these re-verify ahead of
-# the other green queries. Every name here was proven identical against
-# the DuckDB oracle at sf0.01 (259/259) before its change was committed.
-# A name may leave the set only once a CORRECTNESS_r*.json newer than
-# its change records it green; until such a record exists, a change
-# that re-plans more queries adds them. Each verification round covers
-# a window of about 50 queries, so the set must stay inside it.
-_TOUCHED_THIS_ROUND: set[str] = {
-    # media kernels rebuilt on one batch shell (operators/multimodal.py:
-    # map_rows) with the fixture synthesis in functions/fixtures.py
-    "multimodal_binary_meta",
-    "multimodal_byte_features",
-    "multimodal_decode_fake",
-    "multimodal_frame_sample",
-    "multimodal_resize_fake",
-    "multimodal_decode_real",
-    "multimodal_wav_roundtrip",
-    "image_phash_neardup",
-    "image_phash_neardup_wide",
-    "multimodal_decode_real_jpeg",
-    "audio_features_real",
-    "image_phash_dedup_cut",
-    "image_crossformat_phash_match",
-    "video_scene_neardup",
-    "image_metadata_extract",
-    "video_fingerprint_neardup",
-    "audio_fingerprint_match",
-    "jpeg_metadata_extract",
-    # vector and MinHash expressions built as one SQL-text projection
-    "similarity_quantized_topk",
-    "embedding_dispersion_by_label",
-    "jl_projection_distortion",
-    "semdedup_prune",
-    "minhash_jaccard_estimate",
-    # one sharing rule (operators.share) and one parallelism floor
-    "neardup_dedup_corpus",
-    "similarity_pair_histogram",
-    "cross_split_leakage_pairs",
-    "cross_lingual_neardup_pairs",
-    "minhash_band_tuning_report",
-    "neardup_containment_pairs",
-    "cross_source_duplication_matrix",
-    # batch queries that share one operator with their streaming twin
-    # (streaming/contract.py:psi_by_type, operators/text.py:
-    # unigram_lm_scores) and the three that compose doc_perplexity_proxy
-    "psi_value_drift",
-    "doc_perplexity_proxy",
-    "quality_filter_threshold_sweep",
-    "quality_threshold_for_budget",
-    "corpus_curation_pipeline",
-    # NULL-safe blocking key and shared LSH/token operators (operators/
-    # dedup.py:block_key, band_pairs; operators/text.py:token_counts)
-    "neardup_ngram_pairs",
-    "dedup_clusters",
-    "contamination_blast_radius",
-    "bbit_minhash_estimate",
-    "zipf_law_fit",
-}
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:

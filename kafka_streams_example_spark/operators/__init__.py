@@ -122,8 +122,10 @@ def share(df: DataFrame, est_bytes: int = -1) -> DataFrame:
     query over ONE table, ReusedExchange count 0).
 
     The one decision is the sharing scope, picked from ``est_bytes``, a
-    driver-side UPPER-BOUND estimate of the materialized size (parquet
-    footer bytes/rows x a per-site expansion factor; zero Spark jobs):
+    driver-side estimate of the materialized size (parquet footer
+    bytes/rows x a per-site expansion factor; zero Spark jobs). It is not
+    an upper bound: footer bytes are encoded size, which the in-memory
+    rows exceed by up to 2.64x (sources/files.py:table_uncompressed_bytes):
 
     - ``0 <= est_bytes <= _CACHE_MAX_BYTES``: ``.cache()``. The
       CacheManager keys the entry on plan equality, so every registered

@@ -42,7 +42,7 @@ def connected_components(
     # BASE of every iteration join, so cutting ITS lineage was never what
     # bounded plan growth — the per-round label checkpoints below do
     # that. ``edge_cache_bytes`` is the caller's footer-derived
-    # upper-bound estimate of the edge table.
+    # estimate of the edge table.
     both = share(both.distinct(), edge_cache_bytes)
 
     # Round 1 fused into label initialization: with component == id, the
@@ -98,7 +98,7 @@ def connected_components(
             )
         )
 
-    # TWO rounds per convergence action (r12): each round is lazily
+    # TWO rounds per convergence action: each round is lazily
     # checkpointed, so one sum(__changed) action materializes the pair in
     # sequence (round k's RDD persists on first touch and round k+1 reads
     # the persisted partitions) while the driver blocks ONCE instead of
@@ -106,8 +106,8 @@ def connected_components(
     # (measured on dedup_clusters at sf0.1, interleaved A/B, same
     # session: 15 -> 13 Spark jobs per warm invocation, steady med
     # 1.29 -> 1.04 s; at scale the barrier count is the serial term the
-    # r11 core-scaling probe flagged — 8 cores beat 32 on the CC
-    # consumers because rounds serialize on the driver).
+    # core-scaling probe (SCALE_SWEEP.json) flagged — 8 cores beat 32 on
+    # the CC consumers because rounds serialize on the driver).
     # Convergence on the SECOND round's flag is sound: zero changes in
     # round k+1 proves the fixed point, whatever round k did. Worst case
     # executes one extra round past convergence — a label-table-sized

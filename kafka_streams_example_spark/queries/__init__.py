@@ -1,6 +1,6 @@
-"""Thematic query packages (round-7 consolidation of the numbered query
-tranches): dedup, retrieval, text, sketches, stats, timeseries, eval,
-events, multimodal, operational — plus _shared leaf constants.
+"""Thematic query packages: dedup, retrieval, text, sketches, stats,
+timeseries, eval, events, multimodal, operational — plus _shared leaf
+constants.
 
 Modules register their queries into kafka_streams_example_spark.registry
 at import time; the registry imports them (text first: two modules patch

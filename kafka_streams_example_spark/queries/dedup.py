@@ -1056,12 +1056,11 @@ def contamination_blast_radius(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("id_a", "id_b")
         .localCheckpoint(eager=True)
     )
-    pairs.createOrReplaceTempView("__blast_edges")
     return spark.sql(
         f"""
         WITH RECURSIVE
-        und AS (SELECT id_a AS u, id_b AS v FROM __blast_edges
-                UNION SELECT id_b, id_a FROM __blast_edges),
+        und AS (SELECT id_a AS u, id_b AS v FROM {{edges}}
+                UNION SELECT id_b, id_a FROM {{edges}}),
         reach(seed, id, hops) AS (
             SELECT u, u, 0 FROM (SELECT DISTINCT u FROM und) s
             UNION ALL
@@ -1073,7 +1072,8 @@ def contamination_blast_radius(spark: SparkSession, sf_dir: str) -> DataFrame:
         FROM reach
         WHERE seed <> id
         GROUP BY 1, 2
-        """
+        """,
+        edges=pairs,
     )
 
 

@@ -762,8 +762,8 @@ def _bigram_split_lang_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     split/lang-tagged rows directly, kneser_ney_bigram and
     bigram_lm_probs roll global (a, b) counts up from it (integer sums
     over the split/lang tags — exact by construction, proven against the
-    unchanged DuckDB oracles). Before r12 each consumer ran its own
-    corpus pass; the count rollups are bigram-TYPE-sized, orders of
+    unchanged DuckDB oracles). Without it each consumer would run its
+    own corpus pass; the count rollups are bigram-TYPE-sized, orders of
     magnitude smaller than the token stream."""
     docs = _load_parallel(spark, sf_dir, "documents")
     d = docs.select(
@@ -790,7 +790,7 @@ def _bigram_split_lang_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count("*").cast("long").alias("c")
         ),
         # bigram keys are two adjacent corpus substrings (+ short tags):
-        # ~2x source bytes upper-bounds the table (SCALE.md §caches)
+        # ~2x source bytes estimates the table (SCALE.md §caches)
         table_uncompressed_bytes(sf_dir, "documents") * 2,
     )
 
@@ -871,7 +871,7 @@ def bigram_crossentropy_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("lang")
         .agg(F.countDistinct("tok").cast("long").alias("vocab"))
     )
-    # ONE (split, lang, a, b) count pass — since r12 the session-shared
+    # ONE (split, lang, a, b) count pass — the session-shared
     # master bigram table (also feeding kneser_ney_bigram /
     # bigram_lm_probs): tr_pair/tr_pre/ev previously each re-ran the
     # corpus tokenize + bigram explode. Prefix totals roll up from it

@@ -439,15 +439,18 @@ def order_window_overlaps(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 _LATERAL_SQL = """
 SELECT s.c_mktsegment, t.o_orderkey, t.o_totalprice
-FROM (SELECT DISTINCT c_mktsegment FROM customer) s,
+FROM (SELECT DISTINCT c_mktsegment FROM {customer}) s,
 LATERAL (SELECT o.o_orderkey, o.o_totalprice
-         FROM orders o JOIN customer c ON o.o_custkey = c.c_custkey
+         FROM {orders} o JOIN {customer} c ON o.o_custkey = c.c_custkey
          WHERE c.c_mktsegment = s.c_mktsegment
          ORDER BY o.o_totalprice DESC, o.o_orderkey LIMIT 3) t
 """
 
 
-@register("lateral_top_orders_per_segment", _LATERAL_SQL)
+@register(
+    "lateral_top_orders_per_segment",
+    _LATERAL_SQL.format(customer="customer", orders="orders"),
+)
 def lateral_top_orders_per_segment(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Correlated LATERAL subquery: the top-3 orders by price within each
     market segment, written as a per-row dependent subquery with its own
@@ -458,9 +461,11 @@ def lateral_top_orders_per_segment(spark: SparkSession, sf_dir: str) -> DataFram
     dimension join + per-segment rank (no per-segment re-execution);
     the driving side is the 5-row distinct-segment relation, so the only
     corpus-scale work is the single orders⋈customer broadcast join."""
-    for t in ("customer", "orders"):
-        load_table(spark, sf_dir, t).createOrReplaceTempView(t)
-    return spark.sql(_LATERAL_SQL)
+    return spark.sql(
+        _LATERAL_SQL,
+        customer=load_table(spark, sf_dir, "customer"),
+        orders=load_table(spark, sf_dir, "orders"),
+    )
 
 
 # --------------------------------------------------------------------------

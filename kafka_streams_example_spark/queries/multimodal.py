@@ -330,26 +330,11 @@ def _phash_band_stats(
     band-value) rides the join; AQE can skew-split it.
 
     ``max_bucket`` is the production skew guard: buckets holding more
-    than that many hashes are DROPPED before the self-join. LSH bucket
-    sizes are data-dependent and pair work is Σc² — one degenerate band
-    value (flat images, boilerplate graphics, near-constant textures
-    hashing to alternating-bit patterns) turns the candidate join
-    quadratic. Measured on the ×100 corpus: the uncapped 4×15 banding
-    carries ~303 M ordered candidate pairs, 10× the uniform-hash
-    estimate, almost all from a handful of degenerate alternating-bit
-    bucket values; capping at 64 removes them while every GENUINE
-    near-dup group small enough to review survives (true re-encode
-    groups are small; mass-duplicate groups are Hamming-0 and belong to
-    the exact-hash dedup-cut tier, which has no pair explosion)."""
+    than that many hashes are DROPPED before the self-join
+    (operators/dedup.py:cap_buckets says why)."""
     banded = dd.fingerprint_bands(fp.select("doc_id", "dhash"), "dhash", bands, bits)
     if max_bucket is not None:
-        ok_buckets = (
-            banded.groupBy("band", "bv")
-            .count()
-            .filter(F.col("count") <= max_bucket)
-            .select("band", "bv")
-        )
-        banded = banded.join(ok_buckets, ["band", "bv"])
+        banded = dd.cap_buckets(banded, max_bucket)
     cand = (
         banded.alias("l")
         .join(
@@ -508,7 +493,7 @@ def image_phash_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_DH_WIDE_CAP = 64  # bucket-size skew guard (see _phash_band_stats)
+_DH_WIDE_CAP = 64  # bucket-size skew guard (see operators/dedup.py:cap_buckets)
 
 
 @register(
@@ -1112,7 +1097,7 @@ def video_fingerprint_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     duplication, not by corpus size); per-pair counting and the two
     size join-backs are map-side-combinable hash aggregations. Boilerplate
     frames (intros, slates, black frames) are the real-world hot-bucket
-    risk — the same population _phash_band_stats' max_bucket cap handles
+    risk — the same population operators/dedup.py:cap_buckets handles
     on the image tier, and the same fix applies here.
 
     Oracle: the full replay — synthesis, variant planting, thumbnail

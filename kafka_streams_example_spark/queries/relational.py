@@ -584,8 +584,6 @@ def grouping_sets_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     registry's ROLLUP/CUBE queries to an explicit set list. One scan;
     Spark expands the sets in a single Expand+hash-aggregate (no
     self-union), identical to ROLLUP here but spelled explicitly."""
-    li = load_table(spark, sf_dir, "lineitem")
-    li.createOrReplaceTempView("__gs_lineitem")
     rev = (
         "CAST(l_extendedprice AS DECIMAL(18,4)) * "
         "CAST(1 - l_discount AS DECIMAL(8,4))"
@@ -602,9 +600,10 @@ def grouping_sets_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
                count(*) AS n,
                CAST(round(sum(rev), 6) AS DOUBLE) AS revenue
         FROM (SELECT l_returnflag, l_linestatus, {rev} AS rev
-              FROM __gs_lineitem)
+              FROM {{lineitem}})
         GROUP BY GROUPING SETS ((l_returnflag, l_linestatus), (l_returnflag), ())
-        """
+        """,
+        lineitem=load_table(spark, sf_dir, "lineitem"),
     )
 
 
@@ -714,14 +713,13 @@ def approx_top_k_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact-distinct shuffle. Oracle-exact here because the tracked-item
     capacity (10k) exceeds the column's cardinality, making the sketch
     counts exact and deterministic."""
-    ev = load_table(spark, sf_dir, "events")
-    ev.createOrReplaceTempView("__atk_events")
     return spark.sql(
         """
         SELECT t.item AS item, t.count AS cnt
         FROM (SELECT explode(approx_top_k(event_type, 3)) AS t
-              FROM __atk_events)
-        """
+              FROM {events})
+        """,
+        events=load_table(spark, sf_dir, "events"),
     )
 
 
@@ -1270,23 +1268,21 @@ WHERE l_shipdate >= TIMESTAMP '1996-01-01 00:00:00'
 """,
 )
 def sql_q6_revenue_delta(spark, sf_dir):
-    """The engine's SQL-text surface (TPC-H Q6 shape): same catalog views,
-    same Catalyst plan as the DataFrame API."""
-    from kafka_streams_example_spark.sources.files import register_views
-
-    register_views(spark, sf_dir, tables=("lineitem",))
+    """The engine's SQL-text surface (TPC-H Q6 shape): same Catalyst plan
+    as the DataFrame API."""
     return spark.sql(
         """
         SELECT CAST(round(sum(CAST(l_extendedprice AS DECIMAL(18,4))
                               * CAST(l_discount AS DECIMAL(8,4))), 6) AS DOUBLE)
                    AS promo_revenue,
                count(*) AS n
-        FROM lineitem
+        FROM {lineitem}
         WHERE l_shipdate >= TIMESTAMP '1996-01-01 00:00:00'
           AND l_shipdate <  TIMESTAMP '1997-01-01 00:00:00'
           AND l_discount BETWEEN 0.05 AND 0.07
           AND l_quantity < 24
-        """
+        """,
+        lineitem=load_table(spark, sf_dir, "lineitem"),
     )
 
 

@@ -2,10 +2,10 @@
 30s tumbling aggregation, per-panel stats, z-score anomalies, wire-format
 round-trips) plus the Python-DataSource-fed variant.
 
-Moved verbatim from registry.py in round 8 (registration order pinned by
-query_order.py). Reference parity: SolarConsumer.java:97-201,
-SolarPanelAggregator.java:45-59 — see plans/solar.py for the collapsed
-single-scan window-function design (1 scan, 2 exchanges, 0 joins).
+Registration order is pinned by query_order.py. Reference parity:
+SolarConsumer.java:97-201, SolarPanelAggregator.java:45-59 — see
+plans/solar.py for the collapsed single-scan window-function design
+(1 scan, 2 exchanges, 0 joins).
 """
 
 from __future__ import annotations

@@ -516,13 +516,12 @@ def udtf_word_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
                 yield i // _WW, " ".join(win), len(win)
 
     spark.udtf.register("word_windows", WordWindows)
-    docs = _load_parallel(spark, sf_dir, "documents")
-    docs.createOrReplaceTempView("udtf_docs_in")
     return spark.sql(
         """
         SELECT d.doc_id, w.win_id, w.window_text, w.n_words
-        FROM udtf_docs_in d, LATERAL word_windows(d.text) w
-        """
+        FROM {docs} d, LATERAL word_windows(d.text) w
+        """,
+        docs=_load_parallel(spark, sf_dir, "documents"),
     )
 
 
@@ -970,7 +969,7 @@ def bigram_lm_probs(spark: SparkSession, sf_dir: str) -> DataFrame:
     vocabulary-sized broadcasts; counts stay < 2^53 so the smoothed
     division is exact on both engines."""
     # All statistics roll up from the session-shared (tok_a, tok_b, n_ab)
-    # pair table (r12: _bigram_pair_counts — one corpus pass for this
+    # pair table (_bigram_pair_counts — one corpus pass for this
     # query, kneser_ney_bigram and bigram_crossentropy_eval together):
     # n_a = Σ_b n_ab is exactly the former direct prefix count, and the
     # distinct token set over pair keys is exactly the former distinct
@@ -1494,7 +1493,7 @@ def kneser_ney_bigram(spark: SparkSession, sf_dir: str) -> DataFrame:
     the interpolated form."""
     # pair feeds FOUR consumers (the report filter + pre/back/types); it
     # is the session-shared cached rollup of the master bigram table
-    # (r12: _bigram_pair_counts — same LM-count artifact the former
+    # (_bigram_pair_counts — same LM-count artifact the former
     # per-invocation checkpoint materialized, now one corpus pass per
     # session shared with bigram_lm_probs / bigram_crossentropy_eval,
     # and the four intra-plan references all scan one InMemoryRelation).
@@ -1767,7 +1766,7 @@ def token_frequencies(spark, sf_dir):
     """Explode / lateral-view shape: corpus token frequencies (the
     vocabulary-building pass of a text pipeline).
 
-    Reads the session-shared _unigram_freq vocabulary table (r12): the
+    Reads the session-shared _unigram_freq vocabulary table: the
     former standalone plan differed from the LM-family frequency table
     only by a pruned-away doc_id column, so the two never shared a
     materialization; counts are identical by construction."""
@@ -1816,8 +1815,9 @@ def _unigram_freq(spark, sf_dir):
     lookup ignores column names, so zipf_law_fit's (term, f) count over
     the same token stream reads it too."""
     docs = _load_parallel(spark, sf_dir, "documents")
-    # vocab keys are distinct substrings of the corpus, so the source
-    # byte size upper-bounds the table (SCALE.md §caches)
+    # vocab keys are distinct substrings of the corpus, so the table
+    # is at most the corpus text, estimated by its footer bytes
+    # (SCALE.md §caches)
     return share(tx.token_counts(docs), table_uncompressed_bytes(sf_dir, "documents"))
 
 
@@ -2492,7 +2492,7 @@ def heaps_law_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.concat(F.col("doc_id").cast("string"), F.lit(_HEAPS_SALT))
     ) % _HEAPS_BUCKETS
     x = tx.token_stream(docs, "token", "doc_id", bucket.alias("bucket"))
-    # per_bucket needs no token explode (r12): doc_id is the table's key,
+    # per_bucket needs no token explode: doc_id is the table's key,
     # so countDistinct(doc_id) over exploded tokens = the count of docs
     # with >= 1 token, and count(*) of exploded rows = sum of per-doc
     # token counts — both computable from one doc-level projection. The

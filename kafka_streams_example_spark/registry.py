@@ -108,9 +108,9 @@ def _duck_cosine(a: str, b: str, dim: int = 64) -> str:
         f"(sqrt({_duck_dot(a, a, dim)}) * sqrt({_duck_dot(b, b, dim)})))"
     )
 
-# Thematic query packages under ``queries/`` (round-7/8 consolidation —
-# every query self-registers at import time; physical layout is free to
-# change because registration order is frozen as data in query_order.py).
+# Thematic query packages under ``queries/``: every query self-registers
+# at import time; physical layout is free to change because registration
+# order is frozen as data in query_order.py.
 # ``text`` must import before ``stats``/``eval``: both patch an oracle
 # referencing text-registered ``quality_logreg_score``, and ``eval``
 # imports text's ``_duck_lang_sql``.
@@ -127,7 +127,7 @@ from kafka_streams_example_spark.queries import events  # noqa: E402,F401
 from kafka_streams_example_spark.queries import multimodal  # noqa: E402,F401
 from kafka_streams_example_spark.queries import operational  # noqa: E402,F401
 
-# SQL-surface battery registered after the relational/tranche sets it
+# SQL-surface battery registered after the query packages it
 # cross-references.
 from kafka_streams_example_spark import sql_surface  # noqa: E402,F401
 

@@ -66,7 +66,7 @@ def get_spark(
         )
         .config("spark.ui.enabled", "false")
         # The driver records only a ~2KB tail of bench stdout+stderr; the
-        # console progress bars flooded that tail in r06 and cut the bench
+        # console progress bars flooded that tail and cut the bench
         # JSON line mid-way (BENCH_r06.json parsed=null). The bars carry no
         # information in a headless run.
         .config("spark.ui.showConsoleProgress", "false")

@@ -1,1 +1,1 @@
-from kafka_streams_example_spark.sources.files import load_table, register_views  # noqa: F401
+from kafka_streams_example_spark.sources.files import load_table  # noqa: F401

@@ -2,8 +2,9 @@
 
 The reference has exactly one source — a Kafka topic (reference:
 SolarConsumer.java:97-99). A general engine needs file-format scans as well;
-these helpers read the driver's parquet tables and register SQL views so
-the same queries run through either the DataFrame or the SQL surface.
+these helpers read the driver's parquet tables; a SQL-text query passes
+the frames to ``spark.sql(text, name=df)``, so the same tables feed
+either the DataFrame or the SQL surface.
 
 Scale notes: `spark.read.parquet` gives predicate pushdown + column pruning
 for free through the DataSource V2 scan; partition sizing is governed by
@@ -17,8 +18,6 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import LongType
-
-from kafka_streams_example_spark.schemas import ALL_TABLES
 
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
@@ -131,11 +130,20 @@ def table_row_count(spark: SparkSession, sf_dir: str, name: str) -> int:
 
 
 def table_uncompressed_bytes(sf_dir: str, name: str) -> int:
-    """Total UNCOMPRESSED byte size of a testdata table from parquet
-    FOOTER metadata (sum of row-group ``total_byte_size``) — driver-side,
-    zero Spark jobs. Operators that must decide broadcast-vs-shuffle
-    before the plan runs (the decontam family's eval-gram side) size the
-    decision from this instead of assuming "the bench set is tiny".
+    """Byte size of a testdata table from parquet FOOTER metadata (sum of
+    row-group ``total_byte_size``) — driver-side, zero Spark jobs.
+    Operators that must decide broadcast-vs-shuffle before the plan runs
+    (the decontam family's eval-gram side) size the decision from this
+    instead of assuming "the bench set is tiny".
+
+    ``total_byte_size`` is the ENCODED size (after dictionary and RLE
+    encoding, before compression), not the size of the rows in memory,
+    and it bounds that size in neither direction. Cached in-memory size
+    divided by this figure, raw tables: sf0.01 events 0.78, documents
+    0.98, embeddings 0.71, orders 0.84, lineitem 2.61; sf0.1 lineitem
+    2.64. A frame as wide as its source can therefore be up to ~2.6× the
+    figure (ROADMAP item 1 derives a true bound from the schema).
+
     Returns -1 when the size cannot be read (non-parquet input) — callers
     must treat unknown as TOO BIG and keep the shuffle join: a wrongly
     skipped broadcast costs one exchange, a wrongly taken one OOMs the
@@ -151,12 +159,6 @@ def table_uncompressed_bytes(sf_dir: str, name: str) -> int:
         )
     except Exception:
         return -1
-
-
-def register_views(spark: SparkSession, sf_dir: str, tables=ALL_TABLES) -> None:
-    """Register each table as a temp view for spark.sql() queries."""
-    for name in tables:
-        load_table(spark, sf_dir, name).createOrReplaceTempView(name)
 
 
 def read_csv(spark: SparkSession, path: str, schema=None, header: bool = True) -> DataFrame:

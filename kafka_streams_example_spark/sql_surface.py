@@ -1,4 +1,4 @@
-"""Spark 4 SQL-surface parity tranche: SQL scalar UDFs and pipe syntax.
+"""Spark 4 SQL surface: SQL scalar UDFs and pipe syntax.
 
 - sql_scalar_udf_revenue:  a CREATE TEMPORARY FUNCTION ... RETURN
                            scalar SQL UDF used inside an aggregate —
@@ -51,7 +51,6 @@ def sql_scalar_udf_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     100 TB shape: identical to the hand-inlined query — one scan with
     the quantity filter pushed down, map-side partial aggregation on a
     3-value key."""
-    load_table(spark, sf_dir, "lineitem").createOrReplaceTempView("lineitem")
     spark.sql(
         "CREATE OR REPLACE TEMPORARY FUNCTION gross_rev(p DOUBLE, d DOUBLE, t DOUBLE)"
         " RETURNS DOUBLE RETURN p * (1.0 - d) * (1.0 + t)"
@@ -62,10 +61,11 @@ def sql_scalar_udf_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
                CAST(count(*) AS BIGINT) AS n_items,
                round(sum(gross_rev(l_extendedprice, l_discount, l_tax)), 2)
                    AS gross_revenue
-        FROM lineitem
+        FROM {lineitem}
         WHERE l_quantity >= 5
         GROUP BY l_returnflag
-        """
+        """,
+        lineitem=load_table(spark, sf_dir, "lineitem"),
     )
 
 
@@ -94,14 +94,14 @@ def pipe_syntax_shipmode_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     100 TB shape: scan with the discount range pushed down, map-side
     partial aggregation on a low-cardinality composite key."""
-    load_table(spark, sf_dir, "lineitem").createOrReplaceTempView("lineitem")
     return spark.sql(
         """
-        FROM lineitem
+        FROM {lineitem}
         |> WHERE l_discount BETWEEN 0.02 AND 0.08
         |> AGGREGATE CAST(count(*) AS BIGINT) AS n_items,
                      round(sum(l_quantity), 2) AS total_qty,
                      round(avg(l_extendedprice), 6) AS avg_price
            GROUP BY l_returnflag, l_linestatus
-        """
+        """,
+        lineitem=load_table(spark, sf_dir, "lineitem"),
     )

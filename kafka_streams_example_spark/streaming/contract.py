@@ -1102,8 +1102,9 @@ def streaming_ingest_phash(
     those instead — schema, banding, probe and index are identical.
 
     ``max_probe_bucket`` (default None = probe everything) is the
-    LSH skew guard for crawl-scale indexes: band values held by more
-    than that many DISTINCT index hashes are skipped at PROBE time, so
+    LSH skew guard for crawl-scale indexes (operators/dedup.py:
+    cap_buckets): band values held by more than that many DISTINCT
+    index hashes are skipped at PROBE time, so
     one degenerate bucket (near-constant textures hash to a handful of
     alternating-bit band values — measured at ×100 in NOTES_r11) cannot
     multiply every colliding batch row into a quadratic join. The
@@ -1118,7 +1119,7 @@ def streaming_ingest_phash(
     import tempfile
 
     from kafka_streams_example_spark.operators import multimodal as mm
-    from kafka_streams_example_spark.operators.dedup import fingerprint_bands
+    from kafka_streams_example_spark.operators.dedup import cap_buckets, fingerprint_bands
 
     owner = index_seed.sparkSession
     root = state_dir or tempfile.mkdtemp(prefix="ingest_phash_state_")
@@ -1145,13 +1146,7 @@ def streaming_ingest_phash(
         )
         if max_probe_bucket is not None:
             # skew guard: skip degenerate-hot band values (see docstring)
-            ok_buckets = (
-                index.groupBy("band", "bv")
-                .count()
-                .filter(F.col("count") <= max_probe_bucket)
-                .select("band", "bv")
-            )
-            index = index.join(ok_buckets, ["band", "bv"])
+            index = cap_buckets(index, max_probe_bucket)
         batch_bands = _hashes_of(batch_df)
         hits = batch_bands.join(index, ["band", "bv"]).filter(
             F.bit_count(F.col("dhash").bitwiseXOR(F.col("idx_dhash"))) <= max_hamming

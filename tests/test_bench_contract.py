@@ -132,27 +132,72 @@ def test_rotation_regressed_query_returns_to_front(tmp_path, monkeypatch):
     assert names.index(other[0]) > len(names) - 3
 
 
-def test_rotation_touched_green_query_precedes_untouched_green(tmp_path, monkeypatch):
-    """A green query whose plan changed after its green row (one listed
-    in _TOUCHED_THIS_ROUND) re-verifies ahead of an untouched green
-    query with the same recorded history, even one registered earlier."""
+_GREEN_ROW = {"rows_match": True, "schema_match": True,
+              "hash_match": True, "err": None, "spark_rows": 1}
+
+
+def _fake_repo(tmp_path, record: dict, plan_fps: dict, verified: dict) -> None:
+    """A CORRECTNESS record, a PLANS.md table with the given ``fp``s (the
+    first row marked † as cached rows are) and a VERIFIED_FP.json."""
+    (tmp_path / "CORRECTNESS_r90.json").write_text(json.dumps(record))
+    rows = [
+        f"| {n}{' †' if i == 0 else ''} | 1 | 0 | 2 | {fp} |"
+        for i, (n, fp) in enumerate(plan_fps.items())
+    ]
+    (tmp_path / "PLANS.md").write_text(
+        "\n".join(["| query | exch | 1-part | scans | fp |", "|---|---|---|---|---|", *rows])
+    )
+    (tmp_path / "VERIFIED_FP.json").write_text(json.dumps(verified))
+
+
+def test_rotation_changed_fp_precedes_verified_fp(tmp_path, monkeypatch):
+    """With the same recorded history, a green query whose PLANS.md ``fp``
+    differs from its verified ``fp``, or that has no verified ``fp``,
+    re-verifies ahead of a green query whose ``fp`` matches, even one
+    registered earlier."""
     sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
     import __spark_entry__ as e
     from kafka_streams_example_spark import registry
 
     names = list(registry.QUERIES)
-    untouched = next(n for n in names if n not in e._TOUCHED_THIS_ROUND)
-    touched = next(
-        n for n in names[names.index(untouched) + 1 :] if n in e._TOUCHED_THIS_ROUND
-    )
-    green_row = {"rows_match": True, "schema_match": True,
-                 "hash_match": True, "err": None, "spark_rows": 1}
-    (tmp_path / "CORRECTNESS_r90.json").write_text(
-        json.dumps({untouched: green_row, touched: green_row})
+    matched, changed, unverified = names[:3]
+    _fake_repo(
+        tmp_path,
+        {n: _GREEN_ROW for n in (matched, changed, unverified)},
+        {matched: "aaaaaaaaaaaa", changed: "bbbbbbbbbbbb", unverified: "cccccccccccc"},
+        {matched: "aaaaaaaaaaaa", changed: "dddddddddddd"},
     )
     monkeypatch.setattr(e, "_REPO", str(tmp_path))
     order = e._rotated(names)
-    assert order.index(touched) < order.index(untouched)
+    assert order.index(changed) < order.index(matched)
+    assert order.index(unverified) < order.index(matched)
+    assert order[-1] == matched
+
+
+@pytest.mark.parametrize("missing", ["PLANS.md", "VERIFIED_FP.json"])
+def test_rotation_without_fingerprint_files_keeps_failures_and_new_first(
+    tmp_path, monkeypatch, missing
+):
+    """Without PLANS.md or VERIFIED_FP.json every green query counts as
+    changed, and the non-green and never-recorded queries still lead."""
+    sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+    import __spark_entry__ as e
+    from kafka_streams_example_spark import registry
+
+    names = list(registry.QUERIES)
+    bad = next(iter(registry.ORACLES))
+    green = [n for n in names if n != bad][:3]
+    _fake_repo(
+        tmp_path,
+        {bad: dict(_GREEN_ROW, hash_match=False), **{n: _GREEN_ROW for n in green}},
+        {n: "aaaaaaaaaaaa" for n in green},
+        {n: "aaaaaaaaaaaa" for n in green},
+    )
+    (tmp_path / missing).unlink()
+    monkeypatch.setattr(e, "_REPO", str(tmp_path))
+    order = e._rotated(names)
+    assert order[0] == bad
+    assert order[-3:] == green
 
 
 def test_driver_verification_backlog_fits_window():

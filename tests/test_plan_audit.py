@@ -274,7 +274,8 @@ def test_weighted_sample_is_take_ordered_not_global_sort(spark):
 
 def test_plan_fingerprint_ignores_expand_order_and_ids():
     """Two builds of one multi-distinct aggregate that differ only in
-    expression ids, lambda-variable counters and the order the optimizer
+    expression ids, lambda-variable counters, common-subexpression alias
+    numbers and the order the optimizer
     lists the distinct groups (projections, grouping columns, gid
     numbers) normalize to the same text; a changed plan does not."""
     from tools.plan_report import normalized_plan, plan_fingerprint
@@ -285,7 +286,8 @@ def test_plan_fingerprint_ignores_expand_order_and_ids():
         "+- Aggregate [x#41L, y#42, gid#40], [x#41L, y#42, gid#40]\n"
         "   +- Expand [[x#12L, null, 1], [null, y#13, 2]], [x#41L, y#42, gid#40]\n"
         "      +- Project [x#12L, y#13, filter(t#14, lambdafunction("
-        "NOT (lambda x_55#60 = ), lambda x_55#60, false)) AS f#15]\n"
+        "NOT (lambda x_55#60 = ), lambda x_55#60, false)) AS f#15, "
+        "(x#12L * 2) AS _common_expr_0#16L]\n"
         "         +- Exchange hashpartitioning(x#12L, 4), [plan_id=7]"
     )
     b = (
@@ -294,7 +296,8 @@ def test_plan_fingerprint_ignores_expand_order_and_ids():
         "+- Aggregate [y#142, x#141L, gid#140], [y#142, x#141L, gid#140]\n"
         "   +- Expand [[null, y#113, 1], [x#112L, null, 2]], [y#142, x#141L, gid#140]\n"
         "      +- Project [x#112L, y#113, filter(t#114, lambdafunction("
-        "NOT (lambda x_7#160 = ), lambda x_7#160, false)) AS f#115]\n"
+        "NOT (lambda x_7#160 = ), lambda x_7#160, false)) AS f#115, "
+        "(x#112L * 2) AS _common_expr_47#116L]\n"
         "         +- Exchange hashpartitioning(x#112L, 4), [plan_id=93]"
     )
     assert normalized_plan(a) == normalized_plan(b)
@@ -302,3 +305,52 @@ def test_plan_fingerprint_ignores_expand_order_and_ids():
     assert len(plan_fingerprint(a)) == 12
     changed = a.replace("hashpartitioning(x#12L, 4)", "hashpartitioning(y#13, 4)")
     assert plan_fingerprint(changed) != plan_fingerprint(a)
+
+
+def test_record_verified_copies_green_fps(tmp_path):
+    """``plan_report.py --verified`` copies, from PLANS.md, the ``fp`` of
+    each query the CORRECTNESS record found green. It keeps the entries
+    of queries the record does not find green, and skips a green query
+    with no PLANS.md row. It needs no Spark session."""
+    import json
+
+    from tools.plan_report import record_verified
+
+    green, red, absent, kept = list(registry.ORACLES)[:4]
+    ok = {"rows_match": True, "schema_match": True, "hash_match": True, "err": None}
+    record = tmp_path / "CORRECTNESS_r90.json"
+    record.write_text(json.dumps({green: ok, red: dict(ok, hash_match=False), absent: ok}))
+    plans = tmp_path / "PLANS.md"
+    plans.write_text(
+        "| query | exch | fp |\n|---|---|---|\n"
+        f"| {green} † | 1 | 111111111111 |\n| {red} | 0 | 222222222222 |\n"
+        f"| {kept} | 0 | 333333333333 |\n"
+    )
+    verified = tmp_path / "VERIFIED_FP.json"
+    verified.write_text(json.dumps({green: "000000000000", red: "999999999999", kept: "444444444444"}))
+    assert record_verified(str(record), str(plans), str(verified)) == 1
+    assert json.loads(verified.read_text()) == {
+        green: "111111111111",
+        red: "999999999999",
+        kept: "444444444444",
+    }
+
+
+def test_plans_md_fingerprints_match_code():
+    """Every committed PLANS.md ``fp`` equals a fresh fingerprint of the
+    code. ``plan_report.py --check`` rebuilds them in the generator's own
+    session (local[8], AQE off, sf0.1): the fingerprints depend on the
+    session, so the test session cannot stand in for it."""
+    import os
+    import subprocess
+    import sys
+
+    from tests.conftest import TESTDATA
+
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    proc = subprocess.run(
+        [sys.executable, os.path.join(root, "tools", "plan_report.py"), "--check",
+         os.path.join(TESTDATA, "sf0.1")],
+        capture_output=True, text=True, timeout=1200,
+    )
+    assert proc.returncode == 0, proc.stdout[-4000:] + proc.stderr[-2000:]
